@@ -3414,7 +3414,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (cursor_page, events_hopping, sorted_page, tfidf_vectors,
     # top_fraction → cumulative driver coverage 160/160), then the
     # least-recently-checked queries: all 9 last seen in r01 and the
-    # alphabetically-first 34 last seen in r02.
+    # alphabetically-first 33 last seen in r02, then semdedup_union —
+    # the one contract query never driver-checked.
     _r5_window = [
         "collocations", "field_stats", "cursor_page", "events_hopping",
         "sorted_page", "tfidf_vectors", "top_fraction", "agg_pricing_summary",
@@ -3428,8 +3429,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_ngram_jaccard", "dedup_simhash", "doc_lengths", "doc_term_vector",
         "docid_projection", "dup_spans", "embedding_near_pairs", "facet_interval",
         "facet_lang", "facet_nested", "facet_percentiles", "facet_pivot",
-        "facet_range", "first_snippet",
+        "facet_range", "semdedup_union",
     ]
+    missing = [n for n in _r5_window if n not in base]
+    if missing:
+        raise KeyError(f"driver window names unknown queries: {missing}")
     ordered = {n: base[n] for n in _r5_window}
     ordered.update((n, fn) for n, fn in base.items() if n not in ordered)
     return {name: _pin_query(fn) for name, fn in ordered.items()}

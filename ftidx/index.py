@@ -57,10 +57,32 @@ from ftidx.build import BUCKET_SHIFT, DEFAULT_BUCKETS, live_docs, prepare_docs
 from ftidx.codec import encode_many, encode_postings, merge_encoded
 from ftidx.schema import CHECKPOINT_SCHEMA, POSTINGS_SCHEMA
 from ftidx.tokenize import tokenize_tf
-from ftidx.wand import (TermList, bm25_contrib, bm25_idf, score_block_max,
-                        score_boolean, score_exhaustive)
+from ftidx.wand import (TermList, _topk_from_scores, bm25_contrib, bm25_idf,
+                        filter_matches, merge_group, score_all,
+                        score_block_max, score_boolean, score_exhaustive)
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
+
+
+def _drop_tombstones(ids: np.ndarray, scores: np.ndarray, tombs: frozenset):
+    """The one tombstone filter over scored docs, on the driver
+    (:meth:`FtIndex._live_topk`) and inside per-bucket closures, which
+    receive the handle's snapshot. No work when there are none."""
+    if not tombs:
+        return ids, scores
+    keep = ~np.isin(ids.astype(np.int64),
+                    np.fromiter(tombs, np.int64, len(tombs)))
+    return ids[keep], scores[keep]
+
+
+def _align(sorted_ids: np.ndarray, probe: np.ndarray):
+    """Look up each ``probe`` id in ascending ``sorted_ids``: (hit mask,
+    position). ``position`` is clipped into range, so it is only
+    meaningful where ``hit``."""
+    if not sorted_ids.size:
+        return np.zeros(probe.size, bool), np.zeros(probe.size, np.intp)
+    pos = np.minimum(np.searchsorted(sorted_ids, probe), sorted_ids.size - 1)
+    return sorted_ids[pos] == probe, pos
 
 
 def _encode_stream(batches):
@@ -986,14 +1008,16 @@ class FtIndex:
                      (F.sum("len") / F.count(F.lit(1))).cast("double").alias("avgdl"))
                 .collect()
             }
-        self._tombstones: set[int] = set()
+        # an immutable snapshot: delete()/refresh() swap in a new one,
+        # so a reader holding the old one never sees it change
+        self._tombstones: frozenset[int] = frozenset()
         tomb_dir = self.path / "tombstones"
         if tomb_dir.exists():
-            self._tombstones = {
+            self._tombstones = frozenset(
                 r["doc_id"]
                 for r in spark.read.option("recursiveFileLookup", "true")
                 .parquet(str(tomb_dir)).collect()
-            }
+            )
         pos_dir = self.path / "positions"
         self._positions = (
             spark.read.parquet(str(pos_dir)) if pos_dir.exists() else None
@@ -1038,7 +1062,7 @@ class FtIndex:
         df = self.spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
         df.write.mode("append").parquet(str(self.path / "tombstones"))
         with self._cache_lock:
-            self._tombstones.update(int(d) for d in doc_ids)
+            self._tombstones = self._tombstones | {int(d) for d in doc_ids}
             # cached result pages may hold a just-tombstoned doc
             self._result_cache.clear()
             self._result_cache_bytes = 0
@@ -1160,6 +1184,18 @@ class FtIndex:
             lists.append(TermList(term, trows, bm25_idf(n_docs, df_global)))
         return lists, avgdl
 
+    def _live_topk(self, ids: np.ndarray, scores: np.ndarray, k: int,
+                   tombs: frozenset | None = None) -> list[tuple[int, float]]:
+        """The one tombstone-aware cut: the (score DESC, doc_id ASC)
+        top-k of the live docs among ``ids`` as a (doc_id, score) page.
+        Reads the tombstone snapshot once; a caller that sized a
+        pruned kernel's k by ``k + len(tombs)`` passes that snapshot."""
+        if tombs is None:
+            tombs = self._tombstones
+        ids, scores = _topk_from_scores(
+            *_drop_tombstones(ids, scores, tombs), k)
+        return list(zip(ids.astype(np.int64).tolist(), scores.tolist()))
+
     def topk(self, terms: list[str], k: int = 10, field: str = "code.content",
              kernel: str = "block_max", mode: str = "or",
              exclude: list[str] | None = None,
@@ -1279,22 +1315,17 @@ class FtIndex:
             return []  # a required term matches nothing anywhere
         if min_match is not None and min_match > len(lists):
             return []  # fewer matching terms than the floor demands
-        extra = len(self._tombstones)
+        tombs = self._tombstones
         if mode == "and" or exclude or min_match:
             xlists, _ = self._term_lists(exclude, field) if exclude else ([], 0)
-            ids, scores = score_boolean(lists, avgdl, k + extra,
+            ids, scores = score_boolean(lists, avgdl, k + len(tombs),
                                         require_all=(mode == "and"),
                                         exclude_lists=xlists,
                                         min_match=min_match)
         else:
             fn = score_block_max if kernel == "block_max" else score_exhaustive
-            ids, scores = fn(lists, avgdl, k + extra)
-        out = [
-            (int(i), float(s))
-            for i, s in zip(ids.astype(np.int64), scores)
-            if int(i) not in self._tombstones
-        ]
-        return out[:k]
+            ids, scores = fn(lists, avgdl, k + len(tombs))
+        return self._live_topk(ids, scores, k, tombs)
 
     def topk_synonyms(self, groups: dict[str, list[str]], k: int = 10,
                       field: str = "code.content") -> list[tuple[int, float]]:
@@ -1311,40 +1342,17 @@ class FtIndex:
         cache as :meth:`topk` (decode memoized); the merge is one
         numpy sort + segment-sum per group, score accumulation one
         scatter-add — no Spark job."""
-        n_docs, _ = self.stats.get(field, (0, 1.0))
-        all_ids: list[np.ndarray] = []
-        all_contribs: list[np.ndarray] = []
+        n_docs, avgdl = self.stats.get(field, (0, 1.0))
+        merged = []
         for canon, syns in groups.items():
-            members = list(dict.fromkeys([canon, *syns]))
-            lists, avgdl = self._term_lists(members, field)
-            if not lists:
-                continue
-            parts = [tl.decode_all() for tl in lists]
-            ids = np.concatenate([p[0] for p in parts]).astype(np.int64)
-            tfs = np.concatenate([p[1] for p in parts]).astype(np.int64)
-            dls = np.concatenate([p[2] for p in parts]).astype(np.int64)
-            if ids.size == 0:
-                continue
-            uids, inv = np.unique(ids, return_inverse=True)
-            utf = np.zeros(uids.size, np.int64)
-            np.add.at(utf, inv, tfs)
-            udl = np.zeros(uids.size, np.int64)
-            udl[inv] = dls  # dl is per-doc, identical across members
-            idf = bm25_idf(n_docs, uids.size)
-            all_ids.append(uids)
-            all_contribs.append(bm25_contrib(utf, udl, idf, avgdl))
-        if not all_ids:
-            return []
-        cat_ids = np.concatenate(all_ids)
-        cat_c = np.concatenate(all_contribs)
-        fids, inv = np.unique(cat_ids, return_inverse=True)
-        scores = np.zeros(fids.size, np.float64)
-        np.add.at(scores, inv, cat_c)
-        extra = len(self._tombstones)
-        order = np.lexsort((fids, -scores))[:k + extra]
-        out = [(int(fids[i]), float(scores[i])) for i in order
-               if int(fids[i]) not in self._tombstones]
-        return out[:k]
+            lists, _ = self._term_lists(list(dict.fromkeys([canon, *syns])),
+                                        field)
+            if lists:
+                g = merge_group(canon, lists)
+                g.idf = bm25_idf(n_docs, g.df)
+                merged.append(g)
+        ids, scores, _ = score_all(merged, avgdl)
+        return self._live_topk(ids, scores, k)
 
     def query_string(self, q: str, k: int = 10,
                      field: str = "code.content",
@@ -1407,19 +1415,10 @@ class FtIndex:
         positional query surfaces. Reuses cached postings rows."""
         if verified.size == 0:
             return []
-        dset = set(int(d) for d in verified) - self._tombstones
-        if not dset:
-            return []
         lists, avgdl = self._term_lists(list(terms), field)
-        acc: dict[int, float] = {}
-        for tl in sorted(lists, key=lambda t: (t.df, t.term)):
-            ids, tfs, dls = tl.decode_all()
-            keep = np.isin(ids.astype(np.int64), list(dset))
-            contrib = bm25_contrib(tfs[keep], dls[keep], tl.idf, avgdl)
-            for d, c in zip(ids[keep].astype(np.int64), contrib):
-                acc[int(d)] = acc.get(int(d), 0.0) + float(c)
-        ranked = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))
-        return [(d, s) for d, s in ranked[:k]]
+        ids, scores, _ = score_all(lists, avgdl)
+        keep = np.isin(ids.astype(np.int64), verified.astype(np.int64))
+        return self._live_topk(ids[keep], scores[keep], k)
 
     def phrase_topk(self, phrase: list[str], k: int = 10,
                     field: str = "code.content") -> list[tuple[int, float]]:
@@ -1490,14 +1489,9 @@ class FtIndex:
                 triples.append((float(bq[t]), tl, avgdl))
         if not triples:
             return []
-        extra = len(self._tombstones)
-        ids, scores = score_weighted_fields(triples, k + extra)
-        out = [
-            (int(i), float(s))
-            for i, s in zip(ids.astype(np.int64), scores)
-            if int(i) not in self._tombstones
-        ]
-        return out[:k]
+        tombs = self._tombstones
+        ids, scores = score_weighted_fields(triples, k + len(tombs))
+        return self._live_topk(ids, scores, k, tombs)
 
     def topk_reranked(self, terms: list[str], rerank_terms: list[str],
                       k: int = 10, rerank_docs: int = 100,
@@ -1516,35 +1510,22 @@ class FtIndex:
         Serving path: two warm-cache probes (main terms + rerank
         terms), one searchsorted to align the head with the rerank
         scores — no Spark job."""
-        from ftidx.wand import _topk_from_scores, score_exhaustive
-
         if k <= 0 or not terms:
             return []
         lists, avgdl = self._term_lists(terms, field)
         if not lists:
             return []
-        ids, scores = score_exhaustive(lists, avgdl, 1 << 31)
-        if self._tombstones:
-            keep = ~np.isin(ids.astype(np.int64),
-                            np.fromiter(self._tombstones, np.int64))
-            ids, scores = ids[keep], scores[keep]
+        ids, scores, _ = score_all(lists, avgdl)
+        tombs = self._tombstones
+        ids, scores = _topk_from_scores(
+            *_drop_tombstones(ids, scores, tombs), ids.size)
         n = min(int(rerank_docs), ids.size)
         rlists, ravgdl = self._term_lists(rerank_terms or [], field)
         if n and rlists:
-            rids, rscores = score_exhaustive(rlists, ravgdl, 1 << 31)
-            order = np.argsort(rids)
-            rid_s = rids[order].astype(np.int64)
-            rsc_s = rscores[order]
-            head = ids[:n].astype(np.int64)
-            pos = np.searchsorted(rid_s, head)
-            pos_c = np.minimum(pos, max(rid_s.size - 1, 0))
-            hit = (pos < rid_s.size) & (rid_s[pos_c] == head) \
-                if rid_s.size else np.zeros(n, bool)
-            scores = scores.copy()
-            scores[:n][hit] += float(weight) * rsc_s[pos_c[hit]]
-        ids2, scores2 = _topk_from_scores(ids, scores, k)
-        return [(int(i), float(s))
-                for i, s in zip(ids2.astype(np.int64), scores2)]
+            rids, rscores, _ = score_all(rlists, ravgdl)
+            hit, pos = _align(rids.astype(np.int64), ids[:n].astype(np.int64))
+            scores[:n][hit] += float(weight) * rscores[pos[hit]]
+        return self._live_topk(ids, scores, k, tombs)
 
     def ltr_rerank(self, terms: list[str], model, k: int = 10,
                    rerank_docs: int = 100,
@@ -1569,18 +1550,14 @@ class FtIndex:
         - ``bm25@<fld>``  — BM25 of the same terms on another field
           (the SolrFeature arbitrary-subquery analog)
         """
-        from ftidx.wand import score_exhaustive
-
         if k <= 0 or not terms:
             return []
         lists, avgdl = self._term_lists(terms, field)
         if not lists:
             return []
-        ids, scores = score_exhaustive(lists, avgdl, 1 << 31)
-        if self._tombstones:
-            keep = ~np.isin(ids.astype(np.int64),
-                            np.fromiter(self._tombstones, np.int64))
-            ids, scores = ids[keep], scores[keep]
+        ids, scores, _ = score_all(lists, avgdl)
+        ids, scores = _topk_from_scores(
+            *_drop_tombstones(ids, scores, self._tombstones), ids.size)
         n = min(int(rerank_docs), ids.size)
         head = ids[:n].astype(np.int64)
         hs_order = np.argsort(head)
@@ -1602,13 +1579,9 @@ class FtIndex:
                     continue
                 seen_terms.add(tl.term)
                 dids, _tfs, dls = tl.decode_all()
-                dids = dids.astype(np.int64)
-                pos = np.searchsorted(hs, dids)
-                pos_c = np.minimum(pos, max(hs.size - 1, 0))
-                hit = (pos < hs.size) & (hs[pos_c] == dids) \
-                    if hs.size else np.zeros(dids.size, bool)
-                matched[hs_order[pos_c[hit]]] += 1.0
-                dl_f[hs_order[pos_c[hit]]] = dls[hit]
+                hit, pos = _align(hs, dids.astype(np.int64))
+                matched[hs_order[pos[hit]]] += 1.0
+                dl_f[hs_order[pos[hit]]] = dls[hit]
             feats["matched"] = matched
             feats["dl"] = dl_f
         for name in sorted(need):
@@ -1617,15 +1590,9 @@ class FtIndex:
                 flists, favgdl = self._term_lists(terms, fld)
                 vals = np.zeros(n, np.float64)
                 if flists:
-                    rids, rscores = score_exhaustive(flists, favgdl, 1 << 31)
-                    order = np.argsort(rids)
-                    rid_s = rids[order].astype(np.int64)
-                    rsc_s = rscores[order]
-                    pos = np.searchsorted(rid_s, hs)
-                    pos_c = np.minimum(pos, max(rid_s.size - 1, 0))
-                    hit = (pos < rid_s.size) & (rid_s[pos_c] == hs) \
-                        if rid_s.size else np.zeros(hs.size, bool)
-                    vals[hs_order[hit]] = rsc_s[pos_c[hit]]
+                    rids, rscores, _ = score_all(flists, favgdl)
+                    hit, pos = _align(rids.astype(np.int64), hs)
+                    vals[hs_order[hit]] = rscores[pos[hit]]
                 feats[name] = vals
         unknown = need - set(feats)
         if unknown:
@@ -1660,7 +1627,6 @@ class FtIndex:
         :func:`~ftidx.positions.near_docs`, scoring reuses the warm
         term cache — one cache probe per term, no Spark job."""
         from ftidx.positions import near_docs, phrase_docs
-        from ftidx.wand import _topk_from_scores, score_exhaustive
 
         if slop < 0:
             raise ValueError("slop must be >= 0")
@@ -1669,7 +1635,7 @@ class FtIndex:
         lists, avgdl = self._term_lists(terms, field)
         if not lists:
             return []
-        ids, scores = score_exhaustive(lists, avgdl, 1 << 31)
+        ids, scores, _ = score_all(lists, avgdl)
         by_term = self._positions_by_term(sorted(set(terms)), field)
         if slop > 0:
             pdocs = near_docs(by_term, list(terms),
@@ -1679,14 +1645,7 @@ class FtIndex:
         if pdocs.size:
             bonus = pf_weight * float(sum(tl.idf for tl in lists))
             scores = scores + bonus * np.isin(ids.astype(np.int64), pdocs)
-        extra = len(self._tombstones)
-        ids2, scores2 = _topk_from_scores(ids, scores, k + extra)
-        out = [
-            (int(i), float(s))
-            for i, s in zip(ids2.astype(np.int64), scores2)
-            if int(i) not in self._tombstones
-        ]
-        return out[:k]
+        return self._live_topk(ids, scores, k)
 
     def near_topk(self, terms: list[str], window: int = 5, k: int = 10,
                   field: str = "code.content") -> list[tuple[int, float]]:
@@ -1724,17 +1683,12 @@ class FtIndex:
                 triples.append((float(w), lists, avgdl))
         if not triples:
             return []
-        extra = len(self._tombstones)
+        tombs = self._tombstones
         if tie is not None:
-            ids, scores = score_dismax(triples, k + extra, tie=tie)
+            ids, scores = score_dismax(triples, k + len(tombs), tie=tie)
         else:
-            ids, scores = score_weighted_fields(triples, k + extra)
-        out = [
-            (int(i), float(s))
-            for i, s in zip(ids.astype(np.int64), scores)
-            if int(i) not in self._tombstones
-        ]
-        return out[:k]
+            ids, scores = score_weighted_fields(triples, k + len(tombs))
+        return self._live_topk(ids, scores, k, tombs)
 
     def topk_where(self, terms: list[str], where: str, k: int = 10,
                    field: str = "code.content") -> DataFrame:
@@ -1953,59 +1907,74 @@ class FtIndex:
                 "n_docs": n_docs, "avgdl": avgdl,
                 "score": round(total, 6), "terms": out}
 
+    def _global_idfs(self, terms: list[str], field: str) -> dict[str, float]:
+        """{term: idf} for the ``terms`` present in ``field``, from the
+        index's n_docs and each term's df summed over every segment
+        (base + deltas) — one grouped aggregate, one Spark job. The
+        idf source for every per-bucket scorer."""
+        n_docs, _ = self.stats.get(field, (0, 1.0))
+        return {
+            r["term"]: bm25_idf(n_docs, int(r["df_global"]))
+            for r in self._postings.filter(
+                (F.col("field") == field) & F.col("term").isin(terms))
+            .groupBy("term").agg(F.sum("df").alias("df_global")).collect()
+        }
+
     def _scored_df(self, terms: list[str], field: str,
                    idfs: dict[str, float] | None = None,
-                   avgdl: float | None = None) -> DataFrame:
-        """Distributed full scoring of every matching doc: (doc_id,
-        score) with tombstones dropped. Per-bucket BM25 inside
-        executors via applyInPandas — globally valid because one
-        bucket owns all of a doc's postings rows. The shared engine
-        under :meth:`topk_where`, :meth:`topk_grouped` and
-        :meth:`search_sorted`.
+                   avgdl: float | None = None, k: int | None = None,
+                   mode: str = "or", exclude: list[str] | None = None,
+                   min_match: int | None = None) -> DataFrame:
+        """Distributed BM25 scoring: (doc_id, score) with tombstones
+        dropped. Per-bucket scoring inside executors via applyInPandas —
+        globally valid because one bucket owns all of a doc's postings
+        rows, so the per-bucket conjunction (``mode="and"``), exclusion
+        and match count (``min_match``) equal the global ones. With
+        ``k`` each bucket returns its own top-k (block-max pruned for
+        plain OR) — :meth:`topk_distributed`; without it, every
+        matching doc — the shared engine under :meth:`topk_where`,
+        :meth:`topk_grouped` and :meth:`search_sorted`.
 
         ``idfs``/``avgdl`` override the index's own statistics —
         FtShards passes GLOBAL values here so every shard of a
         distributed deployment scores on the same idf/avgdl
         (SolrCloud ExactStatsCache semantics); when None the local
-        statistics are computed as before."""
+        statistics are used."""
         qterms = sorted(set(terms))
+        xterms = sorted(set(exclude or []))
         prows = self._postings.filter(
-            (F.col("field") == field) & F.col("term").isin(qterms)
+            (F.col("field") == field) & F.col("term").isin(qterms + xterms)
         )
         if avgdl is None:
             _, avgdl = self.stats.get(field, (0, 1.0))
         if idfs is None:
-            df_by_term = {
-                r["term"]: int(r["df_global"])
-                for r in prows.groupBy("term").agg(F.sum("df").alias("df_global")).collect()
-            }
-            n_docs, _ = self.stats.get(field, (0, 1.0))
-            idfs = {t: bm25_idf(n_docs, d) for t, d in df_by_term.items()}
+            idfs = self._global_idfs(qterms + xterms, field)
         tombs = self._tombstones
+        floor = len(qterms) if mode == "and" else (min_match or 1)
+        pruned = k is not None and floor <= 1 and not xterms
+        qset, xset = set(qterms), set(xterms)
 
-        def score_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = []
+        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+            lists, xlists = [], []
             for term, grp in pdf.groupby("term", sort=True):
                 tl = TermList(term, grp.to_dict("records"), idfs[term])
-                ids, tfs, dls = tl.decode_all()
-                per_term.append((ids, bm25_contrib(tfs, dls, tl.idf, avgdl)))
-            if not per_term:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
-            import numpy as _np
-
-            all_ids = _np.concatenate([i for i, _ in per_term])
-            all_c = _np.concatenate([c for _, c in per_term])
-            uniq, inv = _np.unique(all_ids, return_inverse=True)
-            scores = _np.bincount(inv, weights=all_c, minlength=uniq.size)
-            out = pd.DataFrame({"doc_id": uniq.astype(_np.int64),
-                                "score": scores})
-            if tombs:
-                out = out[~out["doc_id"].isin(list(tombs))]
-            return out
+                if term in qset:
+                    lists.append(tl)
+                if term in xset:
+                    xlists.append(tl)
+            if pruned:
+                ids, scores = score_block_max(lists, avgdl, k + len(tombs))
+            else:
+                ids, scores = filter_matches(*score_all(lists, avgdl),
+                                             floor=floor, exclude_lists=xlists)
+            ids, scores = _drop_tombstones(ids, scores, tombs)
+            if k is not None:
+                ids, scores = _topk_from_scores(ids, scores, k)
+            return pd.DataFrame({"doc_id": ids.astype(np.int64),
+                                 "score": scores})
 
         return prows.groupBy("bucket").applyInPandas(
-            score_all, schema="doc_id long, score double")
+            score_bucket, schema="doc_id long, score double")
 
     def _term_scored_df(self, terms: list[str], field: str,
                         idfs: dict[str, float] | None = None,
@@ -2026,37 +1995,23 @@ class FtIndex:
         if avgdl is None:
             _, avgdl = self.stats.get(field, (0, 1.0))
         if idfs is None:
-            df_by_term = {
-                r["term"]: int(r["df_global"])
-                for r in prows.groupBy("term").agg(
-                    F.sum("df").alias("df_global")).collect()
-            }
-            n_docs, _ = self.stats.get(field, (0, 1.0))
-            idfs = {t: bm25_idf(n_docs, d) for t, d in df_by_term.items()}
+            idfs = self._global_idfs(qterms, field)
         tombs = self._tombstones
 
         def score_terms(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as _np
-
             parts = []
             for term, grp in pdf.groupby("term", sort=True):
                 tl = TermList(term, grp.to_dict("records"), idfs[term])
-                ids, tfs, dls = tl.decode_all()
-                c = bm25_contrib(tfs, dls, tl.idf, avgdl)
-                uniq, inv = _np.unique(ids, return_inverse=True)
-                summed = _np.bincount(inv, weights=c, minlength=uniq.size)
-                parts.append(pd.DataFrame({
-                    "doc_id": uniq.astype(_np.int64),
-                    "term": term, "contrib": summed}))
+                ids, contrib = _drop_tombstones(
+                    *score_all([tl], avgdl)[:2], tombs)
+                parts.append(pd.DataFrame({"doc_id": ids.astype(np.int64),
+                                           "term": term, "contrib": contrib}))
             if not parts:
                 return pd.DataFrame({
                     "doc_id": pd.Series(dtype="int64"),
                     "term": pd.Series(dtype="object"),
                     "contrib": pd.Series(dtype="float64")})
-            out = pd.concat(parts, ignore_index=True)
-            if tombs:
-                out = out[~out["doc_id"].isin(list(tombs))]
-            return out
+            return pd.concat(parts, ignore_index=True)
 
         return prows.groupBy("bucket").applyInPandas(
             score_terms, schema="doc_id long, term string, contrib double")
@@ -3535,13 +3490,19 @@ class FtIndex:
         (buckets, postings emitted, bytes, elapsed, skew — the
         reference's S30 progress metrics, read back from the persisted
         per-bucket ledger, KB-sized). Cheap: no postings scan — the
-        only job is the ledger read, a tiny parquet."""
+        only job is the ledger read, a tiny parquet. Counters are
+        copied under ``_cache_lock``; the ledger read runs outside it so
+        concurrent queries never wait behind a Spark job."""
         with self._cache_lock:
-            return self._metrics_inner()
+            out = self._cache_metrics()
+        ledger_dir = self.path / "ledger"
+        if ledger_dir.exists() and any(ledger_dir.iterdir()):
+            out.update(self._ledger_metrics(ledger_dir, out["build_id"]))
+        return out
 
-    def _metrics_inner(self) -> dict:
+    def _cache_metrics(self) -> dict:
         probes = self._cache_hits + self._cache_misses
-        out = {
+        return {
             "term_cache": {
                 "entries": len(self._term_cache),
                 "bytes": int(self._cache_bytes),
@@ -3570,73 +3531,76 @@ class FtIndex:
             "tombstones_pending": len(self._tombstones),
             "build_id": self.manifest.get("build_id"),
         }
-        ledger_dir = self.path / "ledger"
-        if ledger_dir.exists() and any(ledger_dir.iterdir()):
-            # mergeSchema: ledgers written before the S27 error column
-            # existed coexist with rows that carry it — without the
-            # merge, Spark picks one file's schema arbitrarily
-            led = self.spark.read.option("mergeSchema", "true") \
-                .parquet(str(ledger_dir))
-            # the ledger is append-only across build generations — a
-            # blind sum double-counts after a rebuild. Aggregate per
-            # generation and report the manifest's build id; a resume
-            # that skipped every bucket writes a fresh manifest id with
-            # NO ledger rows, so fall back to the most complete
-            # generation (ties broken deterministically by id; tied
-            # complete generations describe the same index — resume
-            # verifies the build params match — so any is valid)
-            per_gen = (
-                led.filter(F.col("status") == "done")
-                .groupBy("build_id")
-                .agg(F.count(F.lit(1)).alias("buckets_done"),
-                     F.sum("postings_emitted").alias("postings"),
-                     F.sum("bytes_compressed").alias("bytes"),
-                     F.max("skew_ratio").alias("max_skew"),
-                     F.sum("elapsed_sec").alias("task_sec")).collect()
+
+    def _ledger_metrics(self, ledger_dir: Path, build_id) -> dict:
+        """The last build's ledger summary and failure reasons for
+        :meth:`metrics`, read from the persisted per-bucket ledger."""
+        out = {}
+        # mergeSchema: ledgers written before the S27 error column
+        # existed coexist with rows that carry it — without the
+        # merge, Spark picks one file's schema arbitrarily
+        led = self.spark.read.option("mergeSchema", "true") \
+            .parquet(str(ledger_dir))
+        # the ledger is append-only across build generations — a
+        # blind sum double-counts after a rebuild. Aggregate per
+        # generation and report the manifest's build id; a resume
+        # that skipped every bucket writes a fresh manifest id with
+        # NO ledger rows, so fall back to the most complete
+        # generation (ties broken deterministically by id; tied
+        # complete generations describe the same index — resume
+        # verifies the build params match — so any is valid)
+        per_gen = (
+            led.filter(F.col("status") == "done")
+            .groupBy("build_id")
+            .agg(F.count(F.lit(1)).alias("buckets_done"),
+                 F.sum("postings_emitted").alias("postings"),
+                 F.sum("bytes_compressed").alias("bytes"),
+                 F.max("skew_ratio").alias("max_skew"),
+                 F.sum("elapsed_sec").alias("task_sec")).collect()
+        )
+        if per_gen:
+            by_id = {r["build_id"]: r for r in per_gen}
+            row = by_id.get(build_id) or max(
+                per_gen,
+                key=lambda r: (int(r["buckets_done"]), r["build_id"]))
+            out["last_build"] = {
+                "build_id": row["build_id"],
+                "buckets_done": int(row["buckets_done"] or 0),
+                "postings_emitted": int(row["postings"] or 0),
+                "bytes_compressed": int(row["bytes"] or 0),
+                "max_skew_ratio": float(row["max_skew"] or 0.0),
+                "task_sec_total": float(row["task_sec"] or 0.0),
+            }
+        # S27 queueFail analog (RawRepoQueueBean.java:28-34): the
+        # persisted per-bucket failure reasons, so an operator sees
+        # WHY a bucket failed from /metrics, not driver logs. The
+        # ledger is append-only, so reasons survive the resume that
+        # fixed them; unresolved = failed buckets with no "done"
+        # row anywhere (i.e. still pending a successful retry).
+        if "error" in led.columns:
+            fails = (
+                led.filter(F.col("status") == "failed")
+                .select("build_id", "bucket", "tracking_id", "error")
+                .collect()
             )
-            if per_gen:
-                by_id = {r["build_id"]: r for r in per_gen}
-                row = by_id.get(self.manifest.get("build_id")) or max(
-                    per_gen,
-                    key=lambda r: (int(r["buckets_done"]), r["build_id"]))
-                out["last_build"] = {
-                    "build_id": row["build_id"],
-                    "buckets_done": int(row["buckets_done"] or 0),
-                    "postings_emitted": int(row["postings"] or 0),
-                    "bytes_compressed": int(row["bytes"] or 0),
-                    "max_skew_ratio": float(row["max_skew"] or 0.0),
-                    "task_sec_total": float(row["task_sec"] or 0.0),
+            if fails:
+                done_b = {
+                    int(r["bucket"])
+                    for r in led.filter(F.col("status") == "done")
+                    .select("bucket").distinct().collect()
                 }
-            # S27 queueFail analog (RawRepoQueueBean.java:28-34): the
-            # persisted per-bucket failure reasons, so an operator sees
-            # WHY a bucket failed from /metrics, not driver logs. The
-            # ledger is append-only, so reasons survive the resume that
-            # fixed them; unresolved = failed buckets with no "done"
-            # row anywhere (i.e. still pending a successful retry).
-            if "error" in led.columns:
-                fails = (
-                    led.filter(F.col("status") == "failed")
-                    .select("build_id", "bucket", "tracking_id", "error")
-                    .collect()
-                )
-                if fails:
-                    done_b = {
-                        int(r["bucket"])
-                        for r in led.filter(F.col("status") == "done")
-                        .select("bucket").distinct().collect()
-                    }
-                    out["failures"] = {
-                        "count": len(fails),
-                        "unresolved_buckets": sorted(
-                            {int(r["bucket"]) for r in fails} - done_b),
-                        "rows": [
-                            {"build_id": r["build_id"],
-                             "bucket": int(r["bucket"]),
-                             "tracking_id": r["tracking_id"],
-                             "error": r["error"]}
-                            for r in fails[:50]
-                        ],
-                    }
+                out["failures"] = {
+                    "count": len(fails),
+                    "unresolved_buckets": sorted(
+                        {int(r["bucket"]) for r in fails} - done_b),
+                    "rows": [
+                        {"build_id": r["build_id"],
+                         "bucket": int(r["bucket"]),
+                         "tracking_id": r["tracking_id"],
+                         "error": r["error"]}
+                        for r in fails[:50]
+                    ],
+                }
         return out
 
     def predicate_ids(self, predicate: str) -> frozenset:
@@ -3679,7 +3643,7 @@ class FtIndex:
         # tombstone set without refresh(), and a baked-in subtraction
         # would keep serving deleted ids from the cache
         if self._tombstones:
-            return cached - frozenset(self._tombstones)
+            return cached - self._tombstones
         return cached
 
     def facet_counts_for_ids(self, doc_ids, facet: str = "lang",
@@ -4195,48 +4159,9 @@ class FtIndex:
         bucket-keyed), so the per-bucket conjunction/exclusion/
         match-count equals the global one — full parity with
         :meth:`topk`'s boolean surface on the distributed path."""
-        qterms = sorted(set(terms))
-        xterms = sorted(set(exclude or []))
-        prows = self._postings.filter(
-            (F.col("field") == field) & F.col("term").isin(qterms + xterms)
-        )
-        df_by_term = {
-            r["term"]: int(r["df_global"])
-            for r in prows.groupBy("term").agg(F.sum("df").alias("df_global")).collect()
-        }
-        n_docs, avgdl = self.stats.get(field, (0, 1.0))
-        idfs = {t: bm25_idf(n_docs, d) for t, d in df_by_term.items()}
-        tombs = self._tombstones
-        n_required = len(qterms) if mode == "and" else 0
-        qset, xset = set(qterms), set(xterms)
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            lists, xlists = [], []
-            for term, grp in pdf.groupby("term", sort=True):
-                tl = TermList(term, grp.to_dict("records"), idfs[term])
-                if term in qset:
-                    lists.append(tl)
-                if term in xset:
-                    xlists.append(tl)
-            if n_required and len(lists) < n_required:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
-            if n_required or xlists or min_match:
-                ids, scores = score_boolean(
-                    lists, avgdl, k + len(tombs),
-                    require_all=bool(n_required), exclude_lists=xlists,
-                    min_match=min_match)
-            else:
-                ids, scores = score_block_max(lists, avgdl, k + len(tombs))
-            out = pd.DataFrame({"doc_id": ids.astype(np.int64), "score": scores})
-            if tombs:
-                out = out[~out["doc_id"].isin(list(tombs))]
-            return out.head(k)
-
-        per_bucket = prows.groupBy("bucket").applyInPandas(
-            score_bucket, schema="doc_id long, score double"
-        )
-        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return (self._scored_df(terms, field, k=k, mode=mode,
+                                exclude=exclude, min_match=min_match)
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 class _FuncQueryProvider:

@@ -253,7 +253,9 @@ def jpeg_decode_rgb(b: bytes) -> np.ndarray:
     # too-small plane into a broadcast error
     lum_cid, lum_h, lum_v, _ = comps[0]
     if not interleaved:
-        lum_h = lum_v = 1
+        # a lone component's plane is full-raster whatever factors it
+        # declares: no slice, no upsampling
+        lum_h, lum_v = hmax, vmax
     if hmax % lum_h or vmax % lum_v:
         raise NotImplementedError(
             "non-integer luma subsampling requires a real codec")

@@ -138,7 +138,7 @@ def execute(idx, q: str, k: int = 10,
     scoring, so anything else falls through to the exhaustive path
     (``kernel="exhaustive"`` forces it)."""
     from ftidx.positions import near_docs, phrase_docs
-    from ftidx.wand import bm25_contrib
+    from ftidx.wand import _scatter_add, bm25_contrib
 
     if k <= 0:
         return []
@@ -164,9 +164,7 @@ def execute(idx, q: str, k: int = 10,
                     for tl in lists]
         tombs = idx._tombstones
         ids, scores = score_block_max(weighted, avgdl, k + len(tombs))
-        return [(int(i), float(s))
-                for i, s in zip(ids.astype(np.int64), scores)
-                if int(i) not in tombs][:k]
+        return idx._live_topk(ids, scores, k, tombs)
 
     # single-term "phrases" act as plain term clauses
     for c in clauses:
@@ -338,15 +336,7 @@ def execute(idx, q: str, k: int = 10,
             ids = lists[0].decode_all()[0] if lists else np.empty(0, np.uint64)
             presence.append(("-", ids))
 
-    if not per_term:
-        return []
-    all_ids = np.concatenate([i for i, _ in per_term])
-    all_c = np.concatenate([c for _, c in per_term])
-    if all_ids.size == 0:
-        return []
-    uniq, inv = np.unique(all_ids, return_inverse=True)
-    scores = np.bincount(inv, weights=all_c, minlength=uniq.size)
-
+    uniq, scores, _ = _scatter_add(per_term)
     mask = np.ones(uniq.size, dtype=bool)
     for occur, ids in presence:
         if occur == "+":
@@ -366,9 +356,4 @@ def execute(idx, q: str, k: int = 10,
         if s:
             mask &= ~np.isin(u64, np.fromiter(s, np.int64, len(s)))
 
-    tombs = idx._tombstones
-    ranked = sorted(
-        ((int(d), float(s)) for d, s in zip(u64[mask], scores[mask])
-         if int(d) not in tombs),
-        key=lambda kv: (-kv[1], kv[0]))
-    return ranked[:k]
+    return idx._live_topk(uniq[mask], scores[mask], k)

@@ -35,7 +35,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from ftidx.wand import TermList, bm25_contrib, bm25_idf
+from ftidx.wand import TermList, bm25_contrib, bm25_idf, merge_group, score_all
 
 
 class FtShards:
@@ -72,6 +72,25 @@ class FtShards:
                       for by in per_shard) for t in qterms}
         return qterms, per_shard, gdf
 
+    def _global_idfs(self, terms: list[str], field: str) -> dict[str, float]:
+        """{term: idf} under GLOBAL df and n_docs for the terms present
+        in any shard — the idf every shard's executor scoring uses."""
+        n_docs, _ = self.global_stats(field)
+        _, _, gdf = self._gather(terms, field)
+        return {t: bm25_idf(n_docs, d) for t, d in gdf.items() if d > 0}
+
+    @staticmethod
+    def _merge_live(per_shard: list[tuple], k: int
+                    ) -> list[tuple[int, int, float]]:
+        """Exact global top-k from per-shard candidates: each shard
+        contributes its own live top-k (its ``_live_topk``), a superset
+        of its share of the global top-k under (score DESC, shard ASC,
+        doc_id ASC); returns (shard, doc_id, score)."""
+        merged = [(s, si, d) for si, (sh, ids, scores) in enumerate(per_shard)
+                  for d, s in sh._live_topk(ids, scores, k)]
+        merged.sort(key=lambda x: (-x[0], x[1], x[2]))
+        return [(si, d, s) for s, si, d in merged[:k]]
+
     # -- phase 2: score + merge ------------------------------------------
     def topk(self, terms: list[str], k: int = 10,
              field: str = "code.content", require_all: bool = False,
@@ -85,32 +104,20 @@ class FtShards:
             return []
         qterms, per_shard, gdf = self._gather(terms, field)
         n_docs, avgdl = self.global_stats(field)
-        merged: list[tuple[float, int, int]] = []
-        for si, (sh, by_term) in enumerate(zip(self.shards, per_shard)):
-            per_term = []
+        scored = []
+        for sh, by_term in zip(self.shards, per_shard):
+            lists = []
             for t in qterms:
-                rows = by_term.get(t, [])
-                if not rows:
-                    continue
-                ids, tfs, dls = TermList(t, rows, 0.0).decode_all()
-                idf = bm25_idf(n_docs, gdf[t])
-                per_term.append((ids, bm25_contrib(tfs, dls, idf, avgdl)))
-            if not per_term:
-                continue
-            ids = np.concatenate([i for i, _ in per_term])
-            contribs = np.concatenate([c for _, c in per_term])
-            uniq, inv = np.unique(ids, return_inverse=True)
-            scores = np.bincount(inv, weights=contribs, minlength=uniq.size)
+                if by_term.get(t):
+                    tl = TermList(t, by_term[t], bm25_idf(n_docs, gdf[t]))
+                    tl.df = gdf[t]  # accumulate in the monolithic order
+                    lists.append(tl)
+            ids, scores, n_matched = score_all(lists, avgdl)
             if require_all:
-                hits = np.bincount(inv, minlength=uniq.size)
-                keep = hits >= len(qterms)
-                uniq, scores = uniq[keep], scores[keep]
-            tombs = sh._tombstones
-            merged.extend(
-                (float(s), si, int(d)) for d, s in zip(uniq, scores)
-                if int(d) not in tombs)
-        merged.sort(key=lambda x: (-x[0], x[1], x[2]))
-        return [(si, d, s) for s, si, d in merged[:k]]
+                keep = n_matched >= len(qterms)
+                ids, scores = ids[keep], scores[keep]
+            scored.append((sh, ids, scores))
+        return self._merge_live(scored, k)
 
     def count(self, terms: list[str], field: str = "code.content") -> int:
         """Total matching docs across shards (numFound)."""
@@ -265,46 +272,26 @@ class FtShards:
                 t, field=field, limit=(1 << 31) - 1, algo=algo)]
             groups[t] = exp or [t]
         members_all = sorted({m for ms in groups.values() for m in ms})
-        per_shard: list[dict] = []
+        per_shard: list[list[TermList]] = []
         gdf = {c: 0 for c in groups}
         for sh in self.shards:
             by = sh._fetch_term_rows(members_all, field)
-            sgs = {}
+            glists = []
             for canon, members in groups.items():
-                parts = [TermList(m, by[m], 0.0).decode_all()
+                lists = [TermList(m, by[m], 0.0)
                          for m in dict.fromkeys(members) if by.get(m)]
-                if not parts:
-                    continue
-                ids = np.concatenate([p[0] for p in parts]).astype(np.int64)
-                tfs = np.concatenate([p[1] for p in parts]).astype(np.int64)
-                dls = np.concatenate([p[2] for p in parts]).astype(np.int64)
-                uids, inv = np.unique(ids, return_inverse=True)
-                utf = np.zeros(uids.size, np.int64)
-                np.add.at(utf, inv, tfs)
-                udl = np.zeros(uids.size, np.int64)
-                udl[inv] = dls  # dl is per-doc, same across members
-                sgs[canon] = (uids, utf, udl)
-                gdf[canon] += uids.size
-            per_shard.append(sgs)
-        merged: list[tuple[float, int, int]] = []
-        for si, (sh, sgs) in enumerate(zip(self.shards, per_shard)):
-            all_ids, all_c = [], []
-            for canon, (uids, utf, udl) in sgs.items():
-                idf = bm25_idf(n_docs, gdf[canon])
-                all_ids.append(uids)
-                all_c.append(bm25_contrib(utf, udl, idf, avgdl))
-            if not all_ids:
-                continue
-            cat = np.concatenate(all_ids)
-            catc = np.concatenate(all_c)
-            fids, inv = np.unique(cat, return_inverse=True)
-            scores = np.bincount(inv, weights=catc, minlength=fids.size)
-            tombs = sh._tombstones
-            merged.extend((float(s), si, int(d))
-                          for d, s in zip(fids, scores)
-                          if int(d) not in tombs)
-        merged.sort(key=lambda x: (-x[0], x[1], x[2]))
-        return [(si, d, s) for s, si, d in merged[:k]]
+                if lists:
+                    glists.append(merge_group(canon, lists))
+                    gdf[canon] += glists[-1].df
+            per_shard.append(glists)
+        scored = []
+        for sh, glists in zip(self.shards, per_shard):
+            for g in glists:
+                # global df: the monolithic idf and accumulation order
+                g.df = gdf[g.term]
+                g.idf = bm25_idf(n_docs, g.df)
+            scored.append((sh, *score_all(glists, avgdl)[:2]))
+        return self._merge_live(scored, k)
 
     def ltr_rerank(self, terms: list[str], model, k: int = 10,
                    rerank_docs: int = 100, field: str = "code.content"
@@ -500,9 +487,8 @@ class FtShards:
         to the named columns of its OWN docs table (ids are
         shard-local). The shared engine under the sharded
         :meth:`expand_topk` and :meth:`join_topk`."""
-        n_docs, avgdl = self.global_stats(field)
-        qterms, _, gdf = self._gather(terms, field)
-        idfs = {t: bm25_idf(n_docs, gdf[t]) for t in qterms if gdf[t] > 0}
+        _, avgdl = self.global_stats(field)
+        idfs = self._global_idfs(terms, field)
         frames = []
         for si, sh in enumerate(self.shards):
             docs = sh.spark.read.parquet(str(sh.path / "docs")).select(
@@ -615,9 +601,8 @@ class FtShards:
         contrib, shard) under GLOBAL idf/avgdl — the sharded sibling
         of FtIndex._term_scored_df, for per-clause dismax
         combination."""
-        n_docs, avgdl = self.global_stats(field)
-        qterms, _, gdf = self._gather(terms, field)
-        idfs = {t: bm25_idf(n_docs, gdf[t]) for t in qterms if gdf[t] > 0}
+        _, avgdl = self.global_stats(field)
+        idfs = self._global_idfs(terms, field)
         uni = None
         for si, sh in enumerate(self.shards):
             fr = sh._term_scored_df(terms, field, idfs=idfs,
@@ -862,9 +847,8 @@ class FtShards:
 
         if l is None and u is None:
             raise ValueError("frange needs l= and/or u=")
-        n_docs, avgdl = self.global_stats(field)
-        qterms, _, gdf = self._gather(terms, field)
-        idfs = {t: bm25_idf(n_docs, gdf[t]) for t in qterms if gdf[t] > 0}
+        _, avgdl = self.global_stats(field)
+        idfs = self._global_idfs(terms, field)
         cache: dict = {}
         frames = []
         for si, sh in enumerate(self.shards):

@@ -3,11 +3,26 @@
 The retrieval capability the reference delegates to Solr (Q5/Q7 in
 SURVEY §2: SolrQuery at IndexerIT.java:98-105 + default ranking).
 
-Two kernels, required rank-identical by tests:
+Every BM25 accumulation in ftidx runs through this module, whether the
+caller is the driver (``FtIndex``/``FtShards``/``qparse``) or a
+per-bucket executor closure:
 
-- :func:`score_exhaustive` — decode everything, one vectorized
-  scatter-add. The verification oracle and often the fastest path for
-  numpy batch execution (SIMD beats branchy skipping at small scale).
+- :func:`score_all` — the one uncut scorer: decode every list, one
+  vectorized scatter-add, and return every matching doc with its score
+  and the number of lists it matched. Callers that need every match
+  (reranking, positional filters, per-bucket scoring) use it directly.
+- :func:`score_exhaustive` — :func:`score_all`'s scatter-add plus the
+  exact (score DESC, doc_id ASC) top-k cut. The verification oracle
+  and often the fastest path for numpy batch execution (SIMD beats
+  branchy skipping at small scale).
+- :func:`score_boolean` — :func:`score_all` plus :func:`filter_matches`
+  (AND / minimum-should-match / exclusion) before the cut.
+- :func:`score_weighted_fields` / :func:`score_dismax` — the per-field
+  contributions of :func:`score_all`, combined as a weighted sum or as
+  best-field + tie × rest.
+- :func:`merge_group` — folds a synonym/stem class into one pseudo-term
+  (tf summed, dl shared, df = size of the union) that scores like any
+  other list.
 - :func:`score_block_max` — block-max pruning in the WAND family,
   restructured for vectorized execution: instead of per-document
   pivoting (branchy per-row Python — forbidden by input_hint), it
@@ -17,11 +32,14 @@ Two kernels, required rank-identical by tests:
   boundaries and sums per-interval upper bounds from the encode-time
   block metadata (max tf, min dl — codec.py),
   (3) decodes only blocks overlapping intervals whose total upper
-  bound ≥ θ, then scatter-adds exactly like the exhaustive kernel.
-  Every pruned doc provably cannot reach the top-k → exact results.
+  bound ≥ θ, then runs the same scatter-add as the exhaustive kernel.
+  Every pruned doc provably cannot reach the top-k → exact results,
+  rank-identical to :func:`score_exhaustive` (pinned by tests).
 
-Both kernels accumulate per-term contributions in a fixed order
+Every kernel accumulates per-term contributions in one fixed order
 (sorted by (df, term)) → deterministic scores at any parallelism.
+Tombstones are not this module's concern: callers drop them from the
+uncut (or k + pending-tombstones) output before their final cut.
 """
 
 from __future__ import annotations
@@ -151,28 +169,78 @@ class TermList:
         return np.concatenate(ids_out), np.concatenate(tfs_out), np.concatenate(dls_out)
 
 
-def _accumulate(per_term, k: int):
-    if not per_term:
-        return np.empty(0, np.uint64), np.empty(0, np.float64)
-    all_ids = np.concatenate([ids for ids, _ in per_term])
-    all_contrib = np.concatenate([c for _, c in per_term])
+def _term_contribs(lists: list[TermList], avgdl: float,
+                   weight: float = 1.0) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Per-list (ids, weight × BM25 contribution), in (df, term) order."""
+    out = []
+    for tl in sorted(lists, key=lambda t: (t.df, t.term)):
+        ids, tfs, dls = tl.decode_all()
+        out.append((ids, weight * bm25_contrib(tfs, dls, tl.idf, avgdl)))
+    return out
+
+
+def _scatter_add(per_term):
+    """The one BM25 scatter-add: (ids, contribs) pairs → (unique ids
+    ascending, summed scores, inverse index into the unique ids). Each
+    doc's sum runs in the order of ``per_term``."""
+    all_ids = (np.concatenate([ids for ids, _ in per_term]) if per_term
+               else np.empty(0, np.uint64))
     if all_ids.size == 0:
-        return np.empty(0, np.uint64), np.empty(0, np.float64)
+        return all_ids, np.empty(0, np.float64), np.empty(0, np.intp)
+    all_contrib = np.concatenate([c for _, c in per_term])
     uniq, inv = np.unique(all_ids, return_inverse=True)
     # bincount is the vectorized scatter-add (np.add.at is an order of
     # magnitude slower on large inputs)
-    scores = np.bincount(inv, weights=all_contrib, minlength=uniq.size)
+    return uniq, np.bincount(inv, weights=all_contrib, minlength=uniq.size), inv
+
+
+def _accumulate(per_term, k: int):
+    uniq, scores, _ = _scatter_add(per_term)
     return _topk_from_scores(uniq, scores, k)
+
+
+def score_all(lists: list[TermList], avgdl: float, weight: float = 1.0):
+    """Uncut BM25 over ``lists``: (ids ascending, scores, n_matched),
+    where ``n_matched[i]`` counts the lists containing ``ids[i]`` (a doc
+    lives in one segment per term, so this is its matched-term count).
+    ``weight`` scales every contribution (a field's ``qf`` weight)."""
+    uniq, scores, inv = _scatter_add(_term_contribs(lists, avgdl, weight))
+    return uniq, scores, np.bincount(inv, minlength=uniq.size)
+
+
+def filter_matches(ids: np.ndarray, scores: np.ndarray, n_matched: np.ndarray,
+                   floor: int = 1, exclude_lists: list[TermList] | None = None):
+    """Boolean cut over :func:`score_all` output: keep docs matching at
+    least ``floor`` query terms (all of them for AND, ``mm`` for
+    minimum-should-match) and none of ``exclude_lists``."""
+    mask = n_matched >= floor if floor > 1 else np.ones(ids.size, dtype=bool)
+    for xl in exclude_lists or ():
+        xids, _, _ = xl.decode_all()
+        if xids.size:
+            mask &= ~np.isin(ids, xids)
+    return ids[mask], scores[mask]
+
+
+def merge_group(term: str, lists: list[TermList]) -> TermList:
+    """One pseudo-term from a synonym / stem class (Solr
+    SynonymGraphFilter at query time): a doc's tf is the sum of its
+    member tfs, its dl is shared by every member, and df is the size of
+    the members' union. The caller sets ``idf`` (from this df, or from a
+    global df across shards). The result is pre-decoded, so it scores
+    through :func:`score_all`, not the block-max kernel."""
+    ids, tfs, dls = (np.concatenate(a) for a in
+                     zip(*(tl.decode_all() for tl in lists)))
+    uids, inv = np.unique(ids, return_inverse=True)
+    utf = np.bincount(inv, weights=tfs, minlength=uids.size)
+    udl = np.zeros(uids.size, dls.dtype)
+    udl[inv] = dls
+    return TermList(term, [{"df": uids.size, "_dec": (uids, utf, udl)}], 0.0)
 
 
 def score_exhaustive(lists: list[TermList], avgdl: float, k: int):
     if k <= 0:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
-    per_term = []
-    for tl in sorted(lists, key=lambda t: (t.df, t.term)):
-        ids, tfs, dls = tl.decode_all()
-        per_term.append((ids, bm25_contrib(tfs, dls, tl.idf, avgdl)))
-    return _accumulate(per_term, k)
+    return _accumulate(_term_contribs(lists, avgdl), k)
 
 
 def score_weighted_fields(field_lists, k: int):
@@ -186,13 +254,8 @@ def score_weighted_fields(field_lists, k: int):
     until single-field pruning is the bottleneck)."""
     if k <= 0:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
-    per_term = []
-    for weight, lists, avgdl in field_lists:
-        for tl in sorted(lists, key=lambda t: (t.df, t.term)):
-            ids, tfs, dls = tl.decode_all()
-            per_term.append(
-                (ids, weight * bm25_contrib(tfs, dls, tl.idf, avgdl)))
-    return _accumulate(per_term, k)
+    return _accumulate([p for weight, lists, avgdl in field_lists
+                        for p in _term_contribs(lists, avgdl, weight)], k)
 
 
 def score_dismax(field_lists, k: int, tie: float = 0.0):
@@ -203,33 +266,23 @@ def score_dismax(field_lists, k: int, tie: float = 0.0):
     wins), ``tie=1`` degenerates to :func:`score_weighted_fields`' sum.
 
     ``field_lists``: iterable of (weight, lists, avgdl) triples, one
-    per field. Vectorized: one aligned id universe (np.unique over the
-    per-field concat), one bincount per field, then
-    ``max + tie·(sum − max)`` column-wise."""
+    per field. Vectorized: each field's :func:`score_all`, aligned on
+    one id universe, then ``max + tie·(sum − max)`` column-wise."""
     if k <= 0:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
-    per_field = []
-    for weight, lists, avgdl in field_lists:
-        ids_parts, contrib_parts = [], []
-        for tl in sorted(lists, key=lambda t: (t.df, t.term)):
-            ids, tfs, dls = tl.decode_all()
-            ids_parts.append(ids)
-            contrib_parts.append(weight * bm25_contrib(tfs, dls, tl.idf, avgdl))
-        if ids_parts:
-            per_field.append((np.concatenate(ids_parts),
-                              np.concatenate(contrib_parts)))
-    if not per_field or all(ids.size == 0 for ids, _ in per_field):
+    per_field = [score_all(lists, avgdl, weight)[:2]
+                 for weight, lists, avgdl in field_lists]
+    per_field = [(ids, s) for ids, s in per_field if ids.size]
+    if not per_field:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
     uniq = np.unique(np.concatenate([ids for ids, _ in per_field]))
     best = np.zeros(uniq.size, np.float64)
     total = np.zeros(uniq.size, np.float64)
-    for ids, contrib in per_field:
-        if ids.size == 0:
-            continue
-        pos = np.searchsorted(uniq, ids)
-        fscore = np.bincount(pos, weights=contrib, minlength=uniq.size)
-        np.maximum(best, fscore, out=best)
-        total += fscore
+    for ids, fscore in per_field:
+        aligned = np.zeros(uniq.size, np.float64)
+        aligned[np.searchsorted(uniq, ids)] = fscore
+        np.maximum(best, aligned, out=best)
+        total += aligned
     combined = best + tie * (total - best)
     return _topk_from_scores(uniq, combined, k)
 
@@ -250,28 +303,10 @@ def score_boolean(lists: list[TermList], avgdl: float, k: int,
     filter."""
     if k <= 0 or not lists:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
-    per_term = []
-    for tl in sorted(lists, key=lambda t: (t.df, t.term)):
-        ids, tfs, dls = tl.decode_all()
-        per_term.append((ids, bm25_contrib(tfs, dls, tl.idf, avgdl)))
-    all_ids = np.concatenate([ids for ids, _ in per_term])
-    all_contrib = np.concatenate([c for _, c in per_term])
-    if all_ids.size == 0:
-        return np.empty(0, np.uint64), np.empty(0, np.float64)
-    uniq, inv = np.unique(all_ids, return_inverse=True)
-    scores = np.bincount(inv, weights=all_contrib, minlength=uniq.size)
-    mask = np.ones(uniq.size, dtype=bool)
-    if require_all:
-        # a doc appears at most once per term (one owning segment), so
-        # its multiplicity across the concat == number of matched terms
-        mask &= np.bincount(inv, minlength=uniq.size) == len(per_term)
-    elif min_match is not None and min_match > 1:
-        mask &= np.bincount(inv, minlength=uniq.size) >= min_match
-    for xl in exclude_lists or ():
-        xids, _, _ = xl.decode_all()
-        if xids.size:
-            mask &= ~np.isin(uniq, xids)
-    return _topk_from_scores(uniq[mask], scores[mask], k)
+    floor = len(lists) if require_all else (min_match or 1)
+    ids, scores = filter_matches(*score_all(lists, avgdl), floor=floor,
+                                 exclude_lists=exclude_lists)
+    return _topk_from_scores(ids, scores, k)
 
 
 def score_block_max(lists: list[TermList], avgdl: float, k: int):

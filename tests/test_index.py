@@ -181,6 +181,63 @@ def test_delete_tombstones(spark, built, oracle):
     assert victim not in [d for d, _ in idx2.topk(["def"], 3)]
 
 
+def test_tombstone_snapshot_immutable(spark, built):
+    """A reader's tombstone snapshot never changes under it: delete()
+    swaps in a new set instead of mutating the one being iterated."""
+    idx = open_index(spark, built[0])
+    snap = idx._tombstones
+    before = set(snap)
+    absent = -1  # no doc carries a negative id; pages are unaffected
+    idx.delete([absent])
+    assert set(snap) == before and absent not in snap
+    assert absent in idx._tombstones
+
+
+PARITY_CASES = {
+    "or": {},
+    "and": {"mode": "and"},
+    "mm2": {"min_match": 2},
+    "exclude": {"exclude": ["alpha"]},
+}
+
+
+@pytest.mark.parametrize("case", sorted(PARITY_CASES))
+def test_scoring_parity_with_tombstoned_top1(spark, built, oracle, case):
+    """Every scorer — both driver kernels, the per-bucket executor
+    path, a one-shard FtShards and the oracle — gives the same page,
+    in order, with the current top-1 doc tombstoned."""
+    from ftidx.shards import FtShards
+
+    opts = PARITY_CASES[case]
+    terms, k = ["def", "return", "value"], 8
+    idx = open_index(spark, built[0])
+    victim = idx.topk(terms, k=1, use_cache=False, **opts)[0][0]
+    # handle-local tombstone: the shared index dir stays untouched
+    idx._tombstones = idx._tombstones | {victim}
+
+    post = oracle.postings["code.content"]
+    floor = (len(terms) if opts.get("mode") == "and"
+             else opts.get("min_match", 1))
+    banned = set(idx._tombstones).union(
+        *(post.get(t, {}) for t in opts.get("exclude", [])))
+    want = sorted(
+        ((d, s) for d, s in oracle.bm25_scores(terms).items()
+         if d not in banned and sum(d in post.get(t, {}) for t in terms) >= floor),
+        key=lambda kv: (-kv[1], kv[0]))[:k]
+    assert len(want) == k
+
+    pages = {kern: idx.topk(terms, k=k, kernel=kern, **opts)
+             for kern in ("block_max", "exhaustive")}
+    pages["distributed"] = [(r["doc_id"], r["score"]) for r in
+                            idx.topk_distributed(terms, k=k, **opts).collect()]
+    if "mode" in opts or not opts:
+        pages["shards"] = [(d, s) for _, d, s in FtShards([idx]).topk(
+            terms, k=k, require_all="mode" in opts)]
+    for name, got in pages.items():
+        assert [d for d, _ in got] == [d for d, _ in want], name
+        assert all(abs(g - w) <= 1e-9 for (_, g), (_, w) in zip(got, want)), name
+
+
 def test_ledger_metrics(spark, built):
     out, summary = built
     led = spark.read.parquet(f"{out}/ledger")
@@ -191,6 +248,38 @@ def test_ledger_metrics(spark, built):
     assert sum(r["bytes_compressed"] for r in rows) > 0
     assert all(r["skew_ratio"] >= 1.0 for r in rows)
     assert all(r["tracking_id"] for r in rows)
+
+
+def test_metrics_ledger_read_outside_cache_lock(spark, built):
+    """metrics() reads the ledger (a Spark job) without holding
+    _cache_lock, so concurrent queries' cache bookkeeping never waits
+    behind it."""
+    import threading
+
+    idx = open_index(spark, built[0])
+    acquired = []
+
+    def try_lock():
+        if idx._cache_lock.acquire(timeout=2):
+            idx._cache_lock.release()
+            acquired.append(True)
+
+    class ProbeSession:
+        @property
+        def read(self):  # metrics() touches spark only for the ledger
+            t = threading.Thread(target=try_lock)
+            t.start()
+            t.join(timeout=10)
+            assert not t.is_alive()
+            return spark.read
+
+    idx.spark = ProbeSession()
+    try:
+        m = idx.metrics()
+    finally:
+        idx.spark = spark
+    assert acquired == [True]
+    assert m["last_build"]["buckets_done"] == 8
 
 
 def test_failed_bucket_reason_persisted(spark, tmp_path):
@@ -761,7 +850,7 @@ def test_facet_range_and_export(spark, built, tmp_path):
         n2 = idx.export_matches(["def"], str(tmp_path / "export2"))
         assert n2 == n - 1
     finally:
-        idx._tombstones.discard(victim)  # module-scoped fixture: restore
+        idx._tombstones = idx._tombstones - {victim}  # fixture: restore
 
 
 def test_search_after_cursor_paging(spark, built):
@@ -1140,7 +1229,7 @@ def test_facet_queries(spark, built):
     try:
         assert idx.facet_queries({"d": ["def"]})["d"] == len(ids_d) - 1
     finally:
-        idx._tombstones.discard(victim)  # restore shared fixture state
+        idx._tombstones = idx._tombstones - {victim}  # restore fixture
 
 
 def test_min_match(spark, tmp_path):
@@ -2020,7 +2109,7 @@ def test_fat_corpus_thin_terms_stay_on_driver_kernel(spark, built, oracle):
     idx = open_index(spark, built[0])
     # test_delete_tombstones persisted a tombstone into the module-
     # scoped index dir; drop it so oracle parity sees the full corpus
-    idx._tombstones = set()
+    idx._tombstones = frozenset()
     idx._driver_score_max_docs = 150  # rareterm df≈95 fits; 'def' ≈330 doesn't
     got = idx.topk(["rareterm00001"], k=5)
     want = oracle.topk(["rareterm00001"], 5)

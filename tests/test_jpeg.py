@@ -277,6 +277,25 @@ def test_decode_rgb_grayscale_replicates_luma():
     assert (rgb[..., 1] == lum).all() and (rgb[..., 2] == lum).all()
 
 
+def test_rgb_single_component_with_declared_factors():
+    """A grayscale (non-interleaved) scan may declare sampling factors
+    > 1; its plane is still full-raster (T.81 A.2.2), so the RGB
+    decode must equal the luma decode, not one upscaled quadrant."""
+    from ftidx.jpeg import jpeg_decode_rgb
+
+    px = _gradient(24, 40, xor_seed=3)
+    b = bytearray(jpeg_encode(px, quality=90))
+    sof = b.index(b"\xff\xc0")
+    # SOF0: marker, length(2), precision, H(2), W(2), Nf, then Ci, HiVi
+    assert b[sof + 11] == 0x11
+    b[sof + 11] = 0x22
+    lum = jpeg_decode(bytes(b))
+    assert np.array_equal(lum, jpeg_decode(jpeg_encode(px, quality=90)))
+    rgb = jpeg_decode_rgb(bytes(b))
+    assert rgb.shape == (24, 40, 3)
+    assert all((rgb[..., c] == lum).all() for c in range(3))
+
+
 def test_rgb_subsampled_luma_upsamples_not_broadcast_error(monkeypatch):
     """A valid baseline stream may subsample its FIRST component
     relative to another (lum_v < vmax); jpeg_decode_rgb must upsample

@@ -87,7 +87,7 @@ def test_shard_tombstone_respected(setup):
         assert all((s2, d2) != (si, d)
                    for s2, d2, _ in shards.topk(TERMS, k=10))
     finally:
-        shards.shards[si]._tombstones.discard(d)
+        shards.shards[si]._tombstones -= {d}
 
 
 def test_guards(setup):
