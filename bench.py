@@ -63,7 +63,7 @@ def docs_as_source(docs):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count()
     n_synth = int(os.environ.get("SPARK_GRAFT_BENCH_FILES", "100000"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 

@@ -63,6 +63,20 @@ from ftidx.wand import (TermList, _topk_from_scores, bm25_contrib, bm25_idf,
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 
+# Driver cache byte budgets (LRU, alongside the entry-count caps) for
+# the term, filter and query-result caches of :class:`FtIndex`.
+TERM_CACHE_MAX_BYTES = 512 * 1024 * 1024
+FILTER_CACHE_MAX_BYTES = 64 * 1024 * 1024
+RESULT_CACHE_MAX_BYTES = 32 * 1024 * 1024
+# Above this many docs in a field, cold queries are routed by a df
+# probe: terms whose postings fit the budget score on the driver, fat
+# ones score in the executors (:meth:`FtIndex.topk_distributed`).
+DRIVER_SCORE_MAX_DOCS = 2_000_000
+# :func:`write_stats` builds the ``termstats`` routing table only above
+# this many docs: below it the probe's postings-aggregate fallback is
+# already cheap, and the extra job was ~7% of a 100k-file build.
+TERMSTATS_MIN_DOCS = 1_000_000
+
 
 def _drop_tombstones(ids: np.ndarray, scores: np.ndarray, tombs: frozenset):
     """The one tombstone filter over scored docs, on the driver
@@ -412,7 +426,7 @@ def _write_stats_rows(stats_dir: Path, rows) -> None:
 
 
 def _build_bucket_group(spark, docs, group, out, ledger_dir, build_id,
-                        tracking_id, clustered, t0, _t,
+                        tracking_id, clustered, t0,
                         store_content=False, stem_field=False,
                         shingle_field=False) -> None:
     """One bucket group of a build pass: encode + write postings, then
@@ -456,7 +470,6 @@ def _build_bucket_group(spark, docs, group, out, ledger_dir, build_id,
          .select("doc_id", "content", "bucket")
          .write.mode("overwrite").partitionBy("bucket")
          .parquet(str(out / "stored")))
-    t_enc = _t("encode+write", t0)
 
     # everything below reads the WRITTEN postings (column-pruned,
     # pseudo-row-filtered) — never the corpus
@@ -499,7 +512,6 @@ def _build_bucket_group(spark, docs, group, out, ledger_dir, build_id,
         met, nd = f_met.result()
         f_dl.result()
         f_docs.result()
-    tp = _t("metrics+explodes", t_enc)
 
     ndocs = {r["bucket"]: int(r["n"]) for r in nd}
     elapsed = time.time() - t0
@@ -515,7 +527,6 @@ def _build_bucket_group(spark, docs, group, out, ledger_dir, build_id,
             rows.append((build_id, b, "done", 0, 0, 0, 1.0, elapsed,
                          tracking_id, None))
     _write_ledger_rows(ledger_dir, rows)
-    _t("ledger", tp)
 
 
 def build_index(
@@ -619,15 +630,6 @@ def build_index(
         led = spark.read.parquet(str(ledger_dir))
         done = {r["bucket"] for r in led.filter(F.col("status") == "done").select("bucket").distinct().collect()}
 
-    import os
-
-    timing = os.environ.get("FTIDX_TIMING")
-
-    def _t(label, t0):
-        if timing:
-            print(f"[ftidx-timing] {label:24s} {time.time() - t0:7.2f}s", flush=True)
-        return time.time()
-
     pending = [b for b in range(n_buckets) if b not in done]
     built, skipped = [], sorted(done)
     for gi in range(0, len(pending), group_size):
@@ -637,7 +639,7 @@ def build_index(
         try:
             _build_bucket_group(
                 spark, docs, group, out, ledger_dir, build_id,
-                tracking_id, clustered, t0, _t,
+                tracking_id, clustered, t0,
                 store_content=store_content, stem_field=stem_field,
                 shingle_field=shingle_field)
         except Exception as exc:
@@ -665,30 +667,33 @@ def build_index(
             str(out), len(pending), clustered=clustered,
         )
 
-    # finalize: global field stats from all doclen partitions (agg in
-    # Spark, tiny result written driver-side — no extra write job)
-    doclen_all = spark.read.parquet(str(out / "doclen"))
-    stats = doclen_all.groupBy("field").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("len").alias("total_len"),
-        (F.sum("len") / F.count(F.lit(1))).cast("double").alias("avgdl"),
-    ).collect()
-    _write_stats_rows(out / "stats", stats)
-    # routing-stats table only pays for itself at corpora big enough
-    # for the fat-corpus router to engage (serve-time budget default
-    # 2M docs); below the threshold the probe's postings-aggregate
-    # fallback is already cheap and the extra build job would be pure
-    # small-index overhead (~7% at the 100k bench scale)
-    import os as _os
-    if max((int(r["n_docs"]) for r in stats), default=0) > int(
-            _os.environ.get("FTIDX_TERMSTATS_MIN_DOCS", "1000000")):
-        write_termstats(spark, str(out))
+    write_stats(spark, out)
     manifest_path.write_text(
         json.dumps({**params, "stem_field": bool(stem_field),
                     "shingle_field": bool(shingle_field),
                     "status": "done", "build_id": build_id})
     )
     return {"built": built, "skipped": skipped, "n_buckets": n_buckets, "build_id": build_id}
+
+
+def write_stats(spark: SparkSession, path: str | Path) -> None:
+    """Finalise an index's statistics from what is on disk: per-field
+    (n_docs, total_len, avgdl) from every doclen partition (aggregated
+    in Spark, the tiny result written driver-side), then the
+    ``termstats`` routing table when a field holds more than
+    :data:`TERMSTATS_MIN_DOCS` docs. The one finaliser for a build and
+    for every maintenance op that rewrites postings or moves buckets,
+    so their output is indistinguishable from a fresh build."""
+    path = Path(path)
+    stats = spark.read.parquet(str(path / "doclen")).groupBy("field").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("len").alias("total_len"),
+        (F.sum("len") / F.count(F.lit(1))).cast("double").alias("avgdl"),
+    ).collect()
+    _write_stats_rows(path / "stats", stats)
+    # read at call time, so a test can lower the threshold
+    if max((int(r["n_docs"]) for r in stats), default=0) > TERMSTATS_MIN_DOCS:
+        write_termstats(spark, str(path))
 
 
 def _postings_fingerprint(index_path: Path) -> str:
@@ -862,16 +867,13 @@ class FtIndex:
         self.path = Path(path)
         # driver-side posting-list cache for hot query serving: repeat
         # queries hit numpy directly, no Spark job. LRU-bounded by entry
-        # count AND bytes (FTIDX_CACHE_MB, default 512 — decoded arrays
+        # count AND bytes (TERM_CACHE_MAX_BYTES — decoded arrays
         # dominate); the 100 TB cold path is topk_distributed.
         from collections import OrderedDict
 
         self._term_cache: OrderedDict[tuple[str, str], list[dict]] = OrderedDict()
         self._term_cache_max = 4096
-        import os as _os
-
-        self._term_cache_max_bytes = int(
-            _os.environ.get("FTIDX_CACHE_MB", "512")) * 1024 * 1024
+        self._term_cache_max_bytes = TERM_CACHE_MAX_BYTES
         self._cache_bytes = 0
         self._cache_hits = 0
         self._cache_misses = 0
@@ -881,16 +883,14 @@ class FtIndex:
         # a varied or broad-filter workload grows driver memory until
         # refresh(). Bounded by entry count AND approximate bytes.
         self._filter_cache_max = 1024
-        self._filter_cache_max_bytes = int(
-            _os.environ.get("FTIDX_FILTER_CACHE_MB", "64")) * 1024 * 1024
+        self._filter_cache_max_bytes = FILTER_CACHE_MAX_BYTES
         self._filter_cache_bytes = 0
         # Solr queryResultCache analog: (query shape) → the final
         # ranked [(doc_id, score)] page. Same LRU discipline; hits
         # skip the whole decode/score path. Invalidated by refresh()
         # AND delete() (a cached page may hold a just-tombstoned doc).
         self._result_cache_max = 4096
-        self._result_cache_max_bytes = int(
-            _os.environ.get("FTIDX_RESULT_CACHE_MB", "32")) * 1024 * 1024
+        self._result_cache_max_bytes = RESULT_CACHE_MAX_BYTES
         self._result_cache_bytes = 0
         self._result_hits = 0
         self._result_misses = 0
@@ -903,8 +903,7 @@ class FtIndex:
         # driver); below it the driver kernel plus its caches stays
         # the low-latency serving path.  The queryResultCache applies
         # to both, so repeat queries stay O(µs) either way.
-        self._driver_score_max_docs = int(
-            _os.environ.get("FTIDX_DRIVER_SCORE_MAX_DOCS", "2000000"))
+        self._driver_score_max_docs = DRIVER_SCORE_MAX_DOCS
         # guards ALL cache bookkeeping (term/filter/result caches,
         # counters) and handle-state swaps (refresh) in SHORT critical
         # sections — Spark fetches run outside it, so concurrent
@@ -923,11 +922,10 @@ class FtIndex:
         # N serving threads doing that CONCURRENTLY multiplied the
         # driver working set N× — the round-5 serving bench OOM-killed
         # a 78 GB driver exactly this way.  Fetches whose probed df
-        # exceeds the routing budget serialize through this semaphore,
+        # exceeds the routing budget serialize through this lock,
         # bounding peak driver memory to ~one giant working set (the
         # per-entry cache cap keeps them out of the term cache too).
-        self._big_fetch_sem = threading.Semaphore(
-            int(_os.environ.get("FTIDX_BIG_FETCH_CONCURRENCY", "1")))
+        self._big_fetch_lock = threading.Lock()
         self.refresh()
 
     def refresh(self) -> None:
@@ -1142,7 +1140,7 @@ class FtIndex:
                 return out
             # fat-corpus guard: at a corpus over the routing budget,
             # probe the fetch's total df first (cheap termstats read)
-            # and serialize GIANT collects through the semaphore —
+            # and serialize GIANT collects through the big-fetch lock —
             # callers on this path (query_string/edismax/LTR/phrase)
             # have no distributed fallback, so the fetch must happen,
             # but not 16× concurrently
@@ -1153,7 +1151,7 @@ class FtIndex:
                 fat_fetch = (dft is None
                              or dft > self._driver_score_max_docs)
             if fat_fetch:
-                self._big_fetch_sem.acquire()
+                self._big_fetch_lock.acquire()
             try:
                 fetched = (
                     self._postings.filter(
@@ -1165,7 +1163,7 @@ class FtIndex:
                 )
             finally:
                 if fat_fetch:
-                    self._big_fetch_sem.release()
+                    self._big_fetch_lock.release()
             for t in unresolved:
                 grouped.setdefault(t, [])
             for r in fetched:

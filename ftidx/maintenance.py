@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ftidx.codec import encode_postings
+from ftidx.index import write_stats
 from ftidx.schema import POSTINGS_SCHEMA
 from ftidx.wand import TermList
 
@@ -202,31 +203,11 @@ def compact_tombstones(spark: SparkSession, index_path: str) -> dict:
          .join(tomb_ids_df, "doc_id", "left_anti")
          .write.mode("overwrite").partitionBy("bucket").parquet(str(path / "docs")))
 
-    _refresh_stats(spark, path)
+    write_stats(spark, path)
     _replace_tombstones(spark, tomb_dir, unresolved_df, n_unresolved)
     shutil.rmtree(idmap_dir, ignore_errors=True)
     return {"buckets_rewritten": buckets, "docs_removed": n_resolved,
             "unresolved": n_unresolved}
-
-
-def _refresh_stats(spark: SparkSession, path: Path) -> None:
-    from ftidx.index import _write_stats_rows, write_termstats
-
-    doclen_all = spark.read.parquet(str(path / "doclen"))
-    stats = doclen_all.groupBy("field").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("len").alias("total_len"),
-        (F.sum("len") / F.count(F.lit(1))).cast("double").alias("avgdl"),
-    ).collect()
-    _write_stats_rows(path / "stats", stats)
-    # the rewrite changed dfs AND the postings fingerprint — rebuild
-    # the routing-stats table in place (else handles fall back to the
-    # slower postings-aggregate probe until someone does); same
-    # small-index threshold as build_index
-    import os as _os
-    if max((int(r["n_docs"]) for r in stats), default=0) > int(
-            _os.environ.get("FTIDX_TERMSTATS_MIN_DOCS", "1000000")):
-        write_termstats(spark, str(path))
 
 
 def _replace_tombstones(spark: SparkSession, tomb_dir: Path,
@@ -387,7 +368,7 @@ def compact_deltas(spark: SparkSession, index_path: str) -> dict:
             .write.mode("overwrite").partitionBy("bucket")
             .parquet(str(path / "positions"))
         )
-    _refresh_stats(spark, path)
+    write_stats(spark, path)
     shutil.rmtree(deltas)
     shutil.rmtree(path / "delta_doclen", ignore_errors=True)
     shutil.rmtree(dpos, ignore_errors=True)
@@ -970,26 +951,6 @@ def _require_compacted(path: Path, op: str) -> dict:
     return manifest
 
 
-def _refresh_child_stats(spark: SparkSession, child: Path) -> None:
-    """Recompute the per-field (n_docs, total_len, avgdl) stats table
-    from the child's own doclen partitions — identical aggregation to
-    build_index's finalize, so a child is indistinguishable from a
-    fresh build over its slice."""
-    from ftidx.index import _write_stats_rows
-
-    rows = (
-        spark.read.parquet(str(child / "doclen"))
-        .groupBy("field")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("len").alias("total_len"),
-            (F.sum("len") / F.count(F.lit(1))).cast("double").alias("avgdl"),
-        )
-        .collect()
-    )
-    _write_stats_rows(child / "stats", rows)
-
-
 def split_index(spark: SparkSession, index_path: str,
                 out_paths: list[str]) -> dict:
     """Split one index into ``len(out_paths)`` child shards (Solr
@@ -1067,7 +1028,7 @@ def split_index(spark: SparkSession, index_path: str,
                 .filter(F.pmod(F.col("bucket"), F.lit(n_children)) == i)
                 .write.parquet(str(child / "ledger"))
             )
-        _refresh_child_stats(spark, child)
+        write_stats(spark, child)
         (child / "_manifest.json").write_text(json.dumps({
             **{k: v for k, v in manifest.items() if k != "status"},
             "status": "done",
@@ -1148,7 +1109,7 @@ def merge_indexes(spark: SparkSession, paths: list[str],
             # column stringward in the union
             uni = uni.unionByName(df, allowMissingColumns=True)
         uni.write.parquet(str(dst / "ledger"))
-    _refresh_child_stats(spark, dst)
+    write_stats(spark, dst)
     (dst / "_manifest.json").write_text(json.dumps({
         **{k: v for k, v in manifests[0].items()
            if k not in ("status", "shard_ordinal", "n_shards",
@@ -1393,7 +1354,7 @@ def rebalance_shards(spark: SparkSession, paths: list[str], *,
                 shutil.rmtree(d)
             mine.write.parquet(str(d))
     for i in touched:
-        _refresh_child_stats(spark, shards[i])
+        write_stats(spark, shards[i])
         man = json.loads((shards[i] / "_manifest.json").read_text())
         man["owned_buckets"] = sorted(b for b, o in owner.items() if o == i)
         man["router"] = "explicit"

@@ -1123,11 +1123,10 @@ def compression_ratio(docs: DataFrame, text_col: str = "text",
     to 5; empty/NULL docs get ratio 1.0 (nothing to judge).
 
     zlib has no SQL twin, so this op is pytest-covered rather than
-    oracle-checked (the same class as the multimodal kernels). Runs
-    as an Arrow-batched ``mapInPandas`` kernel — per-batch stdlib
-    zlib over the utf-8 bytes, no per-row Python UDF, no shuffle at
-    all (embarrassingly parallel over whatever partitioning the
-    corpus already has)."""
+    oracle-checked. Runs as an Arrow-batched ``mapInPandas`` kernel —
+    per-batch stdlib zlib over the utf-8 bytes, no per-row Python UDF,
+    no shuffle at all (embarrassingly parallel over whatever
+    partitioning the corpus already has)."""
     import pandas as pd
 
     def kernel(batches):

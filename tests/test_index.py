@@ -2172,7 +2172,9 @@ def test_termstats_probe_and_staleness(spark, tmp_path, monkeypatch):
     dfs, so routing never changes semantics."""
     from pathlib import Path
 
-    monkeypatch.setenv("FTIDX_TERMSTATS_MIN_DOCS", "0")  # tiny fixture
+    import ftidx.index
+
+    monkeypatch.setattr(ftidx.index, "TERMSTATS_MIN_DOCS", 0)  # tiny fixture
     out = str(tmp_path / "idx")
     src = synth_source(spark, 300, partitions=3)
     build_index(spark, src, out, n_buckets=4)
@@ -2197,7 +2199,7 @@ def test_termstats_probe_and_staleness(spark, tmp_path, monkeypatch):
 
 def test_fat_fetch_semaphore_path_correct(spark, built):
     """query surfaces without a distributed fallback (query_string et
-    al.) fetch fat postings through the big-fetch semaphore — results
+    al.) fetch fat postings through the big-fetch lock — results
     must be identical to the unguarded path, including under threads."""
     import threading
 

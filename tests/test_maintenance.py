@@ -653,3 +653,29 @@ def test_merge_delta_tier_keeps_streamed_phrases(spark, tmp_path):
     assert [d for d, _ in after] == [d for d, _ in before]
     for (_, a), (_, b) in zip(after, before):
         assert a == pytest.approx(b, rel=1e-9)
+
+
+def test_split_and_merge_children_get_routing_stats(spark, tmp_path,
+                                                    monkeypatch):
+    """split_index and merge_indexes finalise through the same
+    write_stats as build_index, so above the threshold their outputs
+    carry a termstats table that matches their own postings."""
+    import ftidx.index
+    from ftidx.maintenance import merge_indexes, split_index
+
+    monkeypatch.setattr(ftidx.index, "TERMSTATS_MIN_DOCS", 0)
+    parent = str(tmp_path / "parent")
+    build_index(spark, synth_source(spark, 200), parent, n_buckets=4)
+    kids = [str(tmp_path / "kid0"), str(tmp_path / "kid1")]
+    split_index(spark, parent, kids)
+    merged = str(tmp_path / "merged")
+    merge_indexes(spark, kids, merged)
+    for path in (kids[0], merged):
+        idx = open_index(spark, path)
+        assert idx._termstats is not None
+        want = (idx._postings
+                .filter((F.col("field") == "code.content")
+                        & (F.col("term") == "def"))
+                .agg(F.sum("df")).first()[0])
+        assert want
+        assert idx._df_total(["def"], "code.content") == want

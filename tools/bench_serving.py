@@ -273,7 +273,7 @@ def main():
 One `local[32]` server process over a {n_files / 1e6:.0f}M-file index
 ({build_sec:.0f}s build, {n_files / build_sec:,.0f} files/s).  HTTP tier
 (`ftidx.server`), client-observed latency (includes queueing).  Routing
-budget FTIDX_DRIVER_SCORE_MAX_DOCS = {idx._driver_score_max_docs:,}:
+budget DRIVER_SCORE_MAX_DOCS = {idx._driver_score_max_docs:,}:
 `cold_thin`/`cold_mid` collect driver-side via the df probe, `cold_fat`
 runs `topk_distributed` in the executors, `warm` hits the
 queryResultCache.
