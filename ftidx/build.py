@@ -123,7 +123,7 @@ def doc_frequencies(tf: DataFrame) -> DataFrame:
 def build_flat(source: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> dict[str, DataFrame]:
     """MVP end-to-end slice (SURVEY §7 step 3): uncompressed postings
     as plain DataFrames. Proves tokenization + rank math before the
-    codec/salted-merge path exists. Returned frames are lazily
+    compressed codec path exists. Returned frames are lazily
     evaluated; callers should .cache() what they reuse.
     """
     docs = prepare_docs(source, n_buckets)

@@ -83,6 +83,16 @@ def delta_decode(gaps: np.ndarray) -> np.ndarray:
     return np.cumsum(gaps, dtype=np.uint64)
 
 
+def delta_decode_runs(blobs, counts: np.ndarray) -> np.ndarray:
+    """Many delta-gap blobs, blob ``i`` holding ``counts[i]`` values →
+    their values concatenated: one varint pass, one prefix sum, and
+    each run's prefix subtracted (uint64 wrap-around cancels exactly)."""
+    gaps = varint_decode(b"".join(blobs))
+    vals = np.cumsum(gaps, dtype=np.uint64)
+    starts = np.cumsum(counts) - counts
+    return vals - np.repeat(vals[starts] - gaps[starts], counts)
+
+
 def encode_postings(
     doc_ids: np.ndarray, tfs: np.ndarray, doclens: np.ndarray | None = None
 ) -> dict:
@@ -193,14 +203,3 @@ def encode_many(
     out["block_min_dl"] = [bmin_dl[boff[g]:boff[g + 1]] for g in range(G)]
     out["block_last_docid"] = [blast[boff[g]:boff[g + 1]] for g in range(G)]
     return out
-
-
-def merge_encoded(parts: list[dict]) -> dict:
-    """Merge runs covering disjoint doc_id sets (e.g. salted partials
-    of a hot term, or per-segment lists) into one encoded posting list.
-    Decode → concat → re-encode; block metadata is recomputed exactly
-    because doclens travel with each run."""
-    ids = np.concatenate([delta_decode(varint_decode(p["doc_ids"])) for p in parts])
-    tfs = np.concatenate([varint_decode(p["tfs"]) for p in parts])
-    dls = np.concatenate([varint_decode(p["dls"]) for p in parts])
-    return encode_postings(ids, tfs, dls)

@@ -20,17 +20,16 @@ transaction-per-job discipline, Indexer.java:97-116):
       → ledger row per bucket, written driver-side via pyarrow
         (metrics read a persisted n_bytes column, never the blobs)
 
-Skew handling per north_rule, two complementary mechanisms:
+Skew handling per north_rule: bucket-local encode caps any term's
+group at the bucket size (corpus / n_buckets) — a `def` in 90% of
+10^12 docs is still only ~10^6 postings per bucket task; bucket sizes
+themselves are uniform by hash.
 
-- **structural**: bucket-local encode caps any term's group at the
-  bucket size (corpus / n_buckets) — a `def` in 90% of 10^12 docs is
-  still only ~10^6 postings per bucket task; bucket sizes themselves
-  are uniform by hash.
-- **explicit two-phase salting** (:func:`_encode_postings_df`, used by
-  the streaming/grouped path): hot terms (df > threshold) encode as
-  (term, bucket, salt=xxhash64(doc_id)%k) runs merged exactly in a
-  second phase. tests/test_index.py::test_grouped_salted_strategy_agrees
-  proves both strategies byte-identical.
+The same kernel is the ONE segment writer after build too: a streamed
+micro-batch runs it over the batch's docs (streaming.index_microbatch),
+and compaction / tier merges run :func:`_bucket_local_merge`, which
+decodes a bucket's segments and re-encodes them through the same
+:func:`_encode_segments` tail — the Lucene segment-merge counterpart.
 
 Scale notes: postings are per-(term, bucket) segments, never a single
 global row per term — at 10^12 docs a global `the` row would be ~TBs.
@@ -53,10 +52,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ftidx.build import BUCKET_SHIFT, DEFAULT_BUCKETS, live_docs, prepare_docs
-from ftidx.codec import encode_many, encode_postings, merge_encoded
+from ftidx.build import DEFAULT_BUCKETS, live_docs, prepare_docs
+from ftidx.codec import (decode_postings, delta_decode_runs, encode_many,
+                         encode_postings, varint_decode)
 from ftidx.schema import CHECKPOINT_SCHEMA, POSTINGS_SCHEMA
-from ftidx.tokenize import tokenize_tf
 from ftidx.wand import (TermList, _topk_from_scores, bm25_contrib, bm25_idf,
                         filter_matches, merge_group, score_all,
                         score_block_max, score_boolean, score_exhaustive)
@@ -99,70 +98,6 @@ def _align(sorted_ids: np.ndarray, probe: np.ndarray):
     return sorted_ids[pos] == probe, pos
 
 
-def _encode_stream(batches):
-    """mapInPandas kernel: input sorted by (field, term, bucket, salt,
-    doc_id) within the partition; streams encoded posting rows, holding
-    back the trailing (possibly batch-spanning) group."""
-    buf: pd.DataFrame | None = None
-    for pdf in batches:
-        if buf is not None and len(buf):
-            pdf = pd.concat([buf, pdf], ignore_index=True)
-        if not len(pdf):
-            continue
-        keys = pdf[["field", "term", "bucket", "salt"]]
-        change = (keys != keys.shift()).any(axis=1).to_numpy()
-        change[0] = True
-        starts = np.flatnonzero(change)
-        if starts.size <= 1:
-            buf = pdf
-            continue
-        cut = starts[-1]
-        complete, buf = pdf.iloc[:cut], pdf.iloc[cut:].reset_index(drop=True)
-        yield _encode_groups(complete, starts[:-1])
-    if buf is not None and len(buf):
-        keys = buf[["field", "term", "bucket", "salt"]]
-        change = (keys != keys.shift()).any(axis=1).to_numpy()
-        change[0] = True
-        yield _encode_groups(buf, np.flatnonzero(change))
-
-
-def _encode_groups(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
-    ends = np.concatenate([starts[1:], [len(pdf)]])
-    doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64).astype(np.uint64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64).astype(np.uint64)
-    dls = pdf["len"].to_numpy(dtype=np.int64).astype(np.uint64)
-    terms = pdf["term"].to_numpy()
-    fields = pdf["field"].to_numpy()
-    buckets = pdf["bucket"].to_numpy()
-    out = {c: [] for c in _POSTINGS_COLS}
-    for s, e in zip(starts, ends):
-        enc = encode_postings(doc_ids[s:e], tfs[s:e], dls[s:e])
-        out["term"].append(terms[s])
-        out["field"].append(fields[s])
-        out["bucket"].append(int(buckets[s]))
-        for key in ("df", "cf", "doc_ids", "tfs", "dls",
-                    "block_max_tf", "block_min_dl", "block_last_docid"):
-            out[key].append(enc[key])
-    return pd.DataFrame(out)
-
-
-def _merge_runs(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel for hot-term salted runs: one group =
-    one (field, term, bucket); merge its runs exactly."""
-    if len(pdf) == 1:
-        return pdf[_POSTINGS_COLS]
-    parts = pdf.to_dict("records")
-    enc = merge_encoded(parts)
-    row = {
-        "term": pdf["term"].iloc[0],
-        "field": pdf["field"].iloc[0],
-        "bucket": int(pdf["bucket"].iloc[0]),
-        **{k: enc[k] for k in ("df", "cf", "doc_ids", "tfs", "dls",
-                               "block_max_tf", "block_min_dl", "block_last_docid")},
-    }
-    return pd.DataFrame([row])[_POSTINGS_COLS]
-
-
 DOCLEN_FIELD_PREFIX = "__dl__"
 DOCS_FIELD = "__docs__"
 PSEUDO_PREFIX = "__"  # every transport pseudo-row field starts with this
@@ -196,14 +131,11 @@ def _bucket_local_encode(batches, stem_field: bool = False,
                          shingle_field: bool = False):
     """mapInPandas kernel for the bucket-local build strategy: input is
     raw docs hash-partitioned by bucket (the ONLY shuffle — raw docs
-    are ~25× smaller than the tf rows the grouped strategy shuffles).
-    The kernel tokenizes, aggregates tf/dl, sorts, and emits each
-    bucket's fully-encoded postings — the Lucene segment-writer model.
-
-    Hot terms are structurally bounded here: a term's group is capped
-    at the bucket size (corpus / n_buckets), so no salting is needed on
-    this path (the explicit two-phase salted merge lives in
-    :func:`_encode_postings_df` for the grouped/streaming path).
+    are ~25× smaller than their tf rows). The kernel tokenizes,
+    aggregates tf/dl, sorts, and emits each bucket's fully-encoded
+    postings — the Lucene segment-writer model. Each doc's bucket is
+    read from its input row, never derived from its id: batch ids embed
+    it (``bucket << 40 | rank``), streamed hash ids do not.
 
     The build has ONE sink and makes ONE pass over the shuffled corpus:
     per-(bucket, field) document lengths ride as pseudo-postings rows
@@ -245,6 +177,8 @@ def _bucket_local_encode(batches, stem_field: bool = False,
                 live[["doc_id", "content", "lang", "repo", "path"]],
                 stem_field=stem_field, shingle_field=shingle_field)
             if len(part):
+                part["bucket"] = live["bucket"].to_numpy()[
+                    pd.Index(live["doc_id"]).get_indexer(part["doc_id"])]
                 tf_parts.append(part)
     if not meta_parts:
         return
@@ -272,7 +206,6 @@ def _bucket_local_encode(batches, stem_field: bool = False,
         return
     tf = pd.concat(tf_parts, ignore_index=True) if len(tf_parts) > 1 else tf_parts[0]
     del tf_parts
-    tf["bucket"] = (tf["doc_id"].to_numpy() >> BUCKET_SHIFT).astype("int32")
 
     doc_ids = tf["doc_id"].to_numpy(dtype=np.int64).astype(np.uint64)
     tfs = tf["tf"].to_numpy(dtype=np.int64).astype(np.uint64)
@@ -284,23 +217,8 @@ def _bucket_local_encode(batches, stem_field: bool = False,
     order = np.lexsort((doc_ids, trm_codes, fld_codes, buckets))
     doc_ids, tfs, dls = doc_ids[order], tfs[order], dls[order]
     buckets, fld_codes, trm_codes = buckets[order], fld_codes[order], trm_codes[order]
-
-    group_key = (buckets.astype(np.int64) * len(fld_uniq) + fld_codes) * len(trm_uniq) + trm_codes
-    change = np.empty(group_key.size, dtype=bool)
-    change[0] = True
-    np.not_equal(group_key[1:], group_key[:-1], out=change[1:])
-    starts = np.flatnonzero(change)
-    ends = np.concatenate([starts[1:], [group_key.size]])
-
-    # one vectorized pass for ALL term groups (codec.encode_many —
-    # per-group encode calls would dominate at millions of tiny groups)
-    enc = encode_many(doc_ids, tfs, dls, starts, ends)
-    out = {
-        "term": list(trm_uniq[trm_codes[starts]]),
-        "field": list(fld_uniq[fld_codes[starts]]),
-        "bucket": [int(b) for b in buckets[starts]],
-        **enc,
-    }
+    out = _encode_segments(buckets, fld_codes, fld_uniq, trm_codes, trm_uniq,
+                           doc_ids, tfs, dls)
 
     # doclen pseudo-rows: one per (bucket, field) — contiguous segments
     # in the sort order; docs repeat per term, dedup via np.unique
@@ -327,6 +245,76 @@ def _bucket_local_encode(batches, stem_field: bool = False,
     yield docs_pseudo_rows()
 
 
+def _encode_segments(buckets, fld_codes, fld_uniq, trm_codes, trm_uniq,
+                     doc_ids, tfs, dls) -> dict[str, list]:
+    """The one postings writer, shared by build and merge: rows sorted
+    by (bucket, field, term, doc_id), one per doc in each group → one
+    encoded row per (bucket, field, term). All groups go through ONE
+    vectorized codec.encode_many pass — per-group encode calls would
+    dominate at millions of tiny term groups."""
+    group_key = (buckets.astype(np.int64) * len(fld_uniq) + fld_codes) * len(trm_uniq) + trm_codes
+    change = np.empty(group_key.size, dtype=bool)
+    change[0] = True
+    np.not_equal(group_key[1:], group_key[:-1], out=change[1:])
+    starts = np.flatnonzero(change)
+    ends = np.concatenate([starts[1:], [group_key.size]])
+    return {
+        "term": list(trm_uniq[trm_codes[starts]]),
+        "field": list(fld_uniq[fld_codes[starts]]),
+        "bucket": [int(b) for b in buckets[starts]],
+        **encode_many(doc_ids, tfs, dls, starts, ends),
+    }
+
+
+def _first_copies(buckets, fld_codes, trm_codes, doc_ids) -> np.ndarray:
+    """Mask over input rows: True on the first copy of each (bucket,
+    field, term, doc_id). Segments of one bucket may repeat a doc — a
+    redelivered or replayed batch — and content-addressed ids carry
+    identical postings, so keeping the first makes merges idempotent."""
+    order = np.lexsort((doc_ids, trm_codes, fld_codes, buckets))
+    cols = [a[order] for a in (buckets, fld_codes, trm_codes, doc_ids)]
+    first = np.ones(doc_ids.size, dtype=bool)
+    first[1:] = np.any([c[1:] != c[:-1] for c in cols], axis=0)
+    keep = np.empty_like(first)
+    keep[order] = first
+    return keep
+
+
+def _bucket_local_merge(batches):
+    """mapInPandas kernel, the Lucene segment merge: every postings row
+    of ≥1 whole buckets (base segments + delta batches) → one row per
+    (bucket, field, term). Decodes every row, drops repeated docs
+    (:func:`_first_copies`) and re-encodes through the build's
+    :func:`_encode_segments`; ``__dl__`` rows merge like any term,
+    ``__docs__`` rows pass through untouched."""
+    frames = [pdf for pdf in batches if len(pdf)]
+    if not frames:
+        return
+    pdf = pd.concat(frames, ignore_index=True)
+    is_docs = (pdf["field"] == DOCS_FIELD).to_numpy()
+    if is_docs.any():
+        yield pdf.loc[is_docs, _POSTINGS_COLS]
+        pdf = pdf[~is_docs]
+        if not len(pdf):
+            return
+    dfs = pdf["df"].to_numpy(dtype=np.int64)
+    doc_ids = delta_decode_runs(pdf["doc_ids"], dfs)
+    tfs = varint_decode(b"".join(pdf["tfs"]))
+    dls = varint_decode(b"".join(pdf["dls"]))
+    fld_codes, fld_uniq = pd.factorize(pdf["field"], sort=True)
+    trm_codes, trm_uniq = pd.factorize(pdf["term"], sort=True)
+    buckets, fld_codes, trm_codes = (
+        np.repeat(a, dfs) for a in (pdf["bucket"].to_numpy(), fld_codes, trm_codes))
+    keep = _first_copies(buckets, fld_codes, trm_codes, doc_ids)
+    buckets, fld_codes, trm_codes, doc_ids, tfs, dls = (
+        a[keep] for a in (buckets, fld_codes, trm_codes, doc_ids, tfs, dls))
+    order = np.lexsort((doc_ids, trm_codes, fld_codes, buckets))
+    yield pd.DataFrame(_encode_segments(
+        buckets[order], fld_codes[order], np.asarray(fld_uniq),
+        trm_codes[order], np.asarray(trm_uniq),
+        doc_ids[order], tfs[order], dls[order]))[_POSTINGS_COLS]
+
+
 def _explode_docs(batches):
     """``__docs__`` pseudo-rows → docs-table rows (Arrow IPC blobs)."""
     for pdf in batches:
@@ -337,8 +325,6 @@ def _explode_docs(batches):
 
 def _explode_doclen(batches):
     """Pseudo doclen postings rows → (doc_id, field, len, bucket)."""
-    from ftidx.codec import decode_postings
-
     for pdf in batches:
         frames = []
         for row in pdf.to_dict("records"):
@@ -354,35 +340,13 @@ def _explode_doclen(batches):
              "len": pd.Series(dtype="int64"), "bucket": pd.Series(dtype="int32")}))
 
 
-def _encode_postings_df(tf_len: DataFrame, hot_terms: list[tuple[str, str]],
-                        n_salts: int, shuffle_partitions: int) -> DataFrame:
-    """tf⋈len rows → encoded postings DataFrame (cold + salted hot)."""
-    spark = tf_len.sparkSession
-    if hot_terms:
-        hot_df = spark.createDataFrame(hot_terms, "field string, term string").withColumn(
-            "is_hot", F.lit(True)
-        )
-        tf_len = tf_len.join(F.broadcast(hot_df), ["field", "term"], "left")
-    else:
-        tf_len = tf_len.withColumn("is_hot", F.lit(None).cast("boolean"))
-
-    cold = (
-        tf_len.filter(F.col("is_hot").isNull())
-        .withColumn("salt", F.lit(0))
-        .repartition(shuffle_partitions, "field", "term", "bucket")
-        .sortWithinPartitions("field", "term", "bucket", "salt", "doc_id")
-        .mapInPandas(_encode_stream, schema=POSTINGS_SCHEMA)
-    )
-    hot = (
-        tf_len.filter(F.col("is_hot").isNotNull())
-        .withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).cast("int"))
-        .repartition(shuffle_partitions, "field", "term", "bucket", "salt")
-        .sortWithinPartitions("field", "term", "bucket", "salt", "doc_id")
-        .mapInPandas(_encode_stream, schema=POSTINGS_SCHEMA)
-        .groupBy("field", "term", "bucket")
-        .applyInPandas(_merge_runs, schema=POSTINGS_SCHEMA)
-    )
-    return cold.unionByName(hot)
+def _doclen_rows(postings: DataFrame) -> DataFrame:
+    """Doclen-table rows exploded from the ``__dl__`` pseudo-rows of
+    written postings — a build's or a streamed delta's."""
+    return (postings.filter(F.col("field").startswith(DOCLEN_FIELD_PREFIX))
+            .select("field", "bucket", "doc_ids", "tfs")
+            .mapInPandas(_explode_doclen,
+                         schema="doc_id long, field string, len long, bucket int"))
 
 
 def _write_ledger_rows(ledger_dir: Path, rows: list[tuple]) -> None:
@@ -492,10 +456,7 @@ def _build_bucket_group(spark, docs, group, out, ledger_dir, build_id,
         return met, nd
 
     def explode_doclen():
-        (written.filter(F.col("field").startswith(DOCLEN_FIELD_PREFIX))
-         .select("field", "bucket", "doc_ids", "tfs")
-         .mapInPandas(_explode_doclen,
-                      schema="doc_id long, field string, len long, bucket int")
+        (_doclen_rows(written)
          .repartition(len(group), "bucket")
          .write.mode("overwrite").partitionBy("bucket").parquet(str(out / "doclen")))
 
@@ -537,7 +498,6 @@ def build_index(
     n_buckets: int = DEFAULT_BUCKETS,
     bucket_group_size: int | None = None,
     hot_df_threshold: int = 50_000,
-    n_salts: int = 8,
     build_id: str | None = None,
     resume: bool = True,
     docs_ready: bool = False,
@@ -547,6 +507,9 @@ def build_index(
     shingle_field: bool = False,
 ) -> dict:
     """Build (or resume) a persistent index under ``out_dir``.
+
+    ``hot_df_threshold`` is ignored: the bucket-local kernel bounds
+    every term's group at the bucket size, so no term needs salting.
 
     ``positions=True`` additionally writes the positional table
     (ftidx.positions) enabling exact phrase queries — opt-in since it
@@ -605,7 +568,6 @@ def build_index(
         "status": "building", "build_id": build_id}))
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     group_size = bucket_group_size or n_buckets  # one pass by default
 
     # S26 schema gate: abort the whole pass on drift BEFORE any job runs
@@ -941,7 +903,9 @@ class FtIndex:
 
     def _refresh_inner(self) -> None:
         spark = self.spark
-        self.manifest = json.loads((self.path / "_manifest.json").read_text())
+        # a streaming-only index (deltas, no build) has no manifest
+        man = self.path / "_manifest.json"
+        self.manifest = json.loads(man.read_text()) if man.exists() else {}
         # postings/stats may be absent: a delete_by_query(match_all=True)
         # truncation leaves a valid, empty index behind
         postings_dir = self.path / "postings"

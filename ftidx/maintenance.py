@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ftidx.codec import encode_postings
-from ftidx.index import write_stats
+from ftidx.index import _bucket_local_merge, write_stats
 from ftidx.schema import POSTINGS_SCHEMA
 from ftidx.wand import TermList
 
@@ -225,70 +225,21 @@ def _replace_tombstones(spark: SparkSession, tomb_dir: Path,
         staged.rename(tomb_dir)
 
 
-def _merge_segments_dedup(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel: one group = one (field, term, bucket) with
-    ≥1 segment rows (base + delta batches). Decode all runs, drop
-    duplicate doc_ids (first wins — replays carry identical content
-    thanks to content-addressed ids, so this also makes compaction
-    idempotent under a crash-rerun), re-encode as ONE segment."""
-    rows = pdf.to_dict("records")
-    if len(rows) == 1:
-        return pdf[_POSTINGS_COLS]
-    from ftidx.codec import decode_postings
-
-    parts = [decode_postings(r["doc_ids"], r["tfs"], r["dls"]) for r in rows]
-    ids = np.concatenate([p[0] for p in parts])
-    tfs = np.concatenate([p[1] for p in parts])
-    dls = np.concatenate([p[2] for p in parts])
-    _, first = np.unique(ids, return_index=True)
-    enc = encode_postings(ids[first], tfs[first], dls[first])
-    row = {
-        "term": rows[0]["term"], "field": rows[0]["field"],
-        "bucket": int(rows[0]["bucket"]),
-        **{k: enc[k] for k in ("df", "cf", "doc_ids", "tfs", "dls",
-                               "block_max_tf", "block_min_dl", "block_last_docid")},
-    }
-    return pd.DataFrame([row])[_POSTINGS_COLS]
-
-
-def _merge_positions_dedup(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel: one group = one (field, term, bucket) of
-    positional segment rows (base + streamed delta batches). Decode
-    every run, drop duplicate doc ids (first wins — content-addressed
-    replays carry identical positions, so compaction stays idempotent
-    under a crash-rerun), re-encode as ONE self-contained row."""
-    from ftidx.positions import (_POS_COLS, decode_positions_row,
-                                 encode_positions_row)
-
-    rows = pdf.to_dict("records")
-    if len(rows) == 1:
-        return pdf[_POS_COLS]
-    id_runs, plists = [], []
-    for r in rows:
-        ids, pl = decode_positions_row(r)
-        id_runs.append(ids)
-        plists.extend(pl)
-    ids = np.concatenate(id_runs)
-    uniq, first = np.unique(ids, return_index=True)
-    enc = encode_positions_row(uniq, [plists[i] for i in first])
-    row = {"term": rows[0]["term"], "field": rows[0]["field"],
-           "bucket": int(rows[0]["bucket"]), **enc}
-    return pd.DataFrame([row])[_POS_COLS]
-
-
 def compact_deltas(spark: SparkSession, index_path: str) -> dict:
     """Fold streamed delta segments into the base index (the delta
     compaction streaming.py's merge-on-read model promises).
 
-    Per affected bucket: base + delta posting rows merge to one segment
-    per (field, term) — decode → doc-id dedup → re-encode — written via
-    dynamic partition overwrite; delta doclen rows union into the base
-    doclen partitions; stats refresh; delta dirs removed last, so a
-    crash mid-compaction replays into the same end state (doc-id dedup
-    makes the merge idempotent). Scale shape: one shuffle of affected
-    buckets' postings keyed by (field, term, bucket) — O(delta + the
-    buckets it touches), never O(corpus). Open ``FtIndex`` handles must
-    ``refresh()`` (or reopen) afterwards."""
+    Per affected bucket: base + delta rows go through the per-bucket
+    segment merge (:func:`ftidx.index._bucket_local_merge`, and
+    :func:`ftidx.positions._merge_positions` for positions) — decode →
+    doc-id dedup → one re-encode pass — written via dynamic partition
+    overwrite; delta doclen rows union into the base doclen partitions;
+    stats refresh; delta dirs removed last, so a crash mid-compaction
+    replays into the same end state (doc-id dedup makes the merge
+    idempotent). Scale shape: one shuffle of affected buckets' rows
+    keyed by bucket — O(delta + the buckets it touches), never
+    O(corpus). Open ``FtIndex`` handles must ``refresh()`` (or reopen)
+    afterwards."""
     path = Path(index_path)
     deltas = path / "deltas"
     if not _has_files(deltas):
@@ -312,8 +263,7 @@ def compact_deltas(spark: SparkSession, index_path: str) -> dict:
     merged = frames[0] if len(frames) == 1 else frames[0].unionByName(frames[1])
     (
         merged.repartition(max(len(buckets), 1), "bucket")
-        .groupBy("field", "term", "bucket")
-        .applyInPandas(_merge_segments_dedup, schema=POSTINGS_SCHEMA)
+        .mapInPandas(_bucket_local_merge, schema=POSTINGS_SCHEMA)
         .withColumn("n_bytes", F.octet_length("doc_ids") + F.octet_length("tfs")
                     + F.octet_length("dls"))
         .write.mode("overwrite").partitionBy("bucket")
@@ -343,7 +293,7 @@ def compact_deltas(spark: SparkSession, index_path: str) -> dict:
     # term, bucket); streamed docs stay phrase-queryable throughout
     dpos = path / "delta_positions"
     if _has_files(dpos):
-        from ftidx.positions import _POS_COLS, POSITIONS_SCHEMA
+        from ftidx.positions import _POS_COLS, POSITIONS_SCHEMA, _merge_positions
 
         p_delta = (
             spark.read.option("basePath", str(dpos))
@@ -363,8 +313,7 @@ def compact_deltas(spark: SparkSession, index_path: str) -> dict:
             else p_frames[0].unionByName(p_frames[1])
         (
             pmerged.repartition(max(len(pbuckets), 1), "bucket")
-            .groupBy("field", "term", "bucket")
-            .applyInPandas(_merge_positions_dedup, schema=POSITIONS_SCHEMA)
+            .mapInPandas(_merge_positions, schema=POSITIONS_SCHEMA)
             .write.mode("overwrite").partitionBy("bucket")
             .parquet(str(path / "positions"))
         )
@@ -1139,9 +1088,10 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     are left alone — Lucene's geometric-tier invariant).
 
     Merged output: one ``batch=<id>`` dir per delta family (postings
-    via :func:`_merge_segments_dedup` → ONE segment per (field, term,
-    bucket); doclen re-grouped exactly as index_microbatch built it;
-    positions via :func:`_merge_positions_dedup`), with ``<id>``
+    via the per-bucket segment merge
+    :func:`ftidx.index._bucket_local_merge` → ONE segment per (field,
+    term, bucket); doclen rows deduplicated per (doc, field); positions
+    via :func:`ftidx.positions._merge_positions`), with ``<id>``
     allocated from a reserved range (≥ 10^9) so a crashed stream
     replaying a real epoch id can never overwrite a merged tier.
     Victim dirs are removed only after every merged family is
@@ -1176,8 +1126,8 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     if v_post:
         merged_p = (
             spark.read.parquet(*v_post).select(_POSTINGS_COLS)
-            .groupBy("field", "term", "bucket")
-            .applyInPandas(_merge_segments_dedup, schema=POSTINGS_SCHEMA)
+            .repartition("bucket")
+            .mapInPandas(_bucket_local_merge, schema=POSTINGS_SCHEMA)
         )
         merged_p.write.mode("overwrite").parquet(
             str(deltas / f"batch={merged_id}"))
@@ -1185,12 +1135,12 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     dpos = path / "delta_positions"
     v_pos = [str(dpos / v) for v in victims if (dpos / v).exists()]
     if v_pos:
-        from ftidx.positions import _POS_COLS, POSITIONS_SCHEMA
+        from ftidx.positions import _POS_COLS, POSITIONS_SCHEMA, _merge_positions
 
         merged_pos = (
             spark.read.parquet(*v_pos).select(_POS_COLS)
-            .groupBy("field", "term", "bucket")
-            .applyInPandas(_merge_positions_dedup, schema=POSITIONS_SCHEMA)
+            .repartition("bucket")
+            .mapInPandas(_merge_positions, schema=POSITIONS_SCHEMA)
         )
         merged_pos.write.mode("overwrite").parquet(
             str(dpos / f"batch={merged_id}"))

@@ -40,8 +40,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ftidx.build import BUCKET_SHIFT
-from ftidx.codec import _varint_encode_with_sizes, delta_decode, varint_decode
+from ftidx.codec import (_varint_encode_with_sizes, delta_decode,
+                         delta_decode_runs, varint_decode)
+from ftidx.index import _first_copies
 
 POSITIONS_SCHEMA = T.StructType([
     T.StructField("term", T.StringType(), False),
@@ -75,7 +76,8 @@ def _occurrence_positions(doc_codes: np.ndarray, fld_codes: np.ndarray,
 def _bucket_local_positions(batches):
     """mapInPandas kernel (same shuffle contract as
     index._bucket_local_encode): raw docs of ≥1 whole buckets →
-    positional rows per (bucket, field, term).
+    positional rows per (bucket, field, term). Each doc's bucket comes
+    from its input row — streamed hash ids do not embed it.
 
     Memory envelope: unlike the tf kernel, positions keep every
     occurrence — so each Arrow batch is tokenized on its own and only
@@ -84,7 +86,7 @@ def _bucket_local_positions(batches):
     (searchsorted), never holding the partition's token strings."""
     from ftidx.tokenize import tokenize_batch
 
-    doc_parts, fldc_parts, trmc_parts, pos_parts = [], [], [], []
+    doc_parts, bkt_parts, fldc_parts, trmc_parts, pos_parts = [], [], [], [], []
     fld_vocabs, trm_vocabs = [], []
     for pdf in batches:
         if not len(pdf):
@@ -98,6 +100,8 @@ def _bucket_local_positions(batches):
         pos_parts.append(
             _occurrence_positions(docc, fldc, len(fld_uniq)).astype(np.uint64))
         doc_parts.append(tokens["doc_id"].to_numpy(dtype=np.int64))
+        bkt_parts.append(pdf["bucket"].to_numpy()[
+            pd.Index(pdf["doc_id"]).get_indexer(tokens["doc_id"])])
         fldc_parts.append(fldc.astype(np.int32))
         trmc_parts.append(trmc.astype(np.int64))
         fld_vocabs.append(np.asarray(fld_uniq, dtype=object))
@@ -111,12 +115,20 @@ def _bucket_local_positions(batches):
         np.searchsorted(fld_uniq, v)[c] for v, c in zip(fld_vocabs, fldc_parts)])
     trm_codes = np.concatenate([
         np.searchsorted(trm_uniq, v)[c] for v, c in zip(trm_vocabs, trmc_parts)])
-    doc_ids_i64 = np.concatenate(doc_parts)
-    doc_ids = doc_ids_i64.astype(np.uint64)
-    buckets = (doc_ids_i64 >> BUCKET_SHIFT).astype("int32")
+    doc_ids = np.concatenate(doc_parts).astype(np.uint64)
+    buckets = np.concatenate(bkt_parts)
     pos = np.concatenate(pos_parts)
-    del doc_parts, fldc_parts, trmc_parts, pos_parts, fld_vocabs, trm_vocabs
+    del doc_parts, bkt_parts, fldc_parts, trmc_parts, pos_parts, fld_vocabs, trm_vocabs
+    yield _encode_positions(buckets, fld_codes, fld_uniq, trm_codes, trm_uniq,
+                            doc_ids, pos)
 
+
+def _encode_positions(buckets, fld_codes, fld_uniq, trm_codes, trm_uniq,
+                      doc_ids, pos) -> pd.DataFrame:
+    """The one positions writer, shared by build and merge: occurrence
+    rows (bucket, field, term, doc, absolute position), in any order,
+    one doc per (bucket, field, term) → one row per (bucket, field,
+    term), every blob cut from a single vectorized varint pass."""
     # sort to (bucket, field, term, doc_id, pos): doc runs ascend by id,
     # positions ascend within a doc
     order = np.lexsort((pos, doc_ids, trm_codes, fld_codes, buckets))
@@ -161,7 +173,7 @@ def _bucket_local_positions(batches):
         raw = buf.tobytes()
         return [raw[off[s]:off[e]] for s, e in zip(lo, hi)]
 
-    yield pd.DataFrame({
+    return pd.DataFrame({
         "term": trm_uniq[trm_codes[starts]],
         "field": fld_uniq[fld_codes[starts]],
         "bucket": [int(b) for b in buckets[starts]],
@@ -170,6 +182,31 @@ def _bucket_local_positions(batches):
         "tfs": blobs(tf_per_doc, g_doc_lo, g_doc_hi),
         "pos": blobs(pdeltas, starts, ends),
     })[_POS_COLS]
+
+
+def _merge_positions(batches):
+    """mapInPandas kernel, the positional twin of
+    index._bucket_local_merge: every positions row of ≥1 whole buckets
+    (base + delta batches) → one row per (bucket, field, term). Decodes
+    every row, keeps the first copy of each doc and re-encodes through
+    :func:`_encode_positions`."""
+    frames = [pdf for pdf in batches if len(pdf)]
+    if not frames:
+        return
+    pdf = pd.concat(frames, ignore_index=True)
+    dfs = pdf["df"].to_numpy(dtype=np.int64)
+    doc_ids = delta_decode_runs(pdf["doc_ids"], dfs)
+    tfs = varint_decode(b"".join(pdf["tfs"])).astype(np.int64)
+    pos = delta_decode_runs(pdf["pos"], tfs)  # first position of a doc is absolute
+    fld_codes, fld_uniq = pd.factorize(pdf["field"], sort=True)
+    trm_codes, trm_uniq = pd.factorize(pdf["term"], sort=True)
+    buckets, fld_codes, trm_codes = (
+        np.repeat(a, dfs) for a in (pdf["bucket"].to_numpy(), fld_codes, trm_codes))
+    occ = np.repeat(_first_copies(buckets, fld_codes, trm_codes, doc_ids), tfs)
+    buckets, fld_codes, trm_codes, doc_ids = (
+        np.repeat(a, tfs)[occ] for a in (buckets, fld_codes, trm_codes, doc_ids))
+    yield _encode_positions(buckets, fld_codes, np.asarray(fld_uniq),
+                            trm_codes, np.asarray(trm_uniq), doc_ids, pos[occ])
 
 
 def build_positions(spark: SparkSession, docs: DataFrame, out_dir: str,

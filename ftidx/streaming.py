@@ -12,9 +12,12 @@ checkpointed source offsets + idempotent partition overwrites.
 Design: the stream carries source-table rows (input_hint schema).
 Each micro-batch:
   1. tombstone routing (S7): deleted rows → tombstone table append;
-  2. live rows → tokenize → tf/doclen → per-batch postings DELTA
-     written to ``deltas/batch=<epoch>`` (append-only, never rewrites
-     the base index — the merge-on-read model);
+  2. live rows → the build's segment writer
+     (index._bucket_local_encode, one kernel per bucket after one
+     shuffle of the batch's docs) → per-batch postings DELTA written to
+     ``deltas/batch=<epoch>`` (append-only, never rewrites the base
+     index — the merge-on-read model); ``delta_doclen/batch=<epoch>``
+     is exploded from the delta's ``__dl__`` rows, as in build;
   3. query side (FtIndex + deltas) sees new docs after the batch
      commits; periodic compaction folds deltas into base buckets.
 
@@ -26,16 +29,17 @@ disjoint segment runs (wand.TermList handles multiple rows per term).
 
 from __future__ import annotations
 
+import json
 import time
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ftidx.build import live_docs
-from ftidx.index import _encode_postings_df
-from ftidx.schema import SOURCE_SCHEMA, assert_schema
-from ftidx.tokenize import tokenize_tf
+from ftidx.index import DOCS_FIELD, _bucket_local_encode, _doclen_rows
+from ftidx.schema import POSTINGS_SCHEMA, SOURCE_SCHEMA, assert_schema
 
 
 def prepare_docs_hashid(source: DataFrame, n_buckets: int) -> DataFrame:
@@ -103,29 +107,27 @@ def index_microbatch(batch_df: DataFrame, epoch_id: int, index_path: str,
     if prior:
         seen = spark.read.parquet(*prior).select("doc_id").distinct()
         live = live.join(seen, "doc_id", "left_anti")
-    bucket_of = live.select("doc_id", "bucket")
-    # fused tokenize→tf/dl kernel (no token shuffle, no doclen join);
-    # the base manifest's stem_field carries into every delta so the
-    # stemmed field stays complete across streamed docs (same parity
-    # rule as the positional deltas below)
-    import json as _json
-
-    man = _json.loads((out / "_manifest.json").read_text()) \
+    # the build's segment writer over the batch's docs: the base
+    # manifest's stem/shingle analyzers carry into every delta so those
+    # fields stay complete across streamed docs (same parity rule as
+    # the positional deltas below). Streaming never stored __docs__.
+    man = json.loads((out / "_manifest.json").read_text()) \
         if (out / "_manifest.json").exists() else {}
-    has_stem = bool(man.get("stem_field", False))
-    has_shingle = bool(man.get("shingle_field", False))
-    tf_len = (
-        tokenize_tf(live, stem_field=has_stem, shingle_field=has_shingle)
-        .withColumnRenamed("dl", "len")
-        .join(bucket_of, "doc_id")
+    n_parts = max(min(n_buckets, int(spark.conf.get("spark.sql.shuffle.partitions"))), 1)
+    delta_dir = out / "deltas" / f"batch={epoch_id}"
+    (
+        live.repartition(n_parts, "bucket")
+        .mapInPandas(partial(_bucket_local_encode,
+                             stem_field=bool(man.get("stem_field", False)),
+                             shingle_field=bool(man.get("shingle_field", False))),
+                     schema=POSTINGS_SCHEMA)
+        .filter(F.col("field") != DOCS_FIELD)
+        .write.mode("overwrite").parquet(str(delta_dir))
     )
     # bucket kept so compact_deltas can fold these rows into the
     # bucket-partitioned base doclen table without re-deriving it
-    doclen = tf_len.groupBy("doc_id", "field", "bucket").agg(F.max("len").alias("len"))
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    postings = _encode_postings_df(tf_len, [], 1, shuffle_parts)
-    postings.write.mode("overwrite").parquet(str(out / "deltas" / f"batch={epoch_id}"))
-    doclen.write.mode("overwrite").parquet(str(out / "delta_doclen" / f"batch={epoch_id}"))
+    _doclen_rows(spark.read.parquet(str(delta_dir))).write.mode("overwrite") \
+        .parquet(str(out / "delta_doclen" / f"batch={epoch_id}"))
     # positional parity for streamed docs (Solr soft-commit analog:
     # a doc visible to term queries is visible to phrase queries too):
     # when the base index carries positions, emit the batch's
@@ -140,7 +142,7 @@ def index_microbatch(batch_df: DataFrame, epoch_id: int, index_path: str,
         pdocs = live.select("doc_id", "bucket", "content", "lang",
                             "repo", "path")
         (
-            pdocs.repartition(max(min(n_buckets, shuffle_parts), 1), "bucket")
+            pdocs.repartition(n_parts, "bucket")
             .mapInPandas(_bucket_local_positions, schema=POSITIONS_SCHEMA)
             .write.mode("overwrite")
             .parquet(str(out / "delta_positions" / f"batch={epoch_id}"))
@@ -176,89 +178,6 @@ def start_indexing_stream(
         .trigger(processingTime=f"{trigger_seconds} seconds")
         .start()
     )
-
-
-def read_delta_postings(spark: SparkSession, index_path: str) -> DataFrame | None:
-    deltas = Path(index_path) / "deltas"
-    if not deltas.exists() or not any(deltas.iterdir()):
-        return None
-    return spark.read.option("basePath", str(deltas)).parquet(str(deltas / "batch=*"))
-
-
-def query_with_deltas(spark: SparkSession, index_path: str, terms: list[str],
-                      k: int = 10, field: str = "code.content") -> list[tuple[int, float]]:
-    """Merge-on-read query: base postings (if any) + streamed deltas.
-
-    Stats (n_docs, avgdl) recomputed across base + delta doclen — at
-    scale these are incrementally maintained counters; here a cheap agg.
-    """
-    import numpy as np
-
-    from ftidx.wand import TermList, bm25_idf, score_block_max
-
-    pcols = ["term", "field", "df", "cf", "doc_ids", "tfs", "dls",
-             "block_max_tf", "block_min_dl", "block_last_docid"]
-    base_dir = Path(index_path) / "postings"
-    frames = []
-    if base_dir.exists():
-        frames.append(spark.read.parquet(str(base_dir)).select(pcols))
-    delta = read_delta_postings(spark, index_path)
-    if delta is not None:
-        frames.append(delta.select(pcols))
-    if not frames:
-        return []
-    postings = frames[0]
-    for f in frames[1:]:
-        postings = postings.unionByName(f)
-
-    dl_frames = []
-    for sub in ("doclen", "delta_doclen"):
-        d = Path(index_path) / sub
-        if d.exists() and any(d.iterdir()):
-            df = spark.read.parquet(str(d))
-            dl_frames.append(df.select("doc_id", "field", "len"))
-    doclen = dl_frames[0]
-    for f in dl_frames[1:]:
-        doclen = doclen.unionByName(f)
-    st = (
-        doclen.filter(F.col("field") == field)
-        .agg(F.count(F.lit(1)).alias("n"), F.avg("len").alias("avgdl"))
-        .collect()[0]
-    )
-    n_docs, avgdl = int(st["n"]), float(st["avgdl"] or 1.0)
-
-    qterms = sorted(set(terms))
-    rows = (
-        postings.filter((F.col("field") == field) & F.col("term").isin(qterms))
-        .collect()
-    )
-    by_term: dict[str, list[dict]] = {}
-    for r in rows:
-        by_term.setdefault(r["term"], []).append(r.asDict())
-    lists = [
-        TermList(t, trows, bm25_idf(n_docs, sum(int(r["df"]) for r in trows)))
-        for t, trows in by_term.items()
-    ]
-    if not lists:
-        return []
-
-    tomb_ids: set[int] = set()
-    tomb_dir = Path(index_path) / "tombstones"
-    if tomb_dir.exists() and any(tomb_dir.iterdir()):
-        # recursive lookup: tombstones may be flat (FtIndex.delete /
-        # compaction leftovers) or batch=N subdirs (streaming) — or both
-        tomb_ids = {
-            int(r["doc_id"])
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .parquet(str(tomb_dir)).collect()
-        }
-    ids, scores = score_block_max(lists, avgdl, k + len(tomb_ids))
-    out = [
-        (int(i), float(s))
-        for i, s in zip(ids.astype(np.int64), scores)
-        if int(i) not in tomb_ids
-    ]
-    return out[:k]
 
 
 def wait_for_stream(query, timeout_sec: float = 60.0) -> None:

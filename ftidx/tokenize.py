@@ -386,21 +386,3 @@ def tokenize_tf_batch(pdf: pd.DataFrame,
             "dl": dl_for_tf.astype("int64"),
         }
     )
-
-
-TF_SCHEMA = "doc_id long, field string, term string, tf long, dl long"
-
-
-def tokenize_tf(docs: DataFrame, stem_field: bool = False,
-                shingle_field: bool = False) -> DataFrame:
-    """Fused tokenize → per-doc tf/dl (no shuffle). The build's hot
-    path; equivalence with term_frequencies(tokenize(…)) is asserted in
-    tests."""
-    cols = docs.select("doc_id", "content", "lang", "repo", "path")
-
-    def run(batches):
-        for pdf in batches:
-            yield tokenize_tf_batch(pdf, stem_field=stem_field,
-                                    shingle_field=shingle_field)
-
-    return cols.mapInPandas(run, schema=TF_SCHEMA)

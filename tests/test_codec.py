@@ -10,9 +10,9 @@ from ftidx.codec import (
     BLOCK,
     decode_postings,
     delta_decode,
+    delta_decode_runs,
     delta_encode,
     encode_postings,
-    merge_encoded,
     varint_decode,
     varint_encode,
 )
@@ -38,6 +38,17 @@ def test_varint_edges():
 def test_delta_roundtrip(ids):
     arr = np.array(sorted(ids), dtype=np.uint64)
     assert np.array_equal(delta_decode(delta_encode(arr)), arr)
+
+
+@given(st.lists(st.sets(st.integers(min_value=0, max_value=2**62),
+                       min_size=1, max_size=50), max_size=20))
+@settings(max_examples=100, deadline=None)
+def test_delta_decode_runs_matches_per_blob(runs):
+    arrs = [np.array(sorted(r), dtype=np.uint64) for r in runs]
+    blobs = [varint_encode(delta_encode(a)) for a in arrs]
+    got = delta_decode_runs(blobs, np.array([a.size for a in arrs], dtype=np.int64))
+    want = [delta_decode(varint_decode(b)) for b in blobs]
+    assert np.array_equal(got, np.concatenate(want) if want else np.empty(0, np.uint64))
 
 
 @given(
@@ -72,23 +83,6 @@ def test_block_metadata():
         s, e = bi * BLOCK, min(n, (bi + 1) * BLOCK)
         assert enc["block_max_tf"][bi] == int(tfs[s:e].max())
         assert enc["block_min_dl"][bi] == int(dls[s:e].min())
-
-
-def test_merge_encoded_equals_single_shot():
-    rng = np.random.default_rng(7)
-    ids = rng.choice(np.arange(100_000, dtype=np.uint64), size=5000, replace=False)
-    tfs = rng.integers(1, 100, size=5000).astype(np.uint64)
-    dls = rng.integers(5, 500, size=5000).astype(np.uint64)
-    whole = encode_postings(ids, tfs, dls)
-    # split into 3 disjoint salted runs by hash of doc id
-    salt = ids % 3
-    parts = [encode_postings(ids[salt == s], tfs[salt == s], dls[salt == s]) for s in range(3)]
-    merged = merge_encoded(parts)
-    assert merged["doc_ids"] == whole["doc_ids"]
-    assert merged["tfs"] == whole["tfs"]
-    assert merged["dls"] == whole["dls"]
-    assert merged["block_min_dl"] == whole["block_min_dl"]
-    assert merged["df"] == whole["df"] and merged["cf"] == whole["cf"]
 
 
 def test_compression_ratio_dense_ids():

@@ -1,5 +1,6 @@
-"""Persistent index: build → query parity with oracle, salted hot
-terms, partition-layout determinism, resume-from-checkpoint."""
+"""Persistent index: build → query parity with oracle, hot terms,
+partition-layout determinism, resume-from-checkpoint, and pages kept
+through streamed deltas and their merges."""
 
 from __future__ import annotations
 
@@ -20,10 +21,7 @@ N_FILES = 400
 def built(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("idx") / "main")
     src = synth_source(spark, N_FILES, partitions=5)
-    # low hot threshold → `def`/`return`/… take the salted path
-    summary = build_index(
-        spark, src, out, n_buckets=8, hot_df_threshold=50, n_salts=4
-    )
+    summary = build_index(spark, src, out, n_buckets=8, hot_df_threshold=50)
     return out, summary
 
 
@@ -124,7 +122,7 @@ def test_build_layout_determinism(spark, tmp_path, built):
     out2 = str(tmp_path / "idx2")
     src = synth_source(spark, N_FILES, partitions=13)
     build_index(spark, src, out2, n_buckets=8, hot_df_threshold=50,
-                n_salts=4, bucket_group_size=3)
+                bucket_group_size=3)
 
     def dump(path):
         rows = (
@@ -157,7 +155,7 @@ def test_resume_skips_done_buckets(spark, tmp_path, built):
         .write.parquet(f"{out2}/ledger")
 
     src = synth_source(spark, N_FILES, partitions=5)
-    summary = build_index(spark, src, out2, n_buckets=8, hot_df_threshold=50, n_salts=4)
+    summary = build_index(spark, src, out2, n_buckets=8, hot_df_threshold=50)
     assert sorted(summary["built"]) == [4, 5, 6, 7]
     assert sorted(summary["skipped"]) == [0, 1, 2, 3]
 
@@ -323,38 +321,109 @@ def test_failed_bucket_reason_persisted(spark, tmp_path):
     assert m["last_build"]["buckets_done"] == 4
 
 
-def test_grouped_salted_strategy_agrees(spark, tmp_path, built):
-    """The grouped+salted encode path (streaming/micro-batch) must
-    produce byte-identical postings to the bucket-local build path for
-    the same corpus — cross-validates both topologies AND the salted
-    hot-term merge."""
-    from pyspark.sql import functions as F
+def test_streamed_merges_keep_pages(spark, tmp_path):
+    """One segment writer for build, stream and merge: a base plus three
+    streamed batches (one redelivers ids, one carries a tombstone) with
+    positions on. topk, phrase_topk and the exhaustive kernel serve the
+    same pages before and after merge_delta_tier and compact_deltas,
+    every page equals the oracle, and postings/ ends with one row per
+    (field, term, bucket)."""
+    from ftidx.maintenance import compact_deltas, merge_delta_tier
+    from ftidx.streaming import index_microbatch, prepare_docs_hashid
+    from ftidx.tokenize import tokenize_doc
 
-    from ftidx.build import BUCKET_SHIFT, live_docs, prepare_docs
-    from ftidx.index import PSEUDO_PREFIX, _encode_postings_df
-    from ftidx.tokenize import tokenize_tf
+    out = str(tmp_path / "idx")
+    base_src = synth_source(spark, 120)
+    build_index(spark, base_src, out, n_buckets=4, positions=True)
+    extra = synth_source(spark, 200).join(
+        base_src.select("repo", "path"), ["repo", "path"], "left_anti").cache()
+    b0 = extra.filter(F.xxhash64("path") % 2 == 0)
+    victim_row = (b0.filter(~F.col("deleted") & F.col("content").isNotNull())
+                  .orderBy("path").limit(1))
+    index_microbatch(b0, 0, out, n_buckets=4)
+    index_microbatch(extra.filter(F.xxhash64("path") % 2 != 0)
+                     .unionByName(b0.limit(5)), 1, out, n_buckets=4)
+    index_microbatch(victim_row.withColumn("deleted", F.lit(True)), 2, out,
+                     n_buckets=4)
 
-    src = synth_source(spark, N_FILES, partitions=5)
-    live = live_docs(prepare_docs(src, 8))
-    tf_len = tokenize_tf(live).withColumnRenamed("dl", "len").withColumn(
-        "bucket", F.shiftright("doc_id", BUCKET_SHIFT).cast("int")
-    )
-    dfreq = tf_len.groupBy("field", "term").agg(F.count(F.lit(1)).alias("df"))
-    hot = [(r["field"], r["term"]) for r in dfreq.filter(F.col("df") > 50).collect()]
-    assert hot  # the synthetic corpus must exercise the salted path
-    grouped = {
-        (r["term"], r["field"], r["bucket"]):
-            (r["df"], bytes(r["doc_ids"]), bytes(r["tfs"]), bytes(r["dls"]))
-        for r in _encode_postings_df(tf_len, hot, 4, 8).collect()
-    }
-    bucket_local = {
-        (r["term"], r["field"], r["bucket"]):
-            (r["df"], bytes(r["doc_ids"]), bytes(r["tfs"]), bytes(r["dls"]))
-        for r in spark.read.parquet(f"{built[0]}/postings")
-        .filter(~F.col("field").startswith(PSEUDO_PREFIX))
-        .collect()
-    }
-    assert grouped == bucket_local
+    cols = ["doc_id", "content", "lang", "repo", "path"]
+    base = spark.read.parquet(f"{out}/docs").select("repo", "path", "doc_id")
+    live = (base_src.join(base, ["repo", "path"])
+            .unionByName(prepare_docs_hashid(extra, 4).select(*base_src.columns, "doc_id"))
+            .filter(~F.col("deleted") & F.col("content").isNotNull())
+            .select(cols).toPandas())
+    oracle = OracleIndex.from_pandas(live)
+    victim = prepare_docs_hashid(victim_row, 4).first()["doc_id"]
+    content = {int(r.doc_id): tokenize_doc(r.content, r.lang, r.repo, r.path)
+               .get("code.content", []) for r in live.itertuples()}
+
+    def want(terms, k, phrase=False):
+        scores = oracle.bm25_scores(terms)
+        n = len(terms)
+        hits = [(d, s) for d, s in scores.items() if d != victim and (
+            not phrase or any(content[d][i:i + n] == terms
+                              for i in range(len(content[d]))))]
+        return sorted(hits, key=lambda kv: (-kv[1], kv[0]))[:k]
+
+    def pages():
+        idx = open_index(spark, out)
+        got = {"topk": idx.topk(["def", "alpha"], k=10),
+               "exhaustive": idx.topk(["def", "alpha"], k=10, kernel="exhaustive"),
+               "phrase": idx.phrase_topk(["plain", "words"], k=50)}
+        for name, page in got.items():
+            expect = want(["plain", "words"], 50, True) if name == "phrase" \
+                else want(["def", "alpha"], 10)
+            assert [d for d, _ in page] == [d for d, _ in expect], name
+            for (_, gs), (_, ws) in zip(page, expect):
+                assert gs == pytest.approx(ws, rel=1e-9)
+        return got
+
+    before = pages()
+    assert any(d >= (1 << 40) for d, _ in before["phrase"])  # streamed hit
+    merge_delta_tier(spark, out, max_batches=1)
+    assert pages() == before
+    compact_deltas(spark, out)
+    assert pages() == before
+    dup = (spark.read.parquet(f"{out}/postings")
+           .groupBy("field", "term", "bucket").count()
+           .filter(F.col("count") > 1).count())
+    assert dup == 0
+
+
+def test_bucket_merge_matches_per_group_encode():
+    """The per-bucket merge kernel equals the per-group reference —
+    decode every segment, keep each doc once, encode_postings — for
+    real and __dl__ rows alike; __docs__ rows pass through."""
+    import pandas as pd
+
+    from ftidx.codec import encode_postings
+    from ftidx.index import _POSTINGS_COLS, DOCS_FIELD, _bucket_local_merge
+
+    rng = np.random.default_rng(3)
+    rows, want = [], {}
+    for b in range(2):
+        for field in ("code.content", "__dl__code.content"):
+            for term in ("alpha", "beta"):
+                ids = rng.choice(1 << 40, 300, replace=False).astype(np.uint64)
+                tfs, dls = (rng.integers(1, 500, 300).astype(np.uint64) for _ in range(2))
+                # later segments repeat docs of earlier ones (a redelivery)
+                for sl in (np.r_[0:100], np.r_[100:220, 0:10], np.r_[220:300, 5:15]):
+                    rows.append({"term": term, "field": field, "bucket": b,
+                                 **encode_postings(ids[sl], tfs[sl], dls[sl])})
+                want[(term, field, b)] = encode_postings(ids, tfs, dls)
+    rows.append({"term": "*", "field": DOCS_FIELD, "bucket": 0, "df": 1, "cf": 0,
+                 "doc_ids": b"", "tfs": b"", "dls": b"meta", "block_max_tf": [],
+                 "block_min_dl": [], "block_last_docid": []})
+    pdf = pd.DataFrame(rows)[_POSTINGS_COLS].sample(frac=1, random_state=1)
+    out = pd.concat(list(_bucket_local_merge([pdf.iloc[:5], pdf.iloc[5:]])))
+    got = {(r["term"], r["field"], r["bucket"]): r for r in out.to_dict("records")}
+    assert got.pop(("*", DOCS_FIELD, 0))["dls"] == b"meta"
+    assert got.keys() == want.keys()
+    for key, w in want.items():
+        assert {c: got[key][c] for c in ("df", "cf", "doc_ids", "tfs", "dls")} == \
+            {c: w[c] for c in ("df", "cf", "doc_ids", "tfs", "dls")}
+        for c in ("block_max_tf", "block_min_dl", "block_last_docid"):
+            assert list(got[key][c]) == list(w[c])
 
 
 def test_boolean_and_exclude(spark, tmp_path):

@@ -102,10 +102,10 @@ def test_upsert_equals_fresh_build(spark, tmp_path):
 
 def test_compact_deltas_folds_into_base(spark, tmp_path):
     """Streamed deltas fold into base buckets; merge-on-read results
-    are preserved exactly and the plain FtIndex path now sees them."""
+    are preserved exactly, on a reopened handle as on a refreshed one."""
     from ftidx.index import FtIndex
     from ftidx.maintenance import compact_deltas
-    from ftidx.streaming import index_microbatch, query_with_deltas
+    from ftidx.streaming import index_microbatch
 
     out = str(tmp_path / "idx")
     base_src = synth_source(spark, 150)
@@ -119,7 +119,8 @@ def test_compact_deltas_folds_into_base(spark, tmp_path):
     index_microbatch(b1, 0, out, n_buckets=4)
     index_microbatch(b2, 1, out, n_buckets=4)
 
-    before = query_with_deltas(spark, out, ["def", "alpha"], k=10)
+    idx = FtIndex(spark, out)
+    before = idx.topk(["def", "alpha"], k=10)
     assert any(d >= (1 << 40) for d, _ in before)  # hash-id docs present
 
     res = compact_deltas(spark, out)
@@ -127,13 +128,13 @@ def test_compact_deltas_folds_into_base(spark, tmp_path):
     assert not (tmp_path / "idx" / "deltas").exists()
     assert not (tmp_path / "idx" / "delta_doclen").exists()
 
-    after_mor = query_with_deltas(spark, out, ["def", "alpha"], k=10)
-    assert [d for d, _ in after_mor] == [d for d, _ in before]
-    for (_, a), (_, b) in zip(after_mor, before):
+    idx.refresh()
+    after = idx.topk(["def", "alpha"], k=10)
+    assert [d for d, _ in after] == [d for d, _ in before]
+    for (_, a), (_, b) in zip(after, before):
         assert a == pytest.approx(b, rel=1e-9)
-    # the base-only serving path agrees now
-    idx = FtIndex(spark, out)
-    plain = idx.topk(["def", "alpha"], 10)
+    # a fresh handle over the base-only index agrees too
+    plain = FtIndex(spark, out).topk(["def", "alpha"], 10)
     assert [d for d, _ in plain] == [d for d, _ in before]
 
 
@@ -141,7 +142,7 @@ def test_compact_tombstones_with_streaming_ids(spark, tmp_path):
     """compact_tombstones must refuse while deltas exist, resolve hash
     ids via doclen after delta compaction, and retain unresolved ids."""
     from ftidx.maintenance import compact_deltas
-    from ftidx.streaming import index_microbatch, query_with_deltas
+    from ftidx.streaming import index_microbatch
 
     out = str(tmp_path / "idx")
     base_src = synth_source(spark, 120)
@@ -151,7 +152,8 @@ def test_compact_tombstones_with_streaming_ids(spark, tmp_path):
     )
     index_microbatch(extra, 0, out, n_buckets=4)
 
-    hits = query_with_deltas(spark, out, ["def"], k=10)
+    idx = open_index(spark, out)
+    hits = idx.topk(["def"], k=10)
     victim = next(d for d, _ in hits if d >= (1 << 40))  # a streamed doc
     garbage = 999_999_999_999_999_999
     spark.createDataFrame([(victim,), (garbage,)], "doc_id long") \
@@ -166,7 +168,8 @@ def test_compact_tombstones_with_streaming_ids(spark, tmp_path):
     # any deleted-on-arrival stream rows that were never indexed — stay
     # tombstoned rather than being silently dropped
     assert res["docs_removed"] == 1 and res["unresolved"] >= 1
-    after = query_with_deltas(spark, out, ["def"], k=10)
+    idx.refresh()
+    after = idx.topk(["def"], k=10)
     assert victim not in [d for d, _ in after]
     kept = {r["doc_id"] for r in spark.read
             .option("recursiveFileLookup", "true")
@@ -547,7 +550,7 @@ def test_merge_delta_tier_preserves_queries(spark, tmp_path):
     compatible with a later full compaction."""
     from ftidx.index import FtIndex
     from ftidx.maintenance import compact_deltas, merge_delta_tier
-    from ftidx.streaming import index_microbatch, query_with_deltas
+    from ftidx.streaming import index_microbatch
 
     out = str(tmp_path / "idx")
     base_src = synth_source(spark, 120)
@@ -559,7 +562,8 @@ def test_merge_delta_tier_preserves_queries(spark, tmp_path):
         b = extra.filter(F.xxhash64("path") % 4 == e)
         index_microbatch(b, e, out, n_buckets=4)
 
-    before = query_with_deltas(spark, out, ["def", "alpha"], k=10)
+    idx = FtIndex(spark, out)
+    before = idx.topk(["def", "alpha"], k=10)
     assert any(d >= (1 << 40) for d, _ in before)
 
     # below threshold -> no-op
@@ -572,7 +576,8 @@ def test_merge_delta_tier_preserves_queries(spark, tmp_path):
     ddirs = sorted(p.name for p in (tmp_path / "idx" / "deltas").iterdir())
     assert len(ddirs) == 2 and "batch=1000000000" in ddirs
 
-    after = query_with_deltas(spark, out, ["def", "alpha"], k=10)
+    idx.refresh()
+    after = idx.topk(["def", "alpha"], k=10)
     assert [d for d, _ in after] == [d for d, _ in before]
     for (_, a), (_, b) in zip(after, before):
         assert a == pytest.approx(b, rel=1e-9)
@@ -584,7 +589,7 @@ def test_merge_delta_tier_preserves_queries(spark, tmp_path):
 
     # full compaction still lands on the same answers
     compact_deltas(spark, out)
-    idx = FtIndex(spark, out)
+    idx.refresh()
     plain = idx.topk(["def", "alpha"], 10)
     assert [d for d, _ in plain] == [d for d, _ in before]
 
@@ -594,7 +599,7 @@ def test_merge_delta_tier_replay_after_merge(spark, tmp_path):
     merged must not double-score: the merged delta_doclen keeps the
     seen-set intact, so the replay's rows anti-join away."""
     from ftidx.maintenance import merge_delta_tier
-    from ftidx.streaming import index_microbatch, query_with_deltas
+    from ftidx.streaming import index_microbatch
 
     out = str(tmp_path / "idx")
     base_src = synth_source(spark, 100)
@@ -605,20 +610,53 @@ def test_merge_delta_tier_replay_after_merge(spark, tmp_path):
     parts = [extra.filter(F.xxhash64("path") % 3 == e) for e in range(3)]
     for e, b in enumerate(parts):
         index_microbatch(b, e, out, n_buckets=4)
-    before = query_with_deltas(spark, out, ["def"], k=10)
+    idx = open_index(spark, out)
+    before = idx.topk(["def"], k=10)
 
     merge_delta_tier(spark, out, max_batches=1)
     # replay epoch 1 in a LATER epoch id (the cross-batch redelivery
     # path; same-epoch replay would just overwrite its own dir)
     index_microbatch(parts[1], 9, out, n_buckets=4)
 
-    after = query_with_deltas(spark, out, ["def"], k=10)
+    idx.refresh()
+    after = idx.topk(["def"], k=10)
     assert [d for d, _ in after] == [d for d, _ in before]
     for (_, a), (_, b) in zip(after, before):
         assert a == pytest.approx(b, rel=1e-9)
 
     with pytest.raises(ValueError):
         merge_delta_tier(spark, out, max_batches=0)
+
+
+def test_streamed_positions_follow_their_bucket(spark, tmp_path):
+    """Streamed hash ids do not embed their bucket: positions must land
+    in the doc's own bucket, the one its postings use, so compaction
+    keeps one positions partition per postings partition and a
+    tombstone compaction removes a streamed doc from both tables."""
+    from ftidx.maintenance import compact_deltas
+    from ftidx.positions import decode_positions_row
+    from ftidx.streaming import index_microbatch
+
+    out = str(tmp_path / "idx")
+    base_src = synth_source(spark, 80)
+    build_index(spark, base_src, out, n_buckets=4, positions=True)
+    extra = synth_source(spark, 110).join(
+        base_src.select("repo", "path"), ["repo", "path"], "left_anti")
+    index_microbatch(extra, 0, out, n_buckets=4)
+    compact_deltas(spark, out)
+
+    def partitions(table):
+        return sorted(p.name for p in (tmp_path / "idx" / table).iterdir()
+                      if p.name.startswith("bucket="))
+
+    assert partitions("positions") == partitions("postings")
+    idx = open_index(spark, out)
+    victim = next(d for d, _ in idx.topk(["def"], k=200) if d >= (1 << 40))
+    idx.delete([victim])
+    compact_tombstones(spark, out)
+    held = [r["term"] for r in spark.read.parquet(f"{out}/positions").collect()
+            if victim in decode_positions_row(r)[0].astype("int64")]
+    assert held == []
 
 
 def test_merge_delta_tier_keeps_streamed_phrases(spark, tmp_path):

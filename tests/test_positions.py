@@ -265,3 +265,29 @@ def test_phrase_boost_slop_ps(spark, tmp_path):
     import pytest as _pt
     with _pt.raises(ValueError, match="slop"):
         idx.topk_phrase_boosted(["alpha", "beta"], slop=-1)
+
+
+def test_positions_merge_matches_per_group_encode():
+    """The per-bucket positions merge equals the per-group reference:
+    decode every segment, keep each doc once, encode_positions_row."""
+    import pandas as pd
+
+    from ftidx.positions import _POS_COLS, _merge_positions, encode_positions_row
+
+    rng = np.random.default_rng(5)
+    rows, want = [], {}
+    for b in range(2):
+        for term in ("alpha", "beta"):
+            ids = np.sort(rng.choice(1 << 40, 60, replace=False)).astype(np.uint64)
+            plists = [np.sort(rng.choice(1000, rng.integers(1, 6), replace=False))
+                      .astype(np.uint64) for _ in ids]
+            # later segments repeat docs of earlier ones (a redelivery)
+            for sl in (np.r_[0:20], np.r_[0:5, 20:45], np.r_[3:8, 45:60]):
+                rows.append({"term": term, "field": "code.content", "bucket": b,
+                             **encode_positions_row(ids[sl], [plists[i] for i in sl])})
+            want[(term, "code.content", b)] = encode_positions_row(ids, plists)
+    pdf = pd.DataFrame(rows)[_POS_COLS].sample(frac=1, random_state=2)
+    out = pd.concat(list(_merge_positions([pdf.iloc[:4], pdf.iloc[4:]])))
+    got = {(r["term"], r["field"], r["bucket"]): {c: r[c] for c in ("df", "doc_ids", "tfs", "pos")}
+           for r in out.to_dict("records")}
+    assert got == want

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ftidx.index import build_index, open_index
-from ftidx.tokenize import tokenize_doc, tokenize_tf
+from ftidx.tokenize import tokenize_doc, tokenize_tf_batch
 
 
 def _corpus(spark, rows):
@@ -34,9 +34,11 @@ def test_shingle_spec_and_batch_twin(spark):
 
     docs = prepare_docs(_corpus(
         spark, ["alpha beta beta gamma", "beta gamma", "single", ""]), 2)
+    tf = tokenize_tf_batch(
+        docs.select("doc_id", "content", "lang", "repo", "path").toPandas(),
+        shingle_field=True)
     got = {}
-    for r in tokenize_tf(docs, shingle_field=True) \
-            .filter("field = 'code.content.shingle'").collect():
+    for r in tf[tf["field"] == "code.content.shingle"].to_dict("records"):
         got[(r["doc_id"], r["term"])] = (r["tf"], r["dl"])
     by_doc: dict = {}
     for (d, t), (c, _) in got.items():

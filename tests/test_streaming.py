@@ -1,17 +1,15 @@
 """Structured Streaming micro-batch indexing: arriving files → delta
-segments → merge-on-read queries; tombstone routing; restart resume."""
+segments → merge-on-read queries through FtIndex; tombstone routing;
+restart resume."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from ftidx.index import FtIndex
 from ftidx.oracle import OracleIndex
-from ftidx.streaming import (
-    prepare_docs_hashid,
-    query_with_deltas,
-    start_indexing_stream,
-)
+from ftidx.streaming import prepare_docs_hashid, start_indexing_stream
 from ftidx.synth import synth_source
 
 
@@ -40,12 +38,15 @@ def test_stream_indexes_and_queries(spark, dirs):
                               trigger_seconds=1)
     try:
         q.processAllAvailable()
-        r1 = query_with_deltas(spark, idx_dir, ["def", "alpha"], k=10)
+        # a deltas-only index (no build, no manifest) opens and serves
+        idx = FtIndex(spark, idx_dir)
+        r1 = idx.topk(["def", "alpha"], k=10)
         assert r1  # chunk-1 docs queryable
 
         chunk2.write.mode("append").parquet(f"{src_dir}/c2")
         q.processAllAvailable()
-        r2 = query_with_deltas(spark, idx_dir, ["def", "alpha"], k=10)
+        idx.refresh()
+        r2 = idx.topk(["def", "alpha"], k=10)
     finally:
         q.stop()
 
@@ -70,7 +71,8 @@ def test_stream_tombstones(spark, dirs):
                               trigger_seconds=1)
     try:
         q.processAllAvailable()
-        r1 = query_with_deltas(spark, idx_dir, ["def"], k=5)
+        idx = FtIndex(spark, idx_dir)
+        r1 = idx.topk(["def"], k=5)
         victim = r1[0][0]
         # a delete arrives on the stream: same (repo, path, commit), deleted=true
         live = prepare_docs_hashid(src, 4)
@@ -80,7 +82,8 @@ def test_stream_tombstones(spark, dirs):
             .select("repo", "path", "commit", "lang", "content", "deleted", "modified")
         tomb.write.mode("append").parquet(f"{src_dir}/c2")
         q.processAllAvailable()
-        r2 = query_with_deltas(spark, idx_dir, ["def"], k=5)
+        idx.refresh()
+        r2 = idx.topk(["def"], k=5)
     finally:
         q.stop()
     assert victim not in [d for d, _ in r2]
@@ -96,11 +99,13 @@ def test_redelivered_rows_not_double_indexed(spark, tmp_path):
     out = str(tmp_path / "sidx")
     src = synth_source(spark, 80, partitions=2).cache()
     index_microbatch(src, 0, out, n_buckets=4)
-    once = query_with_deltas(spark, out, ["def", "alpha"], k=10)
+    idx = FtIndex(spark, out)
+    once = idx.topk(["def", "alpha"], k=10)
 
     # the whole batch arrives again as epoch 1 (plus within-batch dups)
     index_microbatch(src.union(src.limit(10)), 1, out, n_buckets=4)
-    twice = query_with_deltas(spark, out, ["def", "alpha"], k=10)
+    idx.refresh()
+    twice = idx.topk(["def", "alpha"], k=10)
     assert [d for d, _ in twice] == [d for d, _ in once]
     for (_, a), (_, b) in zip(twice, once):
         assert a == pytest.approx(b, rel=1e-12)
@@ -140,23 +145,34 @@ def test_stream_restart_resumes(spark, dirs):
 
 def test_ftindex_serves_deltas(spark, tmp_path):
     """The serving handle answers over base + streamed deltas without
-    waiting for compaction, rank-identical to query_with_deltas."""
+    waiting for compaction: the block-max page equals the exhaustive
+    kernel's and the oracle's over base + streamed docs."""
     from ftidx.index import build_index, open_index
     from ftidx.streaming import index_microbatch
 
     out = str(tmp_path / "idx")
-    build_index(spark, synth_source(spark, 100), out, n_buckets=4,
-                hot_df_threshold=50)
+    base_src = synth_source(spark, 100)
+    build_index(spark, base_src, out, n_buckets=4, hot_df_threshold=50)
     idx = open_index(spark, out)
     base_only = idx.topk(["def", "alpha"], k=10)
 
-    extra = synth_source(spark, 140).subtract(synth_source(spark, 100))
+    extra = synth_source(spark, 140).subtract(base_src)
     index_microbatch(extra, 0, out, n_buckets=4)
     idx.refresh()
     merged = idx.topk(["def", "alpha"], k=10)
-    expect = query_with_deltas(spark, out, ["def", "alpha"], k=10)
-    assert merged == expect
+    assert merged == idx.topk(["def", "alpha"], k=10, kernel="exhaustive")
     assert merged != base_only  # streamed docs shifted the ranking
+
+    cols = ["doc_id", "content", "lang", "repo", "path"]
+    base = spark.read.parquet(f"{out}/docs").select("repo", "path", "doc_id")
+    live = (base_src.filter((~F.col("deleted")) & F.col("content").isNotNull())
+            .join(base, ["repo", "path"]).select(cols)
+            .unionByName(prepare_docs_hashid(extra, 4).filter(
+                (~F.col("deleted")) & F.col("content").isNotNull()).select(cols)))
+    want = OracleIndex.from_pandas(live.toPandas()).topk(["def", "alpha"], 10)
+    assert [d for d, _ in merged] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(merged, want):
+        assert gs == pytest.approx(ws, rel=1e-9)
 
 
 def test_windowed_counts_late_data(spark, tmp_path):
