@@ -280,23 +280,19 @@ def _first_copies(buckets, fld_codes, trm_codes, doc_ids) -> np.ndarray:
     return keep
 
 
-def _bucket_local_merge(batches):
+def _bucket_local_merge(batches, drop: np.ndarray | None = None):
     """mapInPandas kernel, the Lucene segment merge: every postings row
     of ≥1 whole buckets (base segments + delta batches) → one row per
     (bucket, field, term). Decodes every row, drops repeated docs
-    (:func:`_first_copies`) and re-encodes through the build's
+    (:func:`_first_copies`) and the ids in ``drop`` (a compaction passes
+    one bucket's deleted docs) and re-encodes through the build's
     :func:`_encode_segments`; ``__dl__`` rows merge like any term,
-    ``__docs__`` rows pass through untouched."""
-    frames = [pdf for pdf in batches if len(pdf)]
+    ``__docs__`` rows are dropped (only the build reads them)."""
+    frames = [pdf[pdf["field"] != DOCS_FIELD] for pdf in batches]
+    frames = [pdf for pdf in frames if len(pdf)]
     if not frames:
         return
     pdf = pd.concat(frames, ignore_index=True)
-    is_docs = (pdf["field"] == DOCS_FIELD).to_numpy()
-    if is_docs.any():
-        yield pdf.loc[is_docs, _POSTINGS_COLS]
-        pdf = pdf[~is_docs]
-        if not len(pdf):
-            return
     dfs = pdf["df"].to_numpy(dtype=np.int64)
     doc_ids = delta_decode_runs(pdf["doc_ids"], dfs)
     tfs = varint_decode(b"".join(pdf["tfs"]))
@@ -306,6 +302,10 @@ def _bucket_local_merge(batches):
     buckets, fld_codes, trm_codes = (
         np.repeat(a, dfs) for a in (pdf["bucket"].to_numpy(), fld_codes, trm_codes))
     keep = _first_copies(buckets, fld_codes, trm_codes, doc_ids)
+    if drop is not None:
+        keep &= ~np.isin(doc_ids, np.asarray(drop, dtype=np.uint64))
+        if not keep.any():
+            return
     buckets, fld_codes, trm_codes, doc_ids, tfs, dls = (
         a[keep] for a in (buckets, fld_codes, trm_codes, doc_ids, tfs, dls))
     order = np.lexsort((doc_ids, trm_codes, fld_codes, buckets))
@@ -892,9 +892,9 @@ class FtIndex:
 
     def refresh(self) -> None:
         """Re-read manifest/postings/stats/tombstones and drop the term
-        cache. Call after maintenance ops (compact_tombstones,
-        compact_deltas, upsert) rewrite the index under this path — a
-        stale handle would otherwise keep serving cached postings/idf.
+        cache. Call after maintenance ops (compact, upsert) rewrite the
+        index under this path — a stale handle would otherwise keep
+        serving cached postings/idf.
         Holds the cache lock for the whole swap so a concurrent query
         never sees half-new handle state (refresh is rare; queries are
         short)."""
@@ -915,7 +915,7 @@ class FtIndex:
             self._postings = spark.createDataFrame([], POSTINGS_SCHEMA)
         # streamed delta segments (merge-on-read): union them in so the
         # serving surface (topk/topk_batch/server) answers over base +
-        # deltas without waiting for compact_deltas; the WAND kernels
+        # deltas without waiting for compact; the WAND kernels
         # already handle multiple segments per term with overlapping
         # id ranges (streaming hash ids)
         deltas_dir = self.path / "deltas"
@@ -986,7 +986,7 @@ class FtIndex:
         )
         # streamed positional deltas (Solr soft-commit parity): union
         # them in like the postings deltas, so a doc streamed in is
-        # phrase-queryable BEFORE compact_deltas; phrase_docs merges
+        # phrase-queryable BEFORE compact; phrase_docs merges
         # same-doc occurrences across segments defensively already
         dpos_dir = self.path / "delta_positions"
         if dpos_dir.exists() and any(dpos_dir.iterdir()):
@@ -3955,7 +3955,7 @@ class FtIndex:
         one doc id — tombstone-aware, bucket-pruned (the docs table is
         partitioned by bucket, so the lookup reads exactly one
         partition's footers plus the id-predicate-pushed pages).
-        Streamed delta docs carry postings only until compact_deltas
+        Streamed delta docs carry postings only until compact
         folds them into base buckets; before that this returns None for
         them, matching the docs-table-backed facet/export surfaces."""
         if doc_id in self._tombstones:

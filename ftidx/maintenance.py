@@ -1,12 +1,12 @@
-"""Index maintenance: tombstone compaction and incremental upsert.
+"""Index maintenance: compaction and incremental upsert.
 
 Reference analogs: delete-by-id (Indexer.java:219-222 → S8), upsert by
 unique key (solrClient.add replaces by id, Indexer.java:224-229 → S24/
 Q9). The steady-state model is Lucene-like: queries anti-filter a
-small tombstone set; compaction folds tombstones into the postings by
-a decode→filter→re-encode pass over only the buckets that contain
-deleted docs (bucket = doc_id >> 40, so the affected partition set is
-known without scanning).
+small tombstone set and union the streamed delta segments; one
+compaction folds both into the base index through the per-bucket
+segment merge, rewriting only the buckets the deltas and the deleted
+docs live in.
 
 Upsert = delete + reindex of the changed docs' buckets: because doc
 ids are content-addressed ranks within a bucket, replacing a doc's
@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import shutil
+from functools import partial, reduce
 from pathlib import Path
 
 import numpy as np
@@ -28,300 +29,213 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ftidx.codec import encode_postings
-from ftidx.index import _bucket_local_merge, write_stats
+from ftidx.index import _bucket_local_merge, _doclen_rows, write_stats
 from ftidx.schema import POSTINGS_SCHEMA
-from ftidx.wand import TermList
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
+
+# Every table an index directory holds: the build's, the streamed
+# deltas' and the tombstones.
+INDEX_TABLES = ("postings", "doclen", "docs", "positions", "stored",
+                "stats", "termstats", "ledger", "tombstones",
+                "deltas", "delta_doclen", "delta_positions")
 
 
 def _has_files(d: Path) -> bool:
     return d.exists() and any(d.iterdir())
 
 
-def compact_tombstones(spark: SparkSession, index_path: str) -> dict:
-    """Fold the tombstone table into the postings: rewrite only the
-    buckets containing deleted docs; drop resolved tombstones after.
+def _batches(spark: SparkSession, d: Path) -> DataFrame | None:
+    """The ``batch=*`` segments of a delta table, or None."""
+    if not _has_files(d):
+        return None
+    return spark.read.option("basePath", str(d)).parquet(str(d / "batch=*"))
 
-    Buckets are resolved by joining tombstone ids against the doclen
-    table's (doc_id, bucket) map — NOT by ``doc_id >> BUCKET_SHIFT``,
-    which is only valid for batch rank-assigned ids (streaming docs
-    carry content-hash ids whose high bits are unrelated to their
-    bucket). Ids that resolve to no bucket (already gone, or still only
-    in un-compacted deltas) are RETAINED in the tombstone table so the
-    query-time anti-filter keeps masking them.
 
-    Refuses to run while streamed deltas exist: delta segments would
-    keep serving deleted docs after the tombstone table was dropped.
-    Run :func:`compact_deltas` first. Open ``FtIndex`` handles cache
-    postings/stats — call ``FtIndex.refresh()`` (or reopen) after."""
+def compact(spark: SparkSession, index_path: str) -> dict:
+    """Fold streamed deltas and tombstones into the base index — the
+    Lucene segment merge that drops deleted docs from disk.
+
+    Affected buckets are the delta buckets plus the buckets of resolved
+    tombstone ids. An id resolves through ``doclen`` ∪ ``delta_doclen``
+    (a streamed hash id's high bits are not its bucket); ids that
+    resolve nowhere stay in the tombstone table, so the query-time
+    anti-filter keeps masking them. Each affected bucket makes one pass:
+    base + delta rows meet that bucket's resolved ids in a cogroup (no
+    tombstone array in any closure) and go through
+    :func:`ftidx.index._bucket_local_merge` (positions:
+    :func:`ftidx.positions._merge_positions`), which drops the ids.
+    ``doclen`` is exploded from the merged ``__dl__`` rows, as a build
+    does; ``docs`` and ``stored`` drop the ids.
+
+    Crash order: the bucket tables (postings before the doclen exploded
+    from it); stats; then the delta dirs; the tombstone table last. A
+    rerun after a crash ends in the same state: the merge drops
+    repeated docs, and the resolved ids are kept on disk
+    (``_compact_idmap``) until the end, so ids whose doclen rows are
+    already gone stay resolved. Were the tombstones replaced before the
+    deltas were gone, a rerun would fold a deleted doc's delta rows
+    back in. Scale shape: one shuffle of the affected buckets' rows,
+    never O(corpus). Open ``FtIndex`` handles must ``refresh()`` (or
+    reopen) afterwards."""
     path = Path(index_path)
-    if _has_files(path / "deltas"):
-        raise ValueError(
-            "compact_tombstones: streamed deltas exist under "
-            f"{path / 'deltas'}; run compact_deltas first so deleted "
-            "docs cannot resurface from delta segments"
-        )
-    tomb_dir = path / "tombstones"
-    if not tomb_dir.exists():
-        return {"buckets_rewritten": [], "docs_removed": 0, "unresolved": 0}
-    tombs = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(str(tomb_dir)).select("doc_id").distinct()
-    )
-    if not tombs.limit(1).count():
-        shutil.rmtree(tomb_dir)
-        return {"buckets_rewritten": [], "docs_removed": 0, "unresolved": 0}
-
-    # resolve id → bucket through doclen (covers batch ids AND folded
-    # streaming hash ids); unresolved ids stay tombstoned. Both sides
-    # stay DataFrames — nothing about the tombstone set ever lands on
-    # the driver, so the pass is bounded by executor memory per bucket,
-    # not by driver memory (mass deletes — whole repos — are fine).
-    if _has_files(path / "doclen"):
-        id_bucket = (
-            spark.read.parquet(str(path / "doclen"))
-            .select("doc_id", "bucket").distinct()
-            .join(tombs, "doc_id")
-        )
-    else:
-        id_bucket = spark.createDataFrame([], "doc_id long, bucket int")
-    # materialize the id→bucket map to disk BEFORE any table rewrite:
-    # it derives from doclen, which this pass overwrites — a cached
-    # plan that recomputed after the rewrite would resolve to the
-    # already-deleted (now absent) ids and silently skip the cleanup
-    idmap_dir = path / "_compact_idmap"
-    shutil.rmtree(idmap_dir, ignore_errors=True)
-    id_bucket.write.parquet(str(idmap_dir))
-    id_bucket = spark.read.parquet(str(idmap_dir))
-    n_resolved = id_bucket.count()
-    unresolved_df = tombs.join(id_bucket.select("doc_id"), "doc_id", "left_anti")
-    n_unresolved = unresolved_df.count()
-    if not n_resolved:
-        _replace_tombstones(spark, tomb_dir, unresolved_df, n_unresolved)
-        shutil.rmtree(idmap_dir, ignore_errors=True)
-        return {"buckets_rewritten": [], "docs_removed": 0,
-                "unresolved": n_unresolved}
-    # the bucket list is bounded by n_buckets — safe to collect
-    buckets = sorted(
-        int(r["bucket"]) for r in id_bucket.select("bucket").distinct().collect()
-    )
-
-    postings = spark.read.parquet(str(path / "postings"))
-    # __docs__ transport pseudo-rows are residue once the docs table is
-    # exploded — drop them here instead of decoding their Arrow blobs
-    from ftidx.index import DOCS_FIELD
-
-    affected = postings.filter(
-        F.col("bucket").isin(buckets) & (F.col("field") != DOCS_FIELD)
-    )
-
-    # cogrouped rewrite: each bucket's posting rows meet ONLY that
-    # bucket's tombstone ids inside the kernel — no global tombstone
-    # array in any closure
-    def rewrite_cg(pdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-        tomb_arr = np.sort(tpdf["doc_id"].to_numpy(dtype=np.int64)
-                           .astype(np.uint64))
-        out = {c: [] for c in _POSTINGS_COLS}
-        for row in pdf.to_dict("records"):
-            tl = TermList(row["term"], [row], 0.0)
-            ids, tfs, dls = tl.decode_all()
-            keep = ~np.isin(ids, tomb_arr)
-            if not keep.any():
-                continue  # term vanishes from this bucket
-            enc = encode_postings(ids[keep], tfs[keep], dls[keep])
-            out["term"].append(row["term"])
-            out["field"].append(row["field"])
-            out["bucket"].append(int(row["bucket"]))
-            for k in ("df", "cf", "doc_ids", "tfs", "dls",
-                      "block_max_tf", "block_min_dl", "block_last_docid"):
-                out[k].append(enc[k])
-        return pd.DataFrame(out)[_POSTINGS_COLS] if out["term"] else \
-            pd.DataFrame({c: [] for c in _POSTINGS_COLS})
-
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    rewritten = (
-        affected.groupBy("bucket")
-        .cogroup(id_bucket.groupBy("bucket"))
-        .applyInPandas(rewrite_cg, schema=POSTINGS_SCHEMA)
-        .withColumn(
-            "n_bytes",
-            F.octet_length("doc_ids") + F.octet_length("tfs") + F.octet_length("dls"),
-        )
-    )
-    rewritten.write.mode("overwrite").partitionBy("bucket").parquet(str(path / "postings"))
+    tomb_dir = path / "tombstones"
+    tombs = (spark.read.option("recursiveFileLookup", "true")
+             .parquet(str(tomb_dir)).select("doc_id").distinct()
+             if _has_files(tomb_dir) else spark.createDataFrame([], "doc_id long"))
+    idmap_dir = path / "_compact_idmap"
+    resolution = _resolve_ids(spark, path, tombs, idmap_dir)
+    id_bucket = resolution.filter(F.col("bucket").isNotNull())
 
-    # positions table (if built): same decode→filter→re-encode rewrite,
-    # else phrase queries would keep matching deleted docs
-    if _has_files(path / "positions"):
-        from ftidx.positions import (
-            _POS_COLS,
-            POSITIONS_SCHEMA,
-            decode_positions_row,
-            encode_positions_row,
-        )
+    def per_bucket(df: DataFrame | None) -> dict[int | None, int]:
+        # rows per bucket: bounded by n_buckets — safe to collect
+        return {} if df is None else {r["bucket"]: r["count"] for r in
+                                      df.groupBy("bucket").count().collect()}
 
-        def rewrite_pos_cg(pdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-            tomb_arr = np.sort(tpdf["doc_id"].to_numpy(dtype=np.int64)
-                               .astype(np.uint64))
-            out = {c: [] for c in _POS_COLS}
-            for row in pdf.to_dict("records"):
-                ids, plists = decode_positions_row(row)
-                keep = ~np.isin(ids, tomb_arr)
-                if not keep.any():
-                    continue
-                enc = encode_positions_row(
-                    ids[keep], [p for p, k in zip(plists, keep) if k])
-                out["term"].append(row["term"])
-                out["field"].append(row["field"])
-                out["bucket"].append(int(row["bucket"]))
-                for k in ("df", "doc_ids", "tfs", "pos"):
-                    out[k].append(enc[k])
-            return pd.DataFrame(out)[_POS_COLS] if out["term"] else \
-                pd.DataFrame({c: [] for c in _POS_COLS})
-
-        (spark.read.parquet(str(path / "positions"))
-         .filter(F.col("bucket").isin(buckets))
-         .groupBy("bucket")
-         .cogroup(id_bucket.groupBy("bucket"))
-         .applyInPandas(rewrite_pos_cg, schema=POSITIONS_SCHEMA)
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(str(path / "positions")))
-
-    # doclen + docs: plain anti-join rewrites for affected buckets
-    # (no forced broadcast — AQE picks the strategy, so a mass delete
-    # whose id set exceeds broadcast size still plans correctly)
-    tomb_ids_df = id_bucket.select("doc_id")
-    doclen = spark.read.parquet(str(path / "doclen"))
-    (doclen.filter(F.col("bucket").isin(buckets))
-     .join(tomb_ids_df, "doc_id", "left_anti")
-     .write.mode("overwrite").partitionBy("bucket").parquet(str(path / "doclen")))
-    if _has_files(path / "docs"):  # absent for streaming-only indexes
-        docs = spark.read.parquet(str(path / "docs"))
-        (docs.filter(F.col("bucket").isin(buckets))
-         .join(tomb_ids_df, "doc_id", "left_anti")
-         .write.mode("overwrite").partitionBy("bucket").parquet(str(path / "docs")))
-
-    write_stats(spark, path)
-    _replace_tombstones(spark, tomb_dir, unresolved_df, n_unresolved)
+    # tombstoned ids per bucket; a null bucket counts the unresolved
+    resolved = per_bucket(resolution)
+    n_unresolved = resolved.pop(None, 0)
+    segments = per_bucket(_batches(spark, path / "deltas"))
+    buckets = sorted(resolved.keys() | segments.keys())
+    if buckets:
+        _merge_buckets(spark, path, buckets, id_bucket)
+        write_stats(spark, path)
+    _drop_deltas(path)
+    _replace_tombstones(tomb_dir, resolution.filter(F.col("bucket").isNull()),
+                        n_unresolved)
     shutil.rmtree(idmap_dir, ignore_errors=True)
-    return {"buckets_rewritten": buckets, "docs_removed": n_resolved,
-            "unresolved": n_unresolved}
+    return {"buckets_rewritten": buckets,
+            "segments_folded": sum(segments.values()),
+            "docs_removed": sum(resolved.values()), "unresolved": n_unresolved}
 
 
-def _replace_tombstones(spark: SparkSession, tomb_dir: Path,
-                        unresolved_df: DataFrame, n_unresolved: int) -> None:
+def _resolve_ids(spark: SparkSession, path: Path, tombs: DataFrame,
+                 idmap_dir: Path) -> DataFrame:
+    """Every tombstoned id with the bucket it resolves to through
+    ``doclen`` ∪ ``delta_doclen`` (null where it resolves nowhere). The
+    resolved ids are materialised to ``idmap_dir`` BEFORE any table is
+    rewritten: a lazy plan over doclen recomputed after its rewrite
+    would no longer find the deleted ids. A complete map left by an
+    interrupted run is reused for the same reason. Nothing about the
+    tombstone set lands on the driver."""
+    if not (idmap_dir / "_SUCCESS").exists():
+        shutil.rmtree(idmap_dir, ignore_errors=True)
+        known = [_batches(spark, path / "delta_doclen")]
+        if _has_files(path / "doclen"):
+            known.append(spark.read.parquet(str(path / "doclen")))
+        known = [df.select("doc_id", "bucket") for df in known if df is not None]
+        (reduce(DataFrame.unionByName, known).join(tombs, "doc_id").distinct()
+         if known else spark.createDataFrame([], "doc_id long, bucket int")) \
+            .write.parquet(str(idmap_dir))
+    # joined from the tombstone side: ids no longer tombstoned (a rerun
+    # after the table was replaced) are no longer deleted. Checkpointed,
+    # as every later step reads it.
+    return tombs.join(spark.read.parquet(str(idmap_dir)), "doc_id", "left") \
+        .localCheckpoint()
+
+
+def _merge_buckets(spark: SparkSession, path: Path, buckets: list[int],
+                   id_bucket: DataFrame) -> None:
+    """Rewrite ``buckets`` of every bucket table: base + delta rows
+    through the merge kernels minus the ``id_bucket`` docs. The tables
+    are rewritten concurrently (doclen after the postings it is exploded
+    from), as a build's explodes are; each rewrite is idempotent, so a
+    crash may leave any subset of them written."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ftidx.positions import POSITIONS_SCHEMA, _merge_positions
+
+    def base(table: str) -> DataFrame | None:
+        d = path / table
+        return spark.read.parquet(str(d)) if _has_files(d) else None
+
+    def postings() -> None:
+        _overwrite_buckets(
+            _fold([base("postings"), _batches(spark, path / "deltas")], buckets,
+                  id_bucket, _bucket_local_merge, POSTINGS_SCHEMA)
+            .withColumn("n_bytes", F.octet_length("doc_ids")
+                        + F.octet_length("tfs") + F.octet_length("dls")),
+            path / "postings", buckets)
+        merged = base("postings").filter(F.col("bucket").isin(buckets))
+        _overwrite_buckets(_doclen_rows(merged), path / "doclen", buckets)
+
+    def positions() -> None:
+        _overwrite_buckets(
+            _fold([base("positions"), _batches(spark, path / "delta_positions")],
+                  buckets, id_bucket, _merge_positions, POSITIONS_SCHEMA),
+            path / "positions", buckets)
+
+    def drop_ids(table: str) -> None:
+        _overwrite_buckets(
+            base(table).filter(F.col("bucket").isin(buckets))
+            .join(id_bucket.select("doc_id"), "doc_id", "left_anti"),
+            path / table, buckets)
+
+    jobs = [postings]
+    # docs and stored are absent for streaming-only indexes
+    jobs += [partial(drop_ids, t) for t in ("docs", "stored") if _has_files(path / t)]
+    if _has_files(path / "positions") or _has_files(path / "delta_positions"):
+        jobs.append(positions)
+    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+        for f in [ex.submit(job) for job in jobs]:
+            f.result()
+
+
+def _fold(frames: list[DataFrame | None], buckets: list[int],
+          id_bucket: DataFrame, kernel, schema) -> DataFrame:
+    """Base + delta rows of ``buckets`` cogrouped by bucket with that
+    bucket's deleted ids, through one merge ``kernel``."""
+    cols = [f.name for f in schema.fields]
+    rows = reduce(DataFrame.unionByName, [
+        df.select(cols).filter(F.col("bucket").isin(buckets))
+        for df in frames if df is not None])
+
+    def merge(pdf: pd.DataFrame, ids: pd.DataFrame) -> pd.DataFrame:
+        out = list(kernel([pdf], drop=ids["doc_id"].to_numpy()))
+        return pd.concat(out, ignore_index=True) if out else \
+            pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
+
+    return (rows.groupBy("bucket").cogroup(id_bucket.groupBy("bucket"))
+            .applyInPandas(merge, schema=schema))
+
+
+def _overwrite_buckets(df: DataFrame, table: Path, buckets: list[int]) -> None:
+    """Write ``df`` over the ``buckets`` partitions of ``table``. Dynamic
+    overwrite leaves a partition with no new rows untouched, so a
+    bucket whose every doc was deleted keeps its old files — those are
+    removed: a partition listing unchanged by the write got no rows."""
+    def listing(b: int) -> set[str]:
+        d = table / f"bucket={b}"
+        return {p.name for p in d.iterdir()} if d.exists() else set()
+
+    before = {b: listing(b) for b in buckets}
+    df.write.mode("overwrite").partitionBy("bucket").parquet(str(table))
+    for b, names in before.items():
+        if names and listing(b) == names:
+            shutil.rmtree(table / f"bucket={b}")
+
+
+def _drop_deltas(path: Path) -> None:
+    """Remove the folded delta tables; ``delta_doclen`` last — it is
+    the streaming seen-set (see :func:`merge_delta_tier`)."""
+    for d in ("deltas", "delta_positions", "delta_doclen"):
+        shutil.rmtree(path / d, ignore_errors=True)
+
+
+def _replace_tombstones(tomb_dir: Path, unresolved_df: DataFrame,
+                        n_unresolved: int) -> None:
     """Replace the tombstone table with the unresolved subset. Written
     through Spark to a sibling dir, then swapped in — the unresolved
-    set (streamed deletes pending delta compaction) is unbounded in
-    principle, so it never rides through the driver."""
+    set is unbounded in principle, so it never rides through the
+    driver."""
     staged = tomb_dir.with_name(tomb_dir.name + "_staged")
     shutil.rmtree(staged, ignore_errors=True)
     if n_unresolved:
         unresolved_df.select("doc_id").write.parquet(str(staged))
-    shutil.rmtree(tomb_dir)
+    shutil.rmtree(tomb_dir, ignore_errors=True)
     if n_unresolved:
         staged.rename(tomb_dir)
-
-
-def compact_deltas(spark: SparkSession, index_path: str) -> dict:
-    """Fold streamed delta segments into the base index (the delta
-    compaction streaming.py's merge-on-read model promises).
-
-    Per affected bucket: base + delta rows go through the per-bucket
-    segment merge (:func:`ftidx.index._bucket_local_merge`, and
-    :func:`ftidx.positions._merge_positions` for positions) — decode →
-    doc-id dedup → one re-encode pass — written via dynamic partition
-    overwrite; delta doclen rows union into the base doclen partitions;
-    stats refresh; delta dirs removed last, so a crash mid-compaction
-    replays into the same end state (doc-id dedup makes the merge
-    idempotent). Scale shape: one shuffle of affected buckets' rows
-    keyed by bucket — O(delta + the buckets it touches), never
-    O(corpus). Open ``FtIndex`` handles must ``refresh()`` (or reopen)
-    afterwards."""
-    path = Path(index_path)
-    deltas = path / "deltas"
-    if not _has_files(deltas):
-        return {"buckets_compacted": [], "segments_folded": 0}
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    delta_p = (
-        spark.read.option("basePath", str(deltas))
-        .parquet(str(deltas / "batch=*")).select(_POSTINGS_COLS)
-    )
-    n_segments = delta_p.count()
-    buckets = sorted(
-        int(r["bucket"]) for r in delta_p.select("bucket").distinct().collect()
-    )
-    frames = [delta_p]
-    if _has_files(path / "postings"):
-        frames.append(
-            spark.read.parquet(str(path / "postings"))
-            .filter(F.col("bucket").isin(buckets)).select(_POSTINGS_COLS)
-        )
-    merged = frames[0] if len(frames) == 1 else frames[0].unionByName(frames[1])
-    (
-        merged.repartition(max(len(buckets), 1), "bucket")
-        .mapInPandas(_bucket_local_merge, schema=POSTINGS_SCHEMA)
-        .withColumn("n_bytes", F.octet_length("doc_ids") + F.octet_length("tfs")
-                    + F.octet_length("dls"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(str(path / "postings"))
-    )
-
-    dl_frames = [
-        spark.read.option("basePath", str(path / "delta_doclen"))
-        .parquet(str(path / "delta_doclen" / "batch=*"))
-        .select("doc_id", "field", "len", "bucket")
-    ]
-    if _has_files(path / "doclen"):
-        dl_frames.append(
-            spark.read.parquet(str(path / "doclen"))
-            .filter(F.col("bucket").isin(buckets))
-            .select("doc_id", "field", "len", "bucket")
-        )
-    dl = dl_frames[0] if len(dl_frames) == 1 else dl_frames[0].unionByName(dl_frames[1])
-    (
-        dl.dropDuplicates(["doc_id", "field"])
-        .repartition(max(len(buckets), 1), "bucket")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(str(path / "doclen"))
-    )
-    # positional deltas fold the same way: base + delta rows of the
-    # affected buckets merge to one self-contained row per (field,
-    # term, bucket); streamed docs stay phrase-queryable throughout
-    dpos = path / "delta_positions"
-    if _has_files(dpos):
-        from ftidx.positions import _POS_COLS, POSITIONS_SCHEMA, _merge_positions
-
-        p_delta = (
-            spark.read.option("basePath", str(dpos))
-            .parquet(str(dpos / "batch=*")).select(_POS_COLS)
-        )
-        pbuckets = sorted(
-            int(r["bucket"])
-            for r in p_delta.select("bucket").distinct().collect()
-        )
-        p_frames = [p_delta]
-        if _has_files(path / "positions"):
-            p_frames.append(
-                spark.read.parquet(str(path / "positions"))
-                .filter(F.col("bucket").isin(pbuckets)).select(_POS_COLS)
-            )
-        pmerged = p_frames[0] if len(p_frames) == 1 \
-            else p_frames[0].unionByName(p_frames[1])
-        (
-            pmerged.repartition(max(len(pbuckets), 1), "bucket")
-            .mapInPandas(_merge_positions, schema=POSITIONS_SCHEMA)
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(str(path / "positions"))
-        )
-    write_stats(spark, path)
-    shutil.rmtree(deltas)
-    shutil.rmtree(path / "delta_doclen", ignore_errors=True)
-    shutil.rmtree(dpos, ignore_errors=True)
-    return {"buckets_compacted": buckets, "segments_folded": int(n_segments)}
 
 
 def delete_by_query(
@@ -338,8 +252,8 @@ def delete_by_query(
 
     Three query shapes, checked in order:
 
-    - ``match_all=True`` (the ``*:*`` case): truncate the index — all
-      data tables and the ledger are removed; the manifest (bucket
+    - ``match_all=True`` (the ``*:*`` case): truncate the index — every
+      table (:data:`INDEX_TABLES`) is removed; the manifest (bucket
       topology) survives so the next ``build_index`` call refills the
       same layout, mirroring Solr clearing a collection but keeping its
       schema.
@@ -354,7 +268,7 @@ def delete_by_query(
 
     Deletes land as tombstones (same side table as delete-by-id), so
     they are visible to queries immediately via the anti-filter and are
-    folded into the postings by :func:`compact_tombstones`. Open
+    folded into the postings by :func:`compact`. Open
     ``FtIndex`` handles must ``refresh()`` to see them.
     """
     path = Path(index_path)
@@ -370,9 +284,8 @@ def delete_by_query(
                 spark.read.parquet(str(path / "doclen"))
                 .select("doc_id").distinct().count()
             )
-        for sub in ("postings", "doclen", "docs", "positions", "tombstones",
-                    "deltas", "delta_doclen", "stats", "termstats", "ledger"):
-            shutil.rmtree(path / sub, ignore_errors=True)
+        for table in INDEX_TABLES:
+            shutil.rmtree(path / table, ignore_errors=True)
         return {"mode": "match_all", "docs_deleted": n_docs}
 
     if terms is not None:
@@ -541,7 +454,7 @@ def upsert_docs(spark: SparkSession, index_path: str,
 
     Refuses while streamed delta segments exist (a bucket rebuild
     re-ranks doc_ids; delta rows referencing them would dangle) — run
-    :func:`compact_deltas` first, mirroring compact_tombstones.
+    :func:`compact` first.
     """
     from ftidx.build import prepare_docs
     from ftidx.index import build_index
@@ -557,7 +470,7 @@ def upsert_docs(spark: SparkSession, index_path: str,
     if _has_files(path / "deltas"):
         raise ValueError(
             f"upsert_docs: streamed deltas exist under {path / 'deltas'}; "
-            "run compact_deltas first (a bucket rebuild re-ranks doc_ids)")
+            "run compact first (a bucket rebuild re-ranks doc_ids)")
 
     new_rows = partial_source.select(*_SOURCE_COLS)
     keys = new_rows.select("repo", "path").distinct()
@@ -895,7 +808,7 @@ def _require_compacted(path: Path, op: str) -> dict:
         if _has_files(path / d):
             raise ValueError(
                 f"{op}: {path} has uncompacted streamed deltas under "
-                f"{d}/ — run maintenance.compact_deltas first (bucket "
+                f"{d}/ — run maintenance.compact first (bucket "
                 "ownership must be settled before shards move)")
     return manifest
 
@@ -1077,7 +990,7 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     applied to the streamed ``deltas/batch=*`` layout): when the
     number of delta batch dirs exceeds ``max_batches``, fold the
     SMALLEST ones (by on-disk bytes) into a single merged batch —
-    WITHOUT touching the base index. :func:`compact_deltas` is the
+    WITHOUT touching the base index. :func:`compact` is the
     base-rewrite "forceMerge": it costs O(every bucket the deltas
     touch) and rewrites base partitions; this policy is the cheap
     amortizer between compactions, O(merged deltas) only. Continuous
@@ -1090,8 +1003,9 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     Merged output: one ``batch=<id>`` dir per delta family (postings
     via the per-bucket segment merge
     :func:`ftidx.index._bucket_local_merge` → ONE segment per (field,
-    term, bucket); doclen rows deduplicated per (doc, field); positions
-    via :func:`ftidx.positions._merge_positions`), with ``<id>``
+    term, bucket); doclen exploded from its ``__dl__`` rows, as in a
+    build; positions via :func:`ftidx.positions._merge_positions`),
+    with ``<id>``
     allocated from a reserved range (≥ 10^9) so a crashed stream
     replaying a real epoch id can never overwrite a merged tier.
     Victim dirs are removed only after every merged family is
@@ -1099,7 +1013,7 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     seen-set (index_microbatch's anti-join) reads delta_doclen, so a
     crash mid-removal can only leave duplicate rows (which the
     content-addressed doc-id dedup in every reader and in
-    compact_deltas already absorbs), never lose ids from the
+    :func:`compact` already absorbs), never lose ids from the
     seen-set. Open FtIndex handles refresh() as after compaction."""
     if max_batches < 1:
         raise ValueError(f"max_batches must be >= 1, got {max_batches}")
@@ -1121,17 +1035,14 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     ids = [int(d.name.split("=", 1)[1]) for d in dirs]
     merged_id = max([i for i in ids if i >= 10 ** 9], default=10 ** 9 - 1) + 1
 
-    families = []  # (subdir, merge_fn) pairs actually present
-    v_post = [str(deltas / v) for v in victims if (deltas / v).exists()]
-    if v_post:
-        merged_p = (
-            spark.read.parquet(*v_post).select(_POSTINGS_COLS)
-            .repartition("bucket")
-            .mapInPandas(_bucket_local_merge, schema=POSTINGS_SCHEMA)
-        )
-        merged_p.write.mode("overwrite").parquet(
-            str(deltas / f"batch={merged_id}"))
-        families.append(deltas)
+    merged_dir = deltas / f"batch={merged_id}"
+    (spark.read.parquet(*[str(deltas / v) for v in victims])
+     .select(_POSTINGS_COLS).repartition("bucket")
+     .mapInPandas(_bucket_local_merge, schema=POSTINGS_SCHEMA)
+     .write.mode("overwrite").parquet(str(merged_dir)))
+    ddl = path / "delta_doclen"
+    _doclen_rows(spark.read.parquet(str(merged_dir))).write.mode("overwrite") \
+        .parquet(str(ddl / f"batch={merged_id}"))
     dpos = path / "delta_positions"
     v_pos = [str(dpos / v) for v in victims if (dpos / v).exists()]
     if v_pos:
@@ -1144,21 +1055,8 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
         )
         merged_pos.write.mode("overwrite").parquet(
             str(dpos / f"batch={merged_id}"))
-        families.append(dpos)
-    ddl = path / "delta_doclen"
-    v_dl = [str(ddl / v) for v in victims if (ddl / v).exists()]
-    if v_dl:
-        merged_dl = (
-            spark.read.parquet(*v_dl)
-            .groupBy("doc_id", "field", "bucket")
-            .agg(F.max("len").alias("len"))
-            .select("doc_id", "field", "len", "bucket")
-        )
-        merged_dl.write.mode("overwrite").parquet(
-            str(ddl / f"batch={merged_id}"))
-        families.append(ddl)
     # removal order: postings / positions victims first, doclen last
-    for fam in families:
+    for fam in (deltas, dpos, ddl):
         for v in victims:
             shutil.rmtree(fam / v, ignore_errors=True)
     return {"merged": victims, "into": f"batch={merged_id}",

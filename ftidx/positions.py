@@ -27,7 +27,7 @@ Opt-in (``build_index(..., positions=True)``) because positions
 roughly double index size and encode cost. Streamed deltas carry
 positions too when the base does (streaming.index_microbatch writes
 ``delta_positions/batch=<epoch>``; FtIndex unions them at read time;
-maintenance.compact_deltas folds them) — a doc visible to term
+maintenance.compact folds them) — a doc visible to term
 queries is visible to phrase queries, Solr soft-commit parity.
 """
 
@@ -184,12 +184,12 @@ def _encode_positions(buckets, fld_codes, fld_uniq, trm_codes, trm_uniq,
     })[_POS_COLS]
 
 
-def _merge_positions(batches):
+def _merge_positions(batches, drop: np.ndarray | None = None):
     """mapInPandas kernel, the positional twin of
     index._bucket_local_merge: every positions row of ≥1 whole buckets
     (base + delta batches) → one row per (bucket, field, term). Decodes
-    every row, keeps the first copy of each doc and re-encodes through
-    :func:`_encode_positions`."""
+    every row, keeps the first copy of each doc not in ``drop`` and
+    re-encodes through :func:`_encode_positions`."""
     frames = [pdf for pdf in batches if len(pdf)]
     if not frames:
         return
@@ -202,7 +202,12 @@ def _merge_positions(batches):
     trm_codes, trm_uniq = pd.factorize(pdf["term"], sort=True)
     buckets, fld_codes, trm_codes = (
         np.repeat(a, dfs) for a in (pdf["bucket"].to_numpy(), fld_codes, trm_codes))
-    occ = np.repeat(_first_copies(buckets, fld_codes, trm_codes, doc_ids), tfs)
+    keep = _first_copies(buckets, fld_codes, trm_codes, doc_ids)
+    if drop is not None:
+        keep &= ~np.isin(doc_ids, np.asarray(drop, dtype=np.uint64))
+        if not keep.any():
+            return
+    occ = np.repeat(keep, tfs)
     buckets, fld_codes, trm_codes, doc_ids = (
         np.repeat(a, tfs)[occ] for a in (buckets, fld_codes, trm_codes, doc_ids))
     yield _encode_positions(buckets, fld_codes, np.asarray(fld_uniq),
@@ -229,7 +234,8 @@ def build_positions(spark: SparkSession, docs: DataFrame, out_dir: str,
 
 def encode_positions_row(ids: np.ndarray, plists: list[np.ndarray]) -> dict:
     """Inverse of :func:`decode_positions_row` for one (field, term,
-    bucket) row — maintenance-path re-encode (compaction filters docs).
+    bucket) row — the per-row reference that tests hold the vectorized
+    :func:`_encode_positions` to; no engine path calls it.
     ``ids`` ascending, ``plists[i]`` = absolute positions of doc i."""
     from ftidx.codec import delta_encode, varint_encode
 

@@ -1436,17 +1436,13 @@ def _make_handler(idx, lock: "_RWLock", daemons: dict | None = None):
                 self._json(200, {"status": "refreshed"})
             elif path == "/compact":
                 # Solr optimize/commit analog: fold streamed delta
-                # segments into the base index, rewrite tombstoned
-                # buckets, then refresh this handle — one operational
-                # call serializes the whole sequence under the lock
-                from ftidx.maintenance import (compact_deltas,
-                                               compact_tombstones)
+                # segments and tombstones into the base index, then
+                # refresh this handle, under the lock
+                from ftidx.maintenance import compact
                 with lock:
-                    deltas = compact_deltas(idx.spark, str(idx.path))
-                    tombs = compact_tombstones(idx.spark, str(idx.path))
+                    summary = compact(idx.spark, str(idx.path))
                     idx.refresh()
-                self._json(200, {"status": "compacted",
-                                 "deltas": deltas, "tombstones": tombs})
+                self._json(200, {"status": "compacted", **summary})
             elif path == "/sql":
                 # Solr Parallel SQL (/sql — the JDBC interface): a
                 # read-only SELECT over this index's docs table,

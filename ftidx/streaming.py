@@ -124,15 +124,15 @@ def index_microbatch(batch_df: DataFrame, epoch_id: int, index_path: str,
         .filter(F.col("field") != DOCS_FIELD)
         .write.mode("overwrite").parquet(str(delta_dir))
     )
-    # bucket kept so compact_deltas can fold these rows into the
-    # bucket-partitioned base doclen table without re-deriving it
+    # bucket kept: compaction resolves a tombstoned streamed id to its
+    # bucket through these rows (a hash id does not embed it)
     _doclen_rows(spark.read.parquet(str(delta_dir))).write.mode("overwrite") \
         .parquet(str(out / "delta_doclen" / f"batch={epoch_id}"))
     # positional parity for streamed docs (Solr soft-commit analog:
     # a doc visible to term queries is visible to phrase queries too):
     # when the base index carries positions, emit the batch's
     # positional blobs as an epoch-keyed delta segment — FtIndex
-    # unions them at read time, compact_deltas folds them into the
+    # unions them at read time, compact folds them into the
     # base rows. Same idempotency (overwrite-own-epoch), same
     # bucket-local kernel as the batch build.
     pos_base = out / "positions"

@@ -21,11 +21,13 @@ checkpoint is ``{build_id, epochs_delivered}``:
 - at-least-once, exactly Solr's contract: a tier merge
   (``maintenance.merge_delta_tier``) folds delivered epochs into a
   fresh reserved-range epoch, whose docs re-deliver once (duplicates,
-  never losses); ``compact_deltas`` / ``upsert`` rewrite the base and
-  bump ``build_id``, after which epoch bookkeeping is meaningless —
-  the poll REFUSES with a resubscribe message instead of silently
+  never losses); ``upsert`` rewrites the base and bumps
+  ``build_id``, after which epoch bookkeeping is meaningless — the
+  poll REFUSES with a resubscribe message instead of silently
   re-delivering a 10^12-doc base (Solr topics likewise break when the
-  collection is reindexed).
+  collection is reindexed). ``maintenance.compact`` folds the epochs
+  into the base without a new ``build_id``: an epoch not yet polled
+  when it runs is never delivered.
 
 Scale shape: a poll is one term-pruned postings decode
 (``FtIndex._matched_ids`` — pushdown scan, executor-side varint
@@ -89,7 +91,7 @@ def topic_poll(index, topic_id: str, terms: list[str],
             raise ValueError(
                 f"topic {topic_id!r}: index build_id changed "
                 f"({state.get('build_id')!r} -> {build_id!r}) — the base "
-                "was rewritten (compact_deltas/upsert), so epoch "
+                "was rewritten (upsert), so epoch "
                 "bookkeeping no longer identifies new docs; delete the "
                 "checkpoint and resubscribe (first poll re-delivers the "
                 "full match set)")

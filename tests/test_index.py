@@ -325,10 +325,10 @@ def test_streamed_merges_keep_pages(spark, tmp_path):
     """One segment writer for build, stream and merge: a base plus three
     streamed batches (one redelivers ids, one carries a tombstone) with
     positions on. topk, phrase_topk and the exhaustive kernel serve the
-    same pages before and after merge_delta_tier and compact_deltas,
-    every page equals the oracle, and postings/ ends with one row per
-    (field, term, bucket)."""
-    from ftidx.maintenance import compact_deltas, merge_delta_tier
+    same pages before and after merge_delta_tier, every page equals the
+    oracle also after compact folds the batches and the tombstone, and
+    postings/ ends with one row per (field, term, bucket)."""
+    from ftidx.maintenance import compact, merge_delta_tier
     from ftidx.streaming import index_microbatch, prepare_docs_hashid
     from ftidx.tokenize import tokenize_doc
 
@@ -382,8 +382,10 @@ def test_streamed_merges_keep_pages(spark, tmp_path):
     assert any(d >= (1 << 40) for d, _ in before["phrase"])  # streamed hit
     merge_delta_tier(spark, out, max_batches=1)
     assert pages() == before
-    compact_deltas(spark, out)
-    assert pages() == before
+    compact(spark, out)
+    # the folded tombstone takes the victim out of the collection stats
+    oracle.delete(victim)
+    pages()
     dup = (spark.read.parquet(f"{out}/postings")
            .groupBy("field", "term", "bucket").count()
            .filter(F.col("count") > 1).count())
@@ -392,15 +394,16 @@ def test_streamed_merges_keep_pages(spark, tmp_path):
 
 def test_bucket_merge_matches_per_group_encode():
     """The per-bucket merge kernel equals the per-group reference —
-    decode every segment, keep each doc once, encode_postings — for
-    real and __dl__ rows alike; __docs__ rows pass through."""
+    decode every segment, keep each doc once unless it is in the drop
+    set, encode_postings — for real and __dl__ rows alike; __docs__
+    rows are dropped."""
     import pandas as pd
 
     from ftidx.codec import encode_postings
     from ftidx.index import _POSTINGS_COLS, DOCS_FIELD, _bucket_local_merge
 
     rng = np.random.default_rng(3)
-    rows, want = [], {}
+    rows, groups = [], {}
     for b in range(2):
         for field in ("code.content", "__dl__code.content"):
             for term in ("alpha", "beta"):
@@ -410,20 +413,25 @@ def test_bucket_merge_matches_per_group_encode():
                 for sl in (np.r_[0:100], np.r_[100:220, 0:10], np.r_[220:300, 5:15]):
                     rows.append({"term": term, "field": field, "bucket": b,
                                  **encode_postings(ids[sl], tfs[sl], dls[sl])})
-                want[(term, field, b)] = encode_postings(ids, tfs, dls)
+                groups[(term, field, b)] = (ids, tfs, dls)
     rows.append({"term": "*", "field": DOCS_FIELD, "bucket": 0, "df": 1, "cf": 0,
                  "doc_ids": b"", "tfs": b"", "dls": b"meta", "block_max_tf": [],
                  "block_min_dl": [], "block_last_docid": []})
     pdf = pd.DataFrame(rows)[_POSTINGS_COLS].sample(frac=1, random_state=1)
-    out = pd.concat(list(_bucket_local_merge([pdf.iloc[:5], pdf.iloc[5:]])))
-    got = {(r["term"], r["field"], r["bucket"]): r for r in out.to_dict("records")}
-    assert got.pop(("*", DOCS_FIELD, 0))["dls"] == b"meta"
-    assert got.keys() == want.keys()
-    for key, w in want.items():
-        assert {c: got[key][c] for c in ("df", "cf", "doc_ids", "tfs", "dls")} == \
-            {c: w[c] for c in ("df", "cf", "doc_ids", "tfs", "dls")}
-        for c in ("block_max_tf", "block_min_dl", "block_last_docid"):
-            assert list(got[key][c]) == list(w[c])
+    every = np.concatenate([ids for ids, _, _ in groups.values()])
+    for drop in (None, every[every % 3 == 0].astype(np.int64)):
+        out = pd.concat(list(_bucket_local_merge([pdf.iloc[:5], pdf.iloc[5:]],
+                                                 drop=drop)))
+        got = {(r["term"], r["field"], r["bucket"]): r for r in out.to_dict("records")}
+        assert got.keys() == groups.keys()  # no __docs__ row
+        for key, (ids, tfs, dls) in groups.items():
+            keep = np.ones(ids.size, bool) if drop is None else ids % 3 != 0
+            w = encode_postings(ids[keep], tfs[keep], dls[keep])
+            assert {c: got[key][c] for c in ("df", "cf", "doc_ids", "tfs", "dls")} == \
+                {c: w[c] for c in ("df", "cf", "doc_ids", "tfs", "dls")}
+            for c in ("block_max_tf", "block_min_dl", "block_last_docid"):
+                assert list(got[key][c]) == list(w[c])
+    assert list(_bucket_local_merge([pdf], drop=every.astype(np.int64))) == []
 
 
 def test_boolean_and_exclude(spark, tmp_path):

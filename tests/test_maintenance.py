@@ -3,11 +3,14 @@ indistinguishable from a fresh build of the updated corpus."""
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from ftidx.index import build_index, open_index
-from ftidx.maintenance import compact_tombstones, upsert
+from ftidx.maintenance import compact, upsert
 from ftidx.synth import synth_source
 
 
@@ -33,7 +36,7 @@ def test_compact_tombstones(spark, tmp_path):
     idx.delete(victims)
     pre = idx.topk(["def"], 10)
 
-    res = compact_tombstones(spark, out)
+    res = compact(spark, out)
     assert res["docs_removed"] == len(victims)
     assert set(res["buckets_rewritten"]) == {v >> 40 for v in victims}
     assert not (tmp_path / "idx" / "tombstones").exists()
@@ -60,7 +63,7 @@ def test_compact_scores_match_prefilter(spark, tmp_path):
     idx = open_index(spark, out)
     victims = [d for d, _ in idx.topk(["alpha"], 2)]
     idx.delete(victims)
-    compact_tombstones(spark, out)
+    compact(spark, out)
 
     # fresh build over the corpus minus victims must be byte-identical
     out2 = str(tmp_path / "fresh")
@@ -104,7 +107,6 @@ def test_compact_deltas_folds_into_base(spark, tmp_path):
     """Streamed deltas fold into base buckets; merge-on-read results
     are preserved exactly, on a reopened handle as on a refreshed one."""
     from ftidx.index import FtIndex
-    from ftidx.maintenance import compact_deltas
     from ftidx.streaming import index_microbatch
 
     out = str(tmp_path / "idx")
@@ -123,8 +125,8 @@ def test_compact_deltas_folds_into_base(spark, tmp_path):
     before = idx.topk(["def", "alpha"], k=10)
     assert any(d >= (1 << 40) for d, _ in before)  # hash-id docs present
 
-    res = compact_deltas(spark, out)
-    assert res["buckets_compacted"] and res["segments_folded"] > 0
+    res = compact(spark, out)
+    assert res["buckets_rewritten"] and res["segments_folded"] > 0
     assert not (tmp_path / "idx" / "deltas").exists()
     assert not (tmp_path / "idx" / "delta_doclen").exists()
 
@@ -139,9 +141,9 @@ def test_compact_deltas_folds_into_base(spark, tmp_path):
 
 
 def test_compact_tombstones_with_streaming_ids(spark, tmp_path):
-    """compact_tombstones must refuse while deltas exist, resolve hash
-    ids via doclen after delta compaction, and retain unresolved ids."""
-    from ftidx.maintenance import compact_deltas
+    """One compact folds the streamed deltas and the tombstones: a
+    streamed hash id resolves through delta_doclen and is removed from
+    every table, and unresolved ids stay tombstoned."""
     from ftidx.streaming import index_microbatch
 
     out = str(tmp_path / "idx")
@@ -152,29 +154,67 @@ def test_compact_tombstones_with_streaming_ids(spark, tmp_path):
     )
     index_microbatch(extra, 0, out, n_buckets=4)
 
+    streamed = {r["doc_id"] for r in spark.read.parquet(f"{out}/delta_doclen")
+                .select("doc_id").distinct().collect()}
     idx = open_index(spark, out)
-    hits = idx.topk(["def"], k=10)
-    victim = next(d for d, _ in hits if d >= (1 << 40))  # a streamed doc
+    victim = next(d for d, _ in idx.topk(["def"], k=50) if d in streamed)
     garbage = 999_999_999_999_999_999
     spark.createDataFrame([(victim,), (garbage,)], "doc_id long") \
         .write.parquet(f"{out}/tombstones/batch=7")
 
-    with pytest.raises(ValueError, match="compact_deltas first"):
-        compact_tombstones(spark, out)
-
-    compact_deltas(spark, out)
-    res = compact_tombstones(spark, out)
-    # victim resolves (via doclen) and is removed; the garbage id — and
-    # any deleted-on-arrival stream rows that were never indexed — stay
-    # tombstoned rather than being silently dropped
+    res = compact(spark, out)
+    # victim resolves (via delta_doclen) and is removed; the garbage id
+    # — and any deleted-on-arrival stream rows that were never indexed
+    # — stay tombstoned rather than being silently dropped
     assert res["docs_removed"] == 1 and res["unresolved"] >= 1
+    assert res["segments_folded"] > 0
+    assert not (tmp_path / "idx" / "deltas").exists()
     idx.refresh()
     after = idx.topk(["def"], k=10)
     assert victim not in [d for d, _ in after]
+    assert spark.read.parquet(f"{out}/doclen") \
+        .filter(F.col("doc_id") == victim).count() == 0
     kept = {r["doc_id"] for r in spark.read
             .option("recursiveFileLookup", "true")
             .parquet(f"{out}/tombstones").collect()}
     assert garbage in kept and victim not in kept
+
+
+def test_compact_drops_stored_text(spark, tmp_path):
+    """A compacted delete takes the doc's stored text with it:
+    highlighting must not serve a deleted doc once its tombstone is
+    folded away."""
+    out = str(tmp_path / "idx")
+    build_index(spark, synth_source(spark, 150), out, n_buckets=4,
+                hot_df_threshold=50, store_content=True)
+    idx = open_index(spark, out)
+    victim = idx.topk(["def"], 1)[0][0]
+    assert idx.highlight([victim], ["def"])[victim]
+    idx.delete([victim])
+    compact(spark, out)
+    idx.refresh()
+    assert spark.read.parquet(f"{out}/stored") \
+        .filter(F.col("doc_id") == victim).count() == 0
+    assert idx.highlight([victim], ["def"]) == {victim: []}
+
+
+def test_compact_removes_an_emptied_bucket(spark, tmp_path):
+    """Deleting every live doc of a bucket leaves the merge no rows for
+    it: compaction must remove the bucket's old partitions rather than
+    leave them to serve the deleted docs once the tombstones are gone."""
+    from ftidx.maintenance import delete_by_query
+
+    out = str(tmp_path / "idx")
+    build_index(spark, synth_source(spark, 120), out, n_buckets=4,
+                positions=True)
+    res = delete_by_query(spark, out, where="bucket = 0")
+    assert res["docs_deleted"] > 0
+    compact(spark, out)
+    for table in ("postings", "doclen", "positions"):
+        assert not (tmp_path / "idx" / table / "bucket=0").exists(), table
+    idx = open_index(spark, out)
+    hits = idx.topk(["def", "alpha"], k=10**6, kernel="exhaustive")
+    assert hits and all(d >> 40 != 0 for d, _ in hits)
 
 
 def test_ftindex_refresh_after_compaction(spark, tmp_path):
@@ -185,7 +225,7 @@ def test_ftindex_refresh_after_compaction(spark, tmp_path):
     pre = idx.topk(["def"], 5)
     victims = [d for d, _ in pre[:2]]
     idx.delete(victims)
-    compact_tombstones(spark, out)
+    compact(spark, out)
     idx.refresh()
     post = idx.topk(["def"], 5)
     assert not (set(d for d, _ in post) & set(victims))
@@ -218,7 +258,7 @@ def test_delete_by_query_terms(spark, tmp_path):
     survivors = idx.topk(["def"], 20)
     assert survivors and not ({d for d, _ in survivors} & victims)
 
-    folded = compact_tombstones(spark, out)
+    folded = compact(spark, out)
     assert folded["docs_removed"] == len(victims)
     idx.refresh()
     assert idx.topk(["alpha"], 10) == []
@@ -248,15 +288,21 @@ def test_delete_by_query_match_all(spark, tmp_path):
     from ftidx.maintenance import delete_by_query
 
     out = str(tmp_path / "idx")
-    build_index(spark, synth_source(spark, 100), out, n_buckets=4, hot_df_threshold=50)
+    build_index(spark, synth_source(spark, 100), out, n_buckets=4,
+                hot_df_threshold=50, store_content=True)
     n_live = (
         spark.read.parquet(f"{out}/doclen").select("doc_id").distinct().count()
     )
+    idx = open_index(spark, out)
+    old = [d for d, _ in idx.topk(["def"], 3)]
     res = delete_by_query(spark, out, match_all=True)
     assert res["docs_deleted"] == n_live > 0
+    assert sorted(p.name for p in (tmp_path / "idx").iterdir()) == ["_manifest.json"]
 
-    idx = open_index(spark, out)
+    idx.refresh()
     assert idx.topk(["def"], 10) == []
+    with pytest.raises(ValueError, match="stored text"):
+        idx.highlight(old, ["def"])
 
     # refill the same layout (ledger was cleared, so nothing is skipped)
     build_index(spark, synth_source(spark, 100), out, n_buckets=4, hot_df_threshold=50)
@@ -452,7 +498,7 @@ def test_upsert_docs_requires_stored_and_compacted(spark, tmp_path):
     extra = synth_source(spark, 130).join(
         src.select("repo", "path"), ["repo", "path"], "left_anti")
     index_microbatch(extra, 0, out2, n_buckets=4)
-    with pytest.raises(ValueError, match="compact_deltas"):
+    with pytest.raises(ValueError, match="run compact first"):
         upsert_docs(spark, out2, one)
 
 
@@ -549,7 +595,7 @@ def test_merge_delta_tier_preserves_queries(spark, tmp_path):
     result identical, cut the batch-dir count to max_batches, and stay
     compatible with a later full compaction."""
     from ftidx.index import FtIndex
-    from ftidx.maintenance import compact_deltas, merge_delta_tier
+    from ftidx.maintenance import merge_delta_tier
     from ftidx.streaming import index_microbatch
 
     out = str(tmp_path / "idx")
@@ -588,7 +634,7 @@ def test_merge_delta_tier_preserves_queries(spark, tmp_path):
     assert len(list((tmp_path / "idx" / "deltas").iterdir())) == 1
 
     # full compaction still lands on the same answers
-    compact_deltas(spark, out)
+    compact(spark, out)
     idx.refresh()
     plain = idx.topk(["def", "alpha"], 10)
     assert [d for d, _ in plain] == [d for d, _ in before]
@@ -633,7 +679,6 @@ def test_streamed_positions_follow_their_bucket(spark, tmp_path):
     in the doc's own bucket, the one its postings use, so compaction
     keeps one positions partition per postings partition and a
     tombstone compaction removes a streamed doc from both tables."""
-    from ftidx.maintenance import compact_deltas
     from ftidx.positions import decode_positions_row
     from ftidx.streaming import index_microbatch
 
@@ -643,7 +688,7 @@ def test_streamed_positions_follow_their_bucket(spark, tmp_path):
     extra = synth_source(spark, 110).join(
         base_src.select("repo", "path"), ["repo", "path"], "left_anti")
     index_microbatch(extra, 0, out, n_buckets=4)
-    compact_deltas(spark, out)
+    compact(spark, out)
 
     def partitions(table):
         return sorted(p.name for p in (tmp_path / "idx" / table).iterdir()
@@ -653,7 +698,7 @@ def test_streamed_positions_follow_their_bucket(spark, tmp_path):
     idx = open_index(spark, out)
     victim = next(d for d, _ in idx.topk(["def"], k=200) if d >= (1 << 40))
     idx.delete([victim])
-    compact_tombstones(spark, out)
+    compact(spark, out)
     held = [r["term"] for r in spark.read.parquet(f"{out}/positions").collect()
             if victim in decode_positions_row(r)[0].astype("int64")]
     assert held == []
@@ -717,3 +762,148 @@ def test_split_and_merge_children_get_routing_stats(spark, tmp_path,
                 .agg(F.sum("df")).first()[0])
         assert want
         assert idx._df_total(["def"], "code.content") == want
+
+
+# compact's step boundaries, in order: the tombstone id map is on disk,
+# each bucket table is rewritten, stats are written, the delta tables
+# are gone, the tombstone table is replaced
+COMPACT_FAULT_POINTS = ["idmap", "postings", "doclen", "docs", "stored",
+                        "positions", "stats", "deltas", "tombstones"]
+_UNRESOLVED = 999_999_999_999_999_999
+
+
+class _Fault(Exception):
+    pass
+
+
+def _fail_after(mp, point):
+    """Make maintenance.compact raise right after step ``point``."""
+    import ftidx.maintenance as m
+
+    def after(name, label):
+        fn = getattr(m, name)
+
+        def wrapped(*args):
+            out = fn(*args)
+            if label(*args) == point:
+                raise _Fault(point)
+            return out
+        mp.setattr(m, name, wrapped)
+
+    after("_resolve_ids", lambda *a: "idmap")
+    after("_overwrite_buckets", lambda df, table, buckets: table.name)
+    after("write_stats", lambda *a: "stats")
+    after("_drop_deltas", lambda *a: "deltas")
+    after("_replace_tombstones", lambda *a: "tombstones")
+
+
+def _rows(path, table):
+    """A table's rows as a sorted list, read driver-side."""
+    import pyarrow.parquet as pq
+
+    if not (Path(path) / table).exists():
+        return []
+    rows = pq.read_table(f"{path}/{table}").to_pylist()
+    return sorted((tuple(sorted(r.items())) for r in rows), key=repr)
+
+
+_COMPACT_TABLES = ("postings", "doclen", "docs", "stored", "positions",
+                   "tombstones")
+
+
+@pytest.fixture(scope="module")
+def streamed_deletes(spark, tmp_path_factory):
+    """A stored, positional index with one streamed batch and
+    tombstones on two batch ids, one streamed id and one id that
+    resolves nowhere; plus what a clean compact of it leaves and the
+    oracle with the deleted docs gone."""
+    from ftidx.oracle import OracleIndex
+    from ftidx.streaming import index_microbatch, prepare_docs_hashid
+    from ftidx.tokenize import tokenize_doc
+
+    root = tmp_path_factory.mktemp("compact_faults")
+    tpl = str(root / "template")
+    base_src = synth_source(spark, 120)
+    build_index(spark, base_src, tpl, n_buckets=4, positions=True,
+                store_content=True)
+    extra = synth_source(spark, 180).join(
+        base_src.select("repo", "path"), ["repo", "path"], "left_anti").cache()
+    index_microbatch(extra, 0, tpl, n_buckets=4)
+    streamed = {r["doc_id"] for r in spark.read.parquet(f"{tpl}/delta_doclen")
+                .select("doc_id").distinct().collect()}
+    idx = open_index(spark, tpl)
+    hits = [d for d, _ in idx.phrase_topk(["plain", "words"], k=200)]
+    victims = [d for d in hits if d not in streamed][:2] \
+        + [next(d for d in hits if d in streamed)]
+    idx.delete(victims + [_UNRESOLVED])
+
+    cols = ["doc_id", "content", "lang", "repo", "path"]
+    base = spark.read.parquet(f"{tpl}/docs").select("repo", "path", "doc_id")
+    live = (base_src.join(base, ["repo", "path"])
+            .unionByName(prepare_docs_hashid(extra, 4)
+                         .select(*base_src.columns, "doc_id"))
+            .filter(~F.col("deleted") & F.col("content").isNotNull())
+            .select(cols).toPandas())
+    live = live[~live["doc_id"].isin(victims)]
+    oracle = OracleIndex.from_pandas(live)
+    content = {int(r.doc_id): tokenize_doc(r.content, r.lang, r.repo, r.path)
+               .get("code.content", []) for r in live.itertuples()}
+
+    def want(terms, k, phrase=False):
+        n = len(terms)
+        hits = [(d, sc) for d, sc in oracle.bm25_scores(terms).items()
+                if not phrase or any(content[d][i:i + n] == terms
+                                     for i in range(len(content[d])))]
+        return sorted(hits, key=lambda kv: (-kv[1], kv[0]))[:k]
+
+    clean = str(root / "clean")
+    shutil.copytree(tpl, clean)
+    compact(spark, clean)
+    return {"root": root, "template": tpl, "victims": victims,
+            "oracle": {"topk": want(["def", "alpha"], 10),
+                       "exhaustive": want(["def", "alpha"], 10),
+                       "phrase": want(["plain", "words"], 50, phrase=True)},
+            "pages": _compact_pages(spark, clean, victims),
+            "tables": {t: _rows(clean, t) for t in _COMPACT_TABLES}}
+
+
+def _compact_pages(spark, path, victims):
+    idx = open_index(spark, path)
+    pages = {"topk": idx.topk(["def", "alpha"], k=10),
+             "exhaustive": idx.topk(["def", "alpha"], k=10, kernel="exhaustive"),
+             "phrase": idx.phrase_topk(["plain", "words"], k=50)}
+    served = {d for d, _ in idx.topk(["def", "alpha", "plain", "words"], k=10**6)}
+    served |= {d for d, _ in idx.phrase_topk(["plain", "words"], k=10**6)}
+    assert not served & set(victims)
+    assert idx.highlight(victims, ["plain", "words"]) == {v: [] for v in victims}
+    return pages
+
+
+@pytest.mark.parametrize("point", COMPACT_FAULT_POINTS)
+def test_compact_resumes_after_fault(spark, streamed_deletes, point,
+                                     monkeypatch):
+    """compact killed after any step and run again ends where a clean
+    compact ends: the same table rows, the same pages as the exhaustive
+    kernel and the oracle, no deleted doc served. A compact that
+    replaced the tombstones before removing the deltas would fold the
+    streamed victim back in on the rerun (the ``tombstones`` point)."""
+    s = streamed_deletes
+    run = str(s["root"] / f"fault-{point}")
+    shutil.copytree(s["template"], run)
+    with monkeypatch.context() as mp:
+        _fail_after(mp, point)
+        with pytest.raises(_Fault):
+            compact(spark, run)
+    compact(spark, run)
+
+    for table, want in s["tables"].items():
+        assert _rows(run, table) == want, table
+    assert not any((s["root"] / f"fault-{point}" / d).exists() for d in
+                   ("_compact_idmap", "deltas", "delta_doclen", "delta_positions"))
+    pages = _compact_pages(spark, run, s["victims"])
+    assert pages == s["pages"]
+    for name, page in pages.items():
+        want = s["oracle"][name]
+        assert page and [d for d, _ in page] == [d for d, _ in want], name
+        for (_, got), (_, exp) in zip(page, want):
+            assert got == pytest.approx(exp, rel=1e-9)

@@ -118,7 +118,7 @@ def test_phrase_topk_requires_positions(spark, tmp_path):
 
 
 def test_compaction_rewrites_positions(spark, tmp_path):
-    from ftidx.maintenance import compact_tombstones
+    from ftidx.maintenance import compact
 
     out = str(tmp_path / "idx")
     src = synth_source(spark, 120)
@@ -136,7 +136,7 @@ def test_compaction_rewrites_positions(spark, tmp_path):
     idx.delete([victim])
     # tombstone masks immediately, compaction makes it durable
     assert victim not in [d for d, _ in idx.phrase_topk(phrase, k=50)]
-    compact_tombstones(spark, out)
+    compact(spark, out)
     idx.refresh()
     assert victim not in [d for d, _ in idx.phrase_topk(phrase, k=50)]
     by_term = _pos_rows(spark, out, "code.content", set(phrase))
@@ -269,13 +269,14 @@ def test_phrase_boost_slop_ps(spark, tmp_path):
 
 def test_positions_merge_matches_per_group_encode():
     """The per-bucket positions merge equals the per-group reference:
-    decode every segment, keep each doc once, encode_positions_row."""
+    decode every segment, keep each doc once unless it is in the drop
+    set, encode_positions_row."""
     import pandas as pd
 
     from ftidx.positions import _POS_COLS, _merge_positions, encode_positions_row
 
     rng = np.random.default_rng(5)
-    rows, want = [], {}
+    rows, groups = [], {}
     for b in range(2):
         for term in ("alpha", "beta"):
             ids = np.sort(rng.choice(1 << 40, 60, replace=False)).astype(np.uint64)
@@ -285,9 +286,16 @@ def test_positions_merge_matches_per_group_encode():
             for sl in (np.r_[0:20], np.r_[0:5, 20:45], np.r_[3:8, 45:60]):
                 rows.append({"term": term, "field": "code.content", "bucket": b,
                              **encode_positions_row(ids[sl], [plists[i] for i in sl])})
-            want[(term, "code.content", b)] = encode_positions_row(ids, plists)
+            groups[(term, "code.content", b)] = (ids, plists)
     pdf = pd.DataFrame(rows)[_POS_COLS].sample(frac=1, random_state=2)
-    out = pd.concat(list(_merge_positions([pdf.iloc[:4], pdf.iloc[4:]])))
-    got = {(r["term"], r["field"], r["bucket"]): {c: r[c] for c in ("df", "doc_ids", "tfs", "pos")}
-           for r in out.to_dict("records")}
-    assert got == want
+    every = np.concatenate([ids for ids, _ in groups.values()])
+    for drop in (None, every[every % 3 == 0].astype(np.int64)):
+        out = pd.concat(list(_merge_positions([pdf.iloc[:4], pdf.iloc[4:]], drop=drop)))
+        got = {(r["term"], r["field"], r["bucket"]): {c: r[c] for c in ("df", "doc_ids", "tfs", "pos")}
+               for r in out.to_dict("records")}
+        want = {}
+        for key, (ids, plists) in groups.items():
+            keep = [i for i, d in enumerate(ids) if drop is None or d % 3 != 0]
+            want[key] = encode_positions_row(ids[keep], [plists[i] for i in keep])
+        assert got == want
+    assert list(_merge_positions([pdf], drop=every.astype(np.int64))) == []

@@ -128,7 +128,7 @@ def test_split_and_merge_refusals(spark, setup, tmp_path):
     (p3 / "deltas").mkdir()
     (p3 / "deltas" / "batch=0").mkdir()
     (p3 / "deltas" / "batch=0" / "f.parquet").write_text("x")
-    with pytest.raises(ValueError, match="compact_deltas"):
+    with pytest.raises(ValueError, match="maintenance.compact first"):
         split_index(spark, str(p3), [str(tmp_path / "a"), str(tmp_path / "b")])
     # merge overlap: a shard merged with itself shares every bucket
     with pytest.raises(ValueError, match="disjoint"):

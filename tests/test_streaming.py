@@ -330,11 +330,11 @@ def test_streamed_docs_phrase_queryable(spark, tmp_path):
     """Solr soft-commit parity for phrases: a doc ingested via the
     streaming path is phrase-queryable BEFORE compaction (positional
     delta segments union into the serving handle) and stays queryable
-    after compact_deltas folds them into the base positions table."""
+    after compact folds them into the base positions table."""
     from datetime import datetime
 
     from ftidx.index import build_index, open_index
-    from ftidx.maintenance import compact_deltas
+    from ftidx.maintenance import compact
     from ftidx.schema import SOURCE_SCHEMA
     from ftidx.streaming import index_microbatch
 
@@ -365,7 +365,7 @@ def test_streamed_docs_phrase_queryable(spark, tmp_path):
     idx.refresh()
     assert idx.phrase_topk(["zebra", "quantum", "lattice"]) == hits
 
-    compact_deltas(spark, out)
+    compact(spark, out)
     idx.refresh()
     after = idx.phrase_topk(["zebra", "quantum", "lattice"])
     assert after == [(phrase_doc, score_before)]
