@@ -8,7 +8,7 @@ code-aware tokenizer over a source-file table, and the Solr-delegated
 index build + keyword retrieval (Indexer.java:224-229,
 IndexerIT.java:98-105) becomes native posting-list construction
 (delta-gap + varint), a salted shuffle merge, BM25 (k1=1.2, b=0.75)
-document statistics, and block-max-WAND top-k scoring — all
+document statistics, and MaxScore-pruned top-k scoring — all
 DataFrame-first with Arrow-vectorized pandas UDFs on the slow path.
 
 Nothing here is a port: the reference is a row-at-a-time Jakarta EE

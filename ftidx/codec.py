@@ -11,10 +11,11 @@ from scratch with no per-element Python:
   flatnonzero/cumsum, payload shifted by position-within-group and
   accumulated with ``np.add.at``.
 
-Block-max metadata (128-entry blocks) is computed at encode time for
-WAND: per-block max tf, min doc length, and last doc id — enough to
-bound a block's best-possible BM25 contribution without decoding it
-(wand.py).
+Block-max metadata (128-entry blocks: per-block max tf, min doc
+length, last doc id) is computed at encode time and stored with each
+segment. No scoring kernel reads it any more — wand.py bounds whole
+lists by their memoised contributions — but the benchmark's probe
+(``perfbench/layers.py``) still selects the columns.
 """
 
 from __future__ import annotations

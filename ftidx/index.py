@@ -769,13 +769,53 @@ def _idset_cost(ids: frozenset) -> int:
     return len(ids) * 90 + 256
 
 
+def _small_table(d: Path, columns: list[str] | None = None) -> list[dict]:
+    """Rows of a driver-sized table, read with pyarrow from the data
+    files Spark would list (``_``- and ``.``-prefixed paths such as
+    ``_SUCCESS`` and ``_temporary`` skipped). One ``ParquetFile`` per
+    file: ``pq.read_table`` would load ``pyarrow.dataset``, about 40 MB
+    of driver RSS."""
+    import pyarrow.parquet as pq
+
+    if not d.exists():
+        return []
+    rows = []
+    for f in sorted(d.rglob("*.parquet")):
+        if not any(p[0] in "._" for p in f.relative_to(d).parts):
+            with pq.ParquetFile(f) as pf:
+                rows += pf.read(columns=columns).to_pylist()
+    return rows
+
+
+def batch_dirs(d: Path) -> list[Path]:
+    """The existing ``batch=<n>`` segment dirs of a delta table."""
+    return sorted(p for p in d.iterdir()
+                  if p.is_dir() and p.name.startswith("batch=")) \
+        if d.exists() else []
+
+
+def read_batches(spark: SparkSession, d: Path, schema=None) -> DataFrame | None:
+    """A delta table's segments with their ``batch`` column, or None.
+    Reads the listed dirs under ``basePath``: a ``batch=*`` glob makes
+    Spark probe the literal glob path for streaming-sink metadata and
+    log a FileNotFoundException stack per read."""
+    dirs = batch_dirs(d)
+    if not dirs:
+        return None
+    reader = spark.read.option("basePath", str(d))
+    return (reader.schema(schema) if schema is not None else reader).parquet(
+        *map(str, dirs))
+
+
 def _entry_cost(rows: list[dict]) -> int:
-    """Approximate resident bytes of a cached term entry: blobs plus
-    the decoded uint64 arrays wand memoizes onto the rows (~8×/stream
-    → ~9× blob bytes overall), plus per-row dict overhead."""
-    blob = sum(
-        len(r["doc_ids"]) + len(r["tfs"]) + len(r["dls"]) for r in rows)
-    return blob * 9 + 1024 * max(len(rows), 1)
+    """Resident bytes of a cached term entry, once wand has memoised
+    onto its rows the three decoded uint64 arrays and the float64 BM25
+    contributions (32 B per posting): blobs, memos, and per row about
+    1.2 KB of dict, tuple and array headers (1.5 KB counted). Computed
+    from the row contents, not from which memos exist yet, so the same
+    entry always costs the same."""
+    return sum(len(r["doc_ids"]) + len(r["tfs"]) + len(r["dls"])
+               + 32 * int(r["df"]) + 1536 for r in rows) or 1536
 
 
 def wordbreak_candidates(qs: list[str], min_part_len: int) -> set[str]:
@@ -902,6 +942,11 @@ class FtIndex:
             self._refresh_inner()
 
     def _refresh_inner(self) -> None:
+        from ftidx.positions import _POS_COLS, POSITIONS_SCHEMA
+
+        # every Spark reader is handed its table's schema and the
+        # driver-sized tables are read with pyarrow: schema inference and
+        # collect() each cost a Spark job, and opening a handle needs none
         spark = self.spark
         # a streaming-only index (deltas, no build) has no manifest
         man = self.path / "_manifest.json"
@@ -910,21 +955,19 @@ class FtIndex:
         # truncation leaves a valid, empty index behind
         postings_dir = self.path / "postings"
         if postings_dir.exists() and any(postings_dir.iterdir()):
-            self._postings = spark.read.parquet(str(postings_dir))
+            self._postings = spark.read.schema(POSTINGS_SCHEMA).parquet(
+                str(postings_dir))
         else:
             self._postings = spark.createDataFrame([], POSTINGS_SCHEMA)
         # streamed delta segments (merge-on-read): union them in so the
         # serving surface (topk/topk_batch/server) answers over base +
-        # deltas without waiting for compact; the WAND kernels
-        # already handle multiple segments per term with overlapping
-        # id ranges (streaming hash ids)
-        deltas_dir = self.path / "deltas"
+        # deltas without waiting for compact; the kernels already
+        # handle multiple segments per term with overlapping id ranges
+        # (streaming hash ids)
+        delta = read_batches(spark, self.path / "deltas", POSTINGS_SCHEMA)
         self._delta_postings = None
-        if deltas_dir.exists() and any(deltas_dir.iterdir()):
-            delta = (
-                spark.read.option("basePath", str(deltas_dir))
-                .parquet(str(deltas_dir / "batch=*")).select(_POSTINGS_COLS)
-            )
+        if delta is not None:
+            delta = delta.select(_POSTINGS_COLS)
             self._postings = (
                 self._postings.select(_POSTINGS_COLS).unionByName(delta)
             )
@@ -942,21 +985,18 @@ class FtIndex:
         if ts_dir.exists() and any(ts_dir.iterdir()):
             fp = ts_dir / "_postings_fingerprint"
             if fp.exists() and fp.read_text() == _postings_fingerprint(self.path):
-                self._termstats = spark.read.parquet(str(ts_dir))
-        stats_dir = self.path / "stats"
+                self._termstats = spark.read.schema(
+                    "field string, term string, df_total long").parquet(str(ts_dir))
         self.stats = {
             r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
-            for r in spark.read.parquet(str(stats_dir)).collect()
-        } if stats_dir.exists() and any(stats_dir.iterdir()) else {}
+            for r in _small_table(self.path / "stats")
+        }
         # delta doclen shifts the collection stats (n_docs, avgdl):
         # recompute across base + delta — a cheap agg over two skinny
         # tables, only paid when deltas exist
-        ddl_dir = self.path / "delta_doclen"
-        if ddl_dir.exists() and any(ddl_dir.iterdir()):
-            frames = [
-                spark.read.option("basePath", str(ddl_dir))
-                .parquet(str(ddl_dir / "batch=*")).select("doc_id", "field", "len")
-            ]
+        ddl = read_batches(spark, self.path / "delta_doclen")
+        if ddl is not None:
+            frames = [ddl.select("doc_id", "field", "len")]
             dl_dir = self.path / "doclen"
             if dl_dir.exists() and any(dl_dir.iterdir()):
                 frames.append(spark.read.parquet(str(dl_dir))
@@ -972,30 +1012,21 @@ class FtIndex:
             }
         # an immutable snapshot: delete()/refresh() swap in a new one,
         # so a reader holding the old one never sees it change
-        self._tombstones: frozenset[int] = frozenset()
-        tomb_dir = self.path / "tombstones"
-        if tomb_dir.exists():
-            self._tombstones = frozenset(
-                r["doc_id"]
-                for r in spark.read.option("recursiveFileLookup", "true")
-                .parquet(str(tomb_dir)).collect()
-            )
+        self._tombstones: frozenset[int] = frozenset(
+            r["doc_id"] for r in _small_table(self.path / "tombstones", ["doc_id"]))
         pos_dir = self.path / "positions"
         self._positions = (
-            spark.read.parquet(str(pos_dir)) if pos_dir.exists() else None
+            spark.read.schema(POSITIONS_SCHEMA).parquet(str(pos_dir))
+            if pos_dir.exists() else None
         )
         # streamed positional deltas (Solr soft-commit parity): union
         # them in like the postings deltas, so a doc streamed in is
         # phrase-queryable BEFORE compact; phrase_docs merges
         # same-doc occurrences across segments defensively already
-        dpos_dir = self.path / "delta_positions"
-        if dpos_dir.exists() and any(dpos_dir.iterdir()):
-            from ftidx.positions import _POS_COLS
-
-            dpos = (
-                spark.read.option("basePath", str(dpos_dir))
-                .parquet(str(dpos_dir / "batch=*")).select(_POS_COLS)
-            )
+        dpos = read_batches(spark, self.path / "delta_positions",
+                            POSITIONS_SCHEMA)
+        if dpos is not None:
+            dpos = dpos.select(_POS_COLS)
             self._positions = (
                 dpos if self._positions is None
                 else self._positions.select(_POS_COLS).unionByName(dpos)
@@ -1088,10 +1119,11 @@ class FtIndex:
                     self._cache_hits += len(pending) - len(unresolved)
                     first_pass = False
                 # LRU eviction, BYTE-aware: entries end up carrying
-                # decoded numpy arrays (~9× the varint blob — wand
-                # memoizes into the row dicts), so an entry-count cap
-                # alone would let a few thousand high-df terms exhaust
-                # driver memory. Drop oldest until under both budgets;
+                # decoded arrays and BM25 contributions (32 B per
+                # posting, memoized into the row dicts), so an
+                # entry-count cap alone would let a few thousand
+                # high-df terms exhaust driver memory. Drop oldest
+                # until under both budgets;
                 # `out` keeps its references, so the current query is
                 # unaffected even if its own entries fall out.
                 while self._term_cache and (
@@ -1121,8 +1153,7 @@ class FtIndex:
                     self._postings.filter(
                         (F.col("field") == field) & F.col("term").isin(unresolved)
                     )
-                    .select("term", "df", "cf", "doc_ids", "tfs", "dls",
-                            "block_max_tf", "block_min_dl", "block_last_docid")
+                    .select("term", "df", "cf", "doc_ids", "tfs", "dls")
                     .collect()
                 )
             finally:
@@ -1324,7 +1355,7 @@ class FtIndex:
         "a b"~slop term^boost`` — parsed and executed by
         :mod:`ftidx.qparse` against this handle's cached postings and
         positions; ``min_match`` applies Solr ``mm`` over the optional
-        clauses. ``kernel="auto"`` block-max-prunes pure-disjunction
+        clauses. ``kernel="auto"`` MaxScore-prunes pure-disjunction
         queries (see :func:`ftidx.qparse.execute`). The drop-in
         surface for a user migrating Solr query strings from the
         reference."""
@@ -1892,7 +1923,7 @@ class FtIndex:
         globally valid because one bucket owns all of a doc's postings
         rows, so the per-bucket conjunction (``mode="and"``), exclusion
         and match count (``min_match``) equal the global ones. With
-        ``k`` each bucket returns its own top-k (block-max pruned for
+        ``k`` each bucket returns its own top-k (MaxScore-pruned for
         plain OR) — :meth:`topk_distributed`; without it, every
         matching doc — the shared engine under :meth:`topk_where`,
         :meth:`topk_grouped` and :meth:`search_sorted`.

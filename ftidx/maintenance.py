@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ftidx.index import _bucket_local_merge, _doclen_rows, write_stats
+from ftidx.index import (_bucket_local_merge, _doclen_rows, batch_dirs,
+                         read_batches, write_stats)
 from ftidx.schema import POSTINGS_SCHEMA
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
@@ -43,13 +44,6 @@ INDEX_TABLES = ("postings", "doclen", "docs", "positions", "stored",
 
 def _has_files(d: Path) -> bool:
     return d.exists() and any(d.iterdir())
-
-
-def _batches(spark: SparkSession, d: Path) -> DataFrame | None:
-    """The ``batch=*`` segments of a delta table, or None."""
-    if not _has_files(d):
-        return None
-    return spark.read.option("basePath", str(d)).parquet(str(d / "batch=*"))
 
 
 def compact(spark: SparkSession, index_path: str) -> dict:
@@ -96,7 +90,7 @@ def compact(spark: SparkSession, index_path: str) -> dict:
     # tombstoned ids per bucket; a null bucket counts the unresolved
     resolved = per_bucket(resolution)
     n_unresolved = resolved.pop(None, 0)
-    segments = per_bucket(_batches(spark, path / "deltas"))
+    segments = per_bucket(read_batches(spark, path / "deltas"))
     buckets = sorted(resolved.keys() | segments.keys())
     if buckets:
         _merge_buckets(spark, path, buckets, id_bucket)
@@ -121,7 +115,7 @@ def _resolve_ids(spark: SparkSession, path: Path, tombs: DataFrame,
     tombstone set lands on the driver."""
     if not (idmap_dir / "_SUCCESS").exists():
         shutil.rmtree(idmap_dir, ignore_errors=True)
-        known = [_batches(spark, path / "delta_doclen")]
+        known = [read_batches(spark, path / "delta_doclen")]
         if _has_files(path / "doclen"):
             known.append(spark.read.parquet(str(path / "doclen")))
         known = [df.select("doc_id", "bucket") for df in known if df is not None]
@@ -152,7 +146,7 @@ def _merge_buckets(spark: SparkSession, path: Path, buckets: list[int],
 
     def postings() -> None:
         _overwrite_buckets(
-            _fold([base("postings"), _batches(spark, path / "deltas")], buckets,
+            _fold([base("postings"), read_batches(spark, path / "deltas")], buckets,
                   id_bucket, _bucket_local_merge, POSTINGS_SCHEMA)
             .withColumn("n_bytes", F.octet_length("doc_ids")
                         + F.octet_length("tfs") + F.octet_length("dls")),
@@ -162,7 +156,7 @@ def _merge_buckets(spark: SparkSession, path: Path, buckets: list[int],
 
     def positions() -> None:
         _overwrite_buckets(
-            _fold([base("positions"), _batches(spark, path / "delta_positions")],
+            _fold([base("positions"), read_batches(spark, path / "delta_positions")],
                   buckets, id_bucket, _merge_positions, POSITIONS_SCHEMA),
             path / "positions", buckets)
 
@@ -295,11 +289,9 @@ def delete_by_query(
         frames = []
         if _has_files(path / "postings"):
             frames.append(spark.read.parquet(str(path / "postings")))
-        if _has_files(path / "deltas"):
-            frames.append(
-                spark.read.option("basePath", str(path / "deltas"))
-                .parquet(str(path / "deltas" / "batch=*"))
-            )
+        delta = read_batches(spark, path / "deltas")
+        if delta is not None:
+            frames.append(delta)
         if not frames:
             return {"mode": "terms", "docs_deleted": 0}
         rows = frames[0] if len(frames) == 1 else frames[0].unionByName(
@@ -1019,10 +1011,7 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
         raise ValueError(f"max_batches must be >= 1, got {max_batches}")
     path = Path(index_path)
     deltas = path / "deltas"
-    dirs = sorted(
-        d for d in deltas.iterdir()
-        if d.is_dir() and d.name.startswith("batch=")
-    ) if deltas.exists() else []
+    dirs = batch_dirs(deltas)
     if len(dirs) <= max_batches:
         return {"merged": [], "into": None, "n_batches": len(dirs)}
 

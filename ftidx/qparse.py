@@ -128,12 +128,13 @@ def execute(idx, q: str, k: int = 10,
 
     ``kernel="auto"`` routes PURE-DISJUNCTION queries (every clause an
     optional term clause on one field — the search-box common case)
-    through block-max WAND (:func:`ftidx.wand.score_block_max`):
-    boosts fold into each term's idf (both the score and the block
-    upper bound are linear in idf, so pruning stays exact), and the
-    exhaustive path below accumulates in the identical (df, term)
-    order with the identical scaled-idf arithmetic, making the two
-    paths bit-identical — pinned by the fuzz rank-identity test.
+    through the pruned MaxScore kernel
+    (:func:`ftidx.wand.score_block_max`): boosts fold into each term's
+    idf, which also keys the kernel's memoised contributions and upper
+    bounds, so pruning stays exact; the exhaustive path below
+    accumulates in the identical (df, term) order with the identical
+    scaled-idf arithmetic, making the two paths bit-identical — pinned
+    by the fuzz rank-identity test.
     Pruning is unsound under +/- masks, phrases, mm≥2 or multi-field
     scoring, so anything else falls through to the exhaustive path
     (``kernel="exhaustive"`` forces it)."""
@@ -277,7 +278,7 @@ def execute(idx, q: str, k: int = 10,
         for t in phrase_score_terms.get(fld, []):
             boosts[t] = boosts.get(t, 0.0) + 1.0
         # (df, term) accumulation order + idf-folded boost: the exact
-        # arithmetic score_block_max runs, so the WAND fast path above
+        # arithmetic score_block_max runs, so the MaxScore path above
         # is bit-identical to this path on pure disjunctions
         for t, w in sorted(boosts.items(),
                            key=lambda kv: (by_name[kv[0]].df

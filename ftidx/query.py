@@ -7,7 +7,7 @@ Two scorers, rank-identical by test contract:
   tf/doclen/stats frames (the verification path; also the clearest
   Catalyst plan: broadcast the tiny query-term side, shuffle nothing
   that isn't already keyed).
-- block-max WAND over compressed postings lives in wand.py (fast path).
+- MaxScore over compressed postings lives in wand.py (fast path).
 
 Scoring (Lucene-style BM25, k1=1.2, b=0.75):
 

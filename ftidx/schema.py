@@ -53,7 +53,7 @@ TOKEN_SCHEMA = T.StructType(
 
 # Compressed postings segment (one per doc-bucket — the scale unit).
 # doc_ids/tfs are delta-gap + varint blobs; block_* arrays carry
-# block-max metadata for WAND (128-doc blocks).
+# per-block metadata (128-doc blocks) that no kernel reads (codec.py).
 POSTINGS_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType(), False),

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ftidx.build import live_docs
-from ftidx.index import DOCS_FIELD, _bucket_local_encode, _doclen_rows
+from ftidx.index import DOCS_FIELD, _bucket_local_encode, _doclen_rows, batch_dirs
 from ftidx.schema import POSTINGS_SCHEMA, SOURCE_SCHEMA, assert_schema
 
 
@@ -100,10 +100,8 @@ def index_microbatch(batch_df: DataFrame, epoch_id: int, index_path: str,
     # plan would hold a listing of part files the overwrite below
     # deletes (FileNotFoundException on the later positional write)
     seen_dir = out / "delta_doclen"
-    prior = sorted(
-        str(p) for p in seen_dir.iterdir()
-        if p.is_dir() and p.name != f"batch={epoch_id}"
-    ) if seen_dir.exists() else []
+    prior = [str(p) for p in batch_dirs(seen_dir)
+             if p.name != f"batch={epoch_id}"]
     if prior:
         seen = spark.read.parquet(*prior).select("doc_id").distinct()
         live = live.join(seen, "doc_id", "left_anti")

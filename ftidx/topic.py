@@ -43,16 +43,12 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ftidx.index import batch_dirs
+
 
 def _epochs(index) -> list[int]:
-    d = index.path / "delta_doclen"
-    if not d.exists():
-        return []
-    return sorted(
-        int(p.name.split("=", 1)[1])
-        for p in d.iterdir()
-        if p.is_dir() and p.name.startswith("batch=")
-    )
+    return sorted(int(p.name.split("=", 1)[1])
+                  for p in batch_dirs(index.path / "delta_doclen"))
 
 
 def _build_id(index) -> str:

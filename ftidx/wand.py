@@ -7,14 +7,13 @@ Every BM25 accumulation in ftidx runs through this module, whether the
 caller is the driver (``FtIndex``/``FtShards``/``qparse``) or a
 per-bucket executor closure:
 
-- :func:`score_all` — the one uncut scorer: decode every list, one
-  vectorized scatter-add, and return every matching doc with its score
-  and the number of lists it matched. Callers that need every match
-  (reranking, positional filters, per-bucket scoring) use it directly.
+- :func:`score_all` — the one uncut scorer: every list's memoised
+  contributions, one vectorized scatter-add, and every matching doc
+  with its score and the number of lists it matched. Callers that need
+  every match (reranking, positional filters, per-bucket scoring) use
+  it directly.
 - :func:`score_exhaustive` — :func:`score_all`'s scatter-add plus the
-  exact (score DESC, doc_id ASC) top-k cut. The verification oracle
-  and often the fastest path for numpy batch execution (SIMD beats
-  branchy skipping at small scale).
+  exact (score DESC, doc_id ASC) top-k cut. The verification oracle.
 - :func:`score_boolean` — :func:`score_all` plus :func:`filter_matches`
   (AND / minimum-should-match / exclusion) before the cut.
 - :func:`score_weighted_fields` / :func:`score_dismax` — the per-field
@@ -23,21 +22,13 @@ per-bucket executor closure:
 - :func:`merge_group` — folds a synonym/stem class into one pseudo-term
   (tf summed, dl shared, df = size of the union) that scores like any
   other list.
-- :func:`score_block_max` — block-max pruning in the WAND family,
-  restructured for vectorized execution: instead of per-document
-  pivoting (branchy per-row Python — forbidden by input_hint), it
-  (1) scores the rarest term fully to seed a threshold θ = its k-th
-  best partial score (a valid lower bound on the final k-th best),
-  (2) builds elementary doc-id intervals from every term's block
-  boundaries and sums per-interval upper bounds from the encode-time
-  block metadata (max tf, min dl — codec.py),
-  (3) decodes only blocks overlapping intervals whose total upper
-  bound ≥ θ, then runs the same scatter-add as the exhaustive kernel.
-  Every pruned doc provably cannot reach the top-k → exact results,
-  rank-identical to :func:`score_exhaustive` (pinned by tests).
+- :func:`score_block_max` — the pruned top-k: exact MaxScore (Turtle &
+  Flood 1995). Lists whose summed bounds cannot reach the top k are
+  probed, never sorted; in numpy only such whole-list skips pay.
 
-Every kernel accumulates per-term contributions in one fixed order
-(sorted by (df, term)) → deterministic scores at any parallelism.
+Contributions are memoised per cached segment row, so a warm query
+neither decodes nor recomputes BM25. Every kernel adds them in one
+fixed order, (df, term), so scores are bit-identical across kernels.
 Tombstones are not this module's concern: callers drop them from the
 uncut (or k + pending-tombstones) output before their final cut.
 """
@@ -49,7 +40,7 @@ import math
 import numpy as np
 
 from ftidx import BM25_B, BM25_K1
-from ftidx.codec import BLOCK, delta_decode, varint_decode
+from ftidx.codec import delta_decode, varint_decode
 
 
 def bm25_idf(n_docs: int, df: int) -> float:
@@ -116,57 +107,30 @@ class TermList:
         dls = np.concatenate([p[2] for p in parts])
         return ids, tfs, dls
 
-    def segment_tables(self, avgdl: float):
-        """Per-segment block tables: list of (starts, lasts, ubs).
-
-        Within a segment, blocks are sorted and disjoint by
-        construction (codec sorts by doc_id), so a block's start can be
-        inferred as previous-block-last + 1 (superset of its true
-        range — safe for upper bounds). Segments themselves MAY overlap
-        in doc-id range (streaming hash-id deltas); a doc lives in
-        exactly one segment, so a doc's bound within a term is the MAX
-        over segments' covering blocks — handled in score_block_max."""
-        tables = []
+    def contribs(self, avgdl: float) -> list[tuple[np.ndarray, np.ndarray, float]]:
+        """Per segment row: (ids, BM25 contributions, max contribution),
+        memoised into the row dict like ``_dec``. Keyed on (idf, avgdl),
+        so a boosted idf (qparse ``term^w``) or a global one (FtShards)
+        recomputes instead of reading another caller's values."""
+        key = (self.idf, avgdl)
+        out = []
         for r in self.rows:
-            bl = np.asarray(r["block_last_docid"], dtype=np.uint64)
-            if bl.size == 0:
-                tables.append(None)
-                continue
-            bmt = np.asarray(r["block_max_tf"], dtype=np.float64)
-            bmd = np.asarray(r["block_min_dl"], dtype=np.float64)
-            ub = self.idf * bmt * (BM25_K1 + 1.0) / (
-                bmt + BM25_K1 * (1.0 - BM25_B + BM25_B * bmd / avgdl)
-            )
-            st = np.empty_like(bl)
-            st[0] = 0
-            st[1:] = bl[:-1] + np.uint64(1)
-            tables.append((st, bl, ub))
-        return tables
+            memo = r.get("_bm25")
+            if memo is None or memo[0] != key:
+                ids, tfs, dls = self._row_arrays(r)
+                c = bm25_contrib(tfs, dls, self.idf, avgdl)
+                memo = (key, ids, c, float(c.max()) if c.size else 0.0)
+                r["_bm25"] = memo
+            out.append(memo[1:])
+        return out
 
-    def decode_blocks(self, keep_per_row: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Decode only blocks flagged in keep_per_row (bool mask per
-        segment, or None to skip the segment)."""
-        ids_out, tfs_out, dls_out = [], [], []
-        for r, mask in zip(self.rows, keep_per_row):
-            if mask is None or not mask.any():
-                continue
-            nb = len(r["block_last_docid"])
-            ids, tfs, dls = self._row_arrays(r)
-            if mask.all():
-                ids_out.append(ids)
-                tfs_out.append(tfs)
-                dls_out.append(dls)
-                continue
-            n = ids.size
-            edges = np.minimum(np.arange(0, (nb + 1) * BLOCK, BLOCK), n)
-            sel = np.repeat(mask, np.diff(edges))
-            ids_out.append(ids[sel])
-            tfs_out.append(tfs[sel])
-            dls_out.append(dls[sel])
-        if not ids_out:
-            z = np.empty(0, np.uint64)
-            return z, z, z
-        return np.concatenate(ids_out), np.concatenate(tfs_out), np.concatenate(dls_out)
+
+def _list_arrays(rows) -> tuple[np.ndarray, np.ndarray]:
+    """One list's (ids, contributions) from its :meth:`TermList.contribs`."""
+    if len(rows) == 1:
+        return rows[0][0], rows[0][1]
+    return (np.concatenate([r[0] for r in rows] or [np.empty(0, np.uint64)]),
+            np.concatenate([r[1] for r in rows] or [np.empty(0)]))
 
 
 def _term_contribs(lists: list[TermList], avgdl: float,
@@ -174,21 +138,35 @@ def _term_contribs(lists: list[TermList], avgdl: float,
     """Per-list (ids, weight × BM25 contribution), in (df, term) order."""
     out = []
     for tl in sorted(lists, key=lambda t: (t.df, t.term)):
-        ids, tfs, dls = tl.decode_all()
-        out.append((ids, weight * bm25_contrib(tfs, dls, tl.idf, avgdl)))
+        ids, c = _list_arrays(tl.contribs(avgdl))
+        out.append((ids, c if weight == 1.0 else weight * c))
     return out
+
+
+def _unique_inverse(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``np.unique(ids, return_inverse=True)`` through a stable argsort:
+    the ids are concatenated sorted runs (one per segment row), which
+    timsort merges in close to linear time."""
+    order = np.argsort(ids, kind="stable")
+    srt = ids[order]
+    first = np.empty(srt.size, dtype=bool)
+    first[:1] = True
+    np.not_equal(srt[1:], srt[:-1], out=first[1:])
+    inv = np.empty(srt.size, dtype=np.intp)
+    inv[order] = np.cumsum(first) - 1
+    return srt[first], inv
 
 
 def _scatter_add(per_term):
     """The one BM25 scatter-add: (ids, contribs) pairs → (unique ids
     ascending, summed scores, inverse index into the unique ids). Each
-    doc's sum runs in the order of ``per_term``."""
+    doc's sum starts from 0.0 and runs in the order of ``per_term``."""
     all_ids = (np.concatenate([ids for ids, _ in per_term]) if per_term
                else np.empty(0, np.uint64))
     if all_ids.size == 0:
         return all_ids, np.empty(0, np.float64), np.empty(0, np.intp)
     all_contrib = np.concatenate([c for _, c in per_term])
-    uniq, inv = np.unique(all_ids, return_inverse=True)
+    uniq, inv = _unique_inverse(all_ids)
     # bincount is the vectorized scatter-add (np.add.at is an order of
     # magnitude slower on large inputs)
     return uniq, np.bincount(inv, weights=all_contrib, minlength=uniq.size), inv
@@ -226,8 +204,8 @@ def merge_group(term: str, lists: list[TermList]) -> TermList:
     SynonymGraphFilter at query time): a doc's tf is the sum of its
     member tfs, its dl is shared by every member, and df is the size of
     the members' union. The caller sets ``idf`` (from this df, or from a
-    global df across shards). The result is pre-decoded, so it scores
-    through :func:`score_all`, not the block-max kernel."""
+    global df across shards). The result is pre-decoded and scores like
+    any fetched list."""
     ids, tfs, dls = (np.concatenate(a) for a in
                      zip(*(tl.decode_all() for tl in lists)))
     uids, inv = np.unique(ids, return_inverse=True)
@@ -249,9 +227,7 @@ def score_weighted_fields(field_lists, k: int):
     statistics, the weight scales the field's contribution.
 
     ``field_lists``: iterable of (weight, lists, avgdl) triples.
-    Exhaustive over the cached decode (block-max bounds are per-field;
-    a cross-field threshold would need combined bounds — not worth it
-    until single-field pruning is the bottleneck)."""
+    Unpruned: MaxScore's bounds are per field."""
     if k <= 0:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
     return _accumulate([p for weight, lists, avgdl in field_lists
@@ -298,9 +274,8 @@ def score_boolean(lists: list[TermList], avgdl: float, k: int,
     surface beyond plain OR). Scoring is the same BM25 sum over the
     matched query terms; the boolean part only shrinks the candidate
     set, so it composes with the cached decode like the exhaustive
-    kernel. Block-max pruning is NOT used here: its threshold logic
-    bounds OR scores and would be unsound under a cardinality
-    filter."""
+    kernel. Unpruned: MaxScore bounds OR scores, which is unsound
+    under a cardinality filter."""
     if k <= 0 or not lists:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
     floor = len(lists) if require_all else (min_match or 1)
@@ -309,61 +284,85 @@ def score_boolean(lists: list[TermList], avgdl: float, k: int,
     return _topk_from_scores(ids, scores, k)
 
 
+# Cost rule of the probe plan, in units of one posting through the
+# scatter-add (concatenate, stable argsort, bincount). Fitted on a 4-core
+# x86 host over five query classes of the synth corpus at 10k and 100k
+# docs: it picked the faster plan on 357 of 365 queries.
+PROBE_COST = 0.25     # one candidate binary-searched in one row
+ROW_PROBE_COST = 256  # the numpy calls that probe one row
+
+
+def _nonessential(lists: list[TermList], rows: list, k: int) -> set[int]:
+    """MaxScore's non-essential lists: the longest prefix by upper bound
+    (max contribution) whose summed bound is strictly below θ, the k-th
+    best contribution of the rarest list with k postings, which bounds
+    the k-th best score from below. Empty when the scatter-add is the
+    only exact plan or the cheaper one. Needs non-negative idfs (boosts
+    are) and one row per doc per term (streaming drops re-delivered docs)."""
+    seed = next((i for i, tl in enumerate(lists) if tl.df >= k), None)
+    if len(lists) == 1 or seed is None:
+        return set()
+    c = _list_arrays(rows[seed])[1]
+    theta = np.partition(c, c.size - k)[c.size - k]
+    ub = [max((m for _, _, m in r), default=0.0) for r in rows]
+    out: set[int] = set()
+    for i in sorted(range(len(lists)), key=ub.__getitem__):
+        # summed in (df, term) order, the order a doc's score is added
+        # in, so rounding cannot lift a score over the bound
+        bound = 0.0
+        for j in range(len(lists)):
+            if j in out or j == i:
+                bound += ub[j]
+        if not bound < theta:
+            break
+        out.add(i)
+    ess_df = sum(tl.df for i, tl in enumerate(lists) if i not in out)
+    probes = sum(PROBE_COST * ess_df + ROW_PROBE_COST * len(rows[i]) for i in out)
+    return out if probes < sum(lists[i].df for i in out) else set()
+
+
 def score_block_max(lists: list[TermList], avgdl: float, k: int):
-    """Block-max pruned scoring; exact (see module docstring)."""
-    lists = sorted(lists, key=lambda t: (t.df, t.term))
+    """Exact MaxScore top-k (Turtle & Flood 1995) over memoised BM25
+    contributions; the name stays from the block-max kernel it replaced.
+
+    Candidates are the union of the essential lists (see
+    :func:`_nonessential`); each non-essential row is probed for them
+    with ``searchsorted`` over its own id range. Each candidate's
+    contributions are added from 0.0 in (df, term) order, the sequence
+    :func:`score_exhaustive` adds, so ids and scores are bit-identical
+    to it."""
     if not lists or k <= 0:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
-    if len(lists) == 1:
-        return score_exhaustive(lists, avgdl, k)
-
-    # seed θ from the rarest term's exact partial scores
-    ids0, tfs0, dls0 = lists[0].decode_all()
-    c0 = bm25_contrib(tfs0, dls0, lists[0].idf, avgdl)
-    theta = float(np.partition(c0, c0.size - k)[c0.size - k]) if c0.size >= k else -np.inf
-    if theta == -np.inf:
-        return score_exhaustive(lists, avgdl, k)
-
-    term_tables = [tl.segment_tables(avgdl) for tl in lists]
-
-    # elementary intervals over every segment's block boundaries
-    pieces = []
-    for tables in term_tables:
-        for t in tables:
-            if t is not None:
-                pieces.append(t[0])
-                pieces.append(t[1] + np.uint64(1))
-    bounds = np.unique(np.concatenate(pieces))
-
-    # per-interval bound: Σ_terms max_segments ub(covering block)
-    total_ub = np.zeros(bounds.size, dtype=np.float64)
-    for tables in term_tables:
-        term_ub = np.zeros(bounds.size, dtype=np.float64)
-        for t in tables:
-            if t is None:
-                continue
-            starts, lasts, ubs = t
-            blk = np.searchsorted(starts, bounds, side="right") - 1
-            safe = np.clip(blk, 0, None)
-            valid = (blk >= 0) & (bounds <= lasts[safe])
-            seg_ub = np.zeros(bounds.size, dtype=np.float64)
-            seg_ub[valid] = ubs[safe[valid]]
-            np.maximum(term_ub, seg_ub, out=term_ub)
-        total_ub += term_ub
-    surviving = total_ub >= theta
-    surv_cum = np.concatenate(([0], np.cumsum(surviving)))
-
-    per_term = []
-    for tl, tables in zip(lists, term_tables):
-        keep_per_row = []
-        for t in tables:
-            if t is None:
-                keep_per_row.append(None)
-                continue
-            starts, lasts, _ = t
-            lo = np.searchsorted(bounds, starts, side="right") - 1
-            hi = np.searchsorted(bounds, lasts, side="right") - 1
-            keep_per_row.append((surv_cum[hi + 1] - surv_cum[np.clip(lo, 0, None)]) > 0)
-        ids, tfs, dls = tl.decode_blocks(keep_per_row)
-        per_term.append((ids, bm25_contrib(tfs, dls, tl.idf, avgdl)))
-    return _accumulate(per_term, k)
+    lists = sorted(lists, key=lambda t: (t.df, t.term))
+    rows = [tl.contribs(avgdl) for tl in lists]
+    nonessential = _nonessential(lists, rows, k)
+    if not nonessential:
+        return _accumulate([_list_arrays(r) for r in rows], k)
+    essential = [_list_arrays(r) for i, r in enumerate(rows)
+                 if i not in nonessential]
+    cand, inv = _unique_inverse(np.concatenate([ids for ids, _ in essential]))
+    # a probed candidate absent from a row adds 0.0, which leaves its
+    # partial sum unchanged; fewer numpy calls per row than selecting hits
+    slots = np.arange(cand.size)
+    idx_parts, c_parts = [], []
+    ess = iter(essential)
+    off = 0
+    for i, r in enumerate(rows):
+        if i not in nonessential:
+            _, c = next(ess)
+            idx_parts.append(inv[off:off + c.size])
+            c_parts.append(c)
+            off += c.size
+            continue
+        live = [(ids, c) for ids, c, _ in r if ids.size]
+        lo = cand.searchsorted([ids[0] for ids, _ in live], "left").tolist()
+        hi = cand.searchsorted([ids[-1] for ids, _ in live], "right").tolist()
+        for (ids, c), a, b in zip(live, lo, hi):
+            if a < b:
+                sub = cand[a:b]
+                pos = ids.searchsorted(sub)
+                idx_parts.append(slots[a:b])
+                c_parts.append(np.where(ids[pos] == sub, c[pos], 0.0))
+    scores = np.bincount(np.concatenate(idx_parts),
+                         weights=np.concatenate(c_parts), minlength=cand.size)
+    return _topk_from_scores(cand, scores, k)

@@ -236,6 +236,51 @@ def test_scoring_parity_with_tombstoned_top1(spark, built, oracle, case):
         assert all(abs(g - w) <= 1e-9 for (_, g), (_, w) in zip(got, want)), name
 
 
+def test_pruned_topk_with_pending_tombstones(spark, built, oracle, monkeypatch):
+    """FtIndex.topk asks the pruned kernel for k + pending tombstones:
+    with the top k of a rare+fat query tombstoned, the probe plan and
+    the scatter-add plan both still fill the page, equal to the
+    exhaustive kernel and to the oracle."""
+    from ftidx import wand
+
+    terms, k = ["def", "rareterm00002"], 5
+    idx = open_index(spark, built[0])
+    victims = {d for d, _ in idx.topk(terms, k=k, use_cache=False)}
+    idx._tombstones = idx._tombstones | victims  # handle-local
+    want = sorted(((d, s) for d, s in oracle.bm25_scores(terms).items()
+                   if d not in idx._tombstones),
+                  key=lambda kv: (-kv[1], kv[0]))[:k]
+    assert len(want) == k
+    taken = []
+    nonessential = wand._nonessential
+
+    def spy(*args):
+        out = nonessential(*args)
+        taken.append("probe" if out else "scatter")
+        return out
+
+    monkeypatch.setattr(wand, "_nonessential", spy)
+    for probe_cost in (0, 1e18):  # free probes, then unaffordable ones
+        monkeypatch.setattr(wand, "PROBE_COST", probe_cost)
+        monkeypatch.setattr(wand, "ROW_PROBE_COST", 0)
+        got = idx.topk(terms, k=k, use_cache=False)
+        assert got == idx.topk(terms, k=k, kernel="exhaustive", use_cache=False)
+        assert [d for d, _ in got] == [d for d, _ in want]
+        assert all(abs(g - w) <= 1e-9 for (_, g), (_, w) in zip(got, want))
+    assert taken == ["probe", "scatter"]
+
+
+def test_executor_page_equals_driver_page(spark, built):
+    """The per-bucket executor top-k (``_scored_df(k=...)`` under
+    topk_distributed) returns the driver kernel's page, scores equal."""
+    idx = open_index(spark, built[0])
+    for terms, k in ((["def", "rareterm00002"], 8), (["def", "return"], 12),
+                     (["def", "return", "value"], 12)):
+        dist = [(int(r["doc_id"]), float(r["score"]))
+                for r in idx.topk_distributed(terms, k).collect()]
+        assert dist == idx.topk(terms, k=k, use_cache=False), terms
+
+
 def test_ledger_metrics(spark, built):
     out, summary = built
     led = spark.read.parquet(f"{out}/ledger")
@@ -638,6 +683,18 @@ def test_topk_where_and_match_stats(spark, tmp_path):
     assert stats["n_values"] >= 2
 
 
+def _resident_bytes(row: dict) -> int:
+    """What a cached row holds once scored: the dict, its blobs, the
+    memo tuples and the memoised arrays (ids are shared by both memos)."""
+    import sys
+
+    arrays = [*row["_dec"], row["_bm25"][2]]
+    return (sys.getsizeof(row) + sys.getsizeof(row["_dec"])
+            + sys.getsizeof(row["_bm25"]) + sys.getsizeof(row["_bm25"][0])
+            + sum(sys.getsizeof(row[c]) for c in ("term", "doc_ids", "tfs", "dls"))
+            + sum(a.nbytes + sys.getsizeof(a[:0]) for a in arrays))
+
+
 def test_term_cache_byte_eviction(spark, tmp_path):
     """Byte-aware LRU: with a tiny byte budget the cache evicts rather
     than grow, results stay correct, and accounting never goes
@@ -657,6 +714,26 @@ def test_term_cache_byte_eviction(spark, tmp_path):
     assert idx2._cache_bytes >= 0
     assert idx2._cache_bytes <= 8 * 1024 or len(idx2._term_cache) <= 1
     assert len(idx2._term_cache) < 6
+
+    # a budget every entry fits under but the whole mix does not: the
+    # cache evicts, its byte count stays exact and within budget, and
+    # each entry's cost covers what the kernels memoised on its rows
+    from ftidx.index import _entry_cost
+
+    hot = ["def", "return", "value", "data", "result"]
+    pages = {t: idx.topk([t], k=5) for t in hot}
+    biggest = max(_entry_cost(idx._term_cache[("code.content", t)]) for t in hot)
+    idx3 = open_index(spark, out)
+    idx3._term_cache_max_bytes = 4 * biggest
+    for _ in range(2):
+        for t in hot:
+            assert idx3.topk([t], k=5, use_cache=False) == pages[t]
+    assert idx3._cache_misses > len(hot)  # evicted, then fetched again
+    assert idx3._cache_bytes == sum(
+        _entry_cost(v) for v in idx3._term_cache.values())
+    assert idx3._cache_bytes <= idx3._term_cache_max_bytes
+    for rows in idx3._term_cache.values():
+        assert _entry_cost(rows) >= sum(_resident_bytes(r) for r in rows)
 
 
 def test_term_vector_and_mlt(spark, tmp_path):
@@ -2272,6 +2349,41 @@ def test_termstats_probe_and_staleness(spark, tmp_path, monkeypatch):
     idx.refresh()
     assert idx._termstats is None
     assert idx._df_total(["def"], "code.content") == got_def
+
+
+def test_open_index_launches_no_spark_job(spark, tmp_path, monkeypatch):
+    """Opening a handle reads the driver-sized tables (stats,
+    tombstones) with pyarrow and hands every Spark reader its known
+    schema: an index with tombstones, positions and termstats and no
+    deltas opens without one Spark job, and serves what the handle that
+    wrote the tombstones serves."""
+    import ftidx.index
+    from ftidx.index import _POSTINGS_COLS
+
+    monkeypatch.setattr(ftidx.index, "TERMSTATS_MIN_DOCS", 0)  # tiny fixture
+    out = str(tmp_path / "idx")
+    build_index(spark, synth_source(spark, 200), out, n_buckets=4,
+                positions=True)
+    writer = open_index(spark, out)
+    victims = [d for d, _ in writer.topk(["def"], k=2)]
+    writer.delete(victims[:1])
+    writer.delete(victims[1:])
+    sc = spark.sparkContext
+    sc.setJobGroup("open-index", "open_index")
+    try:
+        idx = open_index(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("open-index") == []
+    assert idx._tombstones == frozenset(victims)
+    assert idx.stats == writer.stats
+    assert idx._termstats is not None and idx._positions is not None
+    assert set(_POSTINGS_COLS) <= set(idx._postings.columns)
+    assert idx._df_total(["def"], "code.content") == \
+        writer._df_total(["def"], "code.content")
+    assert idx.topk(["def", "value"], k=8) == writer.topk(["def", "value"], k=8)
+    assert idx.phrase_topk(["def", "value"], k=5) == \
+        writer.phrase_topk(["def", "value"], k=5)
 
 
 def test_fat_fetch_semaphore_path_correct(spark, built):
