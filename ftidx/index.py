@@ -11,12 +11,13 @@ transaction-per-job discipline, Indexer.java:97-116):
       → _bucket_local_encode (ONE mapInPandas kernel per bucket:
         tokenize + tf/dl aggregation + lexsort + vectorized
         whole-partition posting encode via codec.encode_many —
-        the Lucene segment-writer model; doclen rides along as
-        __dl__<field> pseudo-postings rows so there is ONE sink)
-      → write postings parquet partitioned by bucket
+        the Lucene segment-writer model; doc lengths and docs metadata
+        leave the kernel as field-tagged transport rows)
+      → _segment_pass persists that ONE output and splits it three ways:
+        postings parquet partitioned by bucket (real term rows only),
+        the doclen table and the docs table exploded from the transport
+        rows — each byte is stored once, in its own table
         (dynamic partition overwrite → idempotent → resume-safe)
-      → doclen table exploded from the pseudo-rows (tiny input);
-        docs table written concurrently
       → ledger row per bucket, written driver-side via pyarrow
         (metrics read a persisted n_bytes column, never the blobs)
 
@@ -26,10 +27,11 @@ group at the bucket size (corpus / n_buckets) — a `def` in 90% of
 themselves are uniform by hash.
 
 The same kernel is the ONE segment writer after build too: a streamed
-micro-batch runs it over the batch's docs (streaming.index_microbatch),
-and compaction / tier merges run :func:`_bucket_local_merge`, which
-decodes a bucket's segments and re-encodes them through the same
-:func:`_encode_segments` tail — the Lucene segment-merge counterpart.
+micro-batch runs it over the batch's docs through the same
+:func:`_segment_pass` (streaming.index_microbatch), and compaction /
+tier merges run :func:`_bucket_local_merge`, which decodes a bucket's
+segments and re-encodes them through the same :func:`_encode_segments`
+tail — the Lucene segment-merge counterpart.
 
 Scale notes: postings are per-(term, bucket) segments, never a single
 global row per term — at 10^12 docs a global `the` row would be ~TBs.
@@ -45,7 +47,10 @@ import re
 import threading
 import time
 import uuid
+from contextlib import contextmanager
+from functools import partial
 from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -98,15 +103,21 @@ def _align(sorted_ids: np.ndarray, probe: np.ndarray):
     return sorted_ids[pos] == probe, pos
 
 
+# Field tags of the build kernel's transport rows. Only the writer
+# (:func:`_bucket_local_encode`, :func:`_segment_pass`) knows them: no
+# stored table holds a row with such a field.
 DOCLEN_FIELD_PREFIX = "__dl__"
 DOCS_FIELD = "__docs__"
-PSEUDO_PREFIX = "__"  # every transport pseudo-row field starts with this
+PSEUDO_PREFIX = "__"  # every transport row's field starts with this
 
 _DOCS_META_COLS = ["doc_id", "repo", "path", "commit", "lang", "deleted",
                    "modified", "content_sha256", "bucket"]
 DOCS_TABLE_SCHEMA = ("doc_id long, repo string, path string, commit string, "
                      "lang string, deleted boolean, modified timestamp, "
                      "content_sha256 string, bucket int")
+DOCLEN_TABLE_SCHEMA = "doc_id long, field string, len long, bucket int"
+STORED_TABLE_SCHEMA = "doc_id long, content string, bucket int"
+TOMBSTONE_SCHEMA = "doc_id long"
 
 
 def _serialize_meta(pdf: pd.DataFrame) -> bytes:
@@ -137,18 +148,20 @@ def _bucket_local_encode(batches, stem_field: bool = False,
     read from its input row, never derived from its id: batch ids embed
     it (``bucket << 40 | rank``), streamed hash ids do not.
 
-    The build has ONE sink and makes ONE pass over the shuffled corpus:
-    per-(bucket, field) document lengths ride as pseudo-postings rows
-    under field ``__dl__<field>`` (ids blob + lens blob), and the docs
-    table's metadata (every prepared row incl. tombstoned, minus
-    content) rides as one ``__docs__`` pseudo-row per bucket (Arrow IPC
-    bytes in the ``dls`` column, rows sorted by doc_id for determinism).
-    build_index explodes both into their tables afterwards — those
-    explode jobs read only the pseudo rows' blobs, never the corpus, so
-    the raw corpus crosses the wire exactly once and is read exactly
-    twice (source scan + shuffle read). Input rows are the FULL
-    prepared docs (tombstoned included — they belong in the docs table);
-    tokenization applies the live filter internally.
+    The kernel makes ONE pass over the shuffled corpus and feeds three
+    tables through one output schema: per-(bucket, field) document
+    lengths leave as transport rows under field ``__dl__<field>`` (ids
+    blob + lens blob), and the docs table's metadata (every prepared
+    row incl. tombstoned, minus content) as one ``__docs__`` transport
+    row per bucket (Arrow IPC bytes in the ``dls`` column, rows sorted
+    by doc_id for determinism). :func:`_segment_pass` persists the
+    output once and routes each row kind to its own table — postings
+    get only the term rows, and the explodes read the cached transport
+    rows, never the corpus, so the raw corpus crosses the wire exactly
+    once and is read exactly twice (source scan + shuffle read). Input
+    rows are the FULL prepared docs (tombstoned included — they belong
+    in the docs table); tokenization applies the live filter
+    internally.
 
     Determinism: output rows are keyed by content-derived (bucket,
     field, term) and each bucket lands in exactly one partition (hash
@@ -185,7 +198,7 @@ def _bucket_local_encode(batches, stem_field: bool = False,
     meta = pd.concat(meta_parts, ignore_index=True) if len(meta_parts) > 1 else meta_parts[0]
     del meta_parts
 
-    def docs_pseudo_rows():
+    def docs_transport_rows():
         out = {c: [] for c in _POSTINGS_COLS}
         for b, grp in meta.groupby("bucket", sort=True):
             out["term"].append("*")
@@ -202,7 +215,7 @@ def _bucket_local_encode(batches, stem_field: bool = False,
         return pd.DataFrame(out)
 
     if not tf_parts:
-        yield docs_pseudo_rows()  # buckets whose docs are all tombstoned
+        yield docs_transport_rows()  # buckets whose docs are all tombstoned
         return
     tf = pd.concat(tf_parts, ignore_index=True) if len(tf_parts) > 1 else tf_parts[0]
     del tf_parts
@@ -220,8 +233,8 @@ def _bucket_local_encode(batches, stem_field: bool = False,
     out = _encode_segments(buckets, fld_codes, fld_uniq, trm_codes, trm_uniq,
                            doc_ids, tfs, dls)
 
-    # doclen pseudo-rows: one per (bucket, field) — contiguous segments
-    # in the sort order; docs repeat per term, dedup via np.unique
+    # doclen transport rows: one per (bucket, field) — contiguous
+    # segments in the sort order; docs repeat per term, dedup via np.unique
     bf_key = buckets.astype(np.int64) * len(fld_uniq) + fld_codes
     bf_change = np.empty(bf_key.size, dtype=bool)
     bf_change[0] = True
@@ -239,10 +252,7 @@ def _bucket_local_encode(batches, stem_field: bool = False,
                     "block_max_tf", "block_min_dl", "block_last_docid"):
             out[key].append(penc[key])
     yield pd.DataFrame(out)
-    # pseudo docs rows LAST: they segregate into the trailing row
-    # groups, so column-pruned metric/doclen scans prune them by the
-    # field column's min/max statistics
-    yield docs_pseudo_rows()
+    yield docs_transport_rows()
 
 
 def _encode_segments(buckets, fld_codes, fld_uniq, trm_codes, trm_uniq,
@@ -286,10 +296,9 @@ def _bucket_local_merge(batches, drop: np.ndarray | None = None):
     (bucket, field, term). Decodes every row, drops repeated docs
     (:func:`_first_copies`) and the ids in ``drop`` (a compaction passes
     one bucket's deleted docs) and re-encodes through the build's
-    :func:`_encode_segments`; ``__dl__`` rows merge like any term,
-    ``__docs__`` rows are dropped (only the build reads them)."""
-    frames = [pdf[pdf["field"] != DOCS_FIELD] for pdf in batches]
-    frames = [pdf for pdf in frames if len(pdf)]
+    :func:`_encode_segments`. Its input is term rows only: the doc
+    lengths of merged segments are merged from the doclen tables."""
+    frames = [pdf for pdf in batches if len(pdf)]
     if not frames:
         return
     pdf = pd.concat(frames, ignore_index=True)
@@ -316,7 +325,7 @@ def _bucket_local_merge(batches, drop: np.ndarray | None = None):
 
 
 def _explode_docs(batches):
-    """``__docs__`` pseudo-rows → docs-table rows (Arrow IPC blobs)."""
+    """``__docs__`` transport rows → docs-table rows (Arrow IPC blobs)."""
     for pdf in batches:
         frames = [_deserialize_meta(bytes(b)) for b in pdf["dls"]]
         if frames:
@@ -324,7 +333,7 @@ def _explode_docs(batches):
 
 
 def _explode_doclen(batches):
-    """Pseudo doclen postings rows → (doc_id, field, len, bucket)."""
+    """``__dl__<field>`` transport rows → (doc_id, field, len, bucket)."""
     for pdf in batches:
         frames = []
         for row in pdf.to_dict("records"):
@@ -340,13 +349,53 @@ def _explode_doclen(batches):
              "len": pd.Series(dtype="int64"), "bucket": pd.Series(dtype="int32")}))
 
 
-def _doclen_rows(postings: DataFrame) -> DataFrame:
-    """Doclen-table rows exploded from the ``__dl__`` pseudo-rows of
-    written postings — a build's or a streamed delta's."""
-    return (postings.filter(F.col("field").startswith(DOCLEN_FIELD_PREFIX))
-            .select("field", "bucket", "doc_ids", "tfs")
-            .mapInPandas(_explode_doclen,
-                         schema="doc_id long, field string, len long, bucket int"))
+class _Segments(NamedTuple):
+    """The tables one kernel pass feeds, as frames over its persisted
+    output: ``postings`` (term rows only), ``doclen`` and ``docs``
+    (exploded from the transport rows) and ``n_docs`` (per bucket, the
+    docs of its largest field — the ledger's count)."""
+    postings: DataFrame
+    doclen: DataFrame
+    docs: DataFrame
+    n_docs: DataFrame
+
+
+@contextmanager
+def _segment_pass(docs: DataFrame, *, stem_field: bool = False,
+                  shingle_field: bool = False):
+    """Run :func:`_bucket_local_encode` over ``docs`` (bucket-partitioned
+    prepared rows) ONCE and yield its output split into
+    :class:`_Segments`. The output is persisted (memory, spilling to
+    disk), so the caller's first write computes it and every later
+    write reads the cache — the input is never recomputed and nothing
+    is read back from disk. Transport rows go only to their own tables;
+    the cache is released when the caller's writes are done. Write
+    ``postings`` first: writes running concurrently before the cache
+    exists would each run the kernel."""
+    from pyspark import StorageLevel
+
+    out = docs.mapInPandas(
+        partial(_bucket_local_encode, stem_field=stem_field,
+                shingle_field=shingle_field),
+        schema=POSTINGS_SCHEMA).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        field = F.col("field")
+        dl_rows = out.filter(field.startswith(DOCLEN_FIELD_PREFIX))
+        yield _Segments(
+            postings=out.filter(~field.startswith(PSEUDO_PREFIX)),
+            doclen=dl_rows.select("field", "bucket", "doc_ids", "tfs")
+            .mapInPandas(_explode_doclen, schema=DOCLEN_TABLE_SCHEMA),
+            docs=out.filter(field == DOCS_FIELD).select("dls")
+            .mapInPandas(_explode_docs, schema=DOCS_TABLE_SCHEMA),
+            n_docs=dl_rows.groupBy("bucket").agg(F.max("df").alias("n")))
+    finally:
+        out.unpersist()
+
+
+def _write_bucket_table(df: DataFrame, table: Path) -> None:
+    """One build write: ``df`` over its buckets' partitions of
+    ``table`` (dynamic partition overwrite, so a rerun replaces them)."""
+    df.write.mode("overwrite").partitionBy("bucket").parquet(str(table))
 
 
 def _write_ledger_rows(ledger_dir: Path, rows: list[tuple]) -> None:
@@ -368,6 +417,21 @@ def _write_ledger_rows(ledger_dir: Path, rows: list[tuple]) -> None:
         ]),
     )
     pq.write_table(table, ledger_dir / f"part-{uuid.uuid4().hex}.parquet")
+
+
+def _append_tombstones(tomb_dir: Path, doc_ids) -> None:
+    """Append one tombstone file driver-side via pyarrow, as the ledger
+    is: an id list does not warrant a Spark job. Written under a hidden
+    name and renamed, so no reader lists a partial file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tomb_dir.mkdir(parents=True, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = tomb_dir / f".{name}.tmp"
+    pq.write_table(pa.table({"doc_id": pa.array([int(d) for d in doc_ids],
+                                                 pa.int64())}), tmp)
+    tmp.rename(tomb_dir / name)
 
 
 def _write_stats_rows(stats_dir: Path, rows) -> None:
@@ -393,86 +457,52 @@ def _build_bucket_group(spark, docs, group, out, ledger_dir, build_id,
                         tracking_id, clustered, t0,
                         store_content=False, stem_field=False,
                         shingle_field=False) -> None:
-    """One bucket group of a build pass: encode + write postings, then
-    metrics/doclen/docs explodes off the WRITTEN postings, then the
-    group's "done" ledger rows. Factored out of :func:`build_index` so
+    """One bucket group of a build pass: one kernel pass writes
+    postings, then doclen and docs (and the metrics) from its cached
+    output, then the group's "done" ledger rows. A group killed before
+    those rows reruns whole. Factored out of :func:`build_index` so
     the caller can persist a per-bucket failure reason (S27) on ANY
     exception the group's jobs raise."""
-    docs_g = docs.filter(F.col("bucket").isin(group))
-
-    # ---- bucket-local strategy (default): shuffle RAW DOCS by
-    # bucket (the minimal shuffle — raw docs are ~25× smaller than
-    # their tf rows), then ONE kernel tokenizes, aggregates, sorts
-    # and encodes each bucket's postings — the Lucene segment-writer
-    # model. tf rows never hit the shuffle system; doclen + the docs
-    # table ride along as pseudo-postings rows, so this ONE job is
-    # the only consumer of the corpus (see _bucket_local_encode).
-    enc_in = docs_g
-    if not clustered:
-        enc_in = enc_in.repartition(len(group), "bucket")
-    from functools import partial
-
-    postings = (
-        enc_in
-        .mapInPandas(partial(_bucket_local_encode, stem_field=stem_field,
-                             shingle_field=shingle_field),
-                     schema=POSTINGS_SCHEMA)
-        .withColumn(
-            "n_bytes",
-            F.octet_length("doc_ids") + F.octet_length("tfs") + F.octet_length("dls"),
-        )
-    )
-    postings.write.mode("overwrite").partitionBy("bucket") \
-        .parquet(str(out / "postings"))
-    if store_content:
-        # Solr stored="true" analog: raw text persisted next to the
-        # index so serving-time highlighting / document retrieval
-        # never needs the source. Same dynamic-partition-overwrite
-        # discipline as every other per-group write (resume-safe).
-        (docs_g.filter(F.col("content").isNotNull()
-                       & ~F.col("deleted"))
-         .select("doc_id", "content", "bucket")
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(str(out / "stored")))
-
-    # everything below reads the WRITTEN postings (column-pruned,
-    # pseudo-row-filtered) — never the corpus
     from concurrent.futures import ThreadPoolExecutor
 
-    written = spark.read.parquet(str(out / "postings")).filter(
-        F.col("bucket").isin(group)
-    )
+    docs_g = docs.filter(F.col("bucket").isin(group))
+    # shuffle RAW DOCS by bucket (the minimal shuffle — raw docs are
+    # ~25× smaller than their tf rows), then ONE kernel tokenizes,
+    # aggregates, sorts and encodes each bucket's postings — the Lucene
+    # segment-writer model. tf rows never hit the shuffle system.
+    enc_in = docs_g if clustered else docs_g.repartition(len(group), "bucket")
+    with _segment_pass(enc_in, stem_field=stem_field,
+                       shingle_field=shingle_field) as seg:
+        postings = seg.postings.withColumn(
+            "n_bytes",
+            F.octet_length("doc_ids") + F.octet_length("tfs") + F.octet_length("dls"))
+        _write_bucket_table(postings, out / "postings")
+        if store_content:
+            # Solr stored="true" analog: raw text persisted next to the
+            # index so serving-time highlighting / document retrieval
+            # never needs the source.
+            _write_bucket_table(
+                docs_g.filter(F.col("content").isNotNull() & ~F.col("deleted"))
+                .select("doc_id", "content", "bucket"), out / "stored")
 
-    def metrics():
-        # S29/S30 analog: postings/bytes/skew from what was written
-        real = written.filter(~F.col("field").startswith(PSEUDO_PREFIX))
-        met = real.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("postings_emitted"),
-            F.sum("n_bytes").alias("bytes_compressed"),
-            (F.max("df") / F.avg("df")).alias("skew_ratio"),
-        ).collect()
-        nd = written.filter(F.col("field").startswith(DOCLEN_FIELD_PREFIX)) \
-            .groupBy("bucket").agg(F.max("df").alias("n")).collect()
-        return met, nd
+        def metrics():
+            # S29/S30 analog: postings/bytes/skew of the written rows
+            met = postings.groupBy("bucket").agg(
+                F.count(F.lit(1)).alias("postings_emitted"),
+                F.sum("n_bytes").alias("bytes_compressed"),
+                (F.max("df") / F.avg("df")).alias("skew_ratio"),
+            ).collect()
+            return met, seg.n_docs.collect()
 
-    def explode_doclen():
-        (_doclen_rows(written)
-         .repartition(len(group), "bucket")
-         .write.mode("overwrite").partitionBy("bucket").parquet(str(out / "doclen")))
-
-    def explode_docs():
-        (written.filter(F.col("field") == DOCS_FIELD)
-         .select("dls")
-         .mapInPandas(_explode_docs, schema=DOCS_TABLE_SCHEMA)
-         .write.mode("overwrite").partitionBy("bucket").parquet(str(out / "docs")))
-
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        f_met = ex.submit(metrics)
-        f_dl = ex.submit(explode_doclen)
-        f_docs = ex.submit(explode_docs)
-        met, nd = f_met.result()
-        f_dl.result()
-        f_docs.result()
+        with ThreadPoolExecutor(max_workers=3) as ex:
+            f_met = ex.submit(metrics)
+            f_dl = ex.submit(_write_bucket_table,
+                             seg.doclen.repartition(len(group), "bucket"),
+                             out / "doclen")
+            f_docs = ex.submit(_write_bucket_table, seg.docs, out / "docs")
+            met, nd = f_met.result()
+            f_dl.result()
+            f_docs.result()
 
     ndocs = {r["bucket"]: int(r["n"]) for r in nd}
     elapsed = time.time() - t0
@@ -545,7 +575,7 @@ def build_index(
     out.mkdir(parents=True, exist_ok=True)
     build_id = build_id or uuid.uuid4().hex[:12]
     manifest_path = out / "_manifest.json"
-    params = {"n_buckets": n_buckets, "version": 1}
+    params = {"n_buckets": n_buckets, "version": 2}
     if manifest_path.exists():
         prev = json.loads(manifest_path.read_text())
         if resume and {k: prev.get(k) for k in params} != params:
@@ -647,7 +677,8 @@ def write_stats(spark: SparkSession, path: str | Path) -> None:
     for every maintenance op that rewrites postings or moves buckets,
     so their output is indistinguishable from a fresh build."""
     path = Path(path)
-    stats = spark.read.parquet(str(path / "doclen")).groupBy("field").agg(
+    stats = spark.read.schema(DOCLEN_TABLE_SCHEMA).parquet(
+        str(path / "doclen")).groupBy("field").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("len").alias("total_len"),
         (F.sum("len") / F.count(F.lit(1))).cast("double").alias("avgdl"),
@@ -692,7 +723,7 @@ def write_termstats(spark: SparkSession, index_path: str) -> None:
     ts_dir = out / "termstats"
     if not (postings_dir.exists() and any(postings_dir.iterdir())):
         return
-    p = spark.read.parquet(str(postings_dir))
+    p = spark.read.schema(POSTINGS_SCHEMA).parquet(str(postings_dir))
     (p.groupBy("field", "term").agg(F.sum("df").alias("df_total"))
      .repartitionByRange(8, "field", "term")
      .sortWithinPartitions("field", "term")
@@ -1052,8 +1083,7 @@ class FtIndex:
         """Tombstone docs (delete-by-id analog, Indexer.java:219-222):
         appended to a side table, anti-filtered at query time until
         :func:`ftidx.maintenance.compact` folds them in."""
-        df = self.spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
-        df.write.mode("append").parquet(str(self.path / "tombstones"))
+        _append_tombstones(self.path / "tombstones", doc_ids)
         with self._cache_lock:
             self._tombstones = self._tombstones | {int(d) for d in doc_ids}
             # cached result pages may hold a just-tombstoned doc
@@ -2427,9 +2457,6 @@ class FtIndex:
         misspelled queries."""
         band = (F.length("term") >= len(term) - max_dist) & (
             F.length("term") <= len(term) + max_dist)
-        # NOTE: transport pseudo-rows are keyed by FIELD prefix ("__dl__",
-        # "__docs__"); the field-equality predicate excludes them. Never
-        # filter on a term prefix here — "__init__" is a real code token.
         vocab = (
             self._postings.filter(F.col("field") == field)
             .groupBy("term").agg(F.sum("df").alias("df"))
@@ -2542,8 +2569,6 @@ class FtIndex:
         rx = "^" + "".join(
             ".*" if ch == "*" else "." if ch == "?" else re.escape(ch)
             for ch in pattern) + "$"
-        # pseudo rows are FIELD-keyed; field equality excludes them (a
-        # term-prefix filter would drop real dunder tokens like __init__)
         vocab = self._postings.filter(F.col("field") == field)
         if prefix:
             vocab = vocab.filter(F.col("term").startswith(prefix))
@@ -3422,7 +3447,7 @@ class FtIndex:
         the doc's ONE bucket partition: partition pruning keeps it at
         O(bucket), executor-side decode keeps the driver at top_m rows."""
         bucket = self._bucket_of(doc_id)
-        rows = self._postings.filter(~F.col("field").startswith(PSEUDO_PREFIX))
+        rows = self._postings
         if bucket is not None:
             rows = rows.filter(F.col("bucket") == bucket)
         rows = rows.filter(F.col("field") == field).select("term", "doc_ids", "tfs")

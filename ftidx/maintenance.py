@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import shutil
+import uuid
 from functools import partial, reduce
 from pathlib import Path
 
@@ -29,11 +30,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ftidx.index import (_bucket_local_merge, _doclen_rows, batch_dirs,
-                         read_batches, write_stats)
+from ftidx.index import (DOCLEN_TABLE_SCHEMA, DOCS_TABLE_SCHEMA,
+                         STORED_TABLE_SCHEMA, TOMBSTONE_SCHEMA,
+                         _bucket_local_merge, batch_dirs, read_batches,
+                         write_stats)
 from ftidx.schema import POSTINGS_SCHEMA
-
-_POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 
 # Every table an index directory holds: the build's, the streamed
 # deltas' and the tombstones.
@@ -46,6 +47,18 @@ def _has_files(d: Path) -> bool:
     return d.exists() and any(d.iterdir())
 
 
+def _require_version_2(path: Path, op: str) -> None:
+    """Refuse an index whose manifest predates format version 2: its
+    postings and deltas hold doclen and docs transport rows, which the
+    merge kernel does not accept. An index with no manifest (streamed
+    deltas only) is taken to be version 2."""
+    man = path / "_manifest.json"
+    version = json.loads(man.read_text()).get("version", 2) if man.exists() else 2
+    if version < 2:
+        raise ValueError(f"{op}: index format version {version} "
+                         "predates version 2; rebuild the index")
+
+
 def compact(spark: SparkSession, index_path: str) -> dict:
     """Fold streamed deltas and tombstones into the base index — the
     Lucene segment merge that drops deleted docs from disk.
@@ -54,30 +67,32 @@ def compact(spark: SparkSession, index_path: str) -> dict:
     tombstone ids. An id resolves through ``doclen`` ∪ ``delta_doclen``
     (a streamed hash id's high bits are not its bucket); ids that
     resolve nowhere stay in the tombstone table, so the query-time
-    anti-filter keeps masking them. Each affected bucket makes one pass:
-    base + delta rows meet that bucket's resolved ids in a cogroup (no
-    tombstone array in any closure) and go through
-    :func:`ftidx.index._bucket_local_merge` (positions:
-    :func:`ftidx.positions._merge_positions`), which drops the ids.
-    ``doclen`` is exploded from the merged ``__dl__`` rows, as a build
-    does; ``docs`` and ``stored`` drop the ids.
+    anti-filter keeps masking them. Each affected bucket makes one pass
+    per table, the tables concurrently: base + delta postings meet that
+    bucket's resolved ids in a cogroup (no tombstone array in any
+    closure) and go through :func:`ftidx.index._bucket_local_merge`
+    (positions: :func:`ftidx.positions._merge_positions`), which drops
+    the ids; ``doclen`` becomes ``doclen`` ∪ ``delta_doclen`` minus the
+    ids, one row per (doc_id, field); ``docs`` and ``stored`` drop the
+    ids.
 
-    Crash order: the bucket tables (postings before the doclen exploded
-    from it); stats; then the delta dirs; the tombstone table last. A
-    rerun after a crash ends in the same state: the merge drops
-    repeated docs, and the resolved ids are kept on disk
-    (``_compact_idmap``) until the end, so ids whose doclen rows are
-    already gone stay resolved. Were the tombstones replaced before the
-    deltas were gone, a rerun would fold a deleted doc's delta rows
-    back in. Scale shape: one shuffle of the affected buckets' rows,
-    never O(corpus). Open ``FtIndex`` handles must ``refresh()`` (or
-    reopen) afterwards."""
+    Crash order: the bucket tables; stats; the folded epoch ids
+    (``_folded_epochs.json``, read by ``topic_poll``); then the delta
+    dirs; the tombstone table last. A rerun after a crash ends in the
+    same state: the merges drop repeated docs, and the resolved ids are
+    kept on disk (``_compact_idmap``) until the end, so ids whose
+    doclen rows are already gone stay resolved. Were the tombstones
+    replaced before the deltas were gone, a rerun would fold a deleted
+    doc's delta rows back in. Scale shape: one shuffle of the affected
+    buckets' rows, never O(corpus). Open ``FtIndex`` handles must
+    ``refresh()`` (or reopen) afterwards."""
     path = Path(index_path)
+    _require_version_2(path, "compact")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     tomb_dir = path / "tombstones"
-    tombs = (spark.read.option("recursiveFileLookup", "true")
-             .parquet(str(tomb_dir)).select("doc_id").distinct()
-             if _has_files(tomb_dir) else spark.createDataFrame([], "doc_id long"))
+    tombs = (spark.read.schema(TOMBSTONE_SCHEMA).option("recursiveFileLookup", "true")
+             .parquet(str(tomb_dir)).distinct()
+             if _has_files(tomb_dir) else spark.createDataFrame([], TOMBSTONE_SCHEMA))
     idmap_dir = path / "_compact_idmap"
     resolution = _resolve_ids(spark, path, tombs, idmap_dir)
     id_bucket = resolution.filter(F.col("bucket").isNotNull())
@@ -90,11 +105,12 @@ def compact(spark: SparkSession, index_path: str) -> dict:
     # tombstoned ids per bucket; a null bucket counts the unresolved
     resolved = per_bucket(resolution)
     n_unresolved = resolved.pop(None, 0)
-    segments = per_bucket(read_batches(spark, path / "deltas"))
+    segments = per_bucket(read_batches(spark, path / "deltas", POSTINGS_SCHEMA))
     buckets = sorted(resolved.keys() | segments.keys())
     if buckets:
         _merge_buckets(spark, path, buckets, id_bucket)
         write_stats(spark, path)
+    _record_folded_epochs(path, idmap_dir)
     _drop_deltas(path)
     _replace_tombstones(tomb_dir, resolution.filter(F.col("bucket").isNull()),
                         n_unresolved)
@@ -102,6 +118,50 @@ def compact(spark: SparkSession, index_path: str) -> dict:
     return {"buckets_rewritten": buckets,
             "segments_folded": sum(segments.values()),
             "docs_removed": sum(resolved.values()), "unresolved": n_unresolved}
+
+
+_FOLDED_EPOCHS = "_folded_epochs.json"
+
+
+def fold_log(path: Path) -> list[set[int]]:
+    """The streamed epoch ids each :func:`compact` folded into the
+    base, one set per compaction, oldest first. An id may recur in a
+    later set: once a compaction has removed an epoch's dirs, a tier
+    merge or a restarted stream may use the id again."""
+    f = path / _FOLDED_EPOCHS
+    return [set(e["epochs"]) for e in json.loads(f.read_text())] \
+        if f.exists() else []
+
+
+def _record_folded_epochs(path: Path, idmap_dir: Path) -> None:
+    """Append the epochs about to be folded to ``_folded_epochs.json``
+    (next to the manifest) before their dirs are removed: a topic
+    subscriber that never polled one of them must learn that its docs
+    are now in the base (:func:`ftidx.topic.topic_poll`). The entry is
+    staged in ``idmap_dir`` under a fresh key first, so a rerun after a
+    crash appends it once, not twice."""
+    staged = idmap_dir / "_folded.json"
+    if not staged.exists():
+        epochs = sorted(int(d.name.split("=", 1)[1])
+                        for d in batch_dirs(path / "delta_doclen"))
+        if not epochs:
+            return
+        _write_json(staged, {"key": uuid.uuid4().hex, "epochs": epochs})
+    entry = json.loads(staged.read_text())
+    log_path = path / _FOLDED_EPOCHS
+    log = json.loads(log_path.read_text()) if log_path.exists() else []
+    if entry["key"] not in {e["key"] for e in log}:
+        _write_json(log_path, log + [entry])
+
+
+def _write_json(target: Path, obj) -> None:
+    """Write ``obj`` to ``target`` whole or not at all."""
+    tmp = target.with_name(f".{target.name}.tmp")
+    tmp.write_text(json.dumps(obj))
+    tmp.replace(target)
+
+
+_IDMAP_SCHEMA = "doc_id long, bucket int"
 
 
 def _resolve_ids(spark: SparkSession, path: Path, tombs: DataFrame,
@@ -115,65 +175,92 @@ def _resolve_ids(spark: SparkSession, path: Path, tombs: DataFrame,
     tombstone set lands on the driver."""
     if not (idmap_dir / "_SUCCESS").exists():
         shutil.rmtree(idmap_dir, ignore_errors=True)
-        known = [read_batches(spark, path / "delta_doclen")]
+        known = [read_batches(spark, path / "delta_doclen", DOCLEN_TABLE_SCHEMA)]
         if _has_files(path / "doclen"):
-            known.append(spark.read.parquet(str(path / "doclen")))
+            known.append(spark.read.schema(DOCLEN_TABLE_SCHEMA)
+                         .parquet(str(path / "doclen")))
         known = [df.select("doc_id", "bucket") for df in known if df is not None]
         (reduce(DataFrame.unionByName, known).join(tombs, "doc_id").distinct()
-         if known else spark.createDataFrame([], "doc_id long, bucket int")) \
+         if known else spark.createDataFrame([], _IDMAP_SCHEMA)) \
             .write.parquet(str(idmap_dir))
     # joined from the tombstone side: ids no longer tombstoned (a rerun
     # after the table was replaced) are no longer deleted. Checkpointed,
     # as every later step reads it.
-    return tombs.join(spark.read.parquet(str(idmap_dir)), "doc_id", "left") \
+    return tombs.join(spark.read.schema(_IDMAP_SCHEMA).parquet(str(idmap_dir)),
+                      "doc_id", "left") \
         .localCheckpoint()
 
 
 def _merge_buckets(spark: SparkSession, path: Path, buckets: list[int],
                    id_bucket: DataFrame) -> None:
     """Rewrite ``buckets`` of every bucket table: base + delta rows
-    through the merge kernels minus the ``id_bucket`` docs. The tables
-    are rewritten concurrently (doclen after the postings it is exploded
-    from), as a build's explodes are; each rewrite is idempotent, so a
-    crash may leave any subset of them written."""
+    through the merge kernels (doclen: deduplicated union) minus the
+    ``id_bucket`` docs. The tables are rewritten concurrently; each
+    rewrite is idempotent, so a crash may leave any subset of them
+    written. Every reader is handed its table's schema."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ftidx.positions import POSITIONS_SCHEMA, _merge_positions
 
-    def base(table: str) -> DataFrame | None:
+    def base(table: str, schema) -> DataFrame | None:
         d = path / table
-        return spark.read.parquet(str(d)) if _has_files(d) else None
+        return spark.read.schema(schema).parquet(str(d)) if _has_files(d) else None
 
     def postings() -> None:
         _overwrite_buckets(
-            _fold([base("postings"), read_batches(spark, path / "deltas")], buckets,
-                  id_bucket, _bucket_local_merge, POSTINGS_SCHEMA)
+            _fold([base("postings", POSTINGS_SCHEMA),
+                   read_batches(spark, path / "deltas", POSTINGS_SCHEMA)],
+                  buckets, id_bucket, _bucket_local_merge, POSTINGS_SCHEMA)
             .withColumn("n_bytes", F.octet_length("doc_ids")
                         + F.octet_length("tfs") + F.octet_length("dls")),
             path / "postings", buckets)
-        merged = base("postings").filter(F.col("bucket").isin(buckets))
-        _overwrite_buckets(_doclen_rows(merged), path / "doclen", buckets)
+
+    def doclen() -> None:
+        rows = reduce(DataFrame.unionByName, [
+            df.drop("batch").filter(F.col("bucket").isin(buckets)) for df in
+            (base("doclen", DOCLEN_TABLE_SCHEMA),
+             read_batches(spark, path / "delta_doclen", DOCLEN_TABLE_SCHEMA))
+            if df is not None])
+        _overwrite_buckets(
+            _dedup_doclen(rows.join(id_bucket.select("doc_id"), "doc_id",
+                                    "left_anti")),
+            path / "doclen", buckets)
 
     def positions() -> None:
         _overwrite_buckets(
-            _fold([base("positions"), read_batches(spark, path / "delta_positions")],
+            _fold([base("positions", POSITIONS_SCHEMA),
+                   read_batches(spark, path / "delta_positions", POSITIONS_SCHEMA)],
                   buckets, id_bucket, _merge_positions, POSITIONS_SCHEMA),
             path / "positions", buckets)
 
-    def drop_ids(table: str) -> None:
+    def drop_ids(table: str, schema: str) -> None:
         _overwrite_buckets(
-            base(table).filter(F.col("bucket").isin(buckets))
+            base(table, schema).filter(F.col("bucket").isin(buckets))
             .join(id_bucket.select("doc_id"), "doc_id", "left_anti"),
             path / table, buckets)
 
-    jobs = [postings]
+    jobs = [postings, doclen]
     # docs and stored are absent for streaming-only indexes
-    jobs += [partial(drop_ids, t) for t in ("docs", "stored") if _has_files(path / t)]
+    jobs += [partial(drop_ids, t, schema) for t, schema in
+             (("docs", DOCS_TABLE_SCHEMA), ("stored", STORED_TABLE_SCHEMA))
+             if _has_files(path / t)]
     if _has_files(path / "positions") or _has_files(path / "delta_positions"):
         jobs.append(positions)
     with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
         for f in [ex.submit(job) for job in jobs]:
             f.result()
+
+
+def _dedup_doclen(rows: DataFrame) -> DataFrame:
+    """Doclen ``rows`` of base and/or delta segments, one per (doc_id,
+    field): a redelivered doc repeats with the same length. One shuffle,
+    by bucket, so a bucket's rows land in one file; a doc's bucket is
+    fixed, so deduplicating on (bucket, doc_id, field) needs no second
+    shuffle. Sorted as the build writes them, which keeps the files as
+    small."""
+    return rows.repartition("bucket") \
+        .dropDuplicates(["bucket", "doc_id", "field"]) \
+        .sortWithinPartitions("bucket", "field", "doc_id")
 
 
 def _fold(frames: list[DataFrame | None], buckets: list[int],
@@ -995,10 +1082,10 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     Merged output: one ``batch=<id>`` dir per delta family (postings
     via the per-bucket segment merge
     :func:`ftidx.index._bucket_local_merge` → ONE segment per (field,
-    term, bucket); doclen exploded from its ``__dl__`` rows, as in a
-    build; positions via :func:`ftidx.positions._merge_positions`),
-    with ``<id>``
-    allocated from a reserved range (≥ 10^9) so a crashed stream
+    term, bucket); doclen as the victims' ``delta_doclen`` rows, one
+    per (doc_id, field); positions via
+    :func:`ftidx.positions._merge_positions`), with ``<id>`` allocated
+    from a reserved range (≥ 10^9) so a crashed stream
     replaying a real epoch id can never overwrite a merged tier.
     Victim dirs are removed only after every merged family is
     written, postings first and doclen LAST — the at-least-once
@@ -1010,6 +1097,7 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     if max_batches < 1:
         raise ValueError(f"max_batches must be >= 1, got {max_batches}")
     path = Path(index_path)
+    _require_version_2(path, "merge_delta_tier")
     deltas = path / "deltas"
     dirs = batch_dirs(deltas)
     if len(dirs) <= max_batches:
@@ -1025,13 +1113,14 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     merged_id = max([i for i in ids if i >= 10 ** 9], default=10 ** 9 - 1) + 1
 
     merged_dir = deltas / f"batch={merged_id}"
-    (spark.read.parquet(*[str(deltas / v) for v in victims])
-     .select(_POSTINGS_COLS).repartition("bucket")
+    (spark.read.schema(POSTINGS_SCHEMA).parquet(*[str(deltas / v) for v in victims])
+     .repartition("bucket")
      .mapInPandas(_bucket_local_merge, schema=POSTINGS_SCHEMA)
      .write.mode("overwrite").parquet(str(merged_dir)))
     ddl = path / "delta_doclen"
-    _doclen_rows(spark.read.parquet(str(merged_dir))).write.mode("overwrite") \
-        .parquet(str(ddl / f"batch={merged_id}"))
+    _dedup_doclen(spark.read.schema(DOCLEN_TABLE_SCHEMA).parquet(
+        *[str(ddl / v) for v in victims if (ddl / v).exists()])) \
+        .write.mode("overwrite").parquet(str(ddl / f"batch={merged_id}"))
     dpos = path / "delta_positions"
     v_pos = [str(dpos / v) for v in victims if (dpos / v).exists()]
     if v_pos:

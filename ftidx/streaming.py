@@ -12,12 +12,12 @@ checkpointed source offsets + idempotent partition overwrites.
 Design: the stream carries source-table rows (input_hint schema).
 Each micro-batch:
   1. tombstone routing (S7): deleted rows → tombstone table append;
-  2. live rows → the build's segment writer
-     (index._bucket_local_encode, one kernel per bucket after one
-     shuffle of the batch's docs) → per-batch postings DELTA written to
+  2. live rows → the build's segment writer (index._segment_pass:
+     one kernel per bucket after one shuffle of the batch's docs, its
+     output persisted once) → per-batch postings DELTA written to
      ``deltas/batch=<epoch>`` (append-only, never rewrites the base
-     index — the merge-on-read model); ``delta_doclen/batch=<epoch>``
-     is exploded from the delta's ``__dl__`` rows, as in build;
+     index — the merge-on-read model) and ``delta_doclen/batch=<epoch>``
+     from the same cached pass, as in build;
   3. query side (FtIndex + deltas) sees new docs after the batch
      commits; periodic compaction folds deltas into base buckets.
 
@@ -31,15 +31,14 @@ from __future__ import annotations
 
 import json
 import time
-from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ftidx.build import live_docs
-from ftidx.index import DOCS_FIELD, _bucket_local_encode, _doclen_rows, batch_dirs
-from ftidx.schema import POSTINGS_SCHEMA, SOURCE_SCHEMA, assert_schema
+from ftidx.index import _segment_pass, batch_dirs
+from ftidx.schema import SOURCE_SCHEMA, assert_schema
 
 
 def prepare_docs_hashid(source: DataFrame, n_buckets: int) -> DataFrame:
@@ -108,24 +107,19 @@ def index_microbatch(batch_df: DataFrame, epoch_id: int, index_path: str,
     # the build's segment writer over the batch's docs: the base
     # manifest's stem/shingle analyzers carry into every delta so those
     # fields stay complete across streamed docs (same parity rule as
-    # the positional deltas below). Streaming never stored __docs__.
+    # the positional deltas below). Streaming stores no docs table.
     man = json.loads((out / "_manifest.json").read_text()) \
         if (out / "_manifest.json").exists() else {}
     n_parts = max(min(n_buckets, int(spark.conf.get("spark.sql.shuffle.partitions"))), 1)
-    delta_dir = out / "deltas" / f"batch={epoch_id}"
-    (
-        live.repartition(n_parts, "bucket")
-        .mapInPandas(partial(_bucket_local_encode,
-                             stem_field=bool(man.get("stem_field", False)),
-                             shingle_field=bool(man.get("shingle_field", False))),
-                     schema=POSTINGS_SCHEMA)
-        .filter(F.col("field") != DOCS_FIELD)
-        .write.mode("overwrite").parquet(str(delta_dir))
-    )
-    # bucket kept: compaction resolves a tombstoned streamed id to its
-    # bucket through these rows (a hash id does not embed it)
-    _doclen_rows(spark.read.parquet(str(delta_dir))).write.mode("overwrite") \
-        .parquet(str(out / "delta_doclen" / f"batch={epoch_id}"))
+    with _segment_pass(live.repartition(n_parts, "bucket"),
+                       stem_field=bool(man.get("stem_field", False)),
+                       shingle_field=bool(man.get("shingle_field", False))) as seg:
+        seg.postings.write.mode("overwrite").parquet(
+            str(out / "deltas" / f"batch={epoch_id}"))
+        # bucket kept: compaction resolves a tombstoned streamed id to
+        # its bucket through these rows (a hash id does not embed it)
+        seg.doclen.write.mode("overwrite").parquet(
+            str(out / "delta_doclen" / f"batch={epoch_id}"))
     # positional parity for streamed docs (Solr soft-commit analog:
     # a doc visible to term queries is visible to phrase queries too):
     # when the base index carries positions, emit the batch's

@@ -25,9 +25,17 @@ checkpoint is ``{build_id, epochs_delivered}``:
   ``build_id``, after which epoch bookkeeping is meaningless — the
   poll REFUSES with a resubscribe message instead of silently
   re-delivering a 10^12-doc base (Solr topics likewise break when the
-  collection is reindexed). ``maintenance.compact`` folds the epochs
-  into the base without a new ``build_id``: an epoch not yet polled
-  when it runs is never delivered.
+  collection is reindexed);
+- ``maintenance.compact`` folds the epochs into the base without a new
+  ``build_id`` and appends their ids to ``_folded_epochs.json``, one
+  entry per compaction; the checkpoint also holds how many entries it
+  has seen. A poll whose checkpoint held every epoch folded since then
+  carries on; one that never saw a folded epoch REFUSES with the same
+  resubscribe message, since those docs no longer stand apart from the
+  base. That includes a tier-merged epoch folded before it was polled,
+  even when every epoch merged into it was delivered — a refusal,
+  never a loss. A folded id is free again afterwards: an epoch that
+  reuses it (the next tier merge, a restarted stream) is new.
 
 Scale shape: a poll is one term-pruned postings decode
 (``FtIndex._matched_ids`` — pushdown scan, executor-side varint
@@ -44,6 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ftidx.index import batch_dirs
+from ftidx.maintenance import fold_log
 
 
 def _epochs(index) -> list[int]:
@@ -79,6 +88,7 @@ def topic_poll(index, topic_id: str, terms: list[str],
     ck_path = ck_dir / f"{topic_id}.json"
     build_id = _build_id(index)
     current = _epochs(index)
+    folds = fold_log(index.path)
 
     matched = index._matched_ids(terms, field)
     if ck_path.exists():
@@ -92,6 +102,17 @@ def topic_poll(index, topic_id: str, terms: list[str],
                 "checkpoint and resubscribe (first poll re-delivers the "
                 "full match set)")
         delivered = set(state.get("epochs", []))
+        for folded in folds[state.get("folds", 0):]:
+            lost = folded - delivered
+            if lost:
+                raise ValueError(
+                    f"topic {topic_id!r}: compaction folded epoch(s) "
+                    f"{sorted(lost)} into the base before this topic polled "
+                    "them, so their docs no longer stand apart from the "
+                    "base; delete the checkpoint and resubscribe (first "
+                    "poll re-delivers the full match set)")
+            # their dirs are gone, so a later epoch may reuse the ids
+            delivered -= folded
         new = [e for e in current if e not in delivered]
         if not new:
             out = matched.limit(0)
@@ -101,11 +122,12 @@ def topic_poll(index, topic_id: str, terms: list[str],
             new_ids = (index.spark.read.parquet(*dirs)
                        .select("doc_id").distinct())
             out = matched.join(new_ids, "doc_id", "semi")
-        state["epochs"] = sorted(delivered | set(new))
     else:
         out = matched
-        state = {"build_id": build_id, "epochs": current,
-                 "topic_id": topic_id}
+    # every epoch present is delivered now; an epoch a tier merge
+    # removed re-delivers through the merged one
+    state = {"build_id": build_id, "epochs": current, "folds": len(folds),
+             "topic_id": topic_id}
     if fl:
         docs = index.spark.read.parquet(str(index.path / "docs"))
         cols = [c for c in fl if c != "doc_id"]

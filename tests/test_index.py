@@ -440,17 +440,17 @@ def test_streamed_merges_keep_pages(spark, tmp_path):
 def test_bucket_merge_matches_per_group_encode():
     """The per-bucket merge kernel equals the per-group reference —
     decode every segment, keep each doc once unless it is in the drop
-    set, encode_postings — for real and __dl__ rows alike; __docs__
-    rows are dropped."""
+    set, encode_postings — over term rows of two fields and two
+    buckets."""
     import pandas as pd
 
     from ftidx.codec import encode_postings
-    from ftidx.index import _POSTINGS_COLS, DOCS_FIELD, _bucket_local_merge
+    from ftidx.index import _POSTINGS_COLS, _bucket_local_merge
 
     rng = np.random.default_rng(3)
     rows, groups = [], {}
     for b in range(2):
-        for field in ("code.content", "__dl__code.content"):
+        for field in ("code.content", "code.path"):
             for term in ("alpha", "beta"):
                 ids = rng.choice(1 << 40, 300, replace=False).astype(np.uint64)
                 tfs, dls = (rng.integers(1, 500, 300).astype(np.uint64) for _ in range(2))
@@ -459,16 +459,13 @@ def test_bucket_merge_matches_per_group_encode():
                     rows.append({"term": term, "field": field, "bucket": b,
                                  **encode_postings(ids[sl], tfs[sl], dls[sl])})
                 groups[(term, field, b)] = (ids, tfs, dls)
-    rows.append({"term": "*", "field": DOCS_FIELD, "bucket": 0, "df": 1, "cf": 0,
-                 "doc_ids": b"", "tfs": b"", "dls": b"meta", "block_max_tf": [],
-                 "block_min_dl": [], "block_last_docid": []})
     pdf = pd.DataFrame(rows)[_POSTINGS_COLS].sample(frac=1, random_state=1)
     every = np.concatenate([ids for ids, _, _ in groups.values()])
     for drop in (None, every[every % 3 == 0].astype(np.int64)):
         out = pd.concat(list(_bucket_local_merge([pdf.iloc[:5], pdf.iloc[5:]],
                                                  drop=drop)))
         got = {(r["term"], r["field"], r["bucket"]): r for r in out.to_dict("records")}
-        assert got.keys() == groups.keys()  # no __docs__ row
+        assert got.keys() == groups.keys()
         for key, (ids, tfs, dls) in groups.items():
             keep = np.ones(ids.size, bool) if drop is None else ids % 3 != 0
             w = encode_postings(ids[keep], tfs[keep], dls[keep])
@@ -1965,9 +1962,10 @@ def test_metrics(spark, built):
 
 
 def test_dunder_terms_survive_vocab_surfaces(spark, tmp_path):
-    """Pseudo transport rows are FIELD-keyed ('__dl__', '__docs__');
-    real dunder tokens like __init__ must stay visible to every
-    vocabulary surface (wildcard, range, fuzzy, page term vectors)."""
+    """Real dunder tokens like __init__ stay visible to every
+    vocabulary surface (wildcard, range, fuzzy, page term vectors):
+    no reader filters terms or fields by a ``__`` prefix, and the
+    build's doclen and docs transport rows never reach postings."""
     src = synth_source(spark, 60).withColumn(
         "content", F.concat(F.lit("__init__ __main__ "), F.col("content")))
     out = str(tmp_path / "dunder")
@@ -2351,7 +2349,8 @@ def test_termstats_probe_and_staleness(spark, tmp_path, monkeypatch):
     assert idx._df_total(["def"], "code.content") == got_def
 
 
-def test_open_index_launches_no_spark_job(spark, tmp_path, monkeypatch):
+def test_open_index_launches_no_spark_job(spark, spark_jobs, tmp_path,
+                                          monkeypatch):
     """Opening a handle reads the driver-sized tables (stats,
     tombstones) with pyarrow and hands every Spark reader its known
     schema: an index with tombstones, positions and termstats and no
@@ -2368,13 +2367,8 @@ def test_open_index_launches_no_spark_job(spark, tmp_path, monkeypatch):
     victims = [d for d, _ in writer.topk(["def"], k=2)]
     writer.delete(victims[:1])
     writer.delete(victims[1:])
-    sc = spark.sparkContext
-    sc.setJobGroup("open-index", "open_index")
-    try:
-        idx = open_index(spark, out)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("open-index") == []
+    idx, jobs = spark_jobs(lambda: open_index(spark, out))
+    assert jobs == []
     assert idx._tombstones == frozenset(victims)
     assert idx.stats == writer.stats
     assert idx._termstats is not None and idx._positions is not None
@@ -2384,6 +2378,69 @@ def test_open_index_launches_no_spark_job(spark, tmp_path, monkeypatch):
     assert idx.topk(["def", "value"], k=8) == writer.topk(["def", "value"], k=8)
     assert idx.phrase_topk(["def", "value"], k=5) == \
         writer.phrase_topk(["def", "value"], k=5)
+
+
+def test_delete_launches_no_spark_job(spark, spark_jobs, tmp_path):
+    """delete() appends its tombstone file driver-side with pyarrow:
+    no Spark job. refresh() and compact's recursive Spark reader both
+    read the file, and compact removes the deleted docs."""
+    from ftidx.maintenance import compact
+
+    out = str(tmp_path / "idx")
+    build_index(spark, synth_source(spark, 60), out, n_buckets=2)
+    idx = open_index(spark, out)
+    victims = [d for d, _ in idx.topk(["def"], k=2)]
+    _, jobs = spark_jobs(lambda: (idx.delete(victims[:1]),
+                                  idx.delete(victims[1:])))
+    assert jobs == []
+    assert idx._tombstones == frozenset(victims)
+    assert open_index(spark, out)._tombstones == frozenset(victims)
+    assert not set(victims) & {d for d, _ in idx.topk(["def"], k=1000)}
+    assert compact(spark, out)["docs_removed"] == 2
+    assert not (tmp_path / "idx" / "tombstones").exists()
+    reopened = open_index(spark, out)
+    assert reopened._tombstones == frozenset()
+    assert not set(victims) & {d for d, _ in reopened.topk(["def"], k=1000)}
+
+
+def _table_rows(path, table) -> list:
+    """A bucket table's rows (partition value included), sorted."""
+    import pyarrow.parquet as pq
+
+    return sorted((tuple(sorted(r.items())) for r in
+                   pq.read_table(f"{path}/{table}").to_pylist()), key=repr)
+
+
+def test_build_resumes_after_kill_between_postings_and_doclen(
+        spark, tmp_path, monkeypatch):
+    """A build killed after its postings write and before the doclen
+    and docs writes (the ledger has no "done" row yet) resumes to
+    tables row-for-row equal to a clean build's."""
+    import ftidx.index
+
+    src = synth_source(spark, 90).cache()
+    clean, run = str(tmp_path / "clean"), str(tmp_path / "run")
+    build_index(spark, src, clean, n_buckets=2, store_content=True)
+
+    write = ftidx.index._write_bucket_table
+
+    def killed(df, table):
+        if table.name in ("doclen", "docs"):
+            raise RuntimeError(f"killed before the {table.name} write")
+        write(df, table)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(ftidx.index, "_write_bucket_table", killed)
+        with pytest.raises(RuntimeError, match="killed before"):
+            build_index(spark, src, run, n_buckets=2, store_content=True)
+    assert (tmp_path / "run" / "postings").exists()
+    assert not (tmp_path / "run" / "doclen").exists()
+    assert build_index(spark, src, run, n_buckets=2, store_content=True)[
+        "built"] == [0, 1]
+    for table in ("postings", "doclen", "docs", "stored", "stats"):
+        assert _table_rows(run, table) == _table_rows(clean, table), table
+    assert open_index(spark, run).topk(["def", "value"], k=10) == \
+        open_index(spark, clean).topk(["def", "value"], k=10)
 
 
 def test_fat_fetch_semaphore_path_correct(spark, built):

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ftidx.index import build_index, open_index
-from ftidx.maintenance import compact, upsert
+from ftidx.maintenance import compact, fold_log, upsert
 from ftidx.synth import synth_source
 
 
@@ -590,10 +590,32 @@ def test_upsert_refreshes_stored_partitions(spark, tmp_path):
     assert spark.read.parquet(f"{out}/stored").count() == n_live
 
 
+def _transport_rows(path) -> int:
+    """postings and deltas rows whose field is a build transport tag."""
+    import pyarrow.parquet as pq
+
+    files = [f for t in ("postings", "deltas") if (Path(path) / t).exists()
+             for f in (Path(path) / t).rglob("*.parquet")]
+    assert files
+    return sum(f.startswith("__") for p in files
+               for f in pq.ParquetFile(p).read(columns=["field"])
+               .column("field").to_pylist())
+
+
+def _doclen_set(path, *tables) -> set:
+    import pyarrow.parquet as pq
+
+    return {(r["doc_id"], r["field"], r["len"], int(r["bucket"]))
+            for t in tables if (Path(path) / t).exists()
+            for r in pq.read_table(Path(path) / t).to_pylist()}
+
+
 def test_merge_delta_tier_preserves_queries(spark, tmp_path):
     """Tier-merging the smallest delta batches must leave every query
     result identical, cut the batch-dir count to max_batches, and stay
-    compatible with a later full compaction."""
+    compatible with a later full compaction. No step stores a doclen or
+    docs transport row in postings or deltas; the merges carry doclen
+    over from the doclen tables."""
     from ftidx.index import FtIndex
     from ftidx.maintenance import merge_delta_tier
     from ftidx.streaming import index_microbatch
@@ -601,12 +623,15 @@ def test_merge_delta_tier_preserves_queries(spark, tmp_path):
     out = str(tmp_path / "idx")
     base_src = synth_source(spark, 120)
     build_index(spark, base_src, out, n_buckets=4, hot_df_threshold=50)
+    assert _transport_rows(out) == 0
     extra = synth_source(spark, 220).join(
         base_src.select("repo", "path"), ["repo", "path"], "left_anti"
     ).cache()
     for e in range(4):
         b = extra.filter(F.xxhash64("path") % 4 == e)
         index_microbatch(b, e, out, n_buckets=4)
+    assert _transport_rows(out) == 0
+    doclen = _doclen_set(out, "doclen", "delta_doclen")
 
     idx = FtIndex(spark, out)
     before = idx.topk(["def", "alpha"], k=10)
@@ -621,6 +646,8 @@ def test_merge_delta_tier_preserves_queries(spark, tmp_path):
     assert len(res["merged"]) == 3 and res["into"] == "batch=1000000000"
     ddirs = sorted(p.name for p in (tmp_path / "idx" / "deltas").iterdir())
     assert len(ddirs) == 2 and "batch=1000000000" in ddirs
+    assert _transport_rows(out) == 0
+    assert _doclen_set(out, "doclen", "delta_doclen") == doclen
 
     idx.refresh()
     after = idx.topk(["def", "alpha"], k=10)
@@ -635,6 +662,8 @@ def test_merge_delta_tier_preserves_queries(spark, tmp_path):
 
     # full compaction still lands on the same answers
     compact(spark, out)
+    assert _transport_rows(out) == 0
+    assert _doclen_set(out, "doclen") == doclen
     idx.refresh()
     plain = idx.topk(["def", "alpha"], 10)
     assert [d for d, _ in plain] == [d for d, _ in before]
@@ -765,10 +794,11 @@ def test_split_and_merge_children_get_routing_stats(spark, tmp_path,
 
 
 # compact's step boundaries, in order: the tombstone id map is on disk,
-# each bucket table is rewritten, stats are written, the delta tables
-# are gone, the tombstone table is replaced
+# each bucket table is rewritten (concurrently; doclen from the doclen
+# tables, not from postings), stats are written, the folded epochs are
+# recorded, the delta tables are gone, the tombstone table is replaced
 COMPACT_FAULT_POINTS = ["idmap", "postings", "doclen", "docs", "stored",
-                        "positions", "stats", "deltas", "tombstones"]
+                        "positions", "stats", "epochs", "deltas", "tombstones"]
 _UNRESOLVED = 999_999_999_999_999_999
 
 
@@ -793,6 +823,7 @@ def _fail_after(mp, point):
     after("_resolve_ids", lambda *a: "idmap")
     after("_overwrite_buckets", lambda df, table, buckets: table.name)
     after("write_stats", lambda *a: "stats")
+    after("_record_folded_epochs", lambda *a: "epochs")
     after("_drop_deltas", lambda *a: "deltas")
     after("_replace_tombstones", lambda *a: "tombstones")
 
@@ -864,7 +895,8 @@ def streamed_deletes(spark, tmp_path_factory):
                        "exhaustive": want(["def", "alpha"], 10),
                        "phrase": want(["plain", "words"], 50, phrase=True)},
             "pages": _compact_pages(spark, clean, victims),
-            "tables": {t: _rows(clean, t) for t in _COMPACT_TABLES}}
+            "tables": {t: _rows(clean, t) for t in _COMPACT_TABLES},
+            "folded": fold_log(Path(clean))}
 
 
 def _compact_pages(spark, path, victims):
@@ -877,6 +909,22 @@ def _compact_pages(spark, path, victims):
     assert not served & set(victims)
     assert idx.highlight(victims, ["plain", "words"]) == {v: [] for v in victims}
     return pages
+
+
+# Spark jobs of the fixture's compaction. It launched 20 while its
+# readers inferred each table's schema (one single-task job per read).
+COMPACT_MAX_JOBS = 14
+
+
+def test_compact_job_count(spark, spark_jobs, streamed_deletes):
+    """compact hands every index-table reader its schema, so it runs
+    no schema-inference job: pinned as an upper bound on the jobs of
+    the fixture's compaction (stored, positional, one streamed batch,
+    resolved and unresolved tombstones)."""
+    run = str(streamed_deletes["root"] / "job-count")
+    shutil.copytree(streamed_deletes["template"], run)
+    _, jobs = spark_jobs(lambda: compact(spark, run))
+    assert 0 < len(jobs) <= COMPACT_MAX_JOBS
 
 
 @pytest.mark.parametrize("point", COMPACT_FAULT_POINTS)
@@ -898,6 +946,7 @@ def test_compact_resumes_after_fault(spark, streamed_deletes, point,
 
     for table, want in s["tables"].items():
         assert _rows(run, table) == want, table
+    assert fold_log(Path(run)) == s["folded"] == [{0}]  # appended once
     assert not any((s["root"] / f"fault-{point}" / d).exists() for d in
                    ("_compact_idmap", "deltas", "delta_doclen", "delta_positions"))
     pages = _compact_pages(spark, run, s["victims"])
@@ -907,3 +956,23 @@ def test_compact_resumes_after_fault(spark, streamed_deletes, point,
         assert page and [d for d, _ in page] == [d for d, _ in want], name
         for (_, got), (_, exp) in zip(page, want):
             assert got == pytest.approx(exp, rel=1e-9)
+
+
+def test_version_1_index_is_refused(spark, tmp_path):
+    """A version-1 index keeps doclen and docs transport rows in its
+    postings and deltas: resuming its build, compacting it and
+    tier-merging its deltas are all refused."""
+    import json
+
+    from ftidx.maintenance import merge_delta_tier
+
+    (tmp_path / "_manifest.json").write_text(json.dumps(
+        {"n_buckets": 4, "version": 1, "status": "building"}))
+    with pytest.raises(ValueError, match="resume with mismatched params"):
+        build_index(spark, synth_source(spark, 10), str(tmp_path), n_buckets=4)
+    with pytest.raises(ValueError, match="compact: index format version 1 "
+                       "predates version 2"):
+        compact(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="merge_delta_tier: index format "
+                       "version 1 predates version 2"):
+        merge_delta_tier(spark, str(tmp_path), max_batches=1)

@@ -2,7 +2,10 @@
 modules call the posting and position encoders. Build, micro-batches,
 compaction and tier merges all go through ``index.py``'s and
 ``positions.py``'s kernels, so a second per-row re-encoder elsewhere
-has to be a deliberate edit here."""
+has to be a deliberate edit here. The build kernel's transport rows
+(doc lengths and docs metadata, tagged by field) are known only to
+that writer, which routes them to their own tables: no reader filters
+them out of postings, because no stored table holds one."""
 
 from __future__ import annotations
 
@@ -36,3 +39,40 @@ def test_only_the_writer_modules_call_the_encoders():
             if name in ENCODERS:
                 found.setdefault(py.name, []).append(name)
     assert found == {}
+
+
+TRANSPORT_TAGS = {"DOCS_FIELD", "DOCLEN_FIELD_PREFIX", "PSEUDO_PREFIX"}
+TRANSPORT_LITERALS = {"__dl__", "__docs__", "__"}
+# the kernel that emits the transport rows and the two functions that
+# route them into the doclen and docs tables
+TAG_WRITERS = {"_bucket_local_encode", "_explode_doclen", "_segment_pass"}
+
+
+def _is_tag_definition(node: ast.stmt) -> bool:
+    return isinstance(node, ast.Assign) and all(
+        isinstance(t, ast.Name) and t.id in TRANSPORT_TAGS for t in node.targets)
+
+
+def test_only_the_writer_knows_the_transport_tags():
+    found: list[str] = []
+    for py in sorted(FTIDX.glob("*.py")):
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for top in tree.body:
+            if py.name == "index.py" and (
+                    _is_tag_definition(top)
+                    or isinstance(top, ast.FunctionDef) and top.name in TAG_WRITERS):
+                continue
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                elif isinstance(node, ast.alias):
+                    name = node.name
+                elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    name = node.value if node.value in TRANSPORT_LITERALS else None
+                else:
+                    continue
+                if name in TRANSPORT_TAGS | TRANSPORT_LITERALS:
+                    found.append(f"{py.name}:{getattr(node, 'lineno', '?')} {name}")
+    assert found == []

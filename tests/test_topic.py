@@ -87,3 +87,109 @@ def test_topic_refuses_after_base_rewrite(spark, base, tmp_path):
         topic_poll(idx2, "t", ["def"], ck)
     with pytest.raises(ValueError, match="empty term"):
         topic_poll(idx2, "t", [], ck)
+
+
+def _stream(spark, out, epoch, lo, hi):
+    """Stream synth files [lo, hi) in as micro-batch ``epoch``."""
+    batch = synth_source(spark, hi, partitions=2).subtract(
+        synth_source(spark, lo, partitions=2))
+    index_microbatch(batch, epoch, out, n_buckets=4)
+
+
+def test_topic_refuses_after_compact_folds_unpolled_epoch(spark, base, tmp_path):
+    """compact folds epoch 1 into the base before topic "t" polled it:
+    the next poll refuses (its docs can no longer be told apart from
+    the base) instead of returning nothing. A subscriber that first
+    polls after the compaction carries on normally."""
+    from ftidx.maintenance import compact
+
+    out, _ = base
+    ck = str(tmp_path / "ck")
+    idx = FtIndex(spark, out)
+    topic_poll(idx, "t", ["def"], ck)
+    _stream(spark, out, 0, 80, 110)
+    idx.refresh()
+    assert _ids(topic_poll(idx, "t", ["def"], ck))  # epoch 0 delivered
+    before = _ids(idx._matched_ids(["def"], "code.content"))
+    _stream(spark, out, 1, 110, 140)
+    idx.refresh()
+    now = _ids(idx._matched_ids(["def"], "code.content"))
+    assert now - before  # epoch 1 matches docs "t" has not been sent
+    assert _ids(topic_poll(idx, "fresh", ["def"], ck)) == now
+    compact(spark, out)
+    idx.refresh()
+    with pytest.raises(ValueError, match=r"folded epoch\(s\) \[1\].*resubscribe"):
+        topic_poll(idx, "t", ["def"], ck)
+    # "fresh" saw both epochs before they were folded
+    assert _ids(topic_poll(idx, "fresh", ["def"], ck)) == set()
+    # a first poll after the compaction checkpoints the folded epochs
+    late = _ids(topic_poll(idx, "late", ["def"], ck))
+    assert late == _ids(idx._matched_ids(["def"], "code.content"))
+    _stream(spark, out, 2, 140, 170)
+    idx.refresh()
+    new = _ids(topic_poll(idx, "late", ["def"], ck))
+    assert new and new == _ids(idx._matched_ids(["def"], "code.content")) - late
+
+
+def test_topic_carries_on_after_compact_of_delivered_epochs(spark, base, tmp_path):
+    """Every folded epoch was already delivered: polls after compact
+    carry on — nothing re-delivers, and a later epoch delivers only
+    its own docs."""
+    from ftidx.maintenance import compact
+
+    out, _ = base
+    ck = str(tmp_path / "ck")
+    idx = FtIndex(spark, out)
+    seen = _ids(topic_poll(idx, "t", ["def"], ck))
+    _stream(spark, out, 0, 80, 120)
+    idx.refresh()
+    seen |= _ids(topic_poll(idx, "t", ["def"], ck))
+    compact(spark, out)
+    idx.refresh()
+    assert _ids(topic_poll(idx, "t", ["def"], ck)) == set()
+    assert seen == _ids(idx._matched_ids(["def"], "code.content"))
+    _stream(spark, out, 1, 120, 150)
+    idx.refresh()
+    new = _ids(topic_poll(idx, "t", ["def"], ck))
+    assert new and new == _ids(idx._matched_ids(["def"], "code.content")) - seen
+
+
+def test_topic_delivers_epochs_that_reuse_folded_ids(spark, base, tmp_path):
+    """compact removes the delta dirs, so ids come back: the next tier
+    merge allocates the first reserved id again, and a restarted stream
+    counts from epoch 0 again. Docs under a reused id are new, both to
+    a topic that first polled after the compaction and to one that had
+    delivered the id's earlier docs."""
+    from ftidx.maintenance import compact, merge_delta_tier
+
+    out, _ = base
+    ck = str(tmp_path / "ck")
+    idx = FtIndex(spark, out)
+    topic_poll(idx, "old", ["def"], ck)
+    _stream(spark, out, 0, 80, 100)
+    _stream(spark, out, 1, 100, 120)
+    assert merge_delta_tier(spark, out, max_batches=1)["into"] == "batch=1000000000"
+    idx.refresh()
+    old = _ids(topic_poll(idx, "old", ["def"], ck))
+    compact(spark, out)
+    idx.refresh()
+    late = _ids(topic_poll(idx, "late", ["def"], ck))
+    assert old < late == _ids(idx._matched_ids(["def"], "code.content"))
+
+    _stream(spark, out, 2, 120, 140)
+    _stream(spark, out, 3, 140, 160)
+    assert merge_delta_tier(spark, out, max_batches=1)["into"] == "batch=1000000000"
+    idx.refresh()
+    new = _ids(idx._matched_ids(["def"], "code.content")) - late
+    assert new
+    assert _ids(topic_poll(idx, "late", ["def"], ck)) == new
+    assert _ids(topic_poll(idx, "old", ["def"], ck)) == new
+
+    # fold the reused tier id too, then a restarted stream's epoch 0
+    compact(spark, out)
+    _stream(spark, out, 0, 160, 190)
+    idx.refresh()
+    newer = _ids(idx._matched_ids(["def"], "code.content")) - late - new
+    assert newer
+    assert _ids(topic_poll(idx, "late", ["def"], ck)) == newer
+    assert _ids(topic_poll(idx, "old", ["def"], ck)) == newer
