@@ -1422,7 +1422,8 @@ def _term_contribs(docs_frame, terms: list[str]):
     """Per-(doc, term) BM25 contributions over ONE field frame
     (doc_id, text) with that field's OWN tf/dl/df/avgdl statistics —
     the un-aggregated sibling of _bm25_scored, for per-term dismax
-    combination (engine twin FtIndex._term_scored_df)."""
+    combination (engine twin: the per-term dismax groups of the
+    ScorePlan FtIndex.edismax builds)."""
     tok = (
         docs_frame
         .select("doc_id", F.explode(F.split(F.lower("text"), "[^a-z0-9_]+")).alias("term"))
@@ -2702,7 +2703,7 @@ def q_bm25_min_match(spark, sf_dir):
     # minimum-should-match (Solr/edismax mm=2): docs matching at least
     # 2 of the 3 query terms, ranked by the BM25 sum over matched
     # terms — engine twin: FtIndex.topk(min_match=2) via
-    # wand.score_boolean(min_match=)
+    # wand.run_plan's mm floor (ScorePlan.mm)
     tok = _tokens(spark, sf_dir)
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
@@ -2734,7 +2735,7 @@ def q_bm25_dismax(spark, sf_dir):
     # dismax tie-breaker (Solr tie=0.1): per-field scores combined as
     # max + tie·(sum − max) instead of the pure sum — fields are the
     # content BM25 and the lang='en' keyword pseudo-field of
-    # bm25_multifield; engine twin: wand.score_dismax /
+    # bm25_multifield; engine twin: wand.run_plan dismax group /
     # FtIndex.topk_fields(tie=)
     content = _bm25_scored(spark, sf_dir)
     docs = _docs(spark, sf_dir)

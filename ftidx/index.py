@@ -61,9 +61,9 @@ from ftidx.build import DEFAULT_BUCKETS, live_docs, prepare_docs
 from ftidx.codec import (decode_postings, delta_decode_runs, encode_many,
                          encode_postings, varint_decode)
 from ftidx.schema import CHECKPOINT_SCHEMA, POSTINGS_SCHEMA
-from ftidx.wand import (TermList, _topk_from_scores, bm25_contrib, bm25_idf,
-                        filter_matches, merge_group, score_all,
-                        score_block_max, score_boolean, score_exhaustive)
+from ftidx.wand import (MUST, SCORE, SHOULD, Clause, ScorePlan, TermList,
+                        _topk_from_scores, bm25_idf, merge_group, run_plan,
+                        score_all)
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 
@@ -82,15 +82,17 @@ DRIVER_SCORE_MAX_DOCS = 2_000_000
 TERMSTATS_MIN_DOCS = 1_000_000
 
 
-def _drop_tombstones(ids: np.ndarray, scores: np.ndarray, tombs: frozenset):
+def _drop_tombstones(ids: np.ndarray, scores: np.ndarray, tombs: frozenset,
+                     *more: np.ndarray):
     """The one tombstone filter over scored docs, on the driver
     (:meth:`FtIndex._live_topk`) and inside per-bucket closures, which
-    receive the handle's snapshot. No work when there are none."""
+    receive the handle's snapshot: (ids, scores, *more) of the live
+    docs. No work when there are none."""
     if not tombs:
-        return ids, scores
+        return (ids, scores, *more)
     keep = ~np.isin(ids.astype(np.int64),
                     np.fromiter(tombs, np.int64, len(tombs)))
-    return ids[keep], scores[keep]
+    return tuple(a[keep] for a in (ids, scores, *more))
 
 
 def _align(sorted_ids: np.ndarray, probe: np.ndarray):
@@ -101,6 +103,38 @@ def _align(sorted_ids: np.ndarray, probe: np.ndarray):
         return np.zeros(probe.size, bool), np.zeros(probe.size, np.intp)
     pos = np.minimum(np.searchsorted(sorted_ids, probe), sorted_ids.size - 1)
     return sorted_ids[pos] == probe, pos
+
+
+def edismax_plan(terms, qf: dict[str, float], tie: float, mm: int,
+                 bq: dict[str, float] | None) -> ScorePlan:
+    """edismax's qf/tie/mm/bq as one plan: each distinct term a dismax
+    group over the qf fields, each bq term a SCORE clause on the first."""
+    fields = sorted(qf)
+    return ScorePlan(
+        tuple(Clause(f, t, float(qf[f]), SHOULD, t)
+              for t in dict.fromkeys(terms) for f in fields)
+        + tuple(Clause(fields[0], t, float(w), SCORE)
+                for t, w in sorted((bq or {}).items())),
+        tie=float(tie), mm=int(mm))
+
+
+def edismax_finish(scored: DataFrame, docs: DataFrame | None, keys: list[str],
+                   bf: str | None, boost: str | None, k: int) -> DataFrame:
+    """edismax's tail over a ``_plan_df(..., base=True)`` frame: the
+    plan's score (bq included) plus ``bf``, times ``boost``, joined on
+    ``keys`` to ``docs``; (final DESC, keys ASC) cut to ``k``, with
+    ``score`` the dismax base."""
+    final = F.col("final0")
+    scored = scored.withColumnRenamed("score", "final0")
+    if docs is not None:
+        scored = scored.join(docs, keys)
+        if bf is not None:
+            final = final + F.expr(bf).cast("double")
+        if boost is not None:
+            final = final * F.expr(boost).cast("double")
+    return (scored.withColumn("final", final)
+            .orderBy(F.desc("final"), *map(F.asc, keys)).limit(k)
+            .select(*keys, F.col("base").alias("score"), "final"))
 
 
 # Field tags of the build kernel's transport rows. Only the writer
@@ -887,12 +921,17 @@ def assemble_wordbreak(qs: list[str], dfs: dict[str, int],
 class FtIndex:
     """Query-side handle on a persisted index.
 
-    ``topk`` collects the (few, term-filtered) postings rows to the
-    driver and scores in numpy — the low-latency path; parquet
+    Every bag-of-words surface (``topk``, ``topk_fields``,
+    ``topk_boost_query``, term-only ``query_string``, ``edismax`` and the
+    DataFrame surfaces) builds one :class:`~ftidx.wand.ScorePlan` and
+    hands it to one evaluator, :func:`~ftidx.wand.run_plan`, in one of
+    two places: on the driver over the term cache (collected,
+    term-filtered postings rows — the low-latency path; parquet
     row-group stats + dictionary filters make the term predicate an
-    efficient pushdown. ``topk_distributed`` scores per bucket inside
-    executors and take-orders globally — the 100 TB path where even
-    one term's postings exceed driver memory.
+    efficient pushdown), or per bucket inside the executors
+    (:meth:`_plan_df`) with a global take-ordered cut — the 100 TB path
+    where even one term's postings exceed driver memory. The df probe
+    picks between them (:meth:`_score_plan`).
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -929,13 +968,13 @@ class FtIndex:
         self._result_misses = 0
         # fat-corpus query routing (the 32M-file probe's finding): a
         # hot term at n_docs=32M has df in the millions, and the
-        # driver-kernel path COLLECTS its full postings — ~100 s for
-        # one cold query.  Above this doc count, cold queries score in
-        # the executors (topk_distributed — same kernels, same boolean
-        # surface, one task per bucket, k rows per bucket to the
-        # driver); below it the driver kernel plus its caches stays
-        # the low-latency serving path.  The queryResultCache applies
-        # to both, so repeat queries stay O(µs) either way.
+        # driver path COLLECTS its full postings — ~100 s for one cold
+        # query.  Above this doc count, a plan whose probed df exceeds
+        # it scores in the executors (_plan_df — the same evaluator,
+        # one task per bucket, k rows per bucket to the driver); below
+        # it the driver evaluator plus its caches stays the
+        # low-latency serving path.  The queryResultCache applies to
+        # both, so repeat queries stay O(µs) either way.
         self._driver_score_max_docs = DRIVER_SCORE_MAX_DOCS
         # guards ALL cache bookkeeping (term/filter/result caches,
         # counters) and handle-state swaps (refresh) in SHORT critical
@@ -946,12 +985,15 @@ class FtIndex:
         self._cache_lock = threading.RLock()
         # df-probe cache for fat-corpus routing: (field, term) → total
         # df (an int — postings-free, so memory is negligible).  Lets
-        # _topk_uncached keep thin-term queries on the driver kernel
-        # when the corpus itself is over the doc budget.
+        # _score_plan keep thin-term queries on the driver evaluator
+        # when the corpus itself is over the doc budget, and gives
+        # _plan_df its global idfs.
         self._df_cache: OrderedDict[tuple[str, str], int] = OrderedDict()
-        # giant-collect throttle: query surfaces without a distributed
-        # fallback (query_string/edismax/LTR/phrase call _term_lists
-        # directly) legitimately collect fat postings at a fat corpus.
+        # giant-collect throttle: the surfaces that still collect
+        # postings on the driver whatever their size (phrase/near,
+        # query strings with phrases or multi-term expansions, rerank,
+        # LTR, explain, facet_queries) legitimately collect fat
+        # postings at a fat corpus.
         # N serving threads doing that CONCURRENTLY multiplied the
         # driver working set N× — the round-5 serving bench OOM-killed
         # a 78 GB driver exactly this way.  Fetches whose probed df
@@ -1025,13 +1067,13 @@ class FtIndex:
         # delta doclen shifts the collection stats (n_docs, avgdl):
         # recompute across base + delta — a cheap agg over two skinny
         # tables, only paid when deltas exist
-        ddl = read_batches(spark, self.path / "delta_doclen")
+        ddl = read_batches(spark, self.path / "delta_doclen", DOCLEN_TABLE_SCHEMA)
         if ddl is not None:
             frames = [ddl.select("doc_id", "field", "len")]
             dl_dir = self.path / "doclen"
             if dl_dir.exists() and any(dl_dir.iterdir()):
-                frames.append(spark.read.parquet(str(dl_dir))
-                              .select("doc_id", "field", "len"))
+                frames.append(spark.read.schema(DOCLEN_TABLE_SCHEMA)
+                              .parquet(str(dl_dir)).select("doc_id", "field", "len"))
             dl = frames[0] if len(frames) == 1 else frames[0].unionByName(frames[1])
             self.stats = {
                 r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
@@ -1125,15 +1167,16 @@ class FtIndex:
                 unresolved = []
                 for t in pending:
                     key = (field, t)
-                    if key in self._term_cache:
-                        rows = self._term_cache.pop(key)  # re-insert → most recent
-                        self._cache_bytes -= _entry_cost(rows)
-                    elif t in grouped:
-                        rows = grouped[t]
-                    else:
+                    rows = self._term_cache.get(key)
+                    if rows is not None:
+                        # a hit keeps its cost: only its LRU slot moves
+                        self._term_cache.move_to_end(key)
+                        out[t] = rows
+                        continue
+                    if t not in grouped:
                         unresolved.append(t)
                         continue
-                    out[t] = rows
+                    rows = out[t] = grouped[t]
                     # per-entry cap: a single huge entry (fat term
                     # collected under a generous routing budget) would
                     # evict the WHOLE cache for one query's benefit —
@@ -1167,15 +1210,13 @@ class FtIndex:
             # fat-corpus guard: at a corpus over the routing budget,
             # probe the fetch's total df first (cheap termstats read)
             # and serialize GIANT collects through the big-fetch lock —
-            # callers on this path (query_string/edismax/LTR/phrase)
+            # callers on this path (phrase/rerank/LTR, see __init__)
             # have no distributed fallback, so the fetch must happen,
             # but not 16× concurrently
             n_docs_f, _ = self.stats.get(field, (0, 1.0))
-            fat_fetch = False
-            if n_docs_f > self._driver_score_max_docs:
-                dft = self._df_total(unresolved, field)
-                fat_fetch = (dft is None
-                             or dft > self._driver_score_max_docs)
+            fat_fetch = (n_docs_f > self._driver_score_max_docs
+                         and self._df_total(unresolved, field)
+                         > self._driver_score_max_docs)
             if fat_fetch:
                 self._big_fetch_lock.acquire()
             try:
@@ -1196,15 +1237,15 @@ class FtIndex:
             pending = unresolved
 
     def _term_lists(self, terms: list[str], field: str):
-        qterms = sorted(set(terms))
-        by_term = self._fetch_term_rows(qterms, field)
+        """(TermLists of the ``terms`` present in ``field``, avgdl) from
+        the term cache."""
         n_docs, avgdl = self.stats.get(field, (0, 1.0))
         lists = []
-        for term, trows in by_term.items():
-            if not trows:
-                continue
-            df_global = sum(int(r["df"]) for r in trows)
-            lists.append(TermList(term, trows, bm25_idf(n_docs, df_global)))
+        for term, trows in self._fetch_term_rows(sorted(set(terms)), field).items():
+            if trows:
+                tl = TermList(term, trows, 0.0)
+                tl.idf = bm25_idf(n_docs, tl.df)
+                lists.append(tl)
         return lists, avgdl
 
     def _live_topk(self, ids: np.ndarray, scores: np.ndarray, k: int,
@@ -1262,93 +1303,108 @@ class FtIndex:
                     self._result_cache_bytes -= 40 * len(old) + 96
         return list(out)
 
-    def _df_total(self, terms: list[str], field: str) -> int | None:
-        """Total df across ``terms`` via the df-probe cache; one cheap
-        (term, df)-column aggregate fills misses.  The fat-corpus
-        router uses this to keep THIN-term queries on the driver
-        kernel: routing on corpus size alone sent a df=100 rare-term
-        query through a full distributed scoring job when collecting
-        its few hundred postings is the same latency as the probe and
-        seeds the term cache for every later query sharing the term
-        (the concurrent-serving bench's finding).  df values are ints:
-        the cache is tiny (LRU 64k entries) and NEVER holds postings."""
+    def _df_total(self, terms: list[str], field: str) -> int:
+        """Total global df of ``terms`` in ``field`` (see :meth:`_term_dfs`)."""
+        return sum(self._term_dfs([(field, t) for t in terms]).values())
+
+    def _term_dfs(self, pairs) -> dict[tuple[str, str], int]:
+        """Global df of each (field, term) pair via the df-probe cache;
+        one cheap (field, term, df)-column aggregate fills every miss,
+        across fields. The router uses it to keep THIN-term queries on
+        the driver kernel (collecting a few hundred postings costs what
+        the probe does and seeds the term cache), and the per-bucket
+        executor takes its global idfs and sum order from it. df values
+        are ints: the cache is tiny (LRU 64k entries) and NEVER holds
+        postings."""
+        pairs = list(dict.fromkeys(pairs))
         with self._cache_lock:
-            missing = [t for t in terms if (field, t) not in self._df_cache]
-        if missing:
-            if self._termstats is not None:
-                # skinny sorted (field, term, df_total) table — probe
-                # prunes to a couple of row groups; deltas (absent from
-                # termstats) contribute via a small delta-only aggregate
-                fetched = {
-                    r["term"]: int(r["df_total"])
-                    for r in self._termstats.filter(
-                        (F.col("field") == field)
-                        & F.col("term").isin(missing)).collect()
-                }
-                if self._delta_postings is not None:
-                    for r in (self._delta_postings.filter(
-                            (F.col("field") == field)
-                            & F.col("term").isin(missing))
-                            .groupBy("term").agg(F.sum("df").alias("d"))
-                            .collect()):
-                        fetched[r["term"]] = fetched.get(r["term"], 0) + int(r["d"])
-            else:
-                fetched = {
-                    r["term"]: int(r["total_df"])
-                    for r in self._postings.filter(
-                        (F.col("field") == field) & F.col("term").isin(missing))
-                    .groupBy("term").agg(F.sum("df").alias("total_df"))
-                    .collect()
-                }
-            with self._cache_lock:
-                for t in missing:
-                    self._df_cache[(field, t)] = fetched.get(t, 0)
-                while len(self._df_cache) > 65536:
-                    self._df_cache.popitem(last=False)
-        with self._cache_lock:
-            out = 0
-            for t in terms:
-                v = self._df_cache.get((field, t))
-                if v is None:
-                    return None  # raced out of the LRU — treat as fat
-                out += v
+            out = {p: self._df_cache[p] for p in pairs if p in self._df_cache}
+        missing = [p for p in pairs if p not in out]
+        if not missing:
             return out
+        cond = (F.col("field").isin(sorted({f for f, _ in missing}))
+                & F.col("term").isin(sorted({t for _, t in missing})))
+
+        def summed(df: DataFrame) -> dict:
+            return {(r["field"], r["term"]): int(r["d"]) for r in
+                    df.filter(cond).groupBy("field", "term")
+                    .agg(F.sum("df").alias("d")).collect()}
+
+        if self._termstats is not None:
+            # skinny sorted (field, term, df_total) table — the probe
+            # prunes to a couple of row groups; deltas (absent from
+            # termstats) add a small delta-only aggregate
+            fetched = {(r["field"], r["term"]): int(r["df_total"])
+                       for r in self._termstats.filter(cond).collect()}
+            if self._delta_postings is not None:
+                for p, d in summed(self._delta_postings).items():
+                    fetched[p] = fetched.get(p, 0) + d
+        else:
+            fetched = summed(self._postings)
+        with self._cache_lock:
+            for p in missing:
+                out[p] = self._df_cache[p] = fetched.get(p, 0)
+            while len(self._df_cache) > 65536:
+                self._df_cache.popitem(last=False)
+        return out
+
+    def _plan_lists(self, plan: ScorePlan):
+        """The driver executor's input to :func:`ftidx.wand.run_plan`:
+        ({field: {term: TermList}}, {field: avgdl}) from the term cache."""
+        terms: dict[str, list[str]] = {}
+        for c in plan.clauses:
+            terms.setdefault(c.field, []).append(c.term)
+        lists, avgdls = {}, {}
+        for field, ts in terms.items():
+            tls, avgdls[field] = self._term_lists(ts, field)
+            lists[field] = by_term = {}
+            for tl in tls:
+                by_term[tl.term] = tl
+        return lists, avgdls
+
+    def _score_plan(self, plan: ScorePlan, k: int,
+                    exhaustive: bool = False) -> list[tuple[int, float]]:
+        """A plan's live top-k page, scored where its postings are read.
+        Within the driver-scoring doc budget, or when the df probe shows
+        the query's postings are small (thin/rare terms), the driver
+        runs the plan over the term cache; beyond it the plan runs per
+        bucket inside the executors (:meth:`_plan_df`) and only k rows
+        per bucket reach the driver. Same evaluator, same page —
+        pinned by test_topk_routes_distributed_beyond_doc_budget.
+        ``exhaustive`` forces the unpruned driver evaluation, the
+        reference the pruned one is checked against."""
+        if k <= 0 or not plan.clauses:
+            return []
+        budget = self._driver_score_max_docs
+        if not exhaustive and max(self.stats.get(c.field, (0, 1.0))[0]
+                                  for c in plan.clauses) > budget:
+            dfs = self._term_dfs((c.field, c.term) for c in plan.clauses)
+            if sum(dfs.values()) > budget:
+                rows = (self._plan_df(plan, k)
+                        .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+                        .collect())
+                return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+        tombs = self._tombstones
+        lists = self._plan_lists(plan)
+        if exhaustive:
+            return self._live_topk(*run_plan(plan, *lists)[:2], k, tombs)
+        # a cut run is already in (score DESC, doc_id ASC) order
+        ids, scores, _ = run_plan(plan, *lists, k + len(tombs))
+        ids, scores = _drop_tombstones(ids, scores, tombs)
+        return list(zip(ids[:k].astype(np.int64).tolist(), scores[:k].tolist()))
+
+    @staticmethod
+    def _topk_plan(terms, field, mode, exclude, min_match) -> ScorePlan:
+        """``topk``'s boolean surface as a plan (``mode="and"`` requires
+        every term, so ``min_match`` has nothing left to count)."""
+        if mode == "and":
+            return ScorePlan.bag(terms, field, MUST, exclude or ())
+        return ScorePlan.bag(terms, field, SHOULD, exclude or (), min_match or 0)
 
     def _topk_uncached(self, terms, k, field, kernel, mode,
                        exclude, min_match) -> list[tuple[int, float]]:
-        # beyond the driver-scoring doc budget, route to the executor
-        # path (see __init__ — identical kernels/boolean surface,
-        # pinned by test_topk_routes_distributed_beyond_doc_budget) —
-        # UNLESS a df probe shows the query's postings are small
-        # (thin/rare terms): those collect + cache driver-side, same
-        # cold latency, µs-warm for later queries sharing the terms
-        n_docs_f, _ = self.stats.get(field, (0, 1.0))
-        if kernel == "block_max" and n_docs_f > self._driver_score_max_docs:
-            probe_terms = sorted(set(terms) | set(exclude or ()))
-            df_total = self._df_total(probe_terms, field)
-            if df_total is None or df_total > self._driver_score_max_docs:
-                rows = self.topk_distributed(
-                    terms, k, field, mode=mode, exclude=exclude,
-                    min_match=min_match).collect()
-                return [(int(r["doc_id"]), float(r["score"])) for r in rows]
-        lists, avgdl = self._term_lists(terms, field)
-        if not lists:
-            return []
-        if mode == "and" and len(lists) < len(set(terms)):
-            return []  # a required term matches nothing anywhere
-        if min_match is not None and min_match > len(lists):
-            return []  # fewer matching terms than the floor demands
-        tombs = self._tombstones
-        if mode == "and" or exclude or min_match:
-            xlists, _ = self._term_lists(exclude, field) if exclude else ([], 0)
-            ids, scores = score_boolean(lists, avgdl, k + len(tombs),
-                                        require_all=(mode == "and"),
-                                        exclude_lists=xlists,
-                                        min_match=min_match)
-        else:
-            fn = score_block_max if kernel == "block_max" else score_exhaustive
-            ids, scores = fn(lists, avgdl, k + len(tombs))
-        return self._live_topk(ids, scores, k, tombs)
+        return self._score_plan(self._topk_plan(terms, field, mode, exclude, min_match),
+                                k, exhaustive=kernel != "block_max")
 
     def topk_synonyms(self, groups: dict[str, list[str]], k: int = 10,
                       field: str = "code.content") -> list[tuple[int, float]]:
@@ -1374,7 +1430,7 @@ class FtIndex:
                 g = merge_group(canon, lists)
                 g.idf = bm25_idf(n_docs, g.df)
                 merged.append(g)
-        ids, scores, _ = score_all(merged, avgdl)
+        ids, scores = score_all(merged, avgdl)
         return self._live_topk(ids, scores, k)
 
     def query_string(self, q: str, k: int = 10,
@@ -1385,8 +1441,10 @@ class FtIndex:
         "a b"~slop term^boost`` — parsed and executed by
         :mod:`ftidx.qparse` against this handle's cached postings and
         positions; ``min_match`` applies Solr ``mm`` over the optional
-        clauses. ``kernel="auto"`` MaxScore-prunes pure-disjunction
-        queries (see :func:`ftidx.qparse.execute`). The drop-in
+        clauses. The string's BM25 part is one plan (see
+        :func:`ftidx.qparse.execute`): a term-only string is routed and
+        pruned like :meth:`topk`; ``kernel="exhaustive"`` forces the
+        unpruned driver evaluation. The drop-in
         surface for a user migrating Solr query strings from the
         reference."""
         from ftidx.qparse import execute
@@ -1439,7 +1497,7 @@ class FtIndex:
         if verified.size == 0:
             return []
         lists, avgdl = self._term_lists(list(terms), field)
-        ids, scores, _ = score_all(lists, avgdl)
+        ids, scores = score_all(lists, avgdl)
         keep = np.isin(ids.astype(np.int64), verified.astype(np.int64))
         return self._live_topk(ids[keep], scores[keep], k)
 
@@ -1497,24 +1555,15 @@ class FtIndex:
         ``bq={"fast": 1.5}`` lifts docs that also mention "fast"
         without requiring it. Exactly additive: score(doc) = BM25(q)
         + Σ_t w_t·BM25(t), so a doc matching only a boost term still
-        surfaces (Solr's optional-clause semantics). Reuses the
-        weighted-fields kernel with per-term triples over one field —
-        one warm-cache probe per term, no Spark job."""
-        from ftidx.wand import score_weighted_fields
-
+        surfaces (Solr's optional-clause semantics). One plan of
+        should clauses, weighted; scored where :meth:`_score_plan`
+        routes it."""
         if k <= 0 or not terms:
             return []
-        lists, avgdl = self._term_lists(terms, field)
-        triples = [(1.0, lists, avgdl)] if lists else []
-        for t in sorted(bq):
-            tl, _ = self._term_lists([t], field)
-            if tl:
-                triples.append((float(bq[t]), tl, avgdl))
-        if not triples:
-            return []
-        tombs = self._tombstones
-        ids, scores = score_weighted_fields(triples, k + len(tombs))
-        return self._live_topk(ids, scores, k, tombs)
+        plan = ScorePlan(
+            ScorePlan.bag(terms, field).clauses
+            + tuple(Clause(field, t, float(bq[t])) for t in sorted(bq)))
+        return self._score_plan(plan, k)
 
     def topk_reranked(self, terms: list[str], rerank_terms: list[str],
                       k: int = 10, rerank_docs: int = 100,
@@ -1538,14 +1587,14 @@ class FtIndex:
         lists, avgdl = self._term_lists(terms, field)
         if not lists:
             return []
-        ids, scores, _ = score_all(lists, avgdl)
+        ids, scores = score_all(lists, avgdl)
         tombs = self._tombstones
         ids, scores = _topk_from_scores(
             *_drop_tombstones(ids, scores, tombs), ids.size)
         n = min(int(rerank_docs), ids.size)
         rlists, ravgdl = self._term_lists(rerank_terms or [], field)
         if n and rlists:
-            rids, rscores, _ = score_all(rlists, ravgdl)
+            rids, rscores = score_all(rlists, ravgdl)
             hit, pos = _align(rids.astype(np.int64), ids[:n].astype(np.int64))
             scores[:n][hit] += float(weight) * rscores[pos[hit]]
         return self._live_topk(ids, scores, k, tombs)
@@ -1578,7 +1627,7 @@ class FtIndex:
         lists, avgdl = self._term_lists(terms, field)
         if not lists:
             return []
-        ids, scores, _ = score_all(lists, avgdl)
+        ids, scores = score_all(lists, avgdl)
         ids, scores = _topk_from_scores(
             *_drop_tombstones(ids, scores, self._tombstones), ids.size)
         n = min(int(rerank_docs), ids.size)
@@ -1613,7 +1662,7 @@ class FtIndex:
                 flists, favgdl = self._term_lists(terms, fld)
                 vals = np.zeros(n, np.float64)
                 if flists:
-                    rids, rscores, _ = score_all(flists, favgdl)
+                    rids, rscores = score_all(flists, favgdl)
                     hit, pos = _align(rids.astype(np.int64), hs)
                     vals[hs_order[hit]] = rscores[pos[hit]]
                 feats[name] = vals
@@ -1658,7 +1707,7 @@ class FtIndex:
         lists, avgdl = self._term_lists(terms, field)
         if not lists:
             return []
-        ids, scores, _ = score_all(lists, avgdl)
+        ids, scores = score_all(lists, avgdl)
         by_term = self._positions_by_term(sorted(set(terms)), field)
         if slop > 0:
             pdocs = near_docs(by_term, list(terms),
@@ -1695,23 +1744,17 @@ class FtIndex:
         sum across fields. Fields with no matching terms contribute
         nothing (a doc only matching the low-weight field still
         ranks). ``tie`` switches to dismax combination — best field +
-        tie × the rest (Solr ``tie=``); ``tie=1.0`` equals the sum."""
-        from ftidx.wand import score_dismax, score_weighted_fields
-
+        tie × the rest (Solr ``tie=``); ``tie=1.0`` equals the sum.
+        Either is one plan (the dismax one a single group whose
+        members are the fields), scored where :meth:`_score_plan`
+        routes it."""
         fields = fields or {"code.content": 1.0, "code.ident.split": 2.0}
-        triples = []
-        for field, w in fields.items():
-            lists, avgdl = self._term_lists(terms, field)
-            if lists:
-                triples.append((float(w), lists, avgdl))
-        if not triples:
-            return []
-        tombs = self._tombstones
-        if tie is not None:
-            ids, scores = score_dismax(triples, k + len(tombs), tie=tie)
-        else:
-            ids, scores = score_weighted_fields(triples, k + len(tombs))
-        return self._live_topk(ids, scores, k, tombs)
+        group = None if tie is None else ""
+        plan = ScorePlan(tuple(Clause(f, t, float(w), SHOULD, group)
+                               for f, w in fields.items()
+                               for t in dict.fromkeys(terms)),
+                         tie=0.0 if tie is None else float(tie))
+        return self._score_plan(plan, k)
 
     def topk_where(self, terms: list[str], where: str, k: int = 10,
                    field: str = "code.content") -> DataFrame:
@@ -1726,7 +1769,7 @@ class FtIndex:
         any prefix), id-keyed join against the predicate-filtered docs
         table (the filter pushes into the parquet scan), global
         TakeOrderedAndProject."""
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         keep = (
             self.spark.read.parquet(str(self.path / "docs"))
             .filter(where).select("doc_id")
@@ -1756,7 +1799,7 @@ class FtIndex:
         no driver materialization of the match set."""
         if mode not in ("add", "mult"):
             raise ValueError(f"mode must be 'add' or 'mult', got {mode!r}")
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         docs = self.spark.read.parquet(str(self.path / "docs"))
         combine = (F.col("score") + F.col("boost") if mode == "add"
                    else F.col("score") * F.col("boost"))
@@ -1800,7 +1843,7 @@ class FtIndex:
         prov = _FuncQueryProvider(self, field, now_ms)
         resolved = FQ.resolve(FQ.parse(fq), prov, now_ms)
         boost_sql = FQ.compile_spark(resolved, now_ms)
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         docs = self.spark.read.parquet(str(self.path / "docs"))
         for col_name, frame in prov.join_frames:
             docs = docs.join(frame, "doc_id", "left").withColumn(
@@ -1854,7 +1897,7 @@ class FtIndex:
             cond = cond & (val <= float(u) if incl_u else val < float(u))
         keep = (docs.withColumn("fval", val).filter(cond)
                 .select("doc_id", "fval"))
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         return (scored.join(keep, "doc_id")
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                 .select("doc_id", "score", "fval"))
@@ -1876,7 +1919,7 @@ class FtIndex:
         feature expressions reference, features and the combination
         all whole-stage codegen, global TakeOrderedAndProject — the
         feature extraction never runs on docs outside the match set."""
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         exprs = list(model)
         docs = self.spark.read.parquet(str(self.path / "docs")).select(
             "doc_id",
@@ -1904,6 +1947,8 @@ class FtIndex:
         for the query terms are already resident after the search the
         user is debugging), so no Spark job: decode + one binary
         search per term."""
+        from ftidx.wand import bm25_contrib
+
         lists, avgdl = self._term_lists(terms, field)
         out, total = [], 0.0
         n_docs, _ = self.stats.get(field, (0, 1.0))
@@ -1930,114 +1975,53 @@ class FtIndex:
                 "n_docs": n_docs, "avgdl": avgdl,
                 "score": round(total, 6), "terms": out}
 
-    def _global_idfs(self, terms: list[str], field: str) -> dict[str, float]:
-        """{term: idf} for the ``terms`` present in ``field``, from the
-        index's n_docs and each term's df summed over every segment
-        (base + deltas) — one grouped aggregate, one Spark job. The
-        idf source for every per-bucket scorer."""
-        n_docs, _ = self.stats.get(field, (0, 1.0))
-        return {
-            r["term"]: bm25_idf(n_docs, int(r["df_global"]))
-            for r in self._postings.filter(
-                (F.col("field") == field) & F.col("term").isin(terms))
-            .groupBy("term").agg(F.sum("df").alias("df_global")).collect()
-        }
-
-    def _scored_df(self, terms: list[str], field: str,
-                   idfs: dict[str, float] | None = None,
-                   avgdl: float | None = None, k: int | None = None,
-                   mode: str = "or", exclude: list[str] | None = None,
-                   min_match: int | None = None) -> DataFrame:
-        """Distributed BM25 scoring: (doc_id, score) with tombstones
-        dropped. Per-bucket scoring inside executors via applyInPandas —
-        globally valid because one bucket owns all of a doc's postings
-        rows, so the per-bucket conjunction (``mode="and"``), exclusion
-        and match count (``min_match``) equal the global ones. With
-        ``k`` each bucket returns its own top-k (MaxScore-pruned for
-        plain OR) — :meth:`topk_distributed`; without it, every
-        matching doc — the shared engine under :meth:`topk_where`,
-        :meth:`topk_grouped` and :meth:`search_sorted`.
-
-        ``idfs``/``avgdl`` override the index's own statistics —
-        FtShards passes GLOBAL values here so every shard of a
-        distributed deployment scores on the same idf/avgdl
-        (SolrCloud ExactStatsCache semantics); when None the local
-        statistics are used."""
-        qterms = sorted(set(terms))
-        xterms = sorted(set(exclude or []))
-        prows = self._postings.filter(
-            (F.col("field") == field) & F.col("term").isin(qterms + xterms)
-        )
-        if avgdl is None:
-            _, avgdl = self.stats.get(field, (0, 1.0))
-        if idfs is None:
-            idfs = self._global_idfs(qterms + xterms, field)
+    def _plan_df(self, plan: ScorePlan, k: int | None = None, stats=None,
+                 base: bool = False) -> DataFrame:
+        """The executor half of the one plan runner: (doc_id, score)
+        with tombstones dropped, from one ``applyInPandas`` per bucket
+        that calls :func:`ftidx.wand.run_plan` — the evaluator the driver
+        runs. Globally valid because one bucket owns all of a doc's
+        postings rows, so the per-bucket must / must-not / mm / dismax
+        equal the global ones; idfs and the sum order come from the
+        GLOBAL dfs of the df probe (or ``stats`` = ({field: (n_docs,
+        avgdl)}, {(field, term): df}), FtShards' global statistics —
+        SolrCloud ExactStatsCache semantics), so each doc's score is
+        bit-identical to the driver's. With ``k`` each bucket returns
+        its own top-k; without it, every admitted doc — the shared
+        engine under the filter, boost, group, sort and join surfaces.
+        ``base`` adds the score without SCORE clauses as ``base``."""
+        terms = plan.terms_by_field()
+        if stats is None:
+            stats = (self.stats, self._term_dfs(
+                (f, t) for f, ts in terms.items() for t in ts))
+        field_stats, dfs = stats
+        avgdls = {f: field_stats.get(f, (0, 1.0))[1] for f in terms}
+        glob = {(f, t): (df, bm25_idf(field_stats.get(f, (0, 1.0))[0], df))
+                for (f, t), df in dfs.items() if df}
+        cond = None
+        for f, ts in terms.items():
+            c = (F.col("field") == f) & F.col("term").isin(ts)
+            cond = c if cond is None else cond | c
+        prows = self._postings.filter(cond).select(
+            "bucket", "field", "term", "df", "doc_ids", "tfs", "dls")
         tombs = self._tombstones
-        floor = len(qterms) if mode == "and" else (min_match or 1)
-        pruned = k is not None and floor <= 1 and not xterms
-        qset, xset = set(qterms), set(xterms)
+        cut = None if k is None else k + len(tombs)
 
         def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            lists, xlists = [], []
-            for term, grp in pdf.groupby("term", sort=True):
-                tl = TermList(term, grp.to_dict("records"), idfs[term])
-                if term in qset:
-                    lists.append(tl)
-                if term in xset:
-                    xlists.append(tl)
-            if pruned:
-                ids, scores = score_block_max(lists, avgdl, k + len(tombs))
-            else:
-                ids, scores = filter_matches(*score_all(lists, avgdl),
-                                             floor=floor, exclude_lists=xlists)
-            ids, scores = _drop_tombstones(ids, scores, tombs)
-            if k is not None:
-                ids, scores = _topk_from_scores(ids, scores, k)
-            return pd.DataFrame({"doc_id": ids.astype(np.int64),
-                                 "score": scores})
+            lists: dict[str, dict[str, TermList]] = {}
+            for (f, t), grp in pdf.groupby(["field", "term"], sort=False):
+                df, idf = glob[(f, t)]
+                tl = lists.setdefault(f, {})[t] = TermList(
+                    t, grp.to_dict("records"), idf)
+                tl.df = df
+            ids, scores, bases = run_plan(plan, lists, avgdls, cut)
+            ids, scores, bases = _drop_tombstones(ids, scores, tombs, bases)
+            return pd.DataFrame({"doc_id": ids[:k].astype(np.int64),
+                                 "score": scores[:k], "base": bases[:k]})
 
-        return prows.groupBy("bucket").applyInPandas(
-            score_bucket, schema="doc_id long, score double")
-
-    def _term_scored_df(self, terms: list[str], field: str,
-                        idfs: dict[str, float] | None = None,
-                        avgdl: float | None = None) -> DataFrame:
-        """Per-term distributed scoring: (doc_id, term, contrib) for
-        every (matching doc, query term) pair, tombstones dropped —
-        the un-aggregated sibling of :meth:`_scored_df`, needed by
-        scorers that combine PER TERM across fields (edismax's
-        DisjunctionMaxQuery is per query clause, not per field
-        total). Duplicate (doc, term) rows from delta segments sum
-        inside the kernel, so downstream max/sum combinations see one
-        row per pair. ``idfs``/``avgdl`` override the local statistics
-        (FtShards passes GLOBAL values, like :meth:`_scored_df`)."""
-        qterms = sorted(set(terms))
-        prows = self._postings.filter(
-            (F.col("field") == field) & F.col("term").isin(qterms)
-        )
-        if avgdl is None:
-            _, avgdl = self.stats.get(field, (0, 1.0))
-        if idfs is None:
-            idfs = self._global_idfs(qterms, field)
-        tombs = self._tombstones
-
-        def score_terms(pdf: pd.DataFrame) -> pd.DataFrame:
-            parts = []
-            for term, grp in pdf.groupby("term", sort=True):
-                tl = TermList(term, grp.to_dict("records"), idfs[term])
-                ids, contrib = _drop_tombstones(
-                    *score_all([tl], avgdl)[:2], tombs)
-                parts.append(pd.DataFrame({"doc_id": ids.astype(np.int64),
-                                           "term": term, "contrib": contrib}))
-            if not parts:
-                return pd.DataFrame({
-                    "doc_id": pd.Series(dtype="int64"),
-                    "term": pd.Series(dtype="object"),
-                    "contrib": pd.Series(dtype="float64")})
-            return pd.concat(parts, ignore_index=True)
-
-        return prows.groupBy("bucket").applyInPandas(
-            score_terms, schema="doc_id long, term string, contrib double")
+        out = prows.groupBy("bucket").applyInPandas(
+            score_bucket, schema="doc_id long, score double, base double")
+        return out if base else out.select("doc_id", "score")
 
     def edismax(self, terms: list[str],
                 qf: dict[str, float] | None = None, k: int = 10,
@@ -2054,11 +2038,9 @@ class FtIndex:
         - per query term, dismax across the ``qf`` fields (each scored
           with its own idf/avgdl, scaled by its weight):
           ``max + tie·(sum − max)`` — Lucene's DisjunctionMaxQuery is
-          per clause, which is why this needs the per-term frame, not
-          field totals;
+          per clause, so each term is one dismax group of the plan;
         - ``mm``: keep docs matching at least ``mm`` distinct query
-          terms in ANY field (minimum-should-match over the main
-          clauses);
+          terms in ANY field (minimum-should-match over the groups);
         - ``bq``: additive optional clauses — ``Σ w·BM25(t)`` over the
           FIRST qf field, boosting docs in the main match set (the
           main query is the required clause: a doc matching only a
@@ -2069,54 +2051,15 @@ class FtIndex:
         Returns (doc_id, score, final) — ``score`` the dismax base,
         ``final`` after boosts — ordered (final DESC, doc_id ASC).
 
-        Scale shape: one per-bucket kernel per qf field (executor-side
-        scoring), the per-term combine and the mm count are one
-        doc_id+term-keyed aggregation, bq/bf/boost are id-keyed
-        column-pruned joins, and the cut is one global
-        TakeOrderedAndProject. Nothing corpus-sized crosses a single
-        partition."""
+        Scale shape: qf/tie/mm/bq are ONE :class:`~ftidx.wand.ScorePlan`
+        run per bucket (:meth:`_plan_df`), bf/boost an id-keyed
+        column-pruned join on ``docs``, and the cut one global
+        TakeOrderedAndProject."""
         qf = qf or {"code.content": 1.0}
-        fields = sorted(qf)
-        uni = None
-        for f in fields:
-            fr = self._term_scored_df(terms, f).withColumn(
-                "wc", F.lit(float(qf[f])) * F.col("contrib"))
-            uni = fr if uni is None else uni.unionByName(fr)
-        per_term = (
-            uni.groupBy("doc_id", "term")
-            .agg(F.max("wc").alias("mx"), F.sum("wc").alias("sm"))
-            .withColumn("tscore", F.col("mx") + F.lit(float(tie)) *
-                        (F.col("sm") - F.col("mx")))
-        )
-        base = per_term.groupBy("doc_id").agg(
-            F.sum("tscore").alias("score"),
-            F.count(F.lit(1)).alias("n_matched"))
-        if mm > 0:
-            base = base.filter(F.col("n_matched") >= mm)
-        final = F.col("score")
-        if bq:
-            bq_scored = None
-            for t in sorted(bq):
-                fr = self._term_scored_df([t], fields[0]).withColumn(
-                    "wc", F.lit(float(bq[t])) * F.col("contrib"))
-                bq_scored = fr if bq_scored is None \
-                    else bq_scored.unionByName(fr)
-            bq_sum = bq_scored.groupBy("doc_id").agg(
-                F.sum("wc").alias("bq_score"))
-            base = base.join(bq_sum, "doc_id", "left")
-            final = final + F.coalesce(F.col("bq_score"), F.lit(0.0))
-        if bf is not None or boost is not None:
-            docs = self.spark.read.parquet(str(self.path / "docs"))
-            base = base.join(docs, "doc_id")
-            if bf is not None:
-                final = final + F.expr(bf).cast("double")
-            if boost is not None:
-                final = final * F.expr(boost).cast("double")
-        return (
-            base.withColumn("final", final)
-            .orderBy(F.desc("final"), F.asc("doc_id")).limit(k)
-            .select("doc_id", "score", "final")
-        )
+        scored = self._plan_df(edismax_plan(terms, qf, tie, mm, bq), base=True)
+        docs = (self.spark.read.parquet(str(self.path / "docs"))
+                if bf is not None or boost is not None else None)
+        return edismax_finish(scored, docs, ["doc_id"], bf, boost, k)
 
     def topk_grouped(self, terms: list[str], group_col: str = "lang",
                      k_groups: int = 10, group_limit: int = 1,
@@ -2134,7 +2077,7 @@ class FtIndex:
         TakeOrderedAndProject on the post-cut (≤ groups×limit) rows."""
         from pyspark.sql import Window
 
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         docs = self.spark.read.parquet(str(self.path / "docs")).select(
             "doc_id", F.col(group_col).alias("group_value"))
         within = Window.partitionBy("group_value").orderBy(
@@ -2187,7 +2130,7 @@ class FtIndex:
         corpus-sized window."""
         from pyspark.sql import Window
 
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         docs = self.spark.read.parquet(str(self.path / "docs")).select(
             "doc_id", F.col(group_col).alias("group_value"))
         within = Window.partitionBy("group_value").orderBy(
@@ -2239,7 +2182,7 @@ class FtIndex:
         aggs = {"max": F.max, "total": F.sum, "avg": F.avg, "min": F.min}
         if score_mode not in aggs:
             raise ValueError(f"score_mode must be one of {sorted(aggs)}")
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         docs = self.spark.read.parquet(str(self.path / "docs")).select(
             "doc_id", F.col(parent_col).alias("parent"))
         return (
@@ -2274,7 +2217,7 @@ class FtIndex:
         aggs = {"max": F.max, "total": F.sum, "avg": F.avg, "min": F.min}
         if score_mode not in aggs:
             raise ValueError(f"score_mode must be one of {sorted(aggs)}")
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         docs = self.spark.read.parquet(str(self.path / "docs")).select(
             "doc_id", F.col(parent_col).alias("parent"))
         parents = (
@@ -2309,7 +2252,7 @@ class FtIndex:
         ``WHERE (sort_value, doc_id) > (...)`` via :meth:`topk_where`)
         — offset N still scores all matches but only ships start+rows
         rows to the driver via the global TakeOrdered."""
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         docs = self.spark.read.parquet(str(self.path / "docs")).select(
             "doc_id", F.expr(sort_col).alias("sort_value"))
         key = F.asc("sort_value") if ascending else F.desc("sort_value")
@@ -2342,7 +2285,7 @@ class FtIndex:
         for exact equality — safe because the cursor is a value the
         engine itself emitted (same bits round-trip through the
         driver; the HTTP tier ships it as ``float.hex``)."""
-        scored = self._scored_df(terms, field)
+        scored = self._plan_df(ScorePlan.bag(terms, field))
         docs = self.spark.read.parquet(str(self.path / "docs")).select(
             "doc_id", F.expr(sort_col).alias("sort_value"))
         j = scored.join(docs, "doc_id")
@@ -2823,7 +2766,7 @@ class FtIndex:
         keys = (fdocs.join(inner, "doc_id")
                 .select(F.col(fcol).alias(join_col)).distinct())
         docs = self.spark.read.parquet(str(self.path / "docs"))
-        scored = self._scored_df(outer_terms, field)
+        scored = self._plan_df(ScorePlan.bag(outer_terms, field))
         return (
             scored.join(docs.select("doc_id", join_col), "doc_id")
             .join(F.broadcast(keys), join_col)
@@ -4168,8 +4111,8 @@ class FtIndex:
                          exclude: list[str] | None = None,
                          min_match: int | None = None) -> DataFrame:
         """Score inside executors, one task per bucket; global top-k via
-        TakeOrderedAndProject. df/idf are global (two-pass: tiny df agg
-        broadcast into the scoring closure).
+        TakeOrderedAndProject. df/idf are global (two-pass: the df probe,
+        then :meth:`_plan_df` with the probed dfs in its closure).
 
         Boolean semantics (``mode="and"``, ``exclude``, ``min_match``)
         are valid per-bucket: a doc's postings live entirely in its one
@@ -4177,8 +4120,8 @@ class FtIndex:
         bucket-keyed), so the per-bucket conjunction/exclusion/
         match-count equals the global one — full parity with
         :meth:`topk`'s boolean surface on the distributed path."""
-        return (self._scored_df(terms, field, k=k, mode=mode,
-                                exclude=exclude, min_match=min_match)
+        plan = self._topk_plan(terms, field, mode, exclude, min_match)
+        return (self._plan_df(plan, k)
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 

@@ -35,7 +35,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from ftidx.wand import TermList, bm25_contrib, bm25_idf, merge_group, score_all
+from ftidx.wand import (MUST, SHOULD, ScorePlan, TermList, bm25_idf,
+                        merge_group, run_plan, score_all)
 
 
 class FtShards:
@@ -65,19 +66,38 @@ class FtShards:
         return n_docs, (total_len / n_docs if n_docs else 1.0)
 
     def _gather(self, terms: list[str], field: str):
-        """Per-shard term rows + global df per term (one stats pass)."""
+        """(sorted distinct terms, per-shard {term: rows})."""
         qterms = sorted(set(terms))
-        per_shard = [sh._fetch_term_rows(qterms, field) for sh in self.shards]
-        gdf = {t: sum(sum(int(r["df"]) for r in by.get(t, []))
-                      for by in per_shard) for t in qterms}
-        return qterms, per_shard, gdf
+        return qterms, [sh._fetch_term_rows(qterms, field) for sh in self.shards]
 
-    def _global_idfs(self, terms: list[str], field: str) -> dict[str, float]:
-        """{term: idf} under GLOBAL df and n_docs for the terms present
-        in any shard — the idf every shard's executor scoring uses."""
+    def _global_lists(self, terms: list[str], field: str) -> list[list]:
+        """Per shard, the TermLists of ``terms`` in ``field`` (one
+        term-cache read each) carrying the GLOBAL df and idf: a doc's
+        score and its sum order are those of a monolithic index."""
+        per_shard = [sh._term_lists(terms, field)[0] for sh in self.shards]
+        gdf: dict[str, int] = {}
+        for lists in per_shard:
+            for tl in lists:
+                gdf[tl.term] = gdf.get(tl.term, 0) + tl.df
         n_docs, _ = self.global_stats(field)
-        _, _, gdf = self._gather(terms, field)
-        return {t: bm25_idf(n_docs, d) for t, d in gdf.items() if d > 0}
+        for lists in per_shard:
+            for tl in lists:
+                tl.df = gdf[tl.term]
+                tl.idf = bm25_idf(n_docs, tl.df)
+        return per_shard
+
+    def _plan_stats(self, plan: ScorePlan):
+        """GLOBAL ({field: (n_docs, avgdl)}, {(field, term): df}) for a
+        plan — every shard's df probe, summed: the statistics every
+        shard's executor scoring uses (``stats=`` of
+        :meth:`FtIndex._plan_df`)."""
+        terms = plan.terms_by_field()
+        pairs = [(f, t) for f, ts in terms.items() for t in ts]
+        dfs = dict.fromkeys(pairs, 0)
+        for sh in self.shards:
+            for pair, d in sh._term_dfs(pairs).items():
+                dfs[pair] += d
+        return {f: self.global_stats(f) for f in terms}, dfs
 
     @staticmethod
     def _merge_live(per_shard: list[tuple], k: int
@@ -102,26 +122,18 @@ class FtShards:
         same-score tie by its own doc ids)."""
         if k <= 0 or not terms:
             return []
-        qterms, per_shard, gdf = self._gather(terms, field)
-        n_docs, avgdl = self.global_stats(field)
+        plan = ScorePlan.bag(terms, field, MUST if require_all else SHOULD)
+        _, avgdl = self.global_stats(field)
         scored = []
-        for sh, by_term in zip(self.shards, per_shard):
-            lists = []
-            for t in qterms:
-                if by_term.get(t):
-                    tl = TermList(t, by_term[t], bm25_idf(n_docs, gdf[t]))
-                    tl.df = gdf[t]  # accumulate in the monolithic order
-                    lists.append(tl)
-            ids, scores, n_matched = score_all(lists, avgdl)
-            if require_all:
-                keep = n_matched >= len(qterms)
-                ids, scores = ids[keep], scores[keep]
+        for sh, lists in zip(self.shards, self._global_lists(terms, field)):
+            ids, scores, _ = run_plan(plan, {field: {tl.term: tl for tl in lists}},
+                                      {field: avgdl}, k + len(sh._tombstones))
             scored.append((sh, ids, scores))
         return self._merge_live(scored, k)
 
     def count(self, terms: list[str], field: str = "code.content") -> int:
         """Total matching docs across shards (numFound)."""
-        qterms, per_shard, _ = self._gather(terms, field)
+        qterms, per_shard = self._gather(terms, field)
         total = 0
         for sh, by_term in zip(self.shards, per_shard):
             ids = [TermList(t, rows, 0.0).decode_all()[0]
@@ -290,7 +302,7 @@ class FtShards:
                 # global df: the monolithic idf and accumulation order
                 g.df = gdf[g.term]
                 g.idf = bm25_idf(n_docs, g.df)
-            scored.append((sh, *score_all(glists, avgdl)[:2]))
+            scored.append((sh, *score_all(glists, avgdl)))
         return self._merge_live(scored, k)
 
     def ltr_rerank(self, terms: list[str], model, k: int = 10,
@@ -323,7 +335,7 @@ class FtShards:
         if "matched" in need or "dl" in need:
             matched = np.zeros(n, np.float64)
             dl_f = np.zeros(n, np.float64)
-            qterms, per_shard, _ = self._gather(terms, field)
+            qterms, per_shard = self._gather(terms, field)
             for si, by_term in enumerate(per_shard):
                 own = np.array(sorted(d for s2, d in pos if s2 == si),
                                np.int64)
@@ -348,20 +360,13 @@ class FtShards:
             if name.startswith("bm25@"):
                 fld = name.split("@", 1)[1]
                 vals = np.zeros(n, np.float64)
-                qterms, per_shard, gdf = self._gather(terms, fld)
-                n_docs, avgdl = self.global_stats(fld)
-                for si, by_term in enumerate(per_shard):
-                    for t in qterms:
-                        rows = by_term.get(t, [])
-                        if not rows:
-                            continue
-                        ids, tfs, dls = TermList(t, rows, 0.0).decode_all()
-                        idf = bm25_idf(n_docs, gdf[t])
-                        contribs = bm25_contrib(tfs, dls, idf, avgdl)
-                        for d, c in zip(ids.astype(np.int64), contribs):
-                            i = pos.get((si, int(d)))
-                            if i is not None:
-                                vals[i] += float(c)
+                _, avgdl = self.global_stats(fld)
+                for si, lists in enumerate(self._global_lists(terms, fld)):
+                    ids, scores = score_all(lists, avgdl)
+                    for d, c in zip(ids.astype(np.int64), scores):
+                        i = pos.get((si, int(d)))
+                        if i is not None:
+                            vals[i] = float(c)
                 feats[name] = vals
         unknown = need - set(feats)
         if unknown:
@@ -487,14 +492,14 @@ class FtShards:
         to the named columns of its OWN docs table (ids are
         shard-local). The shared engine under the sharded
         :meth:`expand_topk` and :meth:`join_topk`."""
-        _, avgdl = self.global_stats(field)
-        idfs = self._global_idfs(terms, field)
+        plan = ScorePlan.bag(terms, field)
+        stats = self._plan_stats(plan)
         frames = []
         for si, sh in enumerate(self.shards):
             docs = sh.spark.read.parquet(str(sh.path / "docs")).select(
                 "doc_id", *extra_cols)
             frames.append(
-                sh._scored_df(terms, field, idfs=idfs, avgdl=avgdl)
+                sh._plan_df(plan, stats=stats)
                 .join(docs, "doc_id")
                 .withColumn("shard", F.lit(si)))
         uni = frames[0]
@@ -596,21 +601,6 @@ class FtShards:
             .select("shard", "doc_id", "parent", "n_hits", "score")
         )
 
-    def _term_scored_union(self, terms: list[str], field: str):
-        """Union of per-shard PER-TERM scoring frames (doc_id, term,
-        contrib, shard) under GLOBAL idf/avgdl — the sharded sibling
-        of FtIndex._term_scored_df, for per-clause dismax
-        combination."""
-        _, avgdl = self.global_stats(field)
-        idfs = self._global_idfs(terms, field)
-        uni = None
-        for si, sh in enumerate(self.shards):
-            fr = sh._term_scored_df(terms, field, idfs=idfs,
-                                    avgdl=avgdl).withColumn(
-                "shard", F.lit(si))
-            uni = fr if uni is None else uni.unionByName(fr)
-        return uni
-
     def edismax(self, terms: list[str],
                 qf: dict[str, float] | None = None, k: int = 10,
                 tie: float = 0.0, mm: int = 0,
@@ -620,59 +610,25 @@ class FtShards:
         default parser): identical semantics to FtIndex.edismax over
         the union corpus — per-term dismax across qf fields, mm, bq,
         bf, boost — with every per-field statistic GLOBAL, so scores
-        are shard-invariant (pinned by test). The per-term combine
-        groups on (shard, doc_id, term) because ids are shard-local;
-        bf/boost expressions evaluate against each doc's OWN shard's
-        docs table (one union of column-pruned scans). Returns
-        (shard, doc_id, score, final), tie discipline
+        are shard-invariant (pinned by test). The same plan runs per
+        bucket in every shard; bf/boost expressions evaluate against
+        each doc's OWN shard's docs table (one union of column-pruned
+        scans). Returns (shard, doc_id, score, final), tie discipline
         (final DESC, shard ASC, doc_id ASC)."""
-        qf = qf or {"code.content": 1.0}
-        fields = sorted(qf)
-        uni = None
-        for f in fields:
-            fr = self._term_scored_union(terms, f).withColumn(
-                "wc", F.lit(float(qf[f])) * F.col("contrib"))
-            uni = fr if uni is None else uni.unionByName(fr)
-        per_term = (
-            uni.groupBy("shard", "doc_id", "term")
-            .agg(F.max("wc").alias("mx"), F.sum("wc").alias("sm"))
-            .withColumn("tscore", F.col("mx") + F.lit(float(tie)) *
-                        (F.col("sm") - F.col("mx")))
-        )
-        base = per_term.groupBy("shard", "doc_id").agg(
-            F.sum("tscore").alias("score"),
-            F.count(F.lit(1)).alias("n_matched"))
-        if mm > 0:
-            base = base.filter(F.col("n_matched") >= mm)
-        final = F.col("score")
-        if bq:
-            bq_scored = None
-            for t in sorted(bq):
-                fr = self._term_scored_union([t], fields[0]).withColumn(
-                    "wc", F.lit(float(bq[t])) * F.col("contrib"))
-                bq_scored = fr if bq_scored is None \
-                    else bq_scored.unionByName(fr)
-            bq_sum = bq_scored.groupBy("shard", "doc_id").agg(
-                F.sum("wc").alias("bq_score"))
-            base = base.join(bq_sum, ["shard", "doc_id"], "left")
-            final = final + F.coalesce(F.col("bq_score"), F.lit(0.0))
-        if bf is not None or boost is not None:
-            docs = None
-            for si, sh in enumerate(self.shards):
+        from ftidx.index import edismax_finish, edismax_plan
+
+        plan = edismax_plan(terms, qf or {"code.content": 1.0}, tie, mm, bq)
+        stats = self._plan_stats(plan)
+        scored = docs = None
+        for si, sh in enumerate(self.shards):
+            fr = sh._plan_df(plan, stats=stats, base=True).withColumn(
+                "shard", F.lit(si))
+            scored = fr if scored is None else scored.unionByName(fr)
+            if bf is not None or boost is not None:
                 fr = sh.spark.read.parquet(
                     str(sh.path / "docs")).withColumn("shard", F.lit(si))
                 docs = fr if docs is None else docs.unionByName(fr)
-            base = base.join(docs, ["shard", "doc_id"])
-            if bf is not None:
-                final = final + F.expr(bf).cast("double")
-            if boost is not None:
-                final = final * F.expr(boost).cast("double")
-        return (
-            base.withColumn("final", final)
-            .orderBy(F.desc("final"), F.asc("shard"), F.asc("doc_id"))
-            .limit(k)
-            .select("shard", "doc_id", "score", "final")
-        )
+        return edismax_finish(scored, docs, ["shard", "doc_id"], bf, boost, k)
 
     def join_topk(self, inner_terms: list[str], outer_terms: list[str],
                   k: int = 10, join_col: str = "repo",
@@ -847,8 +803,8 @@ class FtShards:
 
         if l is None and u is None:
             raise ValueError("frange needs l= and/or u=")
-        _, avgdl = self.global_stats(field)
-        idfs = self._global_idfs(terms, field)
+        plan = ScorePlan.bag(terms, field)
+        stats = self._plan_stats(plan)
         cache: dict = {}
         frames = []
         for si, sh in enumerate(self.shards):
@@ -868,7 +824,7 @@ class FtShards:
             keep = (docs.withColumn("fval", val).filter(cond)
                     .select("doc_id", "fval"))
             frames.append(
-                sh._scored_df(terms, field, idfs=idfs, avgdl=avgdl)
+                sh._plan_df(plan, stats=stats)
                 .join(keep, "doc_id")
                 .withColumn("shard", F.lit(si)))
         uni = frames[0]

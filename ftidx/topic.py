@@ -51,7 +51,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ftidx.index import batch_dirs
+from ftidx.index import DOCLEN_TABLE_SCHEMA, DOCS_TABLE_SCHEMA, batch_dirs
 from ftidx.maintenance import fold_log
 
 
@@ -119,8 +119,8 @@ def topic_poll(index, topic_id: str, terms: list[str],
         else:
             dirs = [str(index.path / "delta_doclen" / f"batch={e}")
                     for e in new]
-            new_ids = (index.spark.read.parquet(*dirs)
-                       .select("doc_id").distinct())
+            new_ids = (index.spark.read.schema(DOCLEN_TABLE_SCHEMA)
+                       .parquet(*dirs).select("doc_id").distinct())
             out = matched.join(new_ids, "doc_id", "semi")
     else:
         out = matched
@@ -129,7 +129,8 @@ def topic_poll(index, topic_id: str, terms: list[str],
     state = {"build_id": build_id, "epochs": current, "folds": len(folds),
              "topic_id": topic_id}
     if fl:
-        docs = index.spark.read.parquet(str(index.path / "docs"))
+        docs = index.spark.read.schema(DOCS_TABLE_SCHEMA).parquet(
+            str(index.path / "docs"))
         cols = [c for c in fl if c != "doc_id"]
         out = out.join(docs.select("doc_id", *cols), "doc_id", "left")
     ck_path.write_text(json.dumps(state))

@@ -1,41 +1,44 @@
-"""Top-k BM25 scoring kernels over compressed postings — pure numpy.
+"""Top-k BM25 scoring over compressed postings — pure numpy.
 
 The retrieval capability the reference delegates to Solr (Q5/Q7 in
 SURVEY §2: SolrQuery at IndexerIT.java:98-105 + default ranking).
 
-Every BM25 accumulation in ftidx runs through this module, whether the
-caller is the driver (``FtIndex``/``FtShards``/``qparse``) or a
-per-bucket executor closure:
+Every BM25 accumulation in ftidx runs through this module. How a
+query's term contributions combine into a doc score is written once,
+as a :class:`ScorePlan` (clauses of field, term, weight and occur,
+optional dismax groups, a minimum-should-match floor), and evaluated
+once, by :func:`run_plan` — on the driver over cached ``TermList``s or
+per bucket inside an executor, with the same arithmetic in the same
+order, so the two executors return bit-identical scores.
 
-- :func:`score_all` — the one uncut scorer: every list's memoised
-  contributions, one vectorized scatter-add, and every matching doc
-  with its score and the number of lists it matched. Callers that need
-  every match (reranking, positional filters, per-bucket scoring) use
-  it directly.
-- :func:`score_exhaustive` — :func:`score_all`'s scatter-add plus the
-  exact (score DESC, doc_id ASC) top-k cut. The verification oracle.
-- :func:`score_boolean` — :func:`score_all` plus :func:`filter_matches`
-  (AND / minimum-should-match / exclusion) before the cut.
-- :func:`score_weighted_fields` / :func:`score_dismax` — the per-field
-  contributions of :func:`score_all`, combined as a weighted sum or as
-  best-field + tie × rest.
-- :func:`merge_group` — folds a synonym/stem class into one pseudo-term
-  (tf summed, dl shared, df = size of the union) that scores like any
-  other list.
+- :func:`run_plan` — the one evaluator: boolean admission (should /
+  must / must-not / mm), weighted sums, per-group dismax and
+  score-only clauses, then the exact (score DESC, doc_id ASC) cut.
+  Pure-should single-field plans with a ``k`` take MaxScore.
 - :func:`score_block_max` — the pruned top-k: exact MaxScore (Turtle &
   Flood 1995). Lists whose summed bounds cannot reach the top k are
   probed, never sorted; in numpy only such whole-list skips pay.
+- :func:`score_exhaustive` — the unpruned top-k. The verification
+  oracle ``kernel="exhaustive"`` names.
+- :func:`score_all` — every doc of a list set with its summed score,
+  for the positional, rerank and LTR surfaces that filter or rescore
+  the whole match set on the driver.
+- :func:`merge_group` — folds a synonym/stem class into one pseudo-term
+  (tf summed, dl shared, df = size of the union) that scores like any
+  other list.
 
 Contributions are memoised per cached segment row, so a warm query
-neither decodes nor recomputes BM25. Every kernel adds them in one
-fixed order, (df, term), so scores are bit-identical across kernels.
-Tombstones are not this module's concern: callers drop them from the
-uncut (or k + pending-tombstones) output before their final cut.
+neither decodes nor recomputes BM25. Every evaluator adds them in one
+fixed order, (global df, field, term), so scores are bit-identical
+across kernels and executors. Tombstones are not this module's
+concern: callers drop them from the uncut (or k + pending-tombstones)
+output before their final cut.
 """
 
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
 
@@ -54,17 +57,24 @@ def bm25_contrib(tfs: np.ndarray, dls: np.ndarray, idf: float, avgdl: float,
     return idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
-def _topk_from_scores(ids: np.ndarray, scores: np.ndarray, k: int):
-    """Exact top-k with (score DESC, doc_id ASC) tie-break."""
+def _topk_order(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the exact top-k, (score DESC, doc_id ASC)."""
     n = ids.size
     if n == 0 or k <= 0:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.float64)
+        return np.empty(0, np.intp)
     if k < n:
         kth_val = np.partition(scores, n - k)[n - k]
         cand = np.flatnonzero(scores >= kth_val)  # all ties included
     else:
         cand = np.arange(n)
-    order = cand[np.lexsort((ids[cand], -scores[cand]))][:k]
+    return cand[np.lexsort((ids[cand], -scores[cand]))][:k]
+
+
+def _topk_from_scores(ids: np.ndarray, scores: np.ndarray, k: int):
+    """Exact top-k with (score DESC, doc_id ASC) tie-break."""
+    if ids.size == 0 or k <= 0:
+        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.float64)
+    order = _topk_order(ids, scores, k)
     return ids[order], scores[order]
 
 
@@ -133,14 +143,11 @@ def _list_arrays(rows) -> tuple[np.ndarray, np.ndarray]:
             np.concatenate([r[1] for r in rows] or [np.empty(0)]))
 
 
-def _term_contribs(lists: list[TermList], avgdl: float,
-                   weight: float = 1.0) -> list[tuple[np.ndarray, np.ndarray]]:
-    """Per-list (ids, weight × BM25 contribution), in (df, term) order."""
-    out = []
-    for tl in sorted(lists, key=lambda t: (t.df, t.term)):
-        ids, c = _list_arrays(tl.contribs(avgdl))
-        out.append((ids, c if weight == 1.0 else weight * c))
-    return out
+def _term_contribs(lists: list[TermList],
+                   avgdl: float) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Per-list (ids, BM25 contribution), in (df, term) order."""
+    return [_list_arrays(tl.contribs(avgdl))
+            for tl in sorted(lists, key=lambda t: (t.df, t.term))]
 
 
 def _unique_inverse(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -177,26 +184,9 @@ def _accumulate(per_term, k: int):
     return _topk_from_scores(uniq, scores, k)
 
 
-def score_all(lists: list[TermList], avgdl: float, weight: float = 1.0):
-    """Uncut BM25 over ``lists``: (ids ascending, scores, n_matched),
-    where ``n_matched[i]`` counts the lists containing ``ids[i]`` (a doc
-    lives in one segment per term, so this is its matched-term count).
-    ``weight`` scales every contribution (a field's ``qf`` weight)."""
-    uniq, scores, inv = _scatter_add(_term_contribs(lists, avgdl, weight))
-    return uniq, scores, np.bincount(inv, minlength=uniq.size)
-
-
-def filter_matches(ids: np.ndarray, scores: np.ndarray, n_matched: np.ndarray,
-                   floor: int = 1, exclude_lists: list[TermList] | None = None):
-    """Boolean cut over :func:`score_all` output: keep docs matching at
-    least ``floor`` query terms (all of them for AND, ``mm`` for
-    minimum-should-match) and none of ``exclude_lists``."""
-    mask = n_matched >= floor if floor > 1 else np.ones(ids.size, dtype=bool)
-    for xl in exclude_lists or ():
-        xids, _, _ = xl.decode_all()
-        if xids.size:
-            mask &= ~np.isin(ids, xids)
-    return ids[mask], scores[mask]
+def score_all(lists: list[TermList], avgdl: float):
+    """Uncut BM25 over ``lists``: (ids ascending, scores)."""
+    return _scatter_add(_term_contribs(lists, avgdl))[:2]
 
 
 def merge_group(term: str, lists: list[TermList]) -> TermList:
@@ -219,69 +209,6 @@ def score_exhaustive(lists: list[TermList], avgdl: float, k: int):
     if k <= 0:
         return np.empty(0, np.uint64), np.empty(0, np.float64)
     return _accumulate(_term_contribs(lists, avgdl), k)
-
-
-def score_weighted_fields(field_lists, k: int):
-    """Multi-field weighted BM25 (the edismax ``qf`` analog): score =
-    Σ_fields w_f · BM25_f(doc) — each field keeps its own idf/avgdl
-    statistics, the weight scales the field's contribution.
-
-    ``field_lists``: iterable of (weight, lists, avgdl) triples.
-    Unpruned: MaxScore's bounds are per field."""
-    if k <= 0:
-        return np.empty(0, np.uint64), np.empty(0, np.float64)
-    return _accumulate([p for weight, lists, avgdl in field_lists
-                        for p in _term_contribs(lists, avgdl, weight)], k)
-
-
-def score_dismax(field_lists, k: int, tie: float = 0.0):
-    """Disjunction-max across fields (Solr/dismax ``tie``): a doc's
-    score is its BEST field score plus ``tie`` × the other fields'
-    scores — ``tie=0`` is pure dismax (a doc matching one field twice
-    beats a doc matching two fields weakly only if its best field
-    wins), ``tie=1`` degenerates to :func:`score_weighted_fields`' sum.
-
-    ``field_lists``: iterable of (weight, lists, avgdl) triples, one
-    per field. Vectorized: each field's :func:`score_all`, aligned on
-    one id universe, then ``max + tie·(sum − max)`` column-wise."""
-    if k <= 0:
-        return np.empty(0, np.uint64), np.empty(0, np.float64)
-    per_field = [score_all(lists, avgdl, weight)[:2]
-                 for weight, lists, avgdl in field_lists]
-    per_field = [(ids, s) for ids, s in per_field if ids.size]
-    if not per_field:
-        return np.empty(0, np.uint64), np.empty(0, np.float64)
-    uniq = np.unique(np.concatenate([ids for ids, _ in per_field]))
-    best = np.zeros(uniq.size, np.float64)
-    total = np.zeros(uniq.size, np.float64)
-    for ids, fscore in per_field:
-        aligned = np.zeros(uniq.size, np.float64)
-        aligned[np.searchsorted(uniq, ids)] = fscore
-        np.maximum(best, aligned, out=best)
-        total += aligned
-    combined = best + tie * (total - best)
-    return _topk_from_scores(uniq, combined, k)
-
-
-def score_boolean(lists: list[TermList], avgdl: float, k: int,
-                  require_all: bool = False,
-                  exclude_lists: list[TermList] | None = None,
-                  min_match: int | None = None):
-    """Boolean-filtered BM25 top-k: optional conjunctive semantics
-    (doc must contain EVERY query term), minimum-should-match
-    (``min_match=m``: doc must contain at least m of the query terms —
-    Solr/edismax ``mm``) and term exclusion (Solr's ``+must -not``
-    surface beyond plain OR). Scoring is the same BM25 sum over the
-    matched query terms; the boolean part only shrinks the candidate
-    set, so it composes with the cached decode like the exhaustive
-    kernel. Unpruned: MaxScore bounds OR scores, which is unsound
-    under a cardinality filter."""
-    if k <= 0 or not lists:
-        return np.empty(0, np.uint64), np.empty(0, np.float64)
-    floor = len(lists) if require_all else (min_match or 1)
-    ids, scores = filter_matches(*score_all(lists, avgdl), floor=floor,
-                                 exclude_lists=exclude_lists)
-    return _topk_from_scores(ids, scores, k)
 
 
 # Cost rule of the probe plan, in units of one posting through the
@@ -366,3 +293,181 @@ def score_block_max(lists: list[TermList], avgdl: float, k: int):
     scores = np.bincount(np.concatenate(idx_parts),
                          weights=np.concatenate(c_parts), minlength=cand.size)
     return _topk_from_scores(cand, scores, k)
+
+
+SHOULD, MUST, MUST_NOT, SCORE = "should", "must", "must_not", "score"
+
+
+class Clause(NamedTuple):
+    """One (field, term) list of a :class:`ScorePlan`, its BM25 scaled
+    by ``weight`` (folded into the idf, as a Lucene boost is). ``occur``
+    is SHOULD, MUST, MUST_NOT (never scored), or SCORE: added to docs
+    the other clauses admit, admitting none itself (edismax ``bq`` under
+    its required main query). Clauses sharing a ``group`` are one
+    dismax unit."""
+    field: str
+    term: str
+    weight: float = 1.0
+    occur: str = SHOULD
+    group: str | None = None
+
+
+class ScorePlan(NamedTuple):
+    """How a query's term contributions combine into a doc score.
+
+    A *unit* is a group's clauses or one ungrouped clause; it matches a
+    doc when any of its lists holds the doc. A doc is admitted when it
+    matches every MUST unit, no MUST_NOT list, and at least ``mm``
+    SHOULD units (at least one when the plan has no MUST unit). Its
+    score is the sum of its ungrouped clauses' contributions plus, per
+    group, ``best + tie·(sum − best)`` over the group's per-field sums
+    (Lucene's DisjunctionMaxQuery). Repeated (group, field, term)
+    clauses add their weights; a weight-0 clause only admits."""
+    clauses: tuple[Clause, ...]
+    tie: float = 0.0
+    mm: int = 0
+
+    @classmethod
+    def bag(cls, terms, field: str, occur: str = SHOULD, exclude=(),
+            mm: int = 0) -> "ScorePlan":
+        """Bag-of-words over one field: every term with ``occur``, every
+        ``exclude`` term MUST_NOT."""
+        clauses = [Clause(field, t, 1.0, occur) for t in dict.fromkeys(terms)]
+        if exclude:
+            clauses += [Clause(field, t, 0.0, MUST_NOT) for t in dict.fromkeys(exclude)]
+        return cls(tuple(clauses), 0.0, mm)
+
+    def terms_by_field(self) -> dict[str, list[str]]:
+        """{field: sorted terms} over every clause, fields sorted."""
+        out: dict[str, dict] = {}
+        for c in self.clauses:
+            out.setdefault(c.field, {})[c.term] = None
+        return {f: sorted(out[f]) for f in sorted(out)}
+
+
+def _weighted(tl: TermList, weight: float) -> TermList:
+    """``tl`` with ``weight`` folded into its idf; df (the sum order) kept."""
+    if weight == 1.0:
+        return tl
+    out = TermList(tl.term, tl.rows, weight * tl.idf)
+    out.df = tl.df
+    return out
+
+
+def _no_docs():
+    return np.empty(0, np.uint64), np.empty(0), np.empty(0)
+
+
+def run_plan(plan: ScorePlan, lists_by_field: dict[str, dict[str, TermList]],
+             avgdl_by_field: dict[str, float], k: int | None = None):
+    """Evaluate ``plan``: (ids, scores, base) of the admitted docs,
+    ``base`` being the score without SCORE clauses (``scores`` itself
+    when there are none). Uncut (ids ascending) when ``k`` is None,
+    else the exact (score DESC, doc_id ASC) top-k.
+
+    ``lists_by_field[field][term]`` is the term's list on whatever the
+    caller reads (the whole index on the driver, one bucket in an
+    executor), with the GLOBAL idf and the GLOBAL df: lists add in
+    (df, field, term) order, so both executors sum each doc alike.
+    A pure-should plan over one field with positive weights, mm ≤ 1
+    and a ``k`` takes MaxScore (:func:`score_block_max`), bit-identical
+    to the scatter-add."""
+    if k is not None and k <= 0:
+        return _no_docs()
+    field = plan.clauses[0].field if plan.clauses else None
+    pruned = k is not None and plan.mm <= 1
+    weights: dict[tuple, float] = {}
+    for c in plan.clauses:
+        pruned = pruned and (c.occur == SHOULD and c.group is None
+                             and c.weight > 0 and c.field == field)
+        if (c.occur != MUST_NOT and c.weight != 0.0
+                and c.term in lists_by_field.get(c.field, ())):
+            key = (c.group, c.occur == SCORE, c.field, c.term)
+            weights[key] = weights.get(key, 0.0) + c.weight
+    if pruned:
+        ids, scores = score_block_max(
+            [_weighted(lists_by_field[f][t], w) for (_, _, f, t), w in weights.items()],
+            avgdl_by_field.get(field, 1.0), k)
+        return ids, scores, scores
+
+    # one id universe over every scored or admitting list; scored lists
+    # first, in (df, field, term) order — the order each doc's sum runs
+    arrays, slot = [], {}
+    ungrouped, extra, groups = [], [], {}
+    for _, g, is_score, f, tl in sorted(
+            ((lists_by_field[f][t].df, f, t, g is not None, g or "", s), g, s, f,
+             _weighted(lists_by_field[f][t], w))
+            for (g, s, f, t), w in weights.items()):
+        slot.setdefault((f, tl.term), len(arrays))
+        if is_score:
+            extra.append(len(arrays))
+        elif g is None:
+            ungrouped.append(len(arrays))
+        else:
+            groups.setdefault(g, {}).setdefault(f, []).append(len(arrays))
+        arrays.append(_list_arrays(tl.contribs(avgdl_by_field[f])))
+    for c in plan.clauses:  # weight-0 clauses admit without scoring
+        if (c.occur in (SHOULD, MUST) and (c.field, c.term) not in slot
+                and c.term in lists_by_field.get(c.field, ())):
+            slot[(c.field, c.term)] = len(arrays)
+            arrays.append((lists_by_field[c.field][c.term].decode_all()[0], None))
+    if not arrays:
+        return _no_docs()
+    uniq, inv = _unique_inverse(np.concatenate([ids for ids, _ in arrays]))
+    bounds = np.cumsum([0] + [ids.size for ids, _ in arrays])
+    n = uniq.size
+
+    def scatter(pick, scored=True) -> np.ndarray:
+        if not pick:
+            return np.zeros(n)
+        idx = np.concatenate([inv[bounds[i]:bounds[i + 1]] for i in pick])
+        if not scored:
+            return np.bincount(idx, minlength=n) > 0
+        return np.bincount(idx, minlength=n,
+                           weights=np.concatenate([arrays[i][1] for i in pick]))
+
+    base = scatter(ungrouped)
+    for g in sorted(groups):
+        per_field = [scatter(groups[g][f]) for f in sorted(groups[g])]
+        best, total = per_field[0].copy(), per_field[0].copy()
+        for fs in per_field[1:]:
+            np.maximum(best, fs, out=best)
+            total += fs
+        base += best + plan.tie * (total - best)
+    scores = base + scatter(extra) if extra else base
+
+    units: dict = {}
+    for i, c in enumerate(plan.clauses):
+        if c.occur in (SHOULD, MUST):
+            units.setdefault(i if c.group is None else ("g", c.group),
+                             (c.occur, []))[1].append((c.field, c.term))
+    if not units:
+        return _no_docs()
+
+    def matches(fts) -> np.ndarray:
+        pick = [slot[ft] for ft in fts if ft in slot]
+        return scatter(pick, scored=False) if pick else np.zeros(n, bool)
+
+    musts = [fts for occ, fts in units.values() if occ == MUST]
+    floor = plan.mm if musts else max(plan.mm, 1)
+    mask = None
+    for fts in musts:
+        mask = matches(fts) if mask is None else mask & matches(fts)
+    if floor > 1 or (floor == 1 and (musts or extra)):
+        count = np.zeros(n, np.int64)
+        for occ, fts in units.values():
+            if occ == SHOULD:
+                count += matches(fts)
+        mask = count >= floor if mask is None else mask & (count >= floor)
+    for c in plan.clauses:
+        if c.occur == MUST_NOT and c.term in lists_by_field.get(c.field, ()):
+            xids = lists_by_field[c.field][c.term].decode_all()[0]
+            if xids.size:
+                keep = ~np.isin(uniq, xids)
+                mask = keep if mask is None else mask & keep
+    if mask is not None:
+        uniq, scores, base = uniq[mask], scores[mask], base[mask]
+    if k is not None:
+        order = _topk_order(uniq, scores, k)
+        uniq, scores, base = uniq[order], scores[order], base[order]
+    return uniq, scores, base

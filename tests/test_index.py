@@ -98,6 +98,82 @@ def test_topk_routes_distributed_beyond_doc_budget(spark, built, oracle):
     assert idx._result_hits >= 1 and idx._result_misses <= misses0 + 1
 
 
+def test_plan_surfaces_route_distributed_beyond_doc_budget(spark, built):
+    """Beyond the doc budget, topk_fields, topk_boost_query and a
+    term-only query string score in the executors like topk: the
+    driver's pages, bit for bit, and no driver postings collect."""
+    idx = open_index(spark, built[0])
+    idx._driver_score_max_docs = 1  # force the routed path
+    ref = open_index(spark, built[0])
+    w = {"code.content": 1.0, "code.ident.split": 2.0}
+    calls = [
+        lambda h: h.topk_fields(["def", "value"], fields=w, k=8),
+        lambda h: h.topk_fields(["def", "value"], fields=w, k=8, tie=0.3),
+        lambda h: h.topk_boost_query(["def", "value"], {"alpha": 0.7}, k=8),
+        lambda h: h.query_string("def value^2 return^0.5", k=8),
+        lambda h: h.query_string("+def value -alpha", k=8, min_match=1),
+    ]
+    for call in calls:
+        got = call(idx)
+        assert got and got == call(ref)
+    assert idx._cache_misses == 0  # no driver postings collect happened
+
+
+def test_plan_parity_driver_bucket_shards(spark, built, tmp_path):
+    """Each plan of the grid runs on the driver (run_plan over the term
+    cache) and per bucket (_plan_df(...).collect()): the same ids and
+    bit-identical scores, on a base-only index and on base + streamed
+    deltas + tombstones; FtShards([idx]) serves the same pages."""
+    from ftidx.index import _drop_tombstones, edismax_plan
+    from ftidx.shards import FtShards
+    from ftidx.streaming import index_microbatch
+    from ftidx.wand import MUST, Clause, ScorePlan, run_plan
+
+    f1, f2 = "code.content", "code.ident.split"
+    terms = ["def", "value", "alpha"]
+    qf = {f1: 1.0, f2: 2.0}
+    fields = ScorePlan(tuple(Clause(f, t, w) for f, w in qf.items()
+                             for t in terms))
+    plans = {
+        "or": ScorePlan.bag(terms, f1),
+        "and": ScorePlan.bag(["def", "value"], f1, MUST),
+        "mm2": ScorePlan.bag(terms, f1, mm=2),
+        "exclude": ScorePlan.bag(["def", "value"], f1, exclude=["alpha"]),
+        # the plan of the query string "def^2 value return^0.5"
+        "boosted": ScorePlan((Clause(f1, "def", 2.0), Clause(f1, "value"),
+                              Clause(f1, "return", 0.5))),
+        "fields": fields,
+        **{f"tie{tie}": ScorePlan(tuple(c._replace(group="") for c in fields.clauses),
+                                  tie=tie) for tie in (0.0, 0.3, 1.0)},
+        "bq": ScorePlan(ScorePlan.bag(["def", "value"], f1).clauses
+                        + (Clause(f1, "alpha", 0.7),)),
+        "edismax": edismax_plan(terms, qf, 0.3, 2, {"return": 0.7}),
+    }
+
+    out = str(tmp_path / "idx")
+    build_index(spark, synth_source(spark, 120), out, n_buckets=4)
+    index_microbatch(synth_source(spark, 200).filter(F.col("path") > "m"), 0,
+                     out, n_buckets=4)
+    streamed = open_index(spark, out)
+    streamed.delete([d for d, _ in streamed.topk(["def"], k=3)]
+                    + [d for d, _ in streamed.topk(["value"], k=2)])
+    assert streamed._delta_postings is not None and streamed._tombstones
+    for idx in (open_index(spark, built[0]), streamed):
+        for name, plan in plans.items():
+            ids, scores, _ = run_plan(plan, *idx._plan_lists(plan))
+            ids, scores = _drop_tombstones(ids, scores, idx._tombstones)
+            rows = sorted((r["doc_id"], r["score"])
+                          for r in idx._plan_df(plan).collect())
+            assert ids.size and [d for d, _ in rows] == ids.tolist(), name
+            assert np.array_equal([s for _, s in rows], scores), name
+        shards = FtShards([idx])
+        for t in (["def", "value"], ["alpha", "zzz_nothing"]):
+            assert [(d, s) for _, d, s in shards.topk(t, k=10)] == idx.topk(t, k=10)
+        kw = dict(qf=qf, tie=0.3, mm=2, bq={"return": 0.7}, k=10)
+        assert [tuple(r)[1:] for r in shards.edismax(terms, **kw).collect()] == \
+            [tuple(r) for r in idx.edismax(terms, **kw).collect()]
+
+
 def test_hot_terms_were_salted(spark, built):
     """The ledger must show skew handled: hot terms exist and the
     postings table still has ONE row per (term, field, bucket)."""
@@ -2379,6 +2455,41 @@ def test_open_index_launches_no_spark_job(spark, spark_jobs, tmp_path,
     assert idx.phrase_topk(["def", "value"], k=5) == \
         writer.phrase_topk(["def", "value"], k=5)
 
+    # with streamed deltas the collection stats span base + delta doc
+    # lengths: the one Spark aggregate that computes them is all an
+    # open pays, no reader infers its schema
+    from ftidx.index import DOCLEN_TABLE_SCHEMA, read_batches
+    from ftidx.streaming import index_microbatch
+
+    index_microbatch(synth_source(spark, 300).filter(F.col("path") > "m"), 0,
+                     out, n_buckets=4)
+
+    def stats_aggregate():
+        dl = read_batches(spark, tmp_path / "idx" / "delta_doclen",
+                          DOCLEN_TABLE_SCHEMA).select("doc_id", "field", "len")
+        dl = dl.unionByName(spark.read.schema(DOCLEN_TABLE_SCHEMA).parquet(
+            f"{out}/doclen").select("doc_id", "field", "len"))
+        return (dl.dropDuplicates(["doc_id", "field"]).groupBy("field")
+                .agg(F.count(F.lit(1)), F.sum("len")).collect())
+
+    _, agg_jobs = spark_jobs(stats_aggregate)
+    streamed, jobs = spark_jobs(lambda: open_index(spark, out))
+    assert streamed._delta_postings is not None
+    assert len(jobs) == len(agg_jobs) > 0
+
+
+def test_edismax_job_count(spark, spark_jobs, built):
+    """A two-field edismax with mm and bq is one df probe across both
+    fields and the bq term (cold), then one per-bucket plan pass and its
+    global cut; a warm df cache leaves the pass alone."""
+    idx = open_index(spark, built[0])
+    kw = dict(qf={"code.content": 1.0, "code.ident.split": 2.0}, tie=0.3,
+              mm=2, bq={"alpha": 0.7}, k=10)
+    cold, cold_jobs = spark_jobs(lambda: idx.edismax(["def", "value"], **kw).collect())
+    warm, warm_jobs = spark_jobs(lambda: idx.edismax(["def", "value"], **kw).collect())
+    assert cold and cold == warm
+    assert (len(cold_jobs), len(warm_jobs)) == (4, 2)
+
 
 def test_delete_launches_no_spark_job(spark, spark_jobs, tmp_path):
     """delete() appends its tombstone file driver-side with pyarrow:
@@ -2444,22 +2555,26 @@ def test_build_resumes_after_kill_between_postings_and_doclen(
 
 
 def test_fat_fetch_semaphore_path_correct(spark, built):
-    """query surfaces without a distributed fallback (query_string et
+    """query surfaces without a distributed fallback (ltr_rerank et
     al.) fetch fat postings through the big-fetch lock — results
     must be identical to the unguarded path, including under threads."""
     import threading
 
+    from ftidx.ltr import LinearModel
+
+    model = LinearModel({"orig": 1.0, "matched": 0.5})
     idx = open_index(spark, built[0])
     idx._driver_score_max_docs = 1  # every fetch takes the guarded path
     ref = open_index(spark, built[0])
-    want = ref.query_string("def value", k=8)
-    got = idx.query_string("def value", k=8)
+    want = ref.ltr_rerank(["def", "value"], model, k=8)
+    got = idx.ltr_rerank(["def", "value"], model, k=8)
     assert got == want
+    assert idx._cache_misses > 0  # the postings were collected
     outs, errs = {}, []
 
     def worker(i):
         try:
-            outs[i] = idx.query_string("alpha omega", k=6)
+            outs[i] = idx.ltr_rerank(["alpha", "omega"], model, k=6)
         except Exception as e:  # pragma: no cover
             errs.append(e)
 
@@ -2469,5 +2584,5 @@ def test_fat_fetch_semaphore_path_correct(spark, built):
     for t in ts:
         t.join()
     assert not errs, errs
-    want2 = ref.query_string("alpha omega", k=6)
+    want2 = ref.ltr_rerank(["alpha", "omega"], model, k=6)
     assert all(o == want2 for o in outs.values())

@@ -76,3 +76,57 @@ def test_only_the_writer_knows_the_transport_tags():
                 if name in TRANSPORT_TAGS | TRANSPORT_LITERALS:
                     found.append(f"{py.name}:{getattr(node, 'lineno', '?')} {name}")
     assert found == []
+
+
+# One scoring evaluator: BM25 contributions are computed and summed only
+# inside wand.py (run_plan and the kernels it shares), so no caller can
+# combine them in an order of its own. FtIndex.explain reports a single
+# doc's per-term contributions and is the one caller that computes them.
+SCORING_INTERNALS = {"_scatter_add", "bm25_contrib"}
+SCORING_EXCEPTIONS = {("index.py", "explain")}
+
+
+def _walk_with_scope(node: ast.AST, scope: tuple = ()):
+    """Every node with the names of the functions enclosing it."""
+    for child in ast.iter_child_nodes(node):
+        yield child, scope
+        inner = scope + (child.name,) if isinstance(
+            child, (ast.FunctionDef, ast.AsyncFunctionDef)) else scope
+        yield from _walk_with_scope(child, inner)
+
+
+def _referenced(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.alias):
+        return node.name
+    return None
+
+
+def test_only_wand_combines_bm25_contributions():
+    found = []
+    for py in sorted(FTIDX.glob("*.py")):
+        if py.name == "wand.py":
+            continue
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for node, scope in _walk_with_scope(tree):
+            if _referenced(node) in SCORING_INTERNALS and not (
+                    scope and (py.name, scope[0]) in SCORING_EXCEPTIONS):
+                found.append(f"{py.name}:{node.lineno} {'.'.join(scope)}")
+    assert found == []
+
+
+def test_one_executor_closure_builds_term_lists():
+    """A function nested in another runs inside executors (a
+    mapInPandas / applyInPandas body); the per-bucket plan runner is the
+    only one that builds TermLists, so bucket scoring cannot fork."""
+    builders = set()
+    for py in sorted(FTIDX.glob("*.py")):
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for node, scope in _walk_with_scope(tree):
+            if (len(scope) >= 2 and isinstance(node, ast.Call)
+                    and _referenced(node.func) == "TermList"):
+                builders.add(f"{py.name}:{scope[-2]}")
+    assert builders == {"index.py:_plan_df"}

@@ -223,12 +223,17 @@ def test_k_zero_returns_empty():
         assert ids.size == 0 and sc.size == 0
 
 
+def lists_of(field, lists):
+    return {field: {tl.term: tl for tl in lists}}
+
+
 @given(st.data())
 @settings(max_examples=40, deadline=None)
 def test_boolean_kernel_vs_bruteforce(data):
-    """score_boolean == per-doc brute force for random conjunctive /
-    exclusion queries over random segmented lists."""
-    from ftidx.wand import bm25_contrib, score_boolean
+    """run_plan's boolean admission == per-doc brute force for random
+    conjunctive / exclusion queries over random segmented lists."""
+    from ftidx.wand import (MUST, MUST_NOT, SHOULD, Clause, ScorePlan,
+                            bm25_contrib, run_plan)
 
     rng = np.random.default_rng(data.draw(st.integers(0, 10_000)))
     n_corpus = 500
@@ -247,8 +252,10 @@ def test_boolean_kernel_vs_bruteforce(data):
     excl = [rand_list("x0", 10, 80)] if with_exclude else []
     avgdl = 30.0
 
-    ids_k, sc_k = score_boolean(lists, avgdl, k, require_all=require_all,
-                                exclude_lists=excl)
+    occur = MUST if require_all else SHOULD
+    plan = ScorePlan(tuple(Clause("f", tl.term, 1.0, occur) for tl in lists)
+                     + tuple(Clause("f", xl.term, 0.0, MUST_NOT) for xl in excl))
+    ids_k, sc_k, _ = run_plan(plan, lists_of("f", lists + excl), {"f": avgdl}, k)
 
     # brute force in plain dicts
     scores, hits = {}, {}
@@ -267,3 +274,68 @@ def test_boolean_kernel_vs_bruteforce(data):
     assert ids_k.tolist() == expect
     np.testing.assert_allclose(
         sc_k, [scores[d] for d in expect], rtol=1e-12)
+
+
+@given(st.data())
+@settings(max_examples=30, deadline=None)
+def test_plan_combinations_vs_bruteforce(data):
+    """Two-field plans == per-doc brute force: the weighted sum, dismax
+    at tie 0 / 0.3 / 1 (best field + tie × the rest), per-term dismax
+    groups with mm over groups, and score-only clauses that add to
+    admitted docs without admitting any."""
+    from ftidx.wand import (SCORE, SHOULD, Clause, ScorePlan, bm25_contrib,
+                            run_plan)
+
+    rng = np.random.default_rng(data.draw(st.integers(0, 10_000)))
+    n_corpus, k = 400, data.draw(st.integers(1, 20))
+    tie = data.draw(st.sampled_from([None, 0.0, 0.3, 1.0]))
+    per_term = data.draw(st.booleans())
+    mm = data.draw(st.integers(0, 2))
+    weights = {"a": 1.0, "b": data.draw(st.sampled_from([0.5, 2.0, 2.5]))}
+    terms = ["t0", "t1"]
+
+    def rand_list(name):
+        ids = rng.choice(n_corpus, size=int(rng.integers(20, 150)), replace=False)
+        return make_list(name, [{int(d): (int(rng.integers(1, 6)),
+                                          int(rng.integers(5, 60))) for d in ids}],
+                         n_corpus)
+
+    by_field = {f: {t: rand_list(t) for t in terms + ["bq"]} for f in weights}
+    avgdl = {"a": 30.0, "b": 12.0}
+    contrib = {}
+    for f, lists in by_field.items():
+        for t, tl in lists.items():
+            ids, tfs, dls = tl.decode_all()
+            contrib[(f, t)] = dict(zip(ids.tolist(), (weights[f] * bm25_contrib(
+                tfs, dls, tl.idf, avgdl[f])).tolist()))
+
+    def dismax(vals):
+        return max(vals) + (tie or 0.0) * (sum(vals) - max(vals))
+
+    if per_term:  # edismax: one group per term, mm over groups, bq
+        plan = ScorePlan(tuple(Clause(f, t, weights[f], SHOULD, t)
+                               for t in terms for f in weights)
+                         + (Clause("a", "bq", 0.7, SCORE),),
+                         tie=tie or 0.0, mm=mm)
+        expect = {}
+        for d in {d for (_, t), m in contrib.items() if t != "bq" for d in m}:
+            groups = [[contrib[(f, t)][d] for f in weights if d in contrib[(f, t)]]
+                      for t in terms]
+            if sum(1 for g in groups if g) >= max(mm, 1):
+                expect[d] = (sum(dismax(g) for g in groups if g)
+                             + 0.7 / weights["a"] * contrib[("a", "bq")].get(d, 0.0))
+    else:  # topk_fields: weighted sum, or one dismax group over the fields
+        plan = ScorePlan(tuple(Clause(f, t, weights[f], SHOULD,
+                                      None if tie is None else "")
+                               for f in weights for t in terms),
+                         tie=tie or 0.0)
+        expect = {}
+        for d in {d for (_, t), m in contrib.items() if t != "bq" for d in m}:
+            per_field = [sum(contrib[(f, t)].get(d, 0.0) for t in terms)
+                         for f in weights
+                         if any(d in contrib[(f, t)] for t in terms)]
+            expect[d] = sum(per_field) if tie is None else dismax(per_field)
+    ids, scores, _ = run_plan(plan, by_field, avgdl, k)
+    want = sorted(expect, key=lambda d: (-expect[d], d))[:k]
+    assert ids.tolist() == want
+    np.testing.assert_allclose(scores, [expect[d] for d in want], rtol=1e-12)
