@@ -302,12 +302,20 @@ def test_plan_combinations_vs_bruteforce(data):
 
     by_field = {f: {t: rand_list(t) for t in terms + ["bq"]} for f in weights}
     avgdl = {"a": 30.0, "b": 12.0}
-    contrib = {}
-    for f, lists in by_field.items():
-        for t, tl in lists.items():
-            ids, tfs, dls = tl.decode_all()
-            contrib[(f, t)] = dict(zip(ids.tolist(), (weights[f] * bm25_contrib(
-                tfs, dls, tl.idf, avgdl[f])).tolist()))
+
+    # a clause weight folds into the idf and each doc's lists add in
+    # (global df, field, term) order, as run_plan defines them: distinct
+    # (tf, dl) pairs can tie exactly in real arithmetic, so any other
+    # rounding would reorder such ties against the engine's doc_id order
+    def scored(f, t, w):
+        tl = by_field[f][t]
+        ids, tfs, dls = tl.decode_all()
+        return dict(zip(ids.tolist(), bm25_contrib(
+            tfs, dls, w * tl.idf, avgdl[f]).tolist()))
+
+    contrib = {(f, t): scored(f, t, weights[f]) for f in weights for t in terms}
+    bq = scored("a", "bq", 0.7)
+    sum_order = sorted(contrib, key=lambda ft: (by_field[ft[0]][ft[1]].df, *ft))
 
     def dismax(vals):
         return max(vals) + (tie or 0.0) * (sum(vals) - max(vals))
@@ -318,23 +326,24 @@ def test_plan_combinations_vs_bruteforce(data):
                          + (Clause("a", "bq", 0.7, SCORE),),
                          tie=tie or 0.0, mm=mm)
         expect = {}
-        for d in {d for (_, t), m in contrib.items() if t != "bq" for d in m}:
+        for d in {d for m in contrib.values() for d in m}:
             groups = [[contrib[(f, t)][d] for f in weights if d in contrib[(f, t)]]
                       for t in terms]
             if sum(1 for g in groups if g) >= max(mm, 1):
                 expect[d] = (sum(dismax(g) for g in groups if g)
-                             + 0.7 / weights["a"] * contrib[("a", "bq")].get(d, 0.0))
+                             + bq.get(d, 0.0))
     else:  # topk_fields: weighted sum, or one dismax group over the fields
         plan = ScorePlan(tuple(Clause(f, t, weights[f], SHOULD,
                                       None if tie is None else "")
                                for f in weights for t in terms),
                          tie=tie or 0.0)
         expect = {}
-        for d in {d for (_, t), m in contrib.items() if t != "bq" for d in m}:
+        for d in {d for m in contrib.values() for d in m}:
             per_field = [sum(contrib[(f, t)].get(d, 0.0) for t in terms)
                          for f in weights
                          if any(d in contrib[(f, t)] for t in terms)]
-            expect[d] = sum(per_field) if tie is None else dismax(per_field)
+            expect[d] = (sum(contrib[ft].get(d, 0.0) for ft in sum_order)
+                         if tie is None else dismax(per_field))
     ids, scores, _ = run_plan(plan, by_field, avgdl, k)
     want = sorted(expect, key=lambda d: (-expect[d], d))[:k]
     assert ids.tolist() == want
