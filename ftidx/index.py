@@ -48,7 +48,7 @@ import threading
 import time
 import uuid
 from contextlib import contextmanager
-from functools import partial
+from functools import partial, reduce
 from pathlib import Path
 from typing import NamedTuple
 
@@ -56,11 +56,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ftidx.build import DEFAULT_BUCKETS, live_docs, prepare_docs
 from ftidx.codec import (decode_postings, delta_decode_runs, encode_many,
                          encode_postings, varint_decode)
-from ftidx.schema import CHECKPOINT_SCHEMA, POSTINGS_SCHEMA
+from ftidx.schema import (INDEX_TABLES, POSITIONS_SCHEMA, POSTINGS_SCHEMA,
+                          has_table, read_table)
 from ftidx.wand import (MUST, SCORE, SHOULD, Clause, ScorePlan, TermList,
                         _topk_from_scores, bm25_idf, merge_group, run_plan,
                         score_all)
@@ -144,14 +146,7 @@ DOCLEN_FIELD_PREFIX = "__dl__"
 DOCS_FIELD = "__docs__"
 PSEUDO_PREFIX = "__"  # every transport row's field starts with this
 
-_DOCS_META_COLS = ["doc_id", "repo", "path", "commit", "lang", "deleted",
-                   "modified", "content_sha256", "bucket"]
-DOCS_TABLE_SCHEMA = ("doc_id long, repo string, path string, commit string, "
-                     "lang string, deleted boolean, modified timestamp, "
-                     "content_sha256 string, bucket int")
-DOCLEN_TABLE_SCHEMA = "doc_id long, field string, len long, bucket int"
-STORED_TABLE_SCHEMA = "doc_id long, content string, bucket int"
-TOMBSTONE_SCHEMA = "doc_id long"
+_DOCS_META_COLS = INDEX_TABLES["docs"].fieldNames()
 
 
 def _serialize_meta(pdf: pd.DataFrame) -> bytes:
@@ -418,9 +413,9 @@ def _segment_pass(docs: DataFrame, *, stem_field: bool = False,
         yield _Segments(
             postings=out.filter(~field.startswith(PSEUDO_PREFIX)),
             doclen=dl_rows.select("field", "bucket", "doc_ids", "tfs")
-            .mapInPandas(_explode_doclen, schema=DOCLEN_TABLE_SCHEMA),
+            .mapInPandas(_explode_doclen, schema=INDEX_TABLES["doclen"]),
             docs=out.filter(field == DOCS_FIELD).select("dls")
-            .mapInPandas(_explode_docs, schema=DOCS_TABLE_SCHEMA),
+            .mapInPandas(_explode_docs, schema=INDEX_TABLES["docs"]),
             n_docs=dl_rows.groupBy("bucket").agg(F.max("df").alias("n")))
     finally:
         out.unpersist()
@@ -439,17 +434,9 @@ def _write_ledger_rows(ledger_dir: Path, rows: list[tuple]) -> None:
     import pyarrow.parquet as pq
 
     ledger_dir.mkdir(parents=True, exist_ok=True)
-    names = [f.name for f in CHECKPOINT_SCHEMA.fields]
-    table = pa.table(
-        {n: [r[i] for r in rows] for i, n in enumerate(names)},
-        schema=pa.schema([
-            ("build_id", pa.string()), ("bucket", pa.int32()),
-            ("status", pa.string()), ("n_docs", pa.int64()),
-            ("postings_emitted", pa.int64()), ("bytes_compressed", pa.int64()),
-            ("skew_ratio", pa.float64()), ("elapsed_sec", pa.float64()),
-            ("tracking_id", pa.string()), ("error", pa.string()),
-        ]),
-    )
+    schema = to_arrow_schema(INDEX_TABLES["ledger"])
+    table = pa.table({n: [r[i] for r in rows] for i, n in enumerate(schema.names)},
+                     schema=schema)
     pq.write_table(table, ledger_dir / f"part-{uuid.uuid4().hex}.parquet")
 
 
@@ -476,14 +463,9 @@ def _write_stats_rows(stats_dir: Path, rows) -> None:
 
     shutil.rmtree(stats_dir, ignore_errors=True)
     stats_dir.mkdir(parents=True, exist_ok=True)
-    table = pa.table(
-        {
-            "field": [r["field"] for r in rows],
-            "n_docs": [int(r["n_docs"]) for r in rows],
-            "total_len": [int(r["total_len"]) for r in rows],
-            "avgdl": [float(r["avgdl"]) for r in rows],
-        }
-    )
+    schema = to_arrow_schema(INDEX_TABLES["stats"])
+    table = pa.table({n: [r[n] for r in rows] for n in schema.names},
+                     schema=schema)
     pq.write_table(table, stats_dir / "part-0.parquet")
 
 
@@ -652,8 +634,8 @@ def build_index(
 
     ledger_dir = out / "ledger"
     done: set[int] = set()
-    if resume and ledger_dir.exists():
-        led = spark.read.parquet(str(ledger_dir))
+    if resume and has_table(out, "ledger"):
+        led = read_table(spark, out, "ledger")
         done = {r["bucket"] for r in led.filter(F.col("status") == "done").select("bucket").distinct().collect()}
 
     pending = [b for b in range(n_buckets) if b not in done]
@@ -711,8 +693,7 @@ def write_stats(spark: SparkSession, path: str | Path) -> None:
     for every maintenance op that rewrites postings or moves buckets,
     so their output is indistinguishable from a fresh build."""
     path = Path(path)
-    stats = spark.read.schema(DOCLEN_TABLE_SCHEMA).parquet(
-        str(path / "doclen")).groupBy("field").agg(
+    stats = read_table(spark, path, "doclen").groupBy("field").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("len").alias("total_len"),
         (F.sum("len") / F.count(F.lit(1))).cast("double").alias("avgdl"),
@@ -753,12 +734,11 @@ def write_termstats(spark: SparkSession, index_path: str) -> None:
     same function; a stale table is ignored via the postings
     fingerprint."""
     out = Path(index_path)
-    postings_dir = out / "postings"
     ts_dir = out / "termstats"
-    if not (postings_dir.exists() and any(postings_dir.iterdir())):
+    if not has_table(out, "postings"):
         return
-    p = spark.read.schema(POSTINGS_SCHEMA).parquet(str(postings_dir))
-    (p.groupBy("field", "term").agg(F.sum("df").alias("df_total"))
+    (read_table(spark, out, "postings")
+     .groupBy("field", "term").agg(F.sum("df").alias("df_total"))
      .repartitionByRange(8, "field", "term")
      .sortWithinPartitions("field", "term")
      .write.mode("overwrite").parquet(str(ts_dir)))
@@ -852,24 +832,12 @@ def _small_table(d: Path, columns: list[str] | None = None) -> list[dict]:
     return rows
 
 
-def batch_dirs(d: Path) -> list[Path]:
-    """The existing ``batch=<n>`` segment dirs of a delta table."""
-    return sorted(p for p in d.iterdir()
-                  if p.is_dir() and p.name.startswith("batch=")) \
-        if d.exists() else []
-
-
-def read_batches(spark: SparkSession, d: Path, schema=None) -> DataFrame | None:
-    """A delta table's segments with their ``batch`` column, or None.
-    Reads the listed dirs under ``basePath``: a ``batch=*`` glob makes
-    Spark probe the literal glob path for streaming-sink metadata and
-    log a FileNotFoundException stack per read."""
-    dirs = batch_dirs(d)
-    if not dirs:
-        return None
-    reader = spark.read.option("basePath", str(d))
-    return (reader.schema(schema) if schema is not None else reader).parquet(
-        *map(str, dirs))
+def read_doclen(spark: SparkSession, path: Path, *cols: str) -> DataFrame:
+    """The base and streamed doclen rows, ``cols`` only. A doc delivered
+    twice has a row in each, with the same length."""
+    return reduce(DataFrame.unionByName,
+                  [read_table(spark, path, t).select(*cols)
+                   for t in ("doclen", "delta_doclen")])
 
 
 def _entry_cost(rows: list[dict]) -> int:
@@ -1015,32 +983,26 @@ class FtIndex:
             self._refresh_inner()
 
     def _refresh_inner(self) -> None:
-        from ftidx.positions import _POS_COLS, POSITIONS_SCHEMA
-
-        # every Spark reader is handed its table's schema and the
-        # driver-sized tables are read with pyarrow: schema inference and
-        # collect() each cost a Spark job, and opening a handle needs none
+        # every Spark table is read through read_table, which hands the
+        # reader its declared schema, and the driver-sized tables are read
+        # with pyarrow: schema inference and collect() each cost a Spark
+        # job, and opening a handle needs none. An absent table reads
+        # empty: a streaming-only index has no build tables, and a
+        # delete_by_query(match_all=True) truncation leaves a valid,
+        # empty index behind.
         spark = self.spark
         # a streaming-only index (deltas, no build) has no manifest
         man = self.path / "_manifest.json"
         self.manifest = json.loads(man.read_text()) if man.exists() else {}
-        # postings/stats may be absent: a delete_by_query(match_all=True)
-        # truncation leaves a valid, empty index behind
-        postings_dir = self.path / "postings"
-        if postings_dir.exists() and any(postings_dir.iterdir()):
-            self._postings = spark.read.schema(POSTINGS_SCHEMA).parquet(
-                str(postings_dir))
-        else:
-            self._postings = spark.createDataFrame([], POSTINGS_SCHEMA)
+        self._postings = read_table(spark, self.path, "postings")
         # streamed delta segments (merge-on-read): union them in so the
         # serving surface (topk/topk_batch/server) answers over base +
         # deltas without waiting for compact; the kernels already
         # handle multiple segments per term with overlapping id ranges
         # (streaming hash ids)
-        delta = read_batches(spark, self.path / "deltas", POSTINGS_SCHEMA)
         self._delta_postings = None
-        if delta is not None:
-            delta = delta.select(_POSTINGS_COLS)
+        if has_table(self.path, "deltas"):
+            delta = read_table(spark, self.path, "deltas").select(_POSTINGS_COLS)
             self._postings = (
                 self._postings.select(_POSTINGS_COLS).unionByName(delta)
             )
@@ -1053,13 +1015,10 @@ class FtIndex:
         # maintenance rewrite invalidates it and the df probe falls
         # back to the postings aggregate (identical results, slower
         # cold probe) until write_termstats runs again
-        ts_dir = self.path / "termstats"
+        fp = self.path / "termstats" / "_postings_fingerprint"
         self._termstats = None
-        if ts_dir.exists() and any(ts_dir.iterdir()):
-            fp = ts_dir / "_postings_fingerprint"
-            if fp.exists() and fp.read_text() == _postings_fingerprint(self.path):
-                self._termstats = spark.read.schema(
-                    "field string, term string, df_total long").parquet(str(ts_dir))
+        if fp.exists() and fp.read_text() == _postings_fingerprint(self.path):
+            self._termstats = read_table(spark, self.path, "termstats")
         self.stats = {
             r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
             for r in _small_table(self.path / "stats")
@@ -1067,14 +1026,8 @@ class FtIndex:
         # delta doclen shifts the collection stats (n_docs, avgdl):
         # recompute across base + delta — a cheap agg over two skinny
         # tables, only paid when deltas exist
-        ddl = read_batches(spark, self.path / "delta_doclen", DOCLEN_TABLE_SCHEMA)
-        if ddl is not None:
-            frames = [ddl.select("doc_id", "field", "len")]
-            dl_dir = self.path / "doclen"
-            if dl_dir.exists() and any(dl_dir.iterdir()):
-                frames.append(spark.read.schema(DOCLEN_TABLE_SCHEMA)
-                              .parquet(str(dl_dir)).select("doc_id", "field", "len"))
-            dl = frames[0] if len(frames) == 1 else frames[0].unionByName(frames[1])
+        if has_table(self.path, "delta_doclen"):
+            dl = read_doclen(spark, self.path, "doc_id", "field", "len")
             self.stats = {
                 r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
                 for r in dl.dropDuplicates(["doc_id", "field"])
@@ -1087,23 +1040,15 @@ class FtIndex:
         # so a reader holding the old one never sees it change
         self._tombstones: frozenset[int] = frozenset(
             r["doc_id"] for r in _small_table(self.path / "tombstones", ["doc_id"]))
-        pos_dir = self.path / "positions"
-        self._positions = (
-            spark.read.schema(POSITIONS_SCHEMA).parquet(str(pos_dir))
-            if pos_dir.exists() else None
-        )
         # streamed positional deltas (Solr soft-commit parity): union
         # them in like the postings deltas, so a doc streamed in is
         # phrase-queryable BEFORE compact; phrase_docs merges
-        # same-doc occurrences across segments defensively already
-        dpos = read_batches(spark, self.path / "delta_positions",
-                            POSITIONS_SCHEMA)
-        if dpos is not None:
-            dpos = dpos.select(_POS_COLS)
-            self._positions = (
-                dpos if self._positions is None
-                else self._positions.select(_POS_COLS).unionByName(dpos)
-            )
+        # same-doc occurrences across segments defensively already.
+        # None when neither exists: the index has no positions.
+        pos = [read_table(spark, self.path, t).select(POSITIONS_SCHEMA.fieldNames())
+               for t in ("positions", "delta_positions")
+               if has_table(self.path, t)]
+        self._positions = reduce(DataFrame.unionByName, pos) if pos else None
         self._term_cache.clear()
         self._cache_bytes = 0
         self._df_cache.clear()  # maintenance rewrites change dfs
@@ -1537,13 +1482,12 @@ class FtIndex:
             n_terms, n_rows = vocab.get(f, (0, 0))
             fields[f] = {"n_docs": n, "avgdl": round(a, 5),
                          "n_terms": n_terms, "n_posting_rows": n_rows}
-        deltas_dir = self.path / "deltas"
         return {
             "build_id": self.manifest.get("build_id"),
             "n_buckets": self.manifest.get("n_buckets"),
             "positions": (self.path / "positions").exists(),
             "tombstones": len(self._tombstones),
-            "has_deltas": deltas_dir.exists() and any(deltas_dir.iterdir()),
+            "has_deltas": has_table(self.path, "deltas"),
             "fields": fields,
         }
 
@@ -1771,7 +1715,7 @@ class FtIndex:
         TakeOrderedAndProject."""
         scored = self._plan_df(ScorePlan.bag(terms, field))
         keep = (
-            self.spark.read.parquet(str(self.path / "docs"))
+            read_table(self.spark, self.path, "docs")
             .filter(where).select("doc_id")
         )
         return (
@@ -1783,7 +1727,7 @@ class FtIndex:
                      field: str = "code.content",
                      mode: str = "add") -> DataFrame:
         """Function boost over stored metadata columns (e.g.
-        ``0.1 * ln(1 + n_chars)`` or a recency decay over
+        ``0.1 * ln(1 + length(path))`` or a recency decay over
         ``modified``). ``mode="add"`` is Solr ``bf=`` (final = BM25 +
         boost); ``mode="mult"`` is edismax ``boost=`` (final = BM25 ×
         boost — the multiplicative form Solr recommends for recency/
@@ -1800,7 +1744,7 @@ class FtIndex:
         if mode not in ("add", "mult"):
             raise ValueError(f"mode must be 'add' or 'mult', got {mode!r}")
         scored = self._plan_df(ScorePlan.bag(terms, field))
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         combine = (F.col("score") + F.col("boost") if mode == "add"
                    else F.col("score") * F.col("boost"))
         return (
@@ -1844,7 +1788,7 @@ class FtIndex:
         resolved = FQ.resolve(FQ.parse(fq), prov, now_ms)
         boost_sql = FQ.compile_spark(resolved, now_ms)
         scored = self._plan_df(ScorePlan.bag(terms, field))
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         for col_name, frame in prov.join_frames:
             docs = docs.join(frame, "doc_id", "left").withColumn(
                 col_name, F.coalesce(F.col(col_name), F.lit(0.0)))
@@ -1885,7 +1829,7 @@ class FtIndex:
         prov = _FuncQueryProvider(self, field, now_ms)
         resolved = FQ.resolve(FQ.parse(func), prov, now_ms)
         val_sql = FQ.compile_spark(resolved, now_ms)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         for col_name, frame in prov.join_frames:
             docs = docs.join(frame, "doc_id", "left").withColumn(
                 col_name, F.coalesce(F.col(col_name), F.lit(0.0)))
@@ -1908,7 +1852,7 @@ class FtIndex:
         """Learning-to-rank scoring (Solr LTR module with a linear
         model): final = ``bm25_weight``·BM25 + Σ w_f·feature_f, each
         feature a SQL expression over STORED docs-table columns
-        (``{"n_chars / 1000": 0.5, "lang = 'python'": 2.0}`` —
+        (``{"length(path) / 100": 0.5, "lang = 'python'": 2.0}`` —
         booleans cast to 0/1). The shape every feature-based reranker
         reduces to once the model is linear; a nonlinear model plugs
         in the same way with the combination as one expression.
@@ -1921,7 +1865,7 @@ class FtIndex:
         feature extraction never runs on docs outside the match set."""
         scored = self._plan_df(ScorePlan.bag(terms, field))
         exprs = list(model)
-        docs = self.spark.read.parquet(str(self.path / "docs")).select(
+        docs = read_table(self.spark, self.path, "docs").select(
             "doc_id",
             *[F.expr(e).cast("double").alias(f"_f{i}")
               for i, e in enumerate(exprs)],
@@ -2057,7 +2001,7 @@ class FtIndex:
         TakeOrderedAndProject."""
         qf = qf or {"code.content": 1.0}
         scored = self._plan_df(edismax_plan(terms, qf, tie, mm, bq), base=True)
-        docs = (self.spark.read.parquet(str(self.path / "docs"))
+        docs = (read_table(self.spark, self.path, "docs")
                 if bf is not None or boost is not None else None)
         return edismax_finish(scored, docs, ["doc_id"], bf, boost, k)
 
@@ -2078,7 +2022,7 @@ class FtIndex:
         from pyspark.sql import Window
 
         scored = self._plan_df(ScorePlan.bag(terms, field))
-        docs = self.spark.read.parquet(str(self.path / "docs")).select(
+        docs = read_table(self.spark, self.path, "docs").select(
             "doc_id", F.col(group_col).alias("group_value"))
         within = Window.partitionBy("group_value").orderBy(
             F.desc("score"), F.asc("doc_id"))
@@ -2131,7 +2075,7 @@ class FtIndex:
         from pyspark.sql import Window
 
         scored = self._plan_df(ScorePlan.bag(terms, field))
-        docs = self.spark.read.parquet(str(self.path / "docs")).select(
+        docs = read_table(self.spark, self.path, "docs").select(
             "doc_id", F.col(group_col).alias("group_value"))
         within = Window.partitionBy("group_value").orderBy(
             F.desc("score"), F.asc("doc_id"))
@@ -2183,7 +2127,7 @@ class FtIndex:
         if score_mode not in aggs:
             raise ValueError(f"score_mode must be one of {sorted(aggs)}")
         scored = self._plan_df(ScorePlan.bag(terms, field))
-        docs = self.spark.read.parquet(str(self.path / "docs")).select(
+        docs = read_table(self.spark, self.path, "docs").select(
             "doc_id", F.col(parent_col).alias("parent"))
         return (
             scored.join(docs, "doc_id")
@@ -2218,7 +2162,7 @@ class FtIndex:
         if score_mode not in aggs:
             raise ValueError(f"score_mode must be one of {sorted(aggs)}")
         scored = self._plan_df(ScorePlan.bag(terms, field))
-        docs = self.spark.read.parquet(str(self.path / "docs")).select(
+        docs = read_table(self.spark, self.path, "docs").select(
             "doc_id", F.col(parent_col).alias("parent"))
         parents = (
             scored.join(docs, "doc_id")
@@ -2242,7 +2186,7 @@ class FtIndex:
         tiebreakers — fully deterministic), one page returned.
 
         ``sort_col`` accepts any SQL expression over docs-table columns
-        (Solr sort-by-function: ``"length(path)"``, ``"n_chars % 100"``)
+        (Solr sort-by-function: ``"length(path)"``, ``"doc_id % 100"``)
         — the expression stays a codegen'd projection, column pruning
         follows its references.
 
@@ -2253,7 +2197,7 @@ class FtIndex:
         — offset N still scores all matches but only ships start+rows
         rows to the driver via the global TakeOrdered."""
         scored = self._plan_df(ScorePlan.bag(terms, field))
-        docs = self.spark.read.parquet(str(self.path / "docs")).select(
+        docs = read_table(self.spark, self.path, "docs").select(
             "doc_id", F.expr(sort_col).alias("sort_value"))
         key = F.asc("sort_value") if ascending else F.desc("sort_value")
         return (
@@ -2286,7 +2230,7 @@ class FtIndex:
         engine itself emitted (same bits round-trip through the
         driver; the HTTP tier ships it as ``float.hex``)."""
         scored = self._plan_df(ScorePlan.bag(terms, field))
-        docs = self.spark.read.parquet(str(self.path / "docs")).select(
+        docs = read_table(self.spark, self.path, "docs").select(
             "doc_id", F.expr(sort_col).alias("sort_value"))
         j = scored.join(docs, "doc_id")
         if after is not None:
@@ -2347,7 +2291,7 @@ class FtIndex:
                              "contract)")
         keys = _parse_sort_keys(sort)
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         return (
             docs.join(matched, "doc_id")
             .orderBy(*keys, F.asc("doc_id"))
@@ -2359,7 +2303,7 @@ class FtIndex:
                     cardinality: bool = False, rsd: float = 0.01) -> DataFrame:
         """Solr stats-component analog: aggregate a docs-table column —
         or any SQL expression over docs-table columns (Solr stats on a
-        function query: ``"n_chars % 100"``) — over the query's
+        function query: ``"length(path) % 10"``) — over the query's
         matching docs (count distinct values, min/max for orderable
         values). Same distributed shape as :meth:`facet_counts` —
         executor-side id decode, id-keyed join (tombstones excluded,
@@ -2372,7 +2316,7 @@ class FtIndex:
         with a high-cardinality column (e.g. ``commit``) the sketch is
         the only viable path, which is exactly why Solr ships it."""
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         c = F.expr(stat_col)
         aggs = [
             F.count(F.lit(1)).alias("n_matched"),
@@ -2762,10 +2706,10 @@ class FtIndex:
         src = from_index if from_index is not None else self
         fcol = from_col if from_col is not None else join_col
         inner = src._matched_ids(inner_terms, field)
-        fdocs = src.spark.read.parquet(str(src.path / "docs"))
+        fdocs = read_table(src.spark, src.path, "docs")
         keys = (fdocs.join(inner, "doc_id")
                 .select(F.col(fcol).alias(join_col)).distinct())
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         scored = self._plan_df(ScorePlan.bag(outer_terms, field))
         return (
             scored.join(docs.select("doc_id", join_col), "doc_id")
@@ -2797,7 +2741,7 @@ class FtIndex:
         from pyspark.sql import Window
 
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         joined = docs.join(matched, "doc_id")
         base = joined.filter(F.col(facet).isNotNull())
         if prefix is not None:
@@ -2956,7 +2900,7 @@ class FtIndex:
         orderBy+limit — TakeOrderedAndProject, never a global sort."""
         agg, fg_n = self._sig_aggregates(terms, field, min_term_length)
         bg_n, _ = self.stats.get(field, (0, 1.0))
-        if agg is None or fg_n == 0 or bg_n == 0:
+        if fg_n == 0 or bg_n == 0:
             return self.spark.createDataFrame(
                 [], "term string, fg_df long, bg_df long, score double")
         return _sig_score_cut(agg, fg_n, bg_n, limit,
@@ -2964,7 +2908,7 @@ class FtIndex:
 
     def _sig_aggregates(self, terms: list[str], field: str,
                         min_term_length: int
-                        ) -> tuple[DataFrame | None, int]:
+                        ) -> tuple[DataFrame, int]:
         """:meth:`significant_terms`' per-collection aggregation —
         ((term, fg_df, bg_df) frame, fg_n), no bounds/score applied —
         factored out so :class:`ftidx.shards.FtShards` can sum these
@@ -2972,16 +2916,8 @@ class FtIndex:
         EXACT distributed merge; Solr's distributed significantTerms
         merges per-shard top candidates and is approximate)."""
         fg = self._matched_ids(terms, field)
-        bucket_src = [self.path / "doclen", self.path / "delta_doclen"]
-        dl = None
-        for d in bucket_src:
-            if d.exists() and any(d.iterdir()):
-                part = (self.spark.read.parquet(str(d))
-                        .filter(F.col("field") == field)
-                        .select("doc_id", "bucket"))
-                dl = part if dl is None else dl.unionByName(part)
-        if dl is None:
-            return None, 0
+        dl = read_doclen(self.spark, self.path, "doc_id", "field", "bucket") \
+            .filter(F.col("field") == field)
         fgb = fg.join(dl, "doc_id").select("doc_id", "bucket").distinct()
         fg_n = fgb.count()
         posts = self._postings.filter(
@@ -3050,7 +2986,7 @@ class FtIndex:
             out[label] = len(ids - self._tombstones)
         return out
 
-    def facet_range(self, terms: list[str], facet: str = "n_chars",
+    def facet_range(self, terms: list[str], facet: str,
                     start: float = 0, end: float = 1 << 30,
                     gap: float = 100, field: str = "code.content") -> DataFrame:
         """Range faceting (Solr ``facet.range``): matching docs
@@ -3061,7 +2997,7 @@ class FtIndex:
         :meth:`facet_counts`; the bucketing is one codegen'd floor
         expression, the histogram one map-side-combinable groupBy."""
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         col = F.col(facet).cast("double")
         bucket_start = (F.floor((col - F.lit(float(start))) / F.lit(float(gap)))
                         * F.lit(float(gap)) + F.lit(float(start)))
@@ -3099,7 +3035,7 @@ class FtIndex:
         if start >= end:
             raise ValueError(f"start {start!r} must precede end {end!r}")
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         row = (
             docs.join(matched, "doc_id")
             .agg(
@@ -3184,7 +3120,7 @@ class FtIndex:
         if s_dt >= e_dt:
             raise ValueError(f"start {start!r} must precede end {end!r}")
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         col = F.col(facet).cast("timestamp")
         s_lit = F.lit(s_dt)
         e_lit = F.lit(e_dt)
@@ -3218,7 +3154,7 @@ class FtIndex:
 
     def facet_interval(self, terms: list[str],
                        intervals: list[tuple[float, float, str]],
-                       facet: str = "n_chars",
+                       facet: str,
                        field: str = "code.content") -> DataFrame:
         """Interval faceting (Solr ``facet.interval`` with
         ``facet.interval.set=[lo,hi)``): match-set counts per
@@ -3231,7 +3167,7 @@ class FtIndex:
         given interval order, zero-count intervals included (Solr
         semantics — intervals are explicit, not discovered)."""
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         col = F.col(facet).cast("double")
         aggs = [
             F.coalesce(
@@ -3271,7 +3207,7 @@ class FtIndex:
         from pyspark.sql import Window
 
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         pairs = (
             docs.join(matched, "doc_id")
             .groupBy(F.col(facet).alias("value"),
@@ -3315,7 +3251,7 @@ class FtIndex:
         uniform because the doc side, not the value side, carries the
         cardinality."""
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         f1, f2 = fields
         return (
             docs.join(matched, "doc_id")
@@ -3345,8 +3281,8 @@ class FtIndex:
         ``F.percentile_approx`` (t-digest, combinable) and accept the
         approximation."""
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
-        dl = (self.spark.read.parquet(str(self.path / "doclen"))
+        docs = read_table(self.spark, self.path, "docs")
+        dl = (read_table(self.spark, self.path, "doclen")
               .filter(F.col("field") == field).select("doc_id", "len"))
         aggs = [F.count(F.lit(1)).alias("n_docs"),
                 F.sum("len").alias("sum_len"),
@@ -3375,7 +3311,7 @@ class FtIndex:
         data pages). For Solr's SORTED streaming contract (sort=/fl=
         required, rows in order) use :meth:`export`."""
         matched = self._matched_ids(terms, field)
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         if columns:
             docs = docs.select("doc_id", *[c for c in columns if c != "doc_id"])
         docs.join(matched, "doc_id").write.mode("overwrite").parquet(out_dir)
@@ -3389,10 +3325,10 @@ class FtIndex:
         double build cost for a rarely-hot path), so this is a scan of
         the doc's ONE bucket partition: partition pruning keeps it at
         O(bucket), executor-side decode keeps the driver at top_m rows."""
-        bucket = self._bucket_of(doc_id)
+        buckets = self._buckets_of([doc_id])
         rows = self._postings
-        if bucket is not None:
-            rows = rows.filter(F.col("bucket") == bucket)
+        if buckets:
+            rows = rows.filter(F.col("bucket").isin(buckets))
         rows = rows.filter(F.col("field") == field).select("term", "doc_ids", "tfs")
         target = np.uint64(doc_id)
 
@@ -3456,9 +3392,8 @@ class FtIndex:
         concurrent queries never wait behind a Spark job."""
         with self._cache_lock:
             out = self._cache_metrics()
-        ledger_dir = self.path / "ledger"
-        if ledger_dir.exists() and any(ledger_dir.iterdir()):
-            out.update(self._ledger_metrics(ledger_dir, out["build_id"]))
+        if has_table(self.path, "ledger"):
+            out.update(self._ledger_metrics(out["build_id"]))
         return out
 
     def _cache_metrics(self) -> dict:
@@ -3493,15 +3428,13 @@ class FtIndex:
             "build_id": self.manifest.get("build_id"),
         }
 
-    def _ledger_metrics(self, ledger_dir: Path, build_id) -> dict:
+    def _ledger_metrics(self, build_id) -> dict:
         """The last build's ledger summary and failure reasons for
-        :meth:`metrics`, read from the persisted per-bucket ledger."""
+        :meth:`metrics`, read from the persisted per-bucket ledger
+        (ledger files written before the S27 ``error`` column read it
+        as null)."""
         out = {}
-        # mergeSchema: ledgers written before the S27 error column
-        # existed coexist with rows that carry it — without the
-        # merge, Spark picks one file's schema arbitrarily
-        led = self.spark.read.option("mergeSchema", "true") \
-            .parquet(str(ledger_dir))
+        led = read_table(self.spark, self.path, "ledger")
         # the ledger is append-only across build generations — a
         # blind sum double-counts after a rebuild. Aggregate per
         # generation and report the manifest's build id; a resume
@@ -3538,30 +3471,29 @@ class FtIndex:
         # ledger is append-only, so reasons survive the resume that
         # fixed them; unresolved = failed buckets with no "done"
         # row anywhere (i.e. still pending a successful retry).
-        if "error" in led.columns:
-            fails = (
-                led.filter(F.col("status") == "failed")
-                .select("build_id", "bucket", "tracking_id", "error")
-                .collect()
-            )
-            if fails:
-                done_b = {
-                    int(r["bucket"])
-                    for r in led.filter(F.col("status") == "done")
-                    .select("bucket").distinct().collect()
-                }
-                out["failures"] = {
-                    "count": len(fails),
-                    "unresolved_buckets": sorted(
-                        {int(r["bucket"]) for r in fails} - done_b),
-                    "rows": [
-                        {"build_id": r["build_id"],
-                         "bucket": int(r["bucket"]),
-                         "tracking_id": r["tracking_id"],
-                         "error": r["error"]}
-                        for r in fails[:50]
-                    ],
-                }
+        fails = (
+            led.filter(F.col("status") == "failed")
+            .select("build_id", "bucket", "tracking_id", "error")
+            .collect()
+        )
+        if fails:
+            done_b = {
+                int(r["bucket"])
+                for r in led.filter(F.col("status") == "done")
+                .select("bucket").distinct().collect()
+            }
+            out["failures"] = {
+                "count": len(fails),
+                "unresolved_buckets": sorted(
+                    {int(r["bucket"]) for r in fails} - done_b),
+                "rows": [
+                    {"build_id": r["build_id"],
+                     "bucket": int(r["bucket"]),
+                     "tracking_id": r["tracking_id"],
+                     "error": r["error"]}
+                    for r in fails[:50]
+                ],
+            }
         return out
 
     def predicate_ids(self, predicate: str) -> frozenset:
@@ -3582,7 +3514,7 @@ class FtIndex:
         if cached is None:
             # the docs scan runs OUTSIDE the lock (concurrent queries
             # overlap); a raced duplicate insert is identical + skipped
-            docs = self.spark.read.parquet(str(self.path / "docs"))
+            docs = read_table(self.spark, self.path, "docs")
             cached = frozenset(
                 int(r["doc_id"])
                 for r in docs.filter(F.expr(predicate))
@@ -3621,7 +3553,7 @@ class FtIndex:
             return []
         id_df = self.spark.createDataFrame(
             [(d,) for d in ids], "doc_id long")
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         rows = (
             docs.join(F.broadcast(id_df), "doc_id")
             .groupBy(F.col(facet).alias("value"))
@@ -3637,7 +3569,7 @@ class FtIndex:
         Solr surface::
 
             {"query": "+merge ret* -slow",
-             "filter": ["lang = 'python'", "n_chars >= 100"],
+             "filter": ["lang = 'python'", "length(path) >= 20"],
              "offset": 0, "limit": 10,
              "fields": ["path", "lang"],
              "facet": {"langs": {"type": "terms", "field": "lang",
@@ -3662,12 +3594,12 @@ class FtIndex:
         domain::
 
             {"query": "merge",
-             "filter": ["{!tag=L}lang = 'python'", "n_chars >= 100"],
+             "filter": ["{!tag=L}lang = 'python'", "length(path) >= 20"],
              "facet": {"langs": {"type": "terms", "field": "lang",
                                  "domain": {"excludeTags": ["L"]}},
                        "fast": {"type": "query", "q": "fast"}}}
 
-        ``langs`` then counts over query ∩ (n_chars filter) — the
+        ``langs`` then counts over query ∩ (path-length filter) — the
         user's own language selection does not collapse the language
         facet to one bar, which is the whole point of multi-select
         UIs — while ``response`` and un-excluding facets still apply
@@ -3737,7 +3669,7 @@ class FtIndex:
                 not all(isinstance(s, dict) for s in facet_spec.values()):
             raise ValueError("'facet' must be {name: {type/field/limit}}")
         if facet_spec:
-            docs_tbl = self.spark.read.parquet(str(self.path / "docs"))
+            docs_tbl = read_table(self.spark, self.path, "docs")
             # a facet's domain = query hits ∩ the non-excluded filters;
             # memoized per applied-filter mask so N facets sharing a
             # domain share ONE id list (and the all-applied domain is
@@ -3825,15 +3757,7 @@ class FtIndex:
                       if int(d) not in self._tombstones})
         if not ids:
             return []
-        dl_dir = self.path / "doclen"
-        buckets: list[int] = []
-        if dl_dir.exists() and any(dl_dir.iterdir()):
-            buckets = sorted({
-                int(r["bucket"]) for r in
-                self.spark.read.parquet(str(dl_dir))
-                .filter(F.col("doc_id").isin(ids))
-                .select("bucket").distinct().collect()
-            })
+        buckets = self._buckets_of(ids)
         rows = self._postings
         if buckets:
             rows = rows.filter(F.col("bucket").isin(buckets))
@@ -3932,22 +3856,19 @@ class FtIndex:
         out.sort(key=lambda c: (-c["n_docs"], c["label"]))
         return out
 
-    def _bucket_of(self, doc_id: int) -> int | None:
-        """Bucket owning ``doc_id``, resolved via the doclen table (one
-        column-pruned, predicate-pushed lookup). NOT derived from
+    def _buckets_of(self, doc_ids: list[int]) -> list[int]:
+        """The buckets owning ``doc_ids``, resolved in ONE column-pruned
+        doclen scan (isin pushdown), not one job per id. NOT derived from
         ``doc_id >> BUCKET_SHIFT``: that is only valid for batch rank
         ids, and a streaming hash id aliases into a plausible bucket
-        once per ~65k ids — a silently-empty term vector. None when the
-        id is unknown (caller scans every bucket)."""
-        dl_dir = self.path / "doclen"
-        if dl_dir.exists() and any(dl_dir.iterdir()):
-            row = (
-                self.spark.read.parquet(str(dl_dir))
-                .filter(F.col("doc_id") == doc_id).select("bucket").first()
-            )
-            if row is not None:
-                return int(row["bucket"])
-        return None
+        once per ~65k ids — a silently-empty term vector. Ids absent
+        from doclen have no docs row; [] when none resolves (the caller
+        then scans every bucket). The page's few rows per id are
+        deduplicated here: a distinct would cost a shuffle job."""
+        return sorted({
+            int(r["bucket"]) for r in
+            read_table(self.spark, self.path, "doclen")
+            .filter(F.col("doc_id").isin(doc_ids)).select("bucket").collect()})
 
     def get_doc(self, doc_id: int) -> dict | None:
         """Real-time-get analog (Solr ``/get``): the metadata row for
@@ -3959,11 +3880,11 @@ class FtIndex:
         them, matching the docs-table-backed facet/export surfaces."""
         if doc_id in self._tombstones:
             return None
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        docs = read_table(self.spark, self.path, "docs")
         q = docs.filter(F.col("doc_id") == doc_id)
-        b = self._bucket_of(doc_id)
-        if b is not None:
-            q = q.filter(F.col("bucket") == b)
+        buckets = self._buckets_of([doc_id])
+        if buckets:
+            q = q.filter(F.col("bucket").isin(buckets))
         row = q.first()
         return row.asDict() if row is not None else None
 
@@ -3977,20 +3898,10 @@ class FtIndex:
         ids = [d for d in dict.fromkeys(doc_ids) if d not in self._tombstones]
         if not ids:
             return {}
-        # resolve every id's bucket in ONE doclen scan (isin pushdown) —
-        # not one _bucket_of job per id — then prune the docs scan to
-        # those partitions; ids absent from doclen have no docs row, so
-        # the partition pruning cannot drop them
-        dl_dir = self.path / "doclen"
-        buckets: list[int] = []
-        if dl_dir.exists() and any(dl_dir.iterdir()):
-            buckets = sorted({
-                int(r["bucket"]) for r in
-                self.spark.read.parquet(str(dl_dir))
-                .filter(F.col("doc_id").isin(ids))
-                .select("bucket").distinct().collect()
-            })
-        docs = self.spark.read.parquet(str(self.path / "docs"))
+        # prune the docs scan to the ids' buckets: ids absent from
+        # doclen have no docs row, so the pruning cannot drop them
+        buckets = self._buckets_of(ids)
+        docs = read_table(self.spark, self.path, "docs")
         if buckets:
             docs = docs.filter(F.col("bucket").isin(buckets))
         docs = docs.filter(F.col("doc_id").isin(ids))
@@ -4025,8 +3936,7 @@ class FtIndex:
         """
         if frag_size <= 0 or max_frags <= 0:
             raise ValueError("frag_size and max_frags must be positive")
-        stored_dir = self.path / "stored"
-        if not stored_dir.exists():
+        if not (self.path / "stored").exists():
             raise ValueError(
                 "highlighting needs stored text: build the index with "
                 "store_content=True")
@@ -4037,18 +3947,9 @@ class FtIndex:
                if d not in self._tombstones]
         docs: dict[int, dict] = {}
         if ids:
-            # resolve the page's buckets in ONE doclen scan (same
-            # discipline as fetch_docs), prune the stored scan to them
-            dl_dir = self.path / "doclen"
-            buckets: list[int] = []
-            if dl_dir.exists() and any(dl_dir.iterdir()):
-                buckets = sorted({
-                    int(r["bucket"]) for r in
-                    self.spark.read.parquet(str(dl_dir))
-                    .filter(F.col("doc_id").isin(ids))
-                    .select("bucket").distinct().collect()
-                })
-            stored = self.spark.read.parquet(str(stored_dir))
+            # prune the stored scan to the page's buckets
+            buckets = self._buckets_of(ids)
+            stored = read_table(self.spark, self.path, "stored")
             if buckets:
                 stored = stored.filter(F.col("bucket").isin(buckets))
             docs = {int(r["doc_id"]): {text_col: r[text_col]} for r in
@@ -4176,7 +4077,7 @@ class _FuncQueryProvider:
                 "scale() over termfreq()/norm() is not supported — "
                 "scale the joined column with explicit bounds instead")
         sql = FQ.compile_spark(x_node, self.now_ms)
-        docs = self.idx.spark.read.parquet(str(self.idx.path / "docs"))
+        docs = read_table(self.idx.spark, self.idx.path, "docs")
         row = docs.select(F.expr(sql).alias("x")).agg(
             F.min("x").alias("mn"), F.max("x").alias("mx")).collect()[0]
         if row["mn"] is None:
@@ -4193,7 +4094,7 @@ class _FuncQueryProvider:
     def norm_column(self, field: str) -> tuple[str, str]:
         col = f"__fq_norm{len(self.join_frames)}"
         dl = (
-            self.idx.spark.read.parquet(str(self.idx.path / "doclen"))
+            read_table(self.idx.spark, self.idx.path, "doclen")
             .filter(F.col("field") == field)
             # a doc's dl can be split across base + delta segment rows
             .groupBy("doc_id").agg(F.sum("len").alias("len"))

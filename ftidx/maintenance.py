@@ -30,21 +30,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ftidx.index import (DOCLEN_TABLE_SCHEMA, DOCS_TABLE_SCHEMA,
-                         STORED_TABLE_SCHEMA, TOMBSTONE_SCHEMA,
-                         _bucket_local_merge, batch_dirs, read_batches,
-                         write_stats)
-from ftidx.schema import POSTINGS_SCHEMA
-
-# Every table an index directory holds: the build's, the streamed
-# deltas' and the tombstones.
-INDEX_TABLES = ("postings", "doclen", "docs", "positions", "stored",
-                "stats", "termstats", "ledger", "tombstones",
-                "deltas", "delta_doclen", "delta_positions")
-
-
-def _has_files(d: Path) -> bool:
-    return d.exists() and any(d.iterdir())
+from ftidx.index import _bucket_local_merge, read_doclen, write_stats
+from ftidx.positions import _merge_positions
+from ftidx.schema import (INDEX_TABLES, POSITIONS_SCHEMA, POSTINGS_SCHEMA,
+                          batch_dirs, has_table, read_table)
 
 
 def _require_version_2(path: Path, op: str) -> None:
@@ -90,22 +79,20 @@ def compact(spark: SparkSession, index_path: str) -> dict:
     _require_version_2(path, "compact")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     tomb_dir = path / "tombstones"
-    tombs = (spark.read.schema(TOMBSTONE_SCHEMA).option("recursiveFileLookup", "true")
-             .parquet(str(tomb_dir)).distinct()
-             if _has_files(tomb_dir) else spark.createDataFrame([], TOMBSTONE_SCHEMA))
+    tombs = read_table(spark, path, "tombstones").distinct()
     idmap_dir = path / "_compact_idmap"
     resolution = _resolve_ids(spark, path, tombs, idmap_dir)
     id_bucket = resolution.filter(F.col("bucket").isNotNull())
 
-    def per_bucket(df: DataFrame | None) -> dict[int | None, int]:
+    def per_bucket(df: DataFrame) -> dict[int | None, int]:
         # rows per bucket: bounded by n_buckets — safe to collect
-        return {} if df is None else {r["bucket"]: r["count"] for r in
-                                      df.groupBy("bucket").count().collect()}
+        return {r["bucket"]: r["count"] for r in
+                df.groupBy("bucket").count().collect()}
 
     # tombstoned ids per bucket; a null bucket counts the unresolved
     resolved = per_bucket(resolution)
     n_unresolved = resolved.pop(None, 0)
-    segments = per_bucket(read_batches(spark, path / "deltas", POSTINGS_SCHEMA))
+    segments = per_bucket(read_table(spark, path, "deltas"))
     buckets = sorted(resolved.keys() | segments.keys())
     if buckets:
         _merge_buckets(spark, path, buckets, id_bucket)
@@ -161,9 +148,6 @@ def _write_json(target: Path, obj) -> None:
     tmp.replace(target)
 
 
-_IDMAP_SCHEMA = "doc_id long, bucket int"
-
-
 def _resolve_ids(spark: SparkSession, path: Path, tombs: DataFrame,
                  idmap_dir: Path) -> DataFrame:
     """Every tombstoned id with the bucket it resolves to through
@@ -175,19 +159,12 @@ def _resolve_ids(spark: SparkSession, path: Path, tombs: DataFrame,
     tombstone set lands on the driver."""
     if not (idmap_dir / "_SUCCESS").exists():
         shutil.rmtree(idmap_dir, ignore_errors=True)
-        known = [read_batches(spark, path / "delta_doclen", DOCLEN_TABLE_SCHEMA)]
-        if _has_files(path / "doclen"):
-            known.append(spark.read.schema(DOCLEN_TABLE_SCHEMA)
-                         .parquet(str(path / "doclen")))
-        known = [df.select("doc_id", "bucket") for df in known if df is not None]
-        (reduce(DataFrame.unionByName, known).join(tombs, "doc_id").distinct()
-         if known else spark.createDataFrame([], _IDMAP_SCHEMA)) \
-            .write.parquet(str(idmap_dir))
+        read_doclen(spark, path, "doc_id", "bucket").join(tombs, "doc_id") \
+            .distinct().write.parquet(str(idmap_dir))
     # joined from the tombstone side: ids no longer tombstoned (a rerun
     # after the table was replaced) are no longer deleted. Checkpointed,
     # as every later step reads it.
-    return tombs.join(spark.read.schema(_IDMAP_SCHEMA).parquet(str(idmap_dir)),
-                      "doc_id", "left") \
+    return tombs.join(read_table(spark, path, "_compact_idmap"), "doc_id", "left") \
         .localCheckpoint()
 
 
@@ -197,30 +174,21 @@ def _merge_buckets(spark: SparkSession, path: Path, buckets: list[int],
     through the merge kernels (doclen: deduplicated union) minus the
     ``id_bucket`` docs. The tables are rewritten concurrently; each
     rewrite is idempotent, so a crash may leave any subset of them
-    written. Every reader is handed its table's schema."""
+    written."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from ftidx.positions import POSITIONS_SCHEMA, _merge_positions
-
-    def base(table: str, schema) -> DataFrame | None:
-        d = path / table
-        return spark.read.schema(schema).parquet(str(d)) if _has_files(d) else None
 
     def postings() -> None:
         _overwrite_buckets(
-            _fold([base("postings", POSTINGS_SCHEMA),
-                   read_batches(spark, path / "deltas", POSTINGS_SCHEMA)],
+            _fold([read_table(spark, path, "postings"),
+                   read_table(spark, path, "deltas")],
                   buckets, id_bucket, _bucket_local_merge, POSTINGS_SCHEMA)
             .withColumn("n_bytes", F.octet_length("doc_ids")
                         + F.octet_length("tfs") + F.octet_length("dls")),
             path / "postings", buckets)
 
     def doclen() -> None:
-        rows = reduce(DataFrame.unionByName, [
-            df.drop("batch").filter(F.col("bucket").isin(buckets)) for df in
-            (base("doclen", DOCLEN_TABLE_SCHEMA),
-             read_batches(spark, path / "delta_doclen", DOCLEN_TABLE_SCHEMA))
-            if df is not None])
+        rows = read_doclen(spark, path, *INDEX_TABLES["doclen"].fieldNames()) \
+            .filter(F.col("bucket").isin(buckets))
         _overwrite_buckets(
             _dedup_doclen(rows.join(id_bucket.select("doc_id"), "doc_id",
                                     "left_anti")),
@@ -228,23 +196,22 @@ def _merge_buckets(spark: SparkSession, path: Path, buckets: list[int],
 
     def positions() -> None:
         _overwrite_buckets(
-            _fold([base("positions", POSITIONS_SCHEMA),
-                   read_batches(spark, path / "delta_positions", POSITIONS_SCHEMA)],
+            _fold([read_table(spark, path, "positions"),
+                   read_table(spark, path, "delta_positions")],
                   buckets, id_bucket, _merge_positions, POSITIONS_SCHEMA),
             path / "positions", buckets)
 
-    def drop_ids(table: str, schema: str) -> None:
+    def drop_ids(name: str) -> None:
         _overwrite_buckets(
-            base(table, schema).filter(F.col("bucket").isin(buckets))
+            read_table(spark, path, name).filter(F.col("bucket").isin(buckets))
             .join(id_bucket.select("doc_id"), "doc_id", "left_anti"),
-            path / table, buckets)
+            path / name, buckets)
 
     jobs = [postings, doclen]
     # docs and stored are absent for streaming-only indexes
-    jobs += [partial(drop_ids, t, schema) for t, schema in
-             (("docs", DOCS_TABLE_SCHEMA), ("stored", STORED_TABLE_SCHEMA))
-             if _has_files(path / t)]
-    if _has_files(path / "positions") or _has_files(path / "delta_positions"):
+    jobs += [partial(drop_ids, t) for t in ("docs", "stored")
+             if has_table(path, t)]
+    if has_table(path, "positions") or has_table(path, "delta_positions"):
         jobs.append(positions)
     with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
         for f in [ex.submit(job) for job in jobs]:
@@ -263,14 +230,14 @@ def _dedup_doclen(rows: DataFrame) -> DataFrame:
         .sortWithinPartitions("bucket", "field", "doc_id")
 
 
-def _fold(frames: list[DataFrame | None], buckets: list[int],
+def _fold(frames: list[DataFrame], buckets: list[int],
           id_bucket: DataFrame, kernel, schema) -> DataFrame:
     """Base + delta rows of ``buckets`` cogrouped by bucket with that
     bucket's deleted ids, through one merge ``kernel``."""
     cols = [f.name for f in schema.fields]
     rows = reduce(DataFrame.unionByName, [
         df.select(cols).filter(F.col("bucket").isin(buckets))
-        for df in frames if df is not None])
+        for df in frames])
 
     def merge(pdf: pd.DataFrame, ids: pd.DataFrame) -> pd.DataFrame:
         out = list(kernel([pdf], drop=ids["doc_id"].to_numpy()))
@@ -359,12 +326,8 @@ def delete_by_query(
             "delete_by_query: give exactly one of match_all, terms, where")
 
     if match_all:
-        n_docs = 0
-        if _has_files(path / "doclen"):
-            n_docs = (
-                spark.read.parquet(str(path / "doclen"))
-                .select("doc_id").distinct().count()
-            )
+        n_docs = read_table(spark, path, "doclen").select("doc_id") \
+            .distinct().count()
         for table in INDEX_TABLES:
             shutil.rmtree(path / table, ignore_errors=True)
         return {"mode": "match_all", "docs_deleted": n_docs}
@@ -373,16 +336,9 @@ def delete_by_query(
         if not terms:
             return {"mode": "terms", "docs_deleted": 0}
         qterms = sorted(set(terms))
-        frames = []
-        if _has_files(path / "postings"):
-            frames.append(spark.read.parquet(str(path / "postings")))
-        delta = read_batches(spark, path / "deltas")
-        if delta is not None:
-            frames.append(delta)
-        if not frames:
-            return {"mode": "terms", "docs_deleted": 0}
-        rows = frames[0] if len(frames) == 1 else frames[0].unionByName(
-            frames[1], allowMissingColumns=True)
+        rows = read_table(spark, path, "postings").select("field", "term", "doc_ids") \
+            .unionByName(read_table(spark, path, "deltas")
+                         .select("field", "term", "doc_ids"))
         hit = rows.filter(
             (F.col("field") == field) & F.col("term").isin(qterms)
         ).select("doc_ids")
@@ -397,14 +353,12 @@ def delete_by_query(
 
         matched = hit.mapInPandas(decode_ids, schema="doc_id long").distinct()
     else:
-        if not _has_files(path / "docs"):
+        if not has_table(path, "docs"):
             raise ValueError(
                 "delete_by_query(where=...) needs the docs table; this "
                 "index has none (streaming-only) — delete by terms or id")
-        matched = (
-            spark.read.parquet(str(path / "docs"))
-            .filter(where).select("doc_id").distinct()
-        )
+        matched = read_table(spark, path, "docs").filter(where) \
+            .select("doc_id").distinct()
 
     matched = matched.cache()
     n = matched.count()
@@ -431,7 +385,7 @@ def upsert(spark: SparkSession, index_path: str, new_source: DataFrame,
 
     path = Path(index_path)
     n_buckets = json.loads((path / "_manifest.json").read_text())["n_buckets"]
-    old = spark.read.parquet(str(path / "docs")).select(
+    old = read_table(spark, path, "docs").select(
         "repo", "path",
         F.col("content_sha256").alias("old_sha"),
         F.col("deleted").alias("old_deleted"),
@@ -462,8 +416,8 @@ def upsert(spark: SparkSession, index_path: str, new_source: DataFrame,
     if not dirty:
         return {"buckets_rebuilt": [], "skipped": "no changes"}
 
-    has_positions = _has_files(path / "positions")
-    has_stored = _has_files(path / "stored")
+    has_positions = has_table(path, "positions")
+    has_stored = has_table(path, "stored")
     # the stem analyzer is a manifest property, not an on-disk dir —
     # rebuilt buckets must keep emitting code.content.stem or the
     # stemmed field would silently go partial
@@ -495,7 +449,7 @@ def _clear_ledger_rows(spark: SparkSession, path: Path, dirty: list[int]) -> Non
     """Remove the dirty buckets' ledger rows → build_index's resume
     path sees them as pending and rebuilds exactly those."""
     ledger_dir = path / "ledger"
-    led = spark.read.parquet(str(ledger_dir))
+    led = read_table(spark, path, "ledger")
     kept = led.filter(~F.col("bucket").isin(dirty)).collect()
     shutil.rmtree(ledger_dir)
     if kept:
@@ -540,20 +494,20 @@ def upsert_docs(spark: SparkSession, index_path: str,
 
     path = Path(index_path)
     n_buckets = json.loads((path / "_manifest.json").read_text())["n_buckets"]
-    if not _has_files(path / "stored"):
+    if not has_table(path, "stored"):
         raise ValueError(
             "upsert_docs needs an index built with store_content=True "
             "(Solr parity: partial updates reconstruct docs from stored "
             "fields); rebuild with store_content=True or use "
             "ftidx.maintenance.upsert with the full source table")
-    if _has_files(path / "deltas"):
+    if has_table(path, "deltas"):
         raise ValueError(
             f"upsert_docs: streamed deltas exist under {path / 'deltas'}; "
             "run compact first (a bucket rebuild re-ranks doc_ids)")
 
     new_rows = partial_source.select(*_SOURCE_COLS)
     keys = new_rows.select("repo", "path").distinct()
-    docs = spark.read.parquet(str(path / "docs"))
+    docs = read_table(spark, path, "docs")
     # no forced broadcast: a point update's key set is tiny (AQE
     # broadcasts it automatically), but a BULK partial update may not
     # fit the driver — let the planner decide
@@ -568,7 +522,7 @@ def upsert_docs(spark: SparkSession, index_path: str,
     # bucket (minus the keys being replaced): metadata from docs,
     # text from stored — both scans bucket-pruned
     in_dirty = docs.filter(F.col("bucket").isin(dirty))
-    stored = (spark.read.parquet(str(path / "stored"))
+    stored = (read_table(spark, path, "stored")
               .filter(F.col("bucket").isin(dirty))
               .select("doc_id", "content"))
     mates = in_dirty.join(keys, ["repo", "path"], "left_anti")
@@ -591,7 +545,7 @@ def upsert_docs(spark: SparkSession, index_path: str,
     # pins the bucket-sized merged set off the source files
     merged = new_rows.unionByName(recon).localCheckpoint(eager=True)
 
-    has_positions = _has_files(path / "positions")
+    has_positions = has_table(path, "positions")
     _clear_bucket_partitions(path, dirty)
     _clear_ledger_rows(spark, path, dirty)
     summary = build_index(spark, merged, str(path), n_buckets=n_buckets,
@@ -647,16 +601,16 @@ def atomic_update(spark: SparkSession, index_path: str,
                     "multivalued field; the source schema has neither")
 
     path = Path(index_path)
-    if not _has_files(path / "stored"):
+    if not has_table(path, "stored"):
         raise ValueError(
             "atomic_update needs an index built with store_content=True "
             "(Solr parity: atomic updates reconstruct from stored fields)")
     ids = [int(d) for d in ops]
-    docs = spark.read.parquet(str(path / "docs"))
+    docs = read_table(spark, path, "docs")
     id_rows = docs.filter(F.col("doc_id").isin(ids))
     buckets = sorted(int(r["bucket"]) for r in
                      id_rows.select("bucket").distinct().collect())
-    stored = (spark.read.parquet(str(path / "stored"))
+    stored = (read_table(spark, path, "stored")
               .filter(F.col("bucket").isin(buckets))
               .select("doc_id", "content"))
     current = {r["doc_id"]: r.asDict() for r in
@@ -729,7 +683,7 @@ def update_fields(spark: SparkSession, index_path: str,
 
     path = Path(index_path)
     docs_dir = path / "docs"
-    all_docs = spark.read.parquet(str(docs_dir))
+    all_docs = read_table(spark, path, "docs")
     upd_rows = [(int(d), *[kv[c] for c in cols]) for d, kv in updates.items()]
     upd_schema = ", ".join(
         ["doc_id long"] + [f"_new_{i} " + ({
@@ -884,7 +838,7 @@ def _require_compacted(path: Path, op: str) -> dict:
         raise ValueError(f"{op}: {path} build status is "
                          f"{manifest.get('status')!r}, not 'done'")
     for d in ("deltas", "delta_doclen", "delta_positions"):
-        if _has_files(path / d):
+        if has_table(path, d):
             raise ValueError(
                 f"{op}: {path} has uncompacted streamed deltas under "
                 f"{d}/ — run maintenance.compact first (bucket "
@@ -951,24 +905,16 @@ def split_index(spark: SparkSession, index_path: str,
                 part = src_kind / f"bucket={b}"
                 if part.exists():
                     shutil.copytree(part, child / kind / f"bucket={b}")
-        # tombstones: doc_id >> 40 names the owning bucket, so the
-        # child's subset is one pushdown-able filter over a small table
-        if _has_files(src / "tombstones"):
-            # written unconditionally (possibly 0 rows) — one job per
-            # child, same emptiness convention as the ledger copy
-            (
-                spark.read.parquet(str(src / "tombstones"))
-                .filter(F.pmod(F.shiftright(F.col("doc_id"), 40),
-                               F.lit(n_children)) == i)
-                .write.parquet(str(child / "tombstones"))
-            )
-        if _has_files(src / "ledger"):
-            (
-                spark.read.option("mergeSchema", "true")
-                .parquet(str(src / "ledger"))
-                .filter(F.pmod(F.col("bucket"), F.lit(n_children)) == i)
-                .write.parquet(str(child / "ledger"))
-            )
+        # tombstones (doc_id >> 40 names the owning bucket) and ledger:
+        # the child's subset is one pushdown-able filter over a small
+        # table, written whenever the source has one (possibly 0 rows)
+        for table, bucket in (
+                ("tombstones", F.shiftright(F.col("doc_id"), 40)),
+                ("ledger", F.col("bucket"))):
+            if has_table(src, table):
+                read_table(spark, src, table) \
+                    .filter(F.pmod(bucket, F.lit(n_children)) == i) \
+                    .write.parquet(str(child / table))
         write_stats(spark, child)
         (child / "_manifest.json").write_text(json.dumps({
             **{k: v for k, v in manifest.items() if k != "status"},
@@ -1032,24 +978,12 @@ def merge_indexes(spark: SparkSession, paths: list[str],
                 part = src / kind / f"bucket={b}"
                 if part.exists():
                     shutil.copytree(part, dst / kind / f"bucket={b}")
-    tomb = [spark.read.parquet(str(Path(p) / "tombstones"))
-            for p in paths if _has_files(Path(p) / "tombstones")]
-    if tomb:
-        t = tomb[0]
-        for more in tomb[1:]:
-            t = t.unionByName(more)
-        t.write.parquet(str(dst / "tombstones"))
-    led = [spark.read.option("mergeSchema", "true")
-           .parquet(str(Path(p) / "ledger"))
-           for p in paths if _has_files(Path(p) / "ledger")]
-    if led:
-        uni = led[0]
-        for df in led[1:]:
-            # allowMissingColumns nulls absent columns AT THEIR OWN
-            # TYPE — hand-adding them as string would coerce the real
-            # column stringward in the union
-            uni = uni.unionByName(df, allowMissingColumns=True)
-        uni.write.parquet(str(dst / "ledger"))
+    for table in ("tombstones", "ledger"):
+        frames = [read_table(spark, p, table) for p in paths
+                  if has_table(p, table)]
+        if frames:
+            reduce(DataFrame.unionByName, frames).write.parquet(
+                str(dst / table))
     write_stats(spark, dst)
     (dst / "_manifest.json").write_text(json.dumps({
         **{k: v for k, v in manifests[0].items()
@@ -1112,27 +1046,24 @@ def merge_delta_tier(spark: SparkSession, index_path: str,
     ids = [int(d.name.split("=", 1)[1]) for d in dirs]
     merged_id = max([i for i in ids if i >= 10 ** 9], default=10 ** 9 - 1) + 1
 
-    merged_dir = deltas / f"batch={merged_id}"
-    (spark.read.schema(POSTINGS_SCHEMA).parquet(*[str(deltas / v) for v in victims])
-     .repartition("bucket")
-     .mapInPandas(_bucket_local_merge, schema=POSTINGS_SCHEMA)
-     .write.mode("overwrite").parquet(str(merged_dir)))
-    ddl = path / "delta_doclen"
-    _dedup_doclen(spark.read.schema(DOCLEN_TABLE_SCHEMA).parquet(
-        *[str(ddl / v) for v in victims if (ddl / v).exists()])) \
-        .write.mode("overwrite").parquet(str(ddl / f"batch={merged_id}"))
-    dpos = path / "delta_positions"
-    v_pos = [str(dpos / v) for v in victims if (dpos / v).exists()]
-    if v_pos:
-        from ftidx.positions import _POS_COLS, POSITIONS_SCHEMA, _merge_positions
+    def victim_rows(table: str) -> DataFrame:
+        schema = INDEX_TABLES[table]
+        return read_table(spark, path, table).filter(
+            F.col("batch").isin([int(v.split("=", 1)[1]) for v in victims])
+        ).select(schema.fieldNames()[:-1])  # the batch column dropped
 
-        merged_pos = (
-            spark.read.parquet(*v_pos).select(_POS_COLS)
-            .repartition("bucket")
-            .mapInPandas(_merge_positions, schema=POSITIONS_SCHEMA)
-        )
-        merged_pos.write.mode("overwrite").parquet(
-            str(dpos / f"batch={merged_id}"))
+    merged = f"batch={merged_id}"
+    (victim_rows("deltas").repartition("bucket")
+     .mapInPandas(_bucket_local_merge, schema=POSTINGS_SCHEMA)
+     .write.mode("overwrite").parquet(str(deltas / merged)))
+    ddl = path / "delta_doclen"
+    _dedup_doclen(victim_rows("delta_doclen")) \
+        .write.mode("overwrite").parquet(str(ddl / merged))
+    dpos = path / "delta_positions"
+    if any((dpos / v).exists() for v in victims):
+        (victim_rows("delta_positions").repartition("bucket")
+         .mapInPandas(_merge_positions, schema=POSITIONS_SCHEMA)
+         .write.mode("overwrite").parquet(str(dpos / merged)))
     # removal order: postings / positions victims first, doclen last
     for fam in (deltas, dpos, ddl):
         for v in victims:
@@ -1248,23 +1179,13 @@ def rebalance_shards(spark: SparkSession, paths: list[str], *,
     for table, bucket_expr in (
             ("tombstones", F.shiftright(F.col("doc_id"), 40)),
             ("ledger", F.col("bucket"))):
-        frames = []
-        for i in touched:
-            d = shards[i] / table
-            if not _has_files(d):
-                continue
-            reader = spark.read.option("mergeSchema", "true") \
-                if table == "ledger" else spark.read
-            frames.append(
-                reader.parquet(str(d))
-                .withColumn("_home", F.lit(i))
-                .withColumn("_b", bucket_expr.cast("long")))
+        frames = [read_table(spark, shards[i], table)
+                  .withColumn("_home", F.lit(i))
+                  .withColumn("_b", bucket_expr.cast("long"))
+                  for i in touched if has_table(shards[i], table)]
         if not frames:
             continue
-        allrows = frames[0]
-        for f in frames[1:]:
-            allrows = allrows.unionByName(f, allowMissingColumns=True)
-        allrows = allrows.localCheckpoint(eager=True)
+        allrows = reduce(DataFrame.unionByName, frames).localCheckpoint(eager=True)
         # only MOVED buckets re-route; everything else stays home —
         # the when-chain is sized by the move plan, not the universe
         route = F.coalesce(

@@ -38,21 +38,12 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from ftidx.codec import (_varint_encode_with_sizes, delta_decode,
                          delta_decode_runs, varint_decode)
 from ftidx.index import _first_copies
+from ftidx.schema import POSITIONS_SCHEMA
 
-POSITIONS_SCHEMA = T.StructType([
-    T.StructField("term", T.StringType(), False),
-    T.StructField("field", T.StringType(), False),
-    T.StructField("bucket", T.IntegerType(), False),
-    T.StructField("df", T.LongType(), False),
-    T.StructField("doc_ids", T.BinaryType(), False),
-    T.StructField("tfs", T.BinaryType(), False),
-    T.StructField("pos", T.BinaryType(), False),
-])
 _POS_COLS = [f.name for f in POSITIONS_SCHEMA.fields]
 
 

@@ -31,9 +31,9 @@ Endpoints (all JSON):
 - ``sort=path asc&start=10`` on /search → metadata sort + offset paging
 - ``sort=path asc&cursor=*`` on /search → cursorMark keyset paging
   (response carries ``next_cursor``; pass it back for the next page)
-- ``bf=0.1*ln(1+n_chars)`` on /search → additive function boost
+- ``bf=0.1*ln(1+length(path))`` on /search → additive function boost
   (Solr bf=; expression over stored metadata columns);
-  ``boost=100/(100+n_chars)`` → multiplicative (edismax boost=)
+  ``boost=100/(100+length(path))`` → multiplicative (edismax boost=)
 - ``fq={!frange l=0 u=100}func`` on /search → function range filter
   (Solr FunctionRangeQParser; ``incl``/``incu`` bound flags, ``inch`` kept as a legacy alias); any
   other ``fq=`` string filters as a metadata predicate (topk_where)
@@ -118,6 +118,8 @@ from contextlib import contextmanager
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
 from urllib.parse import parse_qs, urlparse
+
+from ftidx.schema import read_table
 
 
 class _RWLock:
@@ -543,7 +545,10 @@ def _make_handler(idx, lock: "_RWLock", daemons: dict | None = None):
                     if not terms:
                         self._json(400, {"error": "missing q"})
                         return
-                    col = qs.get("col", ["n_chars"])[0]
+                    col = qs.get("col", [""])[0]
+                    if not col:
+                        self._json(400, {"error": "missing col"})
+                        return
                     lo = float(qs.get("start", ["0"])[0])
                     hi = float(qs.get("end", [str(1 << 30)])[0])
                     gap = float(qs.get("gap", ["100"])[0])
@@ -605,7 +610,10 @@ def _make_handler(idx, lock: "_RWLock", daemons: dict | None = None):
                     if not terms or not spec.strip():
                         self._json(400, {"error": "need q and set"})
                         return
-                    col = qs.get("col", ["n_chars"])[0]
+                    col = qs.get("col", [""])[0]
+                    if not col:
+                        self._json(400, {"error": "missing col"})
+                        return
                     field = qs.get("field", ["code.content"])[0]
                     ivs = []
                     for part in spec.split(";"):
@@ -993,7 +1001,7 @@ def _make_handler(idx, lock: "_RWLock", daemons: dict | None = None):
                         elif sort:
                             # direction is the LAST token, and only if
                             # it is asc/desc — sort-by-function exprs
-                            # legitimately contain spaces ("n_chars % 7
+                            # legitimately contain spaces ("doc_id % 7
                             # desc")
                             head, _, last = sort.rpartition(" ")
                             if head and last.lower() in ("asc", "desc"):
@@ -1162,7 +1170,7 @@ def _make_handler(idx, lock: "_RWLock", daemons: dict | None = None):
                             # syntax (recip(ms(NOW,modified),...)) is
                             # tried first — its grammar has no infix
                             # operators, so a raw-SQL expression like
-                            # 0.1*ln(1+n_chars) never parses as one
+                            # 0.1*ln(1+bucket) never parses as one
                             # and falls through to the SQL slot.
                             from ftidx import funcquery as _FQ
                             expr, mode = (bf or boost,
@@ -1472,7 +1480,7 @@ def _make_handler(idx, lock: "_RWLock", daemons: dict | None = None):
                     if cap < 0:
                         raise ValueError("rows must be >= 0")
                     with lock:
-                        idx.spark.read.parquet(str(idx.path / "docs")) \
+                        read_table(idx.spark, idx.path, "docs") \
                             .createOrReplaceTempView("docs")
                         rows = idx.spark.sql(stmt).limit(cap).collect()
                     out = [{k: (v.isoformat()
@@ -1511,8 +1519,7 @@ def _make_handler(idx, lock: "_RWLock", daemons: dict | None = None):
                     from ftidx.streamexpr import StreamContext, evaluate
 
                     with lock:
-                        docs = idx.spark.read.parquet(
-                            str(idx.path / "docs"))
+                        docs = read_table(idx.spark, idx.path, "docs")
                         # topic() checkpoint collections persist under
                         # the served index dir (survive server restarts
                         # like Solr's checkpoint collection does)

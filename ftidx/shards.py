@@ -35,6 +35,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from ftidx.schema import read_table
 from ftidx.wand import (MUST, SHOULD, ScorePlan, TermList, bm25_idf,
                         merge_group, run_plan, score_all)
 
@@ -467,12 +468,11 @@ class FtShards:
         parts, fg_n, bg_n = [], 0, 0
         for sh in self.shards:
             agg, n = sh._sig_aggregates(terms, field, min_term_length)
-            if agg is not None:
-                parts.append(agg)
+            parts.append(agg)
             fg_n += n
             bg_n += sh.stats.get(field, (0, 1.0))[0]
         spark = self.shards[0].spark
-        if not parts or fg_n == 0 or bg_n == 0:
+        if fg_n == 0 or bg_n == 0:
             return spark.createDataFrame(
                 [], "term string, fg_df long, bg_df long, score double")
         uni = parts[0]
@@ -496,7 +496,7 @@ class FtShards:
         stats = self._plan_stats(plan)
         frames = []
         for si, sh in enumerate(self.shards):
-            docs = sh.spark.read.parquet(str(sh.path / "docs")).select(
+            docs = read_table(sh.spark, sh.path, "docs").select(
                 "doc_id", *extra_cols)
             frames.append(
                 sh._plan_df(plan, stats=stats)
@@ -589,7 +589,7 @@ class FtShards:
         parents = self._parent_agg(terms, parent_col, score_mode, field)
         docs = None
         for si, sh in enumerate(self.shards):
-            fr = (sh.spark.read.parquet(str(sh.path / "docs"))
+            fr = (read_table(sh.spark, sh.path, "docs")
                   .select("doc_id", F.col(parent_col).alias("parent"))
                   .withColumn("shard", F.lit(si)))
             docs = fr if docs is None else docs.unionByName(fr)
@@ -625,8 +625,8 @@ class FtShards:
                 "shard", F.lit(si))
             scored = fr if scored is None else scored.unionByName(fr)
             if bf is not None or boost is not None:
-                fr = sh.spark.read.parquet(
-                    str(sh.path / "docs")).withColumn("shard", F.lit(si))
+                fr = read_table(sh.spark, sh.path, "docs").withColumn(
+                    "shard", F.lit(si))
                 docs = fr if docs is None else docs.unionByName(fr)
         return edismax_finish(scored, docs, ["shard", "doc_id"], bf, boost, k)
 
@@ -645,7 +645,7 @@ class FtShards:
         tie discipline (score DESC, shard ASC, doc_id ASC)."""
         parts = []
         for sh in self.shards:
-            docs = sh.spark.read.parquet(str(sh.path / "docs"))
+            docs = read_table(sh.spark, sh.path, "docs")
             parts.append(
                 docs.join(sh._matched_ids(inner_terms, field), "doc_id")
                 .select(join_col))
@@ -679,7 +679,7 @@ class FtShards:
         frames = []
         for si, sh in enumerate(self.shards):
             frames.append(
-                sh.spark.read.parquet(str(sh.path / "docs"))
+                read_table(sh.spark, sh.path, "docs")
                 .join(sh._matched_ids(terms, field), "doc_id")
                 .withColumn("shard", F.lit(si)))
         uni = frames[0]
@@ -715,7 +715,7 @@ class FtShards:
         merged.sort()
         return [(si, d, -negc) for negc, si, d in merged[:k]]
 
-    def facet_range(self, terms: list[str], facet: str = "n_chars",
+    def facet_range(self, terms: list[str], facet: str,
                     start: float = 0, end: float = 1 << 30,
                     gap: float = 100, field: str = "code.content"
                     ) -> list[tuple[float, int]]:
@@ -771,7 +771,7 @@ class FtShards:
         frames = []
         for sh in self.shards:
             matched = sh._matched_ids(terms, field)
-            docs = sh.spark.read.parquet(str(sh.path / "docs"))
+            docs = read_table(sh.spark, sh.path, "docs")
             frames.append(
                 docs.join(matched, "doc_id")
                 .select(F.expr(stat_col).alias("_v")))
@@ -811,7 +811,7 @@ class FtShards:
             prov = _ShardsFQProvider(sh, field, now_ms, self, cache)
             resolved = FQ.resolve(FQ.parse(func), prov, now_ms)
             val_sql = FQ.compile_spark(resolved, now_ms)
-            docs = sh.spark.read.parquet(str(sh.path / "docs"))
+            docs = read_table(sh.spark, sh.path, "docs")
             for col_name, frame in prov.join_frames:
                 docs = docs.join(frame, "doc_id", "left").withColumn(
                     col_name, F.coalesce(F.col(col_name), F.lit(0.0)))

@@ -107,6 +107,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ftidx.schema import read_table
+
 # ---------------------------------------------------------------- parser
 
 
@@ -485,7 +487,7 @@ def _eval(node: Node, ctx: StreamContext) -> DataFrame:  # noqa: C901
         limit = int(node.params.get("bucketSizeLimit", 10))
         field = node.params.get("field", "code.content")
         ids = idx._matched_ids(q.split(), field)
-        docs = idx.spark.read.parquet(str(idx.path / "docs"))
+        docs = read_table(idx.spark, idx.path, "docs")
         return (docs.join(ids, "doc_id")
                 .groupBy(*buckets)
                 .agg(*[_metric(m) for m in metrics])
@@ -504,7 +506,7 @@ def _eval(node: Node, ctx: StreamContext) -> DataFrame:  # noqa: C901
             raise ValueError("stats() needs at least one metric")
         field = node.params.get("field", "code.content")
         ids = idx._matched_ids(q.split(), field)
-        docs = idx.spark.read.parquet(str(idx.path / "docs"))
+        docs = read_table(idx.spark, idx.path, "docs")
         return docs.join(ids, "doc_id").agg(*[_metric(m) for m in metrics])
 
     if name == "timeseries":
@@ -591,7 +593,7 @@ def _eval(node: Node, ctx: StreamContext) -> DataFrame:  # noqa: C901
         if not fl:
             return df
         idx = ctx.indexes[coll]
-        docs = idx.spark.read.parquet(str(idx.path / "docs")) \
+        docs = read_table(idx.spark, idx.path, "docs") \
             .select(F.col(r).alias("__sx_on"), *fl)
         return df.join(docs, df[l] == F.col("__sx_on"), "left") \
             .drop("__sx_on")
@@ -773,7 +775,7 @@ def _eval(node: Node, ctx: StreamContext) -> DataFrame:  # noqa: C901
         coll = node.args[0]
         if coll in ctx.indexes:
             idx = ctx.indexes[coll]
-            edges = idx.spark.read.parquet(str(idx.path / "docs"))
+            edges = read_table(idx.spark, idx.path, "docs")
         elif coll in ctx.tables:
             edges = ctx.tables[coll]
         else:
@@ -851,7 +853,7 @@ def _eval(node: Node, ctx: StreamContext) -> DataFrame:  # noqa: C901
         fl = [c.strip() for c in str(node.params.get("fl", "")).split(",")
               if c.strip() and c != "doc_id"]
         if fl:
-            docs = idx.spark.read.parquet(str(idx.path / "docs")) \
+            docs = read_table(idx.spark, idx.path, "docs") \
                 .select("doc_id", *fl)
             out = out.join(docs, "doc_id", "left")
         return out
@@ -867,8 +869,8 @@ def _eval(node: Node, ctx: StreamContext) -> DataFrame:  # noqa: C901
             raise ValueError("shortestPath() needs a collection name first")
         coll = node.args[0]
         if coll in ctx.indexes:
-            edges = ctx.indexes[coll].spark.read.parquet(
-                str(ctx.indexes[coll].path / "docs"))
+            idx = ctx.indexes[coll]
+            edges = read_table(idx.spark, idx.path, "docs")
         elif coll in ctx.tables:
             edges = ctx.tables[coll]
         else:
@@ -1140,7 +1142,7 @@ def _apply_fl(idx, df: DataFrame, fl) -> DataFrame:
     cols = [c.strip() for c in str(fl).split(",") if c.strip()]
     meta = [c for c in cols if c not in ("doc_id", "score")]
     if meta:
-        docs = idx.spark.read.parquet(str(idx.path / "docs")) \
+        docs = read_table(idx.spark, idx.path, "docs") \
             .select("doc_id", *meta)
         df = df.join(docs, "doc_id", "left")
     return df.select(*(["doc_id", "score"]

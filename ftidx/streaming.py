@@ -37,8 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ftidx.build import live_docs
-from ftidx.index import _segment_pass, batch_dirs
-from ftidx.schema import SOURCE_SCHEMA, assert_schema
+from ftidx.index import _segment_pass
+from ftidx.schema import (POSITIONS_SCHEMA, SOURCE_SCHEMA, assert_schema,
+                          has_table, read_table)
 
 
 def prepare_docs_hashid(source: DataFrame, n_buckets: int) -> DataFrame:
@@ -95,15 +96,13 @@ def index_microbatch(batch_df: DataFrame, epoch_id: int, index_path: str,
     live = live.dropDuplicates(["doc_id"])
     # the seen-set must EXCLUDE this epoch's own batch dir: a same-epoch
     # replay would otherwise anti-join its docs away against its own
-    # prior write (an empty delta overwriting a good one), and the lazy
-    # plan would hold a listing of part files the overwrite below
-    # deletes (FileNotFoundException on the later positional write)
-    seen_dir = out / "delta_doclen"
-    prior = [str(p) for p in batch_dirs(seen_dir)
-             if p.name != f"batch={epoch_id}"]
-    if prior:
-        seen = spark.read.parquet(*prior).select("doc_id").distinct()
-        live = live.join(seen, "doc_id", "left_anti")
+    # prior write (an empty delta overwriting a good one). The batch
+    # filter prunes that partition, so no scan opens the part files the
+    # overwrite below deletes (FileNotFoundException on the later
+    # positional write)
+    seen = read_table(spark, out, "delta_doclen") \
+        .filter(F.col("batch") != epoch_id).select("doc_id").distinct()
+    live = live.join(seen, "doc_id", "left_anti")
     # the build's segment writer over the batch's docs: the base
     # manifest's stem/shingle analyzers carry into every delta so those
     # fields stay complete across streamed docs (same parity rule as
@@ -127,9 +126,8 @@ def index_microbatch(batch_df: DataFrame, epoch_id: int, index_path: str,
     # unions them at read time, compact folds them into the
     # base rows. Same idempotency (overwrite-own-epoch), same
     # bucket-local kernel as the batch build.
-    pos_base = out / "positions"
-    if pos_base.exists() and any(pos_base.iterdir()):
-        from ftidx.positions import POSITIONS_SCHEMA, _bucket_local_positions
+    if has_table(out, "positions"):
+        from ftidx.positions import _bucket_local_positions
 
         pdocs = live.select("doc_id", "bucket", "content", "lang",
                             "repo", "path")

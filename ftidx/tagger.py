@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import re
 
+from ftidx.schema import read_table
+
 _WORD_RE = re.compile(r"[a-z0-9_]+")
 
 
@@ -100,7 +102,7 @@ def from_index_column(idx, column: str = "repo") -> TextTagger:
     """Build the dictionary from an index's stored column — Solr's
     tagger field. One distinct-values scan (column-pruned); the
     dictionary is metadata-cardinality, not corpus-sized."""
-    rows = (idx.spark.read.parquet(str(idx.path / "docs"))
+    rows = (read_table(idx.spark, idx.path, "docs")
             .select(column).distinct().collect())
     return TextTagger([r[column] for r in rows if r[column] is not None])
 

@@ -51,8 +51,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ftidx.index import DOCLEN_TABLE_SCHEMA, DOCS_TABLE_SCHEMA, batch_dirs
 from ftidx.maintenance import fold_log
+from ftidx.schema import batch_dirs, read_table
 
 
 def _epochs(index) -> list[int]:
@@ -117,10 +117,9 @@ def topic_poll(index, topic_id: str, terms: list[str],
         if not new:
             out = matched.limit(0)
         else:
-            dirs = [str(index.path / "delta_doclen" / f"batch={e}")
-                    for e in new]
-            new_ids = (index.spark.read.schema(DOCLEN_TABLE_SCHEMA)
-                       .parquet(*dirs).select("doc_id").distinct())
+            new_ids = (read_table(index.spark, index.path, "delta_doclen")
+                       .filter(F.col("batch").isin(new))
+                       .select("doc_id").distinct())
             out = matched.join(new_ids, "doc_id", "semi")
     else:
         out = matched
@@ -129,8 +128,7 @@ def topic_poll(index, topic_id: str, terms: list[str],
     state = {"build_id": build_id, "epochs": current, "folds": len(folds),
              "topic_id": topic_id}
     if fl:
-        docs = index.spark.read.schema(DOCS_TABLE_SCHEMA).parquet(
-            str(index.path / "docs"))
+        docs = read_table(index.spark, index.path, "docs")
         cols = [c for c in fl if c != "doc_id"]
         out = out.join(docs.select("doc_id", *cols), "doc_id", "left")
     ck_path.write_text(json.dumps(state))

@@ -2458,17 +2458,16 @@ def test_open_index_launches_no_spark_job(spark, spark_jobs, tmp_path,
     # with streamed deltas the collection stats span base + delta doc
     # lengths: the one Spark aggregate that computes them is all an
     # open pays, no reader infers its schema
-    from ftidx.index import DOCLEN_TABLE_SCHEMA, read_batches
+    from ftidx.schema import read_table
     from ftidx.streaming import index_microbatch
 
     index_microbatch(synth_source(spark, 300).filter(F.col("path") > "m"), 0,
                      out, n_buckets=4)
 
     def stats_aggregate():
-        dl = read_batches(spark, tmp_path / "idx" / "delta_doclen",
-                          DOCLEN_TABLE_SCHEMA).select("doc_id", "field", "len")
-        dl = dl.unionByName(spark.read.schema(DOCLEN_TABLE_SCHEMA).parquet(
-            f"{out}/doclen").select("doc_id", "field", "len"))
+        dl = read_table(spark, out, "delta_doclen").select("doc_id", "field", "len")
+        dl = dl.unionByName(read_table(spark, out, "doclen")
+                            .select("doc_id", "field", "len"))
         return (dl.dropDuplicates(["doc_id", "field"]).groupBy("field")
                 .agg(F.count(F.lit(1)), F.sum("len")).collect())
 
@@ -2489,6 +2488,36 @@ def test_edismax_job_count(spark, spark_jobs, built):
     warm, warm_jobs = spark_jobs(lambda: idx.edismax(["def", "value"], **kw).collect())
     assert cold and cold == warm
     assert (len(cold_jobs), len(warm_jobs)) == (4, 2)
+
+
+# Spark jobs of the docs-table surfaces on the fixture, warm. While
+# their readers inferred the docs and doclen schemas (one job per read),
+# topk_where and edismax with bf= ran 4, fetch_docs and get_doc 5.
+DOCS_SURFACE_MAX_JOBS = {"topk_where": 3, "edismax_bf": 3,
+                         "fetch_docs": 2, "get_doc": 2}
+
+
+def test_docs_surfaces_job_count(spark, spark_jobs, built):
+    """Every docs and doclen reader is handed its schema, and a page's
+    buckets resolve in one doclen scan: pinned as upper bounds on the
+    jobs of a warm call (the first call fills the df cache)."""
+    idx = open_index(spark, built[0])
+    page = [d for d, _ in idx.topk(["def"], k=10)]
+    calls = {
+        "topk_where": lambda: idx.topk_where(
+            ["def"], "lang = 'python'", k=10).collect(),
+        "edismax_bf": lambda: idx.edismax(
+            ["def", "value"], bf="length(path) * 0.01", k=10).collect(),
+        "fetch_docs": lambda: idx.fetch_docs(page),
+        "get_doc": lambda: idx.get_doc(page[0]),
+    }
+    jobs = {}
+    for name, call in calls.items():
+        first, _ = spark_jobs(call)
+        again, ids = spark_jobs(call)
+        assert again and again == first, name
+        jobs[name] = len(ids)
+    assert all(0 < jobs[n] <= cap for n, cap in DOCS_SURFACE_MAX_JOBS.items()), jobs
 
 
 def test_delete_launches_no_spark_job(spark, spark_jobs, tmp_path):

@@ -276,6 +276,28 @@ def test_facet_range_endpoint(served):
     assert body["buckets"]  # the corpus populates low buckets
 
 
+def test_highlight_job_count(served, spark_jobs):
+    """A page's highlight resolves its buckets in one doclen scan and
+    reads the stored table with its schema: 2 Spark jobs. It ran 5 while
+    both readers inferred their schemas and the resolver deduplicated
+    with a shuffle."""
+    _, idx = served
+    page = [d for d, _ in idx.topk(["def"], k=10)]
+    frags, jobs = spark_jobs(lambda: idx.highlight(page, ["def"]))
+    assert any(frags.values())
+    assert 0 < len(jobs) <= 2
+
+
+def test_facet_range_needs_col(served):
+    """/facet_range has no default column: without ``col`` it is a
+    client error, not a query over a column the docs table lacks."""
+    srv, _ = served
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(f"http://{srv.host}:{srv.port}/facet_range?q=def&gap=1")
+    assert e.value.code == 400
+    assert json.loads(e.value.read())["error"] == "missing col"
+
+
 def test_pivot_and_facet_stats_endpoints(served):
     srv, idx = served
     base = f"http://{srv.host}:{srv.port}"
@@ -616,6 +638,16 @@ def test_parent_endpoint(served):
 
     with pytest.raises(urllib.error.HTTPError):
         _get(f"http://{srv.host}:{srv.port}/parent?q=")
+
+
+def test_facet_interval_needs_col(served):
+    """/facet_interval has no default column: without ``col`` it is a
+    client error, not a query over a column the docs table lacks."""
+    srv, _ = served
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(f"http://{srv.host}:{srv.port}/facet_interval?q=def&set=a:0:9")
+    assert e.value.code == 400
+    assert json.loads(e.value.read())["error"] == "missing col"
 
 
 def test_facet_interval_and_nested_endpoints(served):

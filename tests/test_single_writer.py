@@ -130,3 +130,42 @@ def test_one_executor_closure_builds_term_lists():
                     and _referenced(node.func) == "TermList"):
                 builders.add(f"{py.name}:{scope[-2]}")
     assert builders == {"index.py:_plan_df"}
+
+
+# One reader: every Spark read of an index table goes through
+# schema.read_table, which hands the reader the table's declared schema
+# (a reader left to infer one runs a Spark job per read) and reads an
+# absent table as an empty frame. The sites below read tables that are
+# not the index's: source tables, their schema peeks, a caller's vector
+# table and an export's own output.
+READ_SITES = {
+    ("schema.py", "read_table"),
+    ("sources.py", "read_source"),
+    ("sources.py", "read_incremental"),
+    ("streaming.py", "windowed_ingest_counts"),
+    ("streaming.py", "repo_totals_updates"),
+    ("streaming.py", "dedup_stream"),
+    ("streaming.py", "trending_terms"),
+    ("streaming.py", "session_counts"),
+    ("index.py", "attach_vectors"),
+    ("index.py", "export_matches"),
+}
+
+
+def _is_spark_read(node: ast.AST) -> bool:
+    """``spark.read`` or ``<expr>.spark.read``."""
+    if not (isinstance(node, ast.Attribute) and node.attr == "read"):
+        return False
+    v = node.value
+    return (isinstance(v, ast.Name) and v.id == "spark"
+            or isinstance(v, ast.Attribute) and v.attr == "spark")
+
+
+def test_only_read_table_reads_index_tables():
+    sites = set()
+    for py in sorted(FTIDX.glob("*.py")):
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for node, scope in _walk_with_scope(tree):
+            if _is_spark_read(node):
+                sites.add((py.name, scope[-1] if scope else "<module>"))
+    assert sites == READ_SITES

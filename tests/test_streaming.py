@@ -63,6 +63,24 @@ def test_stream_indexes_and_queries(spark, dirs):
         assert gs == pytest.approx(ws, rel=1e-9)
 
 
+def test_deltas_only_index_docs_surfaces(spark, tmp_path):
+    """A deltas-only index has no docs table: its docs surfaces answer
+    as over an empty one (an absent table reads as an empty frame)
+    rather than failing on the missing path, while its streamed docs
+    stay queryable."""
+    from ftidx.streaming import index_microbatch
+
+    out = str(tmp_path / "deltas_only")
+    index_microbatch(synth_source(spark, 120), 0, out, n_buckets=4)
+    idx = FtIndex(spark, out)
+    page = [d for d, _ in idx.topk(["def"], k=5)]
+    assert page
+    assert idx.get_doc(page[0]) is None
+    assert idx.fetch_docs(page) == {}
+    assert idx.facet_counts(["def"]).collect() == []
+    assert idx.topk_where(["def"], "lang = 'python'").collect() == []
+
+
 def test_stream_tombstones(spark, dirs):
     src_dir, idx_dir = dirs
     src = synth_source(spark, 120, partitions=2).cache()
