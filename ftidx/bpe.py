@@ -29,7 +29,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ftidx.textops import TOKEN_SPLIT
@@ -246,14 +246,6 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
                       F.col(text_col).alias("text"))
     return src.mapInPandas(
         kern, schema="doc_id long, n_words long, n_bpe_tokens long")
-
-
-def bpe_vocab(spark: SparkSession, merges: list[tuple[str, str]]) -> DataFrame:
-    """The learned subword vocabulary as a DataFrame (rank, a, b,
-    merged) — for auditing / persistence alongside an index."""
-    rows = [(i, a, b, a + b) for i, (a, b) in enumerate(merges)]
-    return spark.createDataFrame(
-        rows, "rank long, a string, b string, merged string")
 
 
 def merges_to_json(merges: list[tuple[str, str]]) -> str:

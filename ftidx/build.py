@@ -112,14 +112,6 @@ def field_stats(doclen: DataFrame) -> DataFrame:
     )
 
 
-def doc_frequencies(tf: DataFrame) -> DataFrame:
-    """df/cf per (term, field). doc_id is unique within the tf group,
-    so df = count, no countDistinct shuffle needed."""
-    return tf.groupBy("term", "field").agg(
-        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-    )
-
-
 def build_flat(source: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> dict[str, DataFrame]:
     """MVP end-to-end slice (SURVEY §7 step 3): uncompressed postings
     as plain DataFrames. Proves tokenization + rank math before the

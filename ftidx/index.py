@@ -63,7 +63,8 @@ from ftidx.codec import (decode_postings, delta_decode_runs, encode_many,
                          encode_postings, varint_decode)
 from ftidx.schema import (INDEX_TABLES, POSITIONS_SCHEMA, POSTINGS_SCHEMA,
                           has_table, read_table)
-from ftidx.wand import (MUST, SCORE, SHOULD, Clause, ScorePlan, TermList,
+from ftidx.wand import (ANY, MUST, NEAR, PHRASE, SCORE, SHOULD, Clause,
+                        DocSet, ScorePlan, TermList, _no_docs,
                         _topk_from_scores, bm25_idf, merge_group, run_plan,
                         score_all)
 
@@ -889,17 +890,17 @@ def assemble_wordbreak(qs: list[str], dfs: dict[str, int],
 class FtIndex:
     """Query-side handle on a persisted index.
 
-    Every bag-of-words surface (``topk``, ``topk_fields``,
-    ``topk_boost_query``, term-only ``query_string``, ``edismax`` and the
-    DataFrame surfaces) builds one :class:`~ftidx.wand.ScorePlan` and
-    hands it to one evaluator, :func:`~ftidx.wand.run_plan`, in one of
-    two places: on the driver over the term cache (collected,
-    term-filtered postings rows — the low-latency path; parquet
-    row-group stats + dictionary filters make the term predicate an
-    efficient pushdown), or per bucket inside the executors
-    (:meth:`_plan_df`) with a global take-ordered cut — the 100 TB path
-    where even one term's postings exceed driver memory. The df probe
-    picks between them (:meth:`_score_plan`).
+    Every plan surface (``topk``, ``topk_fields``, ``topk_boost_query``,
+    ``query_string``, ``edismax``, the phrase surfaces and the DataFrame
+    surfaces) builds one :class:`~ftidx.wand.ScorePlan` and hands it to
+    one evaluator, :func:`~ftidx.wand.run_plan`, in one of two places:
+    on the driver over the term cache (collected, term-filtered postings
+    rows — the low-latency path; parquet row-group stats + dictionary
+    filters make the term predicate an efficient pushdown) and a
+    positions fetch (:meth:`_run_plan`), or per bucket inside the
+    executors (:meth:`_plan_df`) with a global take-ordered cut — the
+    100 TB path where even one term's postings exceed driver memory.
+    The df probe picks between them (:meth:`_score_plan`).
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -958,10 +959,12 @@ class FtIndex:
         # _plan_df its global idfs.
         self._df_cache: OrderedDict[tuple[str, str], int] = OrderedDict()
         # giant-collect throttle: the surfaces that still collect
-        # postings on the driver whatever their size (phrase/near,
-        # query strings with phrases or multi-term expansions, rerank,
-        # LTR, explain, facet_queries) legitimately collect fat
-        # postings at a fat corpus.
+        # postings on the driver whatever their size (topk_reranked,
+        # ltr_rerank, explain, facet_queries, topk_synonyms /
+        # stem_topk, more_like_this, spellcheck, and FtShards' driver
+        # merges) legitimately collect fat postings at a fat corpus;
+        # every plan surface, phrases included, routes by the df probe
+        # instead.
         # N serving threads doing that CONCURRENTLY multiplied the
         # driver working set N× — the round-5 serving bench OOM-killed
         # a 78 GB driver exactly this way.  Fetches whose probed df
@@ -1155,9 +1158,9 @@ class FtIndex:
             # fat-corpus guard: at a corpus over the routing budget,
             # probe the fetch's total df first (cheap termstats read)
             # and serialize GIANT collects through the big-fetch lock —
-            # callers on this path (phrase/rerank/LTR, see __init__)
-            # have no distributed fallback, so the fetch must happen,
-            # but not 16× concurrently
+            # callers on this path (rerank, LTR, explain, facet_queries,
+            # synonyms, see __init__) have no distributed fallback, so
+            # the fetch must happen, but not 16× concurrently
             n_docs_f, _ = self.stats.get(field, (0, 1.0))
             fat_fetch = (n_docs_f > self._driver_score_max_docs
                          and self._df_total(unresolved, field)
@@ -1183,11 +1186,12 @@ class FtIndex:
 
     def _term_lists(self, terms: list[str], field: str):
         """(TermLists of the ``terms`` present in ``field``, avgdl) from
-        the term cache."""
+        the term cache, in term order whatever the cache held before."""
         n_docs, avgdl = self.stats.get(field, (0, 1.0))
         lists = []
-        for term, trows in self._fetch_term_rows(sorted(set(terms)), field).items():
-            if trows:
+        rows = self._fetch_term_rows(sorted(set(terms)), field)
+        for term in sorted(rows):
+            if trows := rows[term]:
                 tl = TermList(term, trows, 0.0)
                 tl.idf = bm25_idf(n_docs, tl.df)
                 lists.append(tl)
@@ -1297,8 +1301,8 @@ class FtIndex:
         """The driver executor's input to :func:`ftidx.wand.run_plan`:
         ({field: {term: TermList}}, {field: avgdl}) from the term cache."""
         terms: dict[str, list[str]] = {}
-        for c in plan.clauses:
-            terms.setdefault(c.field, []).append(c.term)
+        for f, t in plan.pairs():
+            terms.setdefault(f, []).append(t)
         lists, avgdls = {}, {}
         for field, ts in terms.items():
             tls, avgdls[field] = self._term_lists(ts, field)
@@ -1306,6 +1310,44 @@ class FtIndex:
             for tl in tls:
                 by_term[tl.term] = tl
         return lists, avgdls
+
+    def _positions_rows(self, plan: ScorePlan) -> DataFrame | None:
+        """The positions rows the plan's PHRASE and NEAR sets are
+        verified from, None when it has none: one pushdown scan, the
+        (field, term) predicates reaching parquet."""
+        conds = [(F.col("field") == s.field) & F.col("term").isin(sorted(set(s.terms)))
+                 for s in plan.sets if s.kind != ANY]
+        if not conds:
+            return None
+        if self._positions is None:
+            raise ValueError(
+                "index has no positions table; rebuild with "
+                "build_index(..., positions=True) to enable phrase queries"
+            )
+        return self._positions.filter(reduce(lambda a, b: a | b, conds))
+
+    def _run_plan(self, plan: ScorePlan, k: int | None = None):
+        """The driver executor: :func:`ftidx.wand.run_plan` over the term
+        cache, the plan's PHRASE and NEAR sets verified first from one
+        positions fetch — a required set with no member ends the query
+        before any postings fetch."""
+        verified = ()
+        if plan.sets:
+            from ftidx.positions import near_docs, phrase_docs
+
+            pos: dict[str, dict[str, list[dict]]] = {}
+            rows = self._positions_rows(plan)
+            for r in ([] if rows is None else rows.select(
+                    "field", "term", "doc_ids", "tfs", "pos").collect()):
+                pos.setdefault(r["field"], {}).setdefault(r["term"], []).append(r.asDict())
+            verified = [
+                phrase_docs(pos.get(s.field, {}), s.terms) if s.kind == PHRASE
+                else near_docs(pos.get(s.field, {}), s.terms, s.window)
+                if s.kind == NEAR else None for s in plan.sets]
+            if any(s.occur == MUST and v is not None and not v.size
+                   for s, v in zip(plan.sets, verified)):
+                return _no_docs()
+        return run_plan(plan, *self._plan_lists(plan), k, verified)
 
     def _score_plan(self, plan: ScorePlan, k: int,
                     exhaustive: bool = False) -> list[tuple[int, float]]:
@@ -1318,23 +1360,22 @@ class FtIndex:
         pinned by test_topk_routes_distributed_beyond_doc_budget.
         ``exhaustive`` forces the unpruned driver evaluation, the
         reference the pruned one is checked against."""
-        if k <= 0 or not plan.clauses:
+        if k <= 0 or not (plan.clauses or plan.sets):
             return []
         budget = self._driver_score_max_docs
         if not exhaustive and max(self.stats.get(c.field, (0, 1.0))[0]
-                                  for c in plan.clauses) > budget:
-            dfs = self._term_dfs((c.field, c.term) for c in plan.clauses)
+                                  for c in plan.clauses + plan.sets) > budget:
+            dfs = self._term_dfs(plan.pairs())
             if sum(dfs.values()) > budget:
                 rows = (self._plan_df(plan, k)
                         .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                         .collect())
                 return [(int(r["doc_id"]), float(r["score"])) for r in rows]
         tombs = self._tombstones
-        lists = self._plan_lists(plan)
         if exhaustive:
-            return self._live_topk(*run_plan(plan, *lists)[:2], k, tombs)
+            return self._live_topk(*self._run_plan(plan)[:2], k, tombs)
         # a cut run is already in (score DESC, doc_id ASC) order
-        ids, scores, _ = run_plan(plan, *lists, k + len(tombs))
+        ids, scores, _ = self._run_plan(plan, k + len(tombs))
         ids, scores = _drop_tombstones(ids, scores, tombs)
         return list(zip(ids[:k].astype(np.int64).tolist(), scores[:k].tolist()))
 
@@ -1386,10 +1427,10 @@ class FtIndex:
         "a b"~slop term^boost`` — parsed and executed by
         :mod:`ftidx.qparse` against this handle's cached postings and
         positions; ``min_match`` applies Solr ``mm`` over the optional
-        clauses. The string's BM25 part is one plan (see
-        :func:`ftidx.qparse.execute`): a term-only string is routed and
-        pruned like :meth:`topk`; ``kernel="exhaustive"`` forces the
-        unpruned driver evaluation. The drop-in
+        clauses. The string is one plan (see
+        :func:`ftidx.qparse.execute`), routed and pruned like
+        :meth:`topk`; ``kernel="exhaustive"`` forces the unpruned
+        driver evaluation. The drop-in
         surface for a user migrating Solr query strings from the
         reference."""
         from ftidx.qparse import execute
@@ -1412,56 +1453,16 @@ class FtIndex:
             self._fetch_term_rows(all_terms, field)  # one job, warms cache
         return [self.topk(q, k=k, field=field, kernel=kernel) for q in queries]
 
-    def _positions_by_term(self, qterms: list[str],
-                           field: str) -> dict[str, list[dict]]:
-        """Positional rows for a term set, grouped by term — one
-        pushdown scan (field + term isin predicates reach parquet)."""
-        if self._positions is None:
-            raise ValueError(
-                "index has no positions table; rebuild with "
-                "build_index(..., positions=True) to enable phrase queries"
-            )
-        pos_rows = (
-            self._positions.filter(
-                (F.col("field") == field) & F.col("term").isin(qterms)
-            )
-            .select("term", "df", "doc_ids", "tfs", "pos")
-            .collect()
-        )
-        by_term: dict[str, list[dict]] = {}
-        for r in pos_rows:
-            by_term.setdefault(r["term"], []).append(r.asDict())
-        return by_term
-
-    def _bm25_over_docs(self, terms: list[str], field: str,
-                        verified: np.ndarray,
-                        k: int) -> list[tuple[int, float]]:
-        """BM25 (sum over ``terms``) restricted to a verified doc set,
-        ranked (score DESC, id ASC) — the scoring tail shared by the
-        positional query surfaces. Reuses cached postings rows."""
-        if verified.size == 0:
-            return []
-        lists, avgdl = self._term_lists(list(terms), field)
-        ids, scores = score_all(lists, avgdl)
-        keep = np.isin(ids.astype(np.int64), verified.astype(np.int64))
-        return self._live_topk(ids[keep], scores[keep], k)
-
     def phrase_topk(self, phrase: list[str], k: int = 10,
                     field: str = "code.content") -> list[tuple[int, float]]:
         """Exact-phrase BM25 top-k: docs containing the terms at
-        consecutive positions, ranked by the terms' BM25 sum.
-
-        Requires ``build_index(..., positions=True)``; the positional
-        scan pushes the same (field, term) predicates into parquet as
-        the term path. Verification is positions-only (self-contained
-        blobs); scoring reuses the cached postings rows."""
-        from ftidx.positions import phrase_docs
-
+        consecutive positions, ranked by the terms' BM25 sum — the terms
+        plus a required PHRASE set, one plan routed by
+        :meth:`_score_plan`. Requires ``build_index(..., positions=True)``."""
         if k <= 0 or not phrase:
             return []
-        by_term = self._positions_by_term(sorted(set(phrase)), field)
-        docs = phrase_docs(by_term, list(phrase))
-        return self._bm25_over_docs(list(phrase), field, docs, k)
+        return self._score_plan(ScorePlan.bag(phrase, field)._replace(
+            sets=(DocSet(field, tuple(phrase)),)), k)
 
     def schema_info(self) -> dict:
         """Index introspection (Solr Luke / admin-schema analog): per
@@ -1637,47 +1638,27 @@ class FtIndex:
         (the unordered proximity reading every dedicated ``~N``
         surface here uses), exact adjacency when 0.
 
-        Requires ``build_index(..., positions=True)``; phrase
-        verification is the positions-only check of
-        :func:`ftidx.positions.phrase_docs` /
-        :func:`~ftidx.positions.near_docs`, scoring reuses the warm
-        term cache — one cache probe per term, no Spark job."""
-        from ftidx.positions import near_docs, phrase_docs
-
+        The terms plus a SHOULD set weighted ``pf_weight``, one plan
+        routed by :meth:`_score_plan`. Needs ``positions=True``."""
         if slop < 0:
             raise ValueError("slop must be >= 0")
         if k <= 0 or not terms:
             return []
-        lists, avgdl = self._term_lists(terms, field)
-        if not lists:
-            return []
-        ids, scores = score_all(lists, avgdl)
-        by_term = self._positions_by_term(sorted(set(terms)), field)
-        if slop > 0:
-            pdocs = near_docs(by_term, list(terms),
-                              window=len(terms) - 1 + slop)
-        else:
-            pdocs = phrase_docs(by_term, list(terms))
-        if pdocs.size:
-            bonus = pf_weight * float(sum(tl.idf for tl in lists))
-            scores = scores + bonus * np.isin(ids.astype(np.int64), pdocs)
-        return self._live_topk(ids, scores, k)
+        kind, window = (NEAR, len(terms) - 1 + slop) if slop else (PHRASE, 0)
+        ps = DocSet(field, tuple(terms), kind, window, pf_weight, SHOULD)
+        return self._score_plan(ScorePlan.bag(terms, field)._replace(sets=(ps,)), k)
 
     def near_topk(self, terms: list[str], window: int = 5, k: int = 10,
                   field: str = "code.content") -> list[tuple[int, float]]:
         """Proximity BM25 top-k (Solr ``"a b"~N`` slop analog,
         unordered): docs where some occurrence of every term falls in
-        a span of ≤ ``window`` token positions, ranked by BM25 sum.
-        Same positional-scan + cached-postings-scoring shape as
-        :meth:`phrase_topk`; verification is the exact
-        minimum-covering-window check in :func:`ftidx.positions.near_docs`."""
-        from ftidx.positions import near_docs
-
+        a span of ≤ ``window`` token positions, ranked by BM25 sum:
+        :meth:`phrase_topk`'s plan with a NEAR set, verified by the
+        exact minimum-covering-window check of ``positions.near_docs``."""
         if k <= 0 or not terms:
             return []
-        by_term = self._positions_by_term(sorted(set(terms)), field)
-        docs = near_docs(by_term, list(terms), window)
-        return self._bm25_over_docs(list(terms), field, docs, k)
+        return self._score_plan(ScorePlan.bag(terms, field)._replace(
+            sets=(DocSet(field, tuple(terms), NEAR, window),)), k)
 
     def topk_fields(self, terms: list[str],
                     fields: dict[str, float] | None = None,
@@ -1933,6 +1914,8 @@ class FtIndex:
         bit-identical to the driver's. With ``k`` each bucket returns
         its own top-k; without it, every admitted doc — the shared
         engine under the filter, boost, group, sort and join surfaces.
+        PHRASE and NEAR sets are verified from the bucket's positions
+        rows, which join its postings rows in the same ``applyInPandas``.
         ``base`` adds the score without SCORE clauses as ``base``."""
         terms = plan.terms_by_field()
         if stats is None:
@@ -1948,17 +1931,36 @@ class FtIndex:
             cond = c if cond is None else cond | c
         prows = self._postings.filter(cond).select(
             "bucket", "field", "term", "df", "doc_ids", "tfs", "dls")
+        positions = self._positions_rows(plan)
+        if positions is not None:  # a positions row has pos, a postings row dls
+            blob = F.lit(None).cast("binary")
+            prows = prows.withColumn("pos", blob).unionByName(positions.select(
+                "bucket", "field", "term", "df", "doc_ids", "tfs",
+                blob.alias("dls"), "pos"))
         tombs = self._tombstones
         cut = None if k is None else k + len(tombs)
 
         def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+            verified = ()
+            if "pos" in pdf:
+                from ftidx.positions import near_docs, phrase_docs
+
+                is_pos = pdf["pos"].notna()
+                pos: dict[str, dict[str, list[dict]]] = {}
+                for r in pdf[is_pos].to_dict("records"):
+                    pos.setdefault(r["field"], {}).setdefault(r["term"], []).append(r)
+                pdf = pdf[~is_pos]
+                verified = [
+                    phrase_docs(pos.get(s.field, {}), s.terms) if s.kind == PHRASE
+                    else near_docs(pos.get(s.field, {}), s.terms, s.window)
+                    if s.kind == NEAR else None for s in plan.sets]
             lists: dict[str, dict[str, TermList]] = {}
             for (f, t), grp in pdf.groupby(["field", "term"], sort=False):
                 df, idf = glob[(f, t)]
                 tl = lists.setdefault(f, {})[t] = TermList(
                     t, grp.to_dict("records"), idf)
                 tl.df = df
-            ids, scores, bases = run_plan(plan, lists, avgdls, cut)
+            ids, scores, bases = run_plan(plan, lists, avgdls, cut, verified)
             ids, scores, bases = _drop_tombstones(ids, scores, tombs, bases)
             return pd.DataFrame({"doc_id": ids[:k].astype(np.int64),
                                  "score": scores[:k], "base": bases[:k]})
@@ -2975,10 +2977,10 @@ class FtIndex:
                       field: str = "code.content") -> dict[str, int]:
         """Solr ``facet.query``: match count per labeled subquery
         (docs matching ANY of the label's terms), tombstones excluded.
-        Serving path: decoded ids from the warm term cache, one set
-        union per label — no Spark job. For labels whose vocabulary
-        exceeds driver memory, count via the distributed match set
-        instead (``_matched_ids(terms).count()``), same semantics."""
+        Decoded ids from the term cache, one set union per label — no
+        Spark job when warm. Every label's postings are collected on the
+        driver, whatever their size: this is one of the surfaces whose
+        fat fetches serialize through ``_big_fetch_lock``."""
         out = {}
         for label, terms in queries.items():
             lists, _ = self._term_lists(terms, field)

@@ -20,8 +20,8 @@ a Solr replacement asks for beyond bag-of-words. Design:
   calls, no per-row Python).
 - **Phrase query**: intersect the phrase terms' doc sets, then chain
   position intersections (``np.intersect1d`` of pos(t_i)+1 with
-  pos(t_{i+1})); exact. BM25 ranking of the verified docs lives in
-  :meth:`ftidx.index.FtIndex.phrase_topk`.
+  pos(t_{i+1})); exact. Both plan executors (driver, per bucket) run
+  it for a ScorePlan's PHRASE / NEAR sets (:class:`ftidx.wand.DocSet`).
 
 Opt-in (``build_index(..., positions=True)``) because positions
 roughly double index size and encode cost. Streamed deltas carry

@@ -41,23 +41,20 @@ execution a single pass over cached postings):
 - If the query has no required clause, a doc qualifies by matching at
   least one should clause (standard OR behavior).
 
-Execution: the BM25 part of every query string is one
-:class:`ftidx.wand.ScorePlan` — term clauses keep their occur and
-boost, a phrase's terms are required clauses, a fuzzy clause's variants
-one group — run by the evaluator every other surface runs. A query of
-term (and fuzzy) clauses only is routed like ``topk``: per bucket
-inside the executors beyond the driver-scoring doc budget. Phrase
-verification (positional) and the constant-score multi-term clauses
-are numpy masks and adds over the plan's uncut driver output — no
-per-row Python, no Spark job per clause.
+Execution: every query string is one :class:`ftidx.wand.ScorePlan`,
+routed and run like ``topk``'s — on the driver over the term cache,
+or per bucket inside the executors beyond the driver-scoring doc
+budget. Term clauses keep their occur and boost, a fuzzy clause's
+variants are one group, a phrase is a PHRASE or NEAR doc set (its
+terms required clauses), and a wildcard or range is an ANY doc set
+whose constant is its boost. The executor verifies each phrase from
+the positions rows it reads.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field as dc_field
-
-import numpy as np
+from dataclasses import dataclass
 
 _CLAUSE_RE = re.compile(
     r'([+-]?)'                                  # occur
@@ -123,19 +120,20 @@ def execute(idx, q: str, k: int = 10,
     """Run a parsed query against an :class:`ftidx.index.FtIndex`.
 
     One plan scores every non-prohibited term clause (boost-scaled,
-    per-field idf/avgdl); required clauses must match, prohibited ones
-    must not, and phrase verifications mask the plan's output.
-    ``min_match`` is Solr/edismax ``mm`` over the OPTIONAL (should)
-    clauses: a doc must match at least that many of them, on top of
-    every required clause — phrases here are always required (see
-    module docstring), so mm never counts them.
+    per-field idf/avgdl); required clauses and sets must match,
+    prohibited ones must not. ``min_match`` is Solr/edismax ``mm`` over
+    the OPTIONAL (should) clauses: a doc must match at least that many
+    of them, on top of every required clause — phrases here are always
+    required (see module docstring), so mm never counts them. The plan
+    goes to :meth:`~ftidx.index.FtIndex._score_plan`, which picks the
+    executor by the df probe.
 
     ``kernel="auto"`` lets the evaluator MaxScore-prune what it can (a
     pure disjunction on one field); ``kernel="exhaustive"`` scores
     every match on the driver — the reference the pruned page is
     checked against, bit-identical by construction."""
-    from ftidx.positions import near_docs, phrase_docs
-    from ftidx.wand import MUST, MUST_NOT, SHOULD, Clause, ScorePlan, run_plan
+    from ftidx.wand import (ANY, MUST, MUST_NOT, NEAR, PHRASE, SHOULD, Clause,
+                            DocSet, ScorePlan)
 
     if k <= 0:
         return []
@@ -144,19 +142,16 @@ def execute(idx, q: str, k: int = 10,
         return []
 
     plan_clauses: list[Clause] = []
-    # constant-score groups (wildcard / range): (field, variants, boost)
-    const: list[tuple[str, list[str], float]] = []
-    phrases: list[tuple[bool, np.ndarray]] = []   # (prohibited, doc ids)
+    sets: list[DocSet] = []
     for i, c in enumerate(clauses):
         fld = c.field or default_field
         occur = {"+": MUST, "-": MUST_NOT}.get(c.occur, SHOULD)
         if c.is_phrase:
-            by_term = idx._positions_by_term(sorted(set(c.terms)), fld)
-            docs = (near_docs(by_term, c.terms, c.slop) if c.slop > 0
-                    else phrase_docs(by_term, c.terms))
-            phrases.append((occur == MUST_NOT, docs.astype(np.int64)))
+            # a phrase is required unless negated, and scores as the
+            # BM25 sum of its (required) terms
+            sets.append(DocSet(fld, tuple(c.terms), NEAR if c.slop > 0 else PHRASE,
+                               c.slop, 0.0, MUST_NOT if occur == MUST_NOT else MUST))
             if occur != MUST_NOT:
-                # a phrase scores as the BM25 sum of its (required) terms
                 plan_clauses += [Clause(fld, t, 1.0, MUST) for t in c.terms]
             continue
         if c.fuzzy is not None:
@@ -168,22 +163,13 @@ def execute(idx, q: str, k: int = 10,
             variants = [t for t, _, _ in
                         idx.fuzzy_terms(c.terms[0], field=fld,
                                         max_dist=c.fuzzy, limit=50)]
-            weight = c.boost
-        elif c.wildcard or c.range is not None:
-            # Lucene's CONSTANT_SCORE rewrite for WildcardQuery /
-            # TermRangeQuery: the variants' union matches as one group
-            # and adds boost × 1.0 per doc below, not BM25
-            if c.wildcard:
-                variants = [t for t, _ in
-                            idx.wildcard_terms(c.terms[0], field=fld)]
-            else:
-                lo, hi, ilo, ihi = c.range
-                variants = [t for t, _ in
-                            idx.range_terms(lo, hi, field=fld,
-                                            include_lo=ilo, include_hi=ihi)]
-            weight = 0.0
-            if variants and occur != MUST_NOT:
-                const.append((fld, variants, c.boost))
+        elif c.wildcard:
+            variants = [t for t, _ in idx.wildcard_terms(c.terms[0], field=fld)]
+        elif c.range is not None:
+            lo, hi, ilo, ihi = c.range
+            variants = [t for t, _ in
+                        idx.range_terms(lo, hi, field=fld,
+                                        include_lo=ilo, include_hi=ihi)]
         else:
             plan_clauses.append(Clause(fld, c.terms[0], c.boost, occur))
             continue
@@ -191,19 +177,13 @@ def execute(idx, q: str, k: int = 10,
             if occur == MUST:
                 return []  # a required multi-term clause matching nothing
             continue
-        plan_clauses += [Clause(fld, t, weight, occur, str(i)) for t in variants]
+        if c.fuzzy is not None:
+            plan_clauses += [Clause(fld, t, c.boost, occur, str(i)) for t in variants]
+        else:
+            # Lucene's CONSTANT_SCORE rewrite for WildcardQuery /
+            # TermRangeQuery: the variants' union matches as one unit
+            # and adds boost × 1.0 per doc, not BM25
+            sets.append(DocSet(fld, tuple(variants), ANY, 0, c.boost, occur))
 
-    plan = ScorePlan(tuple(plan_clauses), mm=min_match or 0)
-    if not phrases and not const:
-        return idx._score_plan(plan, k, exhaustive=kernel == "exhaustive")
-    ids, scores, _ = run_plan(plan, *idx._plan_lists(plan))
-    u64 = ids.astype(np.int64)
-    for fld, variants, boost in const:
-        lists, _ = idx._term_lists(variants, fld)
-        hit = np.isin(u64, np.concatenate([tl.decode_all()[0] for tl in lists]
-                                          or [np.empty(0, np.uint64)]).astype(np.int64))
-        scores = scores + boost * hit
-    mask = np.ones(ids.size, dtype=bool)
-    for prohibited, docs in phrases:
-        mask &= np.isin(u64, docs) != prohibited
-    return idx._live_topk(ids[mask], scores[mask], k)
+    plan = ScorePlan(tuple(plan_clauses), mm=min_match or 0, sets=tuple(sets))
+    return idx._score_plan(plan, k, exhaustive=kernel == "exhaustive")

@@ -80,21 +80,3 @@ def read_incremental(spark: SparkSession, location: str,
         return reader.load(location)
     return spark.read.parquet(location)
 
-
-def write_upsert(df: DataFrame, location: str, key_cols: list[str]) -> None:
-    """MERGE-by-key sink. Iceberg: real ``MERGE INTO``; parquet
-    fallback raises — partitioned overwrite (index.build_index) is the
-    portable equivalent and what the engine uses internally."""
-    spark = df.sparkSession
-    if "/" not in location and iceberg_available(spark):
-        df.createOrReplaceTempView("_upsert_src")
-        on = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-        spark.sql(
-            f"MERGE INTO {location} t USING _upsert_src s ON {on} "
-            f"WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
-        return
-    raise NotImplementedError(
-        "MERGE INTO needs an Iceberg catalog; with parquet use "
-        "ftidx.maintenance.upsert (dirty-bucket rebuild) instead"
-    )

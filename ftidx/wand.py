@@ -6,23 +6,25 @@ SURVEY §2: SolrQuery at IndexerIT.java:98-105 + default ranking).
 Every BM25 accumulation in ftidx runs through this module. How a
 query's term contributions combine into a doc score is written once,
 as a :class:`ScorePlan` (clauses of field, term, weight and occur,
-optional dismax groups, a minimum-should-match floor), and evaluated
-once, by :func:`run_plan` — on the driver over cached ``TermList``s or
-per bucket inside an executor, with the same arithmetic in the same
-order, so the two executors return bit-identical scores.
+optional dismax groups, a minimum-should-match floor, and phrase,
+proximity and term-union doc sets), and evaluated once, by
+:func:`run_plan` — on the driver over cached ``TermList``s or per
+bucket inside an executor, with the same arithmetic in the same order,
+so the two executors return bit-identical scores.
 
 - :func:`run_plan` — the one evaluator: boolean admission (should /
   must / must-not / mm), weighted sums, per-group dismax and
-  score-only clauses, then the exact (score DESC, doc_id ASC) cut.
-  Pure-should single-field plans with a ``k`` take MaxScore.
+  score-only clauses, set constants, then the exact (score DESC,
+  doc_id ASC) cut. Pure-should single-field plans with a ``k`` take
+  MaxScore.
 - :func:`score_block_max` — the pruned top-k: exact MaxScore (Turtle &
   Flood 1995). Lists whose summed bounds cannot reach the top k are
   probed, never sorted; in numpy only such whole-list skips pay.
 - :func:`score_exhaustive` — the unpruned top-k. The verification
   oracle ``kernel="exhaustive"`` names.
 - :func:`score_all` — every doc of a list set with its summed score,
-  for the positional, rerank and LTR surfaces that filter or rescore
-  the whole match set on the driver.
+  for the synonym, rerank and LTR surfaces and the FtShards merges
+  that rescore the whole match set on the driver.
 - :func:`merge_group` — folds a synonym/stem class into one pseudo-term
   (tf summed, dl shared, df = size of the union) that scores like any
   other list.
@@ -312,20 +314,42 @@ class Clause(NamedTuple):
     group: str | None = None
 
 
+PHRASE, NEAR, ANY = "phrase", "near", "any"
+
+
+class DocSet(NamedTuple):
+    """The docs of ``field`` holding ``terms`` as an exact phrase
+    (PHRASE), within ``window`` positions, unordered (NEAR), or holding
+    any of them (ANY: a wildcard's or range's variants). ``occur`` as
+    for a :class:`Clause`, but never SCORE. A ``weight`` adds a constant
+    per admitted member after the BM25 sum (ConstantScoreQuery): itself
+    for ANY, times the Σ idf of the distinct terms in term order for a
+    phrase (as Lucene's PhraseQuery weighs one)."""
+    field: str
+    terms: tuple[str, ...]
+    kind: str = PHRASE
+    window: int = 0
+    weight: float = 0.0
+    occur: str = MUST
+
+
 class ScorePlan(NamedTuple):
     """How a query's term contributions combine into a doc score.
 
-    A *unit* is a group's clauses or one ungrouped clause; it matches a
-    doc when any of its lists holds the doc. A doc is admitted when it
-    matches every MUST unit, no MUST_NOT list, and at least ``mm``
-    SHOULD units (at least one when the plan has no MUST unit). Its
-    score is the sum of its ungrouped clauses' contributions plus, per
-    group, ``best + tie·(sum − best)`` over the group's per-field sums
-    (Lucene's DisjunctionMaxQuery). Repeated (group, field, term)
-    clauses add their weights; a weight-0 clause only admits."""
+    A *unit* is a group's clauses, one ungrouped clause or one set; it
+    matches a doc when any of its lists holds the doc (a set: when the
+    doc is a member). A doc is admitted when it matches every MUST
+    unit, no MUST_NOT list or set, and at least ``mm`` SHOULD units
+    (at least one when the plan has no MUST unit). Its score is the
+    sum of its ungrouped clauses' contributions plus, per group,
+    ``best + tie·(sum − best)`` over the group's per-field sums
+    (Lucene's DisjunctionMaxQuery), plus the set constants in order.
+    Repeated (group, field, term) clauses add their weights; a
+    weight-0 clause only admits."""
     clauses: tuple[Clause, ...]
     tie: float = 0.0
     mm: int = 0
+    sets: tuple[DocSet, ...] = ()
 
     @classmethod
     def bag(cls, terms, field: str, occur: str = SHOULD, exclude=(),
@@ -337,11 +361,16 @@ class ScorePlan(NamedTuple):
             clauses += [Clause(field, t, 0.0, MUST_NOT) for t in dict.fromkeys(exclude)]
         return cls(tuple(clauses), 0.0, mm)
 
+    def pairs(self) -> list[tuple[str, str]]:
+        """Every (field, term) the plan reads: clauses, then sets."""
+        return ([(c.field, c.term) for c in self.clauses]
+                + [(s.field, t) for s in self.sets for t in s.terms])
+
     def terms_by_field(self) -> dict[str, list[str]]:
-        """{field: sorted terms} over every clause, fields sorted."""
+        """{field: sorted terms} over every clause and set, fields sorted."""
         out: dict[str, dict] = {}
-        for c in self.clauses:
-            out.setdefault(c.field, {})[c.term] = None
+        for f, t in self.pairs():
+            out.setdefault(f, {})[t] = None
         return {f: sorted(out[f]) for f in sorted(out)}
 
 
@@ -359,7 +388,8 @@ def _no_docs():
 
 
 def run_plan(plan: ScorePlan, lists_by_field: dict[str, dict[str, TermList]],
-             avgdl_by_field: dict[str, float], k: int | None = None):
+             avgdl_by_field: dict[str, float], k: int | None = None,
+             verified=()):
     """Evaluate ``plan``: (ids, scores, base) of the admitted docs,
     ``base`` being the score without SCORE clauses (``scores`` itself
     when there are none). Uncut (ids ascending) when ``k`` is None,
@@ -369,13 +399,15 @@ def run_plan(plan: ScorePlan, lists_by_field: dict[str, dict[str, TermList]],
     caller reads (the whole index on the driver, one bucket in an
     executor), with the GLOBAL idf and the GLOBAL df: lists add in
     (df, field, term) order, so both executors sum each doc alike.
-    A pure-should plan over one field with positive weights, mm ≤ 1
-    and a ``k`` takes MaxScore (:func:`score_block_max`), bit-identical
-    to the scatter-add."""
+    ``verified[i]`` holds a PHRASE or NEAR set's members, verified by
+    the executor from the positions rows it reads.
+    A pure-should plan over one field with positive weights, mm ≤ 1,
+    no set and a ``k`` takes MaxScore (:func:`score_block_max`),
+    bit-identical to the scatter-add."""
     if k is not None and k <= 0:
         return _no_docs()
     field = plan.clauses[0].field if plan.clauses else None
-    pruned = k is not None and plan.mm <= 1
+    pruned = k is not None and plan.mm <= 1 and not plan.sets
     weights: dict[tuple, float] = {}
     for c in plan.clauses:
         pruned = pruned and (c.occur == SHOULD and c.group is None
@@ -406,12 +438,27 @@ def run_plan(plan: ScorePlan, lists_by_field: dict[str, dict[str, TermList]],
         else:
             groups.setdefault(g, {}).setdefault(f, []).append(len(arrays))
         arrays.append(_list_arrays(tl.contribs(avgdl_by_field[f])))
-    for c in plan.clauses:  # weight-0 clauses admit without scoring
-        if (c.occur in (SHOULD, MUST) and (c.field, c.term) not in slot
+    units: dict = {}
+    for i, c in enumerate(plan.clauses):
+        if c.occur not in (SHOULD, MUST):
+            continue
+        units.setdefault(i if c.group is None else ("g", c.group),
+                         (c.occur, []))[1].append((c.field, c.term))
+        if ((c.field, c.term) not in slot  # weight 0: admits without scoring
                 and c.term in lists_by_field.get(c.field, ())):
             slot[(c.field, c.term)] = len(arrays)
             arrays.append((lists_by_field[c.field][c.term].decode_all()[0], None))
-    if not arrays:
+    members = []
+    for i, s in enumerate(plan.sets):  # an admitting set's members join the universe
+        have = lists_by_field.get(s.field, {})
+        members.append(np.concatenate(
+            [have[t].decode_all()[0] for t in s.terms if t in have] + [np.empty(0, np.uint64)])
+            if s.kind == ANY else np.asarray(verified[i]).astype(np.uint64))
+        if s.occur != MUST_NOT:
+            slot[("set", i)] = len(arrays)
+            arrays.append((members[i], None))
+            units[("set", i)] = (s.occur, [("set", i)])
+    if not arrays or not units:
         return _no_docs()
     uniq, inv = _unique_inverse(np.concatenate([ids for ids, _ in arrays]))
     bounds = np.cumsum([0] + [ids.size for ids, _ in arrays])
@@ -434,15 +481,14 @@ def run_plan(plan: ScorePlan, lists_by_field: dict[str, dict[str, TermList]],
             np.maximum(best, fs, out=best)
             total += fs
         base += best + plan.tie * (total - best)
+    for i, s in enumerate(plan.sets):  # set constants, after the BM25 sum
+        if s.weight and s.occur != MUST_NOT:
+            hit = scatter([slot[("set", i)]], scored=False)
+            if hit.any():
+                lists = lists_by_field[s.field]
+                base[hit] += s.weight if s.kind == ANY else s.weight * float(
+                    sum(lists[t].idf for t in sorted(set(s.terms))))
     scores = base + scatter(extra) if extra else base
-
-    units: dict = {}
-    for i, c in enumerate(plan.clauses):
-        if c.occur in (SHOULD, MUST):
-            units.setdefault(i if c.group is None else ("g", c.group),
-                             (c.occur, []))[1].append((c.field, c.term))
-    if not units:
-        return _no_docs()
 
     def matches(fts) -> np.ndarray:
         pick = [slot[ft] for ft in fts if ft in slot]
@@ -459,12 +505,12 @@ def run_plan(plan: ScorePlan, lists_by_field: dict[str, dict[str, TermList]],
             if occ == SHOULD:
                 count += matches(fts)
         mask = count >= floor if mask is None else mask & (count >= floor)
-    for c in plan.clauses:
-        if c.occur == MUST_NOT and c.term in lists_by_field.get(c.field, ()):
-            xids = lists_by_field[c.field][c.term].decode_all()[0]
-            if xids.size:
-                keep = ~np.isin(uniq, xids)
-                mask = keep if mask is None else mask & keep
+    excluded = [lists_by_field[c.field][c.term].decode_all()[0] for c in plan.clauses
+                if c.occur == MUST_NOT and c.term in lists_by_field.get(c.field, ())]
+    for xids in excluded + [x for s, x in zip(plan.sets, members) if s.occur == MUST_NOT]:
+        if xids.size:
+            keep = ~np.isin(uniq, xids)
+            mask = keep if mask is None else mask & keep
     if mask is not None:
         uniq, scores, base = uniq[mask], scores[mask], base[mask]
     if k is not None:

@@ -26,6 +26,15 @@ def built(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
+def positioned(spark, tmp_path_factory):
+    """A 150-file, 4-bucket index with positions: the phrase surfaces'."""
+    out = str(tmp_path_factory.mktemp("pidx") / "main")
+    build_index(spark, synth_source(spark, 150), out, n_buckets=4,
+                hot_df_threshold=50, positions=True)
+    return out
+
+
+@pytest.fixture(scope="module")
 def oracle(spark, built):
     out, _ = built
     docs = spark.read.parquet(f"{out}/docs")
@@ -98,36 +107,52 @@ def test_topk_routes_distributed_beyond_doc_budget(spark, built, oracle):
     assert idx._result_hits >= 1 and idx._result_misses <= misses0 + 1
 
 
-def test_plan_surfaces_route_distributed_beyond_doc_budget(spark, built):
-    """Beyond the doc budget, topk_fields, topk_boost_query and a
-    term-only query string score in the executors like topk: the
-    driver's pages, bit for bit, and no driver postings collect."""
-    idx = open_index(spark, built[0])
-    idx._driver_score_max_docs = 1  # force the routed path
-    ref = open_index(spark, built[0])
+def test_plan_surfaces_route_distributed_beyond_doc_budget(spark, built,
+                                                           positioned):
+    """Beyond the doc budget, topk_fields, topk_boost_query, the phrase
+    surfaces and query strings (terms, phrases, proximity, a negated
+    phrase, a wildcard) score in the executors like topk: the driver's
+    pages, bit for bit, and no driver postings collect."""
     w = {"code.content": 1.0, "code.ident.split": 2.0}
-    calls = [
+    calls = {built[0]: [
         lambda h: h.topk_fields(["def", "value"], fields=w, k=8),
         lambda h: h.topk_fields(["def", "value"], fields=w, k=8, tie=0.3),
         lambda h: h.topk_boost_query(["def", "value"], {"alpha": 0.7}, k=8),
         lambda h: h.query_string("def value^2 return^0.5", k=8),
         lambda h: h.query_string("+def value -alpha", k=8, min_match=1),
-    ]
-    for call in calls:
-        got = call(idx)
-        assert got and got == call(ref)
-    assert idx._cache_misses == 0  # no driver postings collect happened
+    ], positioned: [
+        lambda h: h.phrase_topk(["def", "value"], k=8),
+        lambda h: h.near_topk(["def", "value"], window=3, k=8),
+        lambda h: h.topk_phrase_boosted(["def", "value"], k=8),
+        lambda h: h.topk_phrase_boosted(["beta", "data", "result"], k=8,
+                                        slop=20),
+        lambda h: h.query_string('"def value" return', k=8),
+        lambda h: h.query_string('"def value"~3 return^2', k=8),
+        lambda h: h.query_string('def -"def value"', k=8),
+        lambda h: h.query_string("def val* return^0.5", k=8),
+    ]}
+    for path, surfaces in calls.items():
+        idx = open_index(spark, path)
+        idx._driver_score_max_docs = 1  # force the routed path
+        ref = open_index(spark, path)
+        for call in surfaces:
+            got = call(idx)
+            assert got and got == call(ref)
+        assert idx._cache_misses == 0  # no driver postings collect happened
 
 
-def test_plan_parity_driver_bucket_shards(spark, built, tmp_path):
-    """Each plan of the grid runs on the driver (run_plan over the term
-    cache) and per bucket (_plan_df(...).collect()): the same ids and
-    bit-identical scores, on a base-only index and on base + streamed
-    deltas + tombstones; FtShards([idx]) serves the same pages."""
+def test_plan_parity_driver_bucket_shards(spark, built, positioned, tmp_path):
+    """Each plan of the grid runs on the driver (_run_plan over the term
+    cache and the positions fetch) and per bucket
+    (_plan_df(...).collect()): the same ids and bit-identical scores, on
+    a base-only index and on base + streamed deltas + tombstones;
+    FtShards([idx]) serves the same pages. The doc-set plans run on
+    indexes with positions, streamed ones in delta_positions."""
     from ftidx.index import _drop_tombstones, edismax_plan
     from ftidx.shards import FtShards
     from ftidx.streaming import index_microbatch
-    from ftidx.wand import MUST, Clause, ScorePlan, run_plan
+    from ftidx.wand import (ANY, MUST, MUST_NOT, NEAR, PHRASE, SHOULD, Clause,
+                            DocSet, ScorePlan)
 
     f1, f2 = "code.content", "code.ident.split"
     terms = ["def", "value", "alpha"]
@@ -149,18 +174,41 @@ def test_plan_parity_driver_bucket_shards(spark, built, tmp_path):
                         + (Clause(f1, "alpha", 0.7),)),
         "edismax": edismax_plan(terms, qf, 0.3, 2, {"return": 0.7}),
     }
+    dv = ("def", "value")
+    bdr = ("beta", "data", "result")
+    set_plans = {
+        "phrase": ScorePlan.bag(dv, f1)._replace(sets=(DocSet(f1, dv),)),
+        "near": ScorePlan.bag(dv, f1)._replace(sets=(DocSet(f1, dv, NEAR, 3),)),
+        "not_phrase": ScorePlan.bag(["def", "return"], f1)._replace(
+            sets=(DocSet(f1, dv, occur=MUST_NOT),)),
+        # topk_phrase_boosted: ps=0, and ps=20 over three terms
+        "pf0": ScorePlan.bag(dv, f1)._replace(
+            sets=(DocSet(f1, dv, PHRASE, 0, 2.0, SHOULD),)),
+        "pf20": ScorePlan.bag(bdr, f1)._replace(
+            sets=(DocSet(f1, bdr, NEAR, 22, 2.0, SHOULD),)),
+        # the query string 'def^2 d* [a TO c]^0.7 return^0.5' with mm=2
+        "multiterm": ScorePlan(
+            (Clause(f1, "def", 2.0), Clause(f1, "return", 0.5)), mm=2,
+            sets=(DocSet(f1, ("data", "def", "delta"), ANY, 0, 1.0, SHOULD),
+                  DocSet(f1, ("alpha", "beta", "call"), ANY, 0, 0.7, SHOULD))),
+    }
 
     out = str(tmp_path / "idx")
-    build_index(spark, synth_source(spark, 120), out, n_buckets=4)
+    build_index(spark, synth_source(spark, 120), out, n_buckets=4,
+                positions=True)
     index_microbatch(synth_source(spark, 200).filter(F.col("path") > "m"), 0,
                      out, n_buckets=4)
     streamed = open_index(spark, out)
     streamed.delete([d for d, _ in streamed.topk(["def"], k=3)]
                     + [d for d, _ in streamed.topk(["value"], k=2)])
     assert streamed._delta_postings is not None and streamed._tombstones
-    for idx in (open_index(spark, built[0]), streamed):
-        for name, plan in plans.items():
-            ids, scores, _ = run_plan(plan, *idx._plan_lists(plan))
+    assert (tmp_path / "idx" / "delta_positions").exists()
+    grids = ((open_index(spark, built[0]), plans),
+             (open_index(spark, positioned), set_plans),
+             (streamed, {**plans, **set_plans}))
+    for idx, grid in grids:
+        for name, plan in grid.items():
+            ids, scores, _ = idx._run_plan(plan)
             ids, scores = _drop_tombstones(ids, scores, idx._tombstones)
             rows = sorted((r["doc_id"], r["score"])
                           for r in idx._plan_df(plan).collect())
@@ -172,6 +220,59 @@ def test_plan_parity_driver_bucket_shards(spark, built, tmp_path):
         kw = dict(qf=qf, tie=0.3, mm=2, bq={"return": 0.7}, k=10)
         assert [tuple(r)[1:] for r in shards.edismax(terms, **kw).collect()] == \
             [tuple(r) for r in idx.edismax(terms, **kw).collect()]
+
+
+def test_term_order_does_not_depend_on_the_cache(spark, positioned):
+    """explain's terms and total, and the pf bonus's idf sum, run in
+    term order: a handle whose cache already holds some of the terms
+    answers exactly as a fresh one."""
+    terms = ["beta", "data", "result"]
+
+    def warmed():
+        h = open_index(spark, positioned)
+        h.topk(["data"])
+        h.topk(["result"])
+        return h
+
+    page = open_index(spark, positioned).topk_phrase_boosted(
+        terms, k=20, pf_weight=2, slop=20)
+    assert page and warmed().topk_phrase_boosted(
+        terms, k=20, pf_weight=2, slop=20) == page
+    for doc, _ in page[:3]:
+        ex = open_index(spark, positioned).explain(terms, doc)
+        names = [t["term"] for t in ex["terms"]]
+        assert names == sorted(names)
+        assert warmed().explain(terms, doc) == ex
+
+
+# Spark jobs of the phrase and query-string surfaces on the positioned
+# fixture, (cold, warm) on a fresh handle: the positions fetch runs on
+# every call, the postings fetch only cold, and a wildcard's expansion
+# adds its vocabulary scan.
+PHRASE_SURFACE_MAX_JOBS = {"phrase_topk": (2, 1), "near_topk": (2, 1),
+                           "topk_phrase_boosted": (2, 1),
+                           "qs_phrase": (2, 1), "qs_wildcard": (3, 2),
+                           "qs_terms": (1, 0)}
+
+
+def test_phrase_surfaces_job_count(spark, spark_jobs, positioned):
+    calls = {
+        "phrase_topk": lambda h: h.phrase_topk(["def", "value"]),
+        "near_topk": lambda h: h.near_topk(["def", "value"], window=3),
+        "topk_phrase_boosted": lambda h: h.topk_phrase_boosted(
+            ["def", "value"], slop=2),
+        "qs_phrase": lambda h: h.query_string('"def value" return'),
+        "qs_wildcard": lambda h: h.query_string("def val*"),
+        "qs_terms": lambda h: h.query_string("def value"),
+    }
+    for name, call in calls.items():
+        idx = open_index(spark, positioned)
+        cold, cold_jobs = spark_jobs(lambda: call(idx))
+        warm, warm_jobs = spark_jobs(lambda: call(idx))
+        assert cold and cold == warm, name
+        cap_cold, cap_warm = PHRASE_SURFACE_MAX_JOBS[name]
+        assert len(cold_jobs) <= cap_cold and len(warm_jobs) <= cap_warm, \
+            (name, len(cold_jobs), len(warm_jobs))
 
 
 def test_hot_terms_were_salted(spark, built):

@@ -169,3 +169,21 @@ def test_only_read_table_reads_index_tables():
             if _is_spark_read(node):
                 sites.add((py.name, scope[-1] if scope else "<module>"))
     assert sites == READ_SITES
+
+
+# One phrase verifier: positions are checked against a phrase or a
+# window only where a plan executor resolves a plan's PHRASE and NEAR
+# sets — the driver's, from its positions fetch, and the per-bucket
+# one, from the bucket's own positions rows — so no surface can mask a
+# page with a verification of its own.
+VERIFIERS = {"phrase_docs", "near_docs"}
+
+
+def test_only_the_plan_executors_verify_phrases():
+    callers = set()
+    for py in sorted(FTIDX.glob("*.py")):
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for node, scope in _walk_with_scope(tree):
+            if isinstance(node, ast.Call) and _referenced(node.func) in VERIFIERS:
+                callers.add(f"{py.name}:{'.'.join(scope)}")
+    assert callers == {"index.py:_run_plan", "index.py:_plan_df.score_bucket"}
