@@ -59,14 +59,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ftidx.build import DEFAULT_BUCKETS, live_docs, prepare_docs
-from ftidx.codec import (decode_postings, delta_decode_runs, encode_many,
-                         encode_postings, varint_decode)
+from ftidx.codec import (decode_postings, delta_decode, delta_decode_runs,
+                         encode_many, encode_postings, varint_decode)
 from ftidx.schema import (INDEX_TABLES, POSITIONS_SCHEMA, POSTINGS_SCHEMA,
                           has_table, read_table)
 from ftidx.wand import (ANY, MUST, NEAR, PHRASE, SCORE, SHOULD, Clause,
                         DocSet, ScorePlan, TermList, _no_docs,
-                        _topk_from_scores, bm25_idf, merge_group, run_plan,
-                        score_all)
+                        _topk_from_scores, bm25_idf, merge_classes, run_plan)
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 
@@ -98,16 +97,6 @@ def _drop_tombstones(ids: np.ndarray, scores: np.ndarray, tombs: frozenset,
     return tuple(a[keep] for a in (ids, scores, *more))
 
 
-def _align(sorted_ids: np.ndarray, probe: np.ndarray):
-    """Look up each ``probe`` id in ascending ``sorted_ids``: (hit mask,
-    position). ``position`` is clipped into range, so it is only
-    meaningful where ``hit``."""
-    if not sorted_ids.size:
-        return np.zeros(probe.size, bool), np.zeros(probe.size, np.intp)
-    pos = np.minimum(np.searchsorted(sorted_ids, probe), sorted_ids.size - 1)
-    return sorted_ids[pos] == probe, pos
-
-
 def edismax_plan(terms, qf: dict[str, float], tie: float, mm: int,
                  bq: dict[str, float] | None) -> ScorePlan:
     """edismax's qf/tie/mm/bq as one plan: each distinct term a dismax
@@ -119,6 +108,57 @@ def edismax_plan(terms, qf: dict[str, float], tie: float, mm: int,
         + tuple(Clause(fields[0], t, float(w), SCORE)
                 for t, w in sorted((bq or {}).items())),
         tie=float(tie), mm=int(mm))
+
+
+def class_plan(groups: dict[str, list[str]], field: str) -> ScorePlan:
+    """Each ``{term: members}`` entry as one synonym-class clause."""
+    return ScorePlan(tuple(Clause(field, t, members=tuple(sorted(set(ms))))
+                           for t, ms in groups.items()))
+
+
+def ltr_features(need: set[str], terms: list[str], field: str, parts: list,
+                 orig: np.ndarray, stats_of=lambda plan: None) -> dict[str, np.ndarray]:
+    """LTRRescorer's serving-time feature store for a rerank head whose
+    docs are ``parts`` — (FtIndex, doc ids) pairs, each handle with its
+    share of the head — concatenated in ``parts`` order. Every feature
+    but ``dl`` is one plan filtered to each handle's ids and routed by
+    its df probe, scored with ``stats_of(plan)`` (FtShards' global
+    statistics; None for the handle's own):
+
+    - ``orig``        — the main query's score, given;
+    - ``matched``     — distinct query terms in the doc: one weight-1
+      ANY set per distinct term, so the score is the count;
+    - ``bm25@<fld>``  — BM25 of the same terms on another field
+      (the SolrFeature arbitrary-subquery analog);
+    - ``dl``          — the doc's ``field`` length, from doclen in one job.
+    """
+    def per_doc(plan: ScorePlan) -> np.ndarray:
+        stats, vals = stats_of(plan), []
+        for h, ids in parts:
+            got = dict(h._score_plan(plan._replace(ids=tuple(ids)), len(ids), stats=stats))
+            vals += [got.get(d, 0.0) for d in ids]
+        return np.array(vals, np.float64)
+
+    unknown = {f for f in need if f not in ("orig", "matched", "dl")
+               and not f.startswith("bm25@")}
+    if unknown:
+        raise ValueError(f"unknown LTR features: {sorted(unknown)}")
+    feats = {"orig": orig}
+    if "matched" in need:
+        feats["matched"] = per_doc(ScorePlan((), sets=tuple(
+            DocSet(field, (t,), ANY, 0, 1.0, SHOULD) for t in sorted(set(terms)))))
+    for name in sorted(need):
+        if name.startswith("bm25@"):
+            feats[name] = per_doc(ScorePlan.bag(terms, name.split("@", 1)[1]))
+    if "dl" in need:
+        frames = [read_doclen(h.spark, h.path, "doc_id", "field", "len")
+                  .filter((F.col("field") == field) & F.col("doc_id").isin(ids))
+                  .withColumn("part", F.lit(i)) for i, (h, ids) in enumerate(parts) if ids]
+        lens = {(r["part"], r["doc_id"]): float(r["len"]) for r in
+                (reduce(DataFrame.unionByName, frames).collect() if frames else [])}
+        feats["dl"] = np.array([lens.get((i, d), 0.0) for i, (_, ids) in enumerate(parts)
+                                for d in ids], np.float64)
+    return feats
 
 
 def edismax_finish(scored: DataFrame, docs: DataFrame | None, keys: list[str],
@@ -890,17 +930,20 @@ def assemble_wordbreak(qs: list[str], dfs: dict[str, int],
 class FtIndex:
     """Query-side handle on a persisted index.
 
-    Every plan surface (``topk``, ``topk_fields``, ``topk_boost_query``,
-    ``query_string``, ``edismax``, the phrase surfaces and the DataFrame
-    surfaces) builds one :class:`~ftidx.wand.ScorePlan` and hands it to
-    one evaluator, :func:`~ftidx.wand.run_plan`, in one of two places:
-    on the driver over the term cache (collected, term-filtered postings
+    Every scoring surface (``topk``, ``topk_fields``,
+    ``topk_boost_query``, ``query_string``, ``edismax``, the phrase
+    surfaces, synonyms and stems, rerank, LTR, pinned docs,
+    ``facet_queries``, ``more_like_this`` and the DataFrame surfaces)
+    builds one :class:`~ftidx.wand.ScorePlan` and hands it to one
+    evaluator, :func:`~ftidx.wand.run_plan`, in one of two places: on
+    the driver over the term cache (collected, term-filtered postings
     rows — the low-latency path; parquet row-group stats + dictionary
     filters make the term predicate an efficient pushdown) and a
     positions fetch (:meth:`_run_plan`), or per bucket inside the
     executors (:meth:`_plan_df`) with a global take-ordered cut — the
     100 TB path where even one term's postings exceed driver memory.
-    The df probe picks between them (:meth:`_score_plan`).
+    The df probe picks between them (:meth:`_on_buckets`), so no
+    surface collects a fat term's postings on the driver.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -958,20 +1001,6 @@ class FtIndex:
         # when the corpus itself is over the doc budget, and gives
         # _plan_df its global idfs.
         self._df_cache: OrderedDict[tuple[str, str], int] = OrderedDict()
-        # giant-collect throttle: the surfaces that still collect
-        # postings on the driver whatever their size (topk_reranked,
-        # ltr_rerank, explain, facet_queries, topk_synonyms /
-        # stem_topk, more_like_this, spellcheck, and FtShards' driver
-        # merges) legitimately collect fat postings at a fat corpus;
-        # every plan surface, phrases included, routes by the df probe
-        # instead.
-        # N serving threads doing that CONCURRENTLY multiplied the
-        # driver working set N× — the round-5 serving bench OOM-killed
-        # a 78 GB driver exactly this way.  Fetches whose probed df
-        # exceeds the routing budget serialize through this lock,
-        # bounding peak driver memory to ~one giant working set (the
-        # per-entry cache cap keeps them out of the term cache too).
-        self._big_fetch_lock = threading.Lock()
         self.refresh()
 
     def refresh(self) -> None:
@@ -1096,6 +1125,9 @@ class FtIndex:
     # -- queries ---------------------------------------------------------
     def _fetch_term_rows(self, terms: list[str], field: str) -> dict[str, list[dict]]:
         """Term rows via the driver cache; only cache misses touch Spark.
+        The driver executor's reader (:meth:`_plan_lists`) is its only
+        caller, and reads only plans the df probe keeps on the driver,
+        so a fetch is never larger than the driver-scoring budget.
 
         Cache bookkeeping runs under ``_cache_lock`` in short critical
         sections; the Spark postings fetch runs OUTSIDE the lock so
@@ -1155,29 +1187,13 @@ class FtIndex:
                     self._cache_bytes -= _entry_cost(old_rows)
             if not unresolved:
                 return out
-            # fat-corpus guard: at a corpus over the routing budget,
-            # probe the fetch's total df first (cheap termstats read)
-            # and serialize GIANT collects through the big-fetch lock —
-            # callers on this path (rerank, LTR, explain, facet_queries,
-            # synonyms, see __init__) have no distributed fallback, so
-            # the fetch must happen, but not 16× concurrently
-            n_docs_f, _ = self.stats.get(field, (0, 1.0))
-            fat_fetch = (n_docs_f > self._driver_score_max_docs
-                         and self._df_total(unresolved, field)
-                         > self._driver_score_max_docs)
-            if fat_fetch:
-                self._big_fetch_lock.acquire()
-            try:
-                fetched = (
-                    self._postings.filter(
-                        (F.col("field") == field) & F.col("term").isin(unresolved)
-                    )
-                    .select("term", "df", "cf", "doc_ids", "tfs", "dls")
-                    .collect()
+            fetched = (
+                self._postings.filter(
+                    (F.col("field") == field) & F.col("term").isin(unresolved)
                 )
-            finally:
-                if fat_fetch:
-                    self._big_fetch_lock.release()
+                .select("term", "df", "cf", "doc_ids", "tfs", "dls")
+                .collect()
+            )
             for t in unresolved:
                 grouped.setdefault(t, [])
             for r in fetched:
@@ -1297,19 +1313,80 @@ class FtIndex:
                 self._df_cache.popitem(last=False)
         return out
 
-    def _plan_lists(self, plan: ScorePlan):
+    def _plan_lists(self, plan: ScorePlan, stats=None):
         """The driver executor's input to :func:`ftidx.wand.run_plan`:
-        ({field: {term: TermList}}, {field: avgdl}) from the term cache."""
-        terms: dict[str, list[str]] = {}
-        for f, t in plan.pairs():
-            terms.setdefault(f, []).append(t)
+        ({field: {term: TermList}}, {field: avgdl}) from the term cache,
+        each synonym class merged into its pseudo-term with the union df
+        it reads. ``stats`` as for :meth:`_plan_df`: every list then
+        takes the global df (its sum order) and idf, every field the
+        global avgdl."""
         lists, avgdls = {}, {}
-        for field, ts in terms.items():
+        for field, ts in plan.terms_by_field().items():
             tls, avgdls[field] = self._term_lists(ts, field)
-            lists[field] = by_term = {}
-            for tl in tls:
-                by_term[tl.term] = tl
+            lists[field] = {tl.term: tl for tl in tls}
+        for field, g in merge_classes(plan, lists):
+            g.idf = bm25_idf(self.stats.get(field, (0, 1.0))[0], g.df)
+        if stats is not None:
+            field_stats, dfs = stats
+            for field, by_term in lists.items():
+                n_docs, avgdls[field] = field_stats.get(field, (0, 1.0))
+                for t, tl in by_term.items():
+                    tl.df = dfs[(field, t)]
+                    tl.idf = bm25_idf(n_docs, tl.df)
         return lists, avgdls
+
+    def _on_buckets(self, plan: ScorePlan) -> bool:
+        """Whether the df probe sends ``plan`` to the per-bucket executor:
+        a field it reads holds more docs than the driver-scoring budget
+        and the summed dfs of every (field, term) it reads (a class's
+        members included) exceed the budget too."""
+        budget = self._driver_score_max_docs
+        pairs = plan.pairs()
+        return (max((self.stats.get(f, (0, 1.0))[0] for f, _ in pairs), default=0)
+                > budget and sum(self._term_dfs(pairs).values()) > budget)
+
+    def _bucket_dfs(self, plan: ScorePlan) -> dict[tuple[str, str], int]:
+        """The global dfs the per-bucket executor scores ``plan`` with:
+        the df probe's (:meth:`_term_dfs`) for terms and, for each
+        synonym class, the size of its members' union, tombstoned docs
+        counted as the stored df counts them — one per-bucket
+        unique-count pass, exact because a doc lives in one bucket."""
+        out = self._term_dfs(plan.pairs())
+        classes = plan.classes()
+        if not classes:
+            return out
+        cond = reduce(lambda a, b: a | b, [
+            (F.col("field") == c.field) & F.col("term").isin(list(c.members))
+            for c in classes])
+
+        def count(pdf: pd.DataFrame) -> pd.DataFrame:
+            sizes = []
+            for c in classes:
+                blobs = pdf["doc_ids"][(pdf["field"] == c.field)
+                                       & pdf["term"].isin(c.members)]
+                sizes.append(np.unique(np.concatenate(
+                    [delta_decode(varint_decode(b)) for b in blobs]
+                    + [np.empty(0, np.uint64)])).size)
+            return pd.DataFrame({"field": [c.field for c in classes],
+                                 "key": [c.key for c in classes], "n": sizes})
+
+        out.update(dict.fromkeys(((c.field, c.key) for c in classes), 0))
+        for r in (self._postings.filter(cond).select("bucket", "field", "term", "doc_ids")
+                  .groupBy("bucket").applyInPandas(count, "field string, key string, n long")
+                  .collect()):
+            out[(r["field"], r["key"])] += int(r["n"])
+        return out
+
+    def _plan_dfs(self, plan: ScorePlan) -> dict[tuple[str, str], int]:
+        """This index's df of every list ``plan`` scores, read where the
+        router runs it: from the driver executor's lists when the probe
+        keeps the plan there (the fetch seeds the term cache the scoring
+        then reads), else :meth:`_bucket_dfs`. FtShards sums them into
+        its global statistics."""
+        if self._on_buckets(plan):
+            return self._bucket_dfs(plan)
+        lists, _ = self._plan_lists(plan)
+        return {(f, t): tl.df for f, by_term in lists.items() for t, tl in by_term.items()}
 
     def _positions_rows(self, plan: ScorePlan) -> DataFrame | None:
         """The positions rows the plan's PHRASE and NEAR sets are
@@ -1326,11 +1403,11 @@ class FtIndex:
             )
         return self._positions.filter(reduce(lambda a, b: a | b, conds))
 
-    def _run_plan(self, plan: ScorePlan, k: int | None = None):
+    def _run_plan(self, plan: ScorePlan, k: int | None = None, stats=None):
         """The driver executor: :func:`ftidx.wand.run_plan` over the term
-        cache, the plan's PHRASE and NEAR sets verified first from one
-        positions fetch — a required set with no member ends the query
-        before any postings fetch."""
+        cache (:meth:`_plan_lists`), the plan's PHRASE and NEAR sets
+        verified first from one positions fetch — a required set with no
+        member ends the query before any postings fetch."""
         verified = ()
         if plan.sets:
             from ftidx.positions import near_docs, phrase_docs
@@ -1347,10 +1424,10 @@ class FtIndex:
             if any(s.occur == MUST and v is not None and not v.size
                    for s, v in zip(plan.sets, verified)):
                 return _no_docs()
-        return run_plan(plan, *self._plan_lists(plan), k, verified)
+        return run_plan(plan, *self._plan_lists(plan, stats), k, verified)
 
-    def _score_plan(self, plan: ScorePlan, k: int,
-                    exhaustive: bool = False) -> list[tuple[int, float]]:
+    def _score_plan(self, plan: ScorePlan, k: int, exhaustive: bool = False,
+                    stats=None) -> list[tuple[int, float]]:
         """A plan's live top-k page, scored where its postings are read.
         Within the driver-scoring doc budget, or when the df probe shows
         the query's postings are small (thin/rare terms), the driver
@@ -1359,25 +1436,33 @@ class FtIndex:
         per bucket reach the driver. Same evaluator, same page —
         pinned by test_topk_routes_distributed_beyond_doc_budget.
         ``exhaustive`` forces the unpruned driver evaluation, the
-        reference the pruned one is checked against."""
+        reference the pruned one is checked against. ``stats`` (as for
+        :meth:`_plan_df`) scores with FtShards' global statistics."""
         if k <= 0 or not (plan.clauses or plan.sets):
             return []
-        budget = self._driver_score_max_docs
-        if not exhaustive and max(self.stats.get(c.field, (0, 1.0))[0]
-                                  for c in plan.clauses + plan.sets) > budget:
-            dfs = self._term_dfs(plan.pairs())
-            if sum(dfs.values()) > budget:
-                rows = (self._plan_df(plan, k)
-                        .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                        .collect())
-                return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+        if not exhaustive and self._on_buckets(plan):
+            rows = (self._plan_df(plan, k, stats)
+                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+                    .collect())
+            return [(int(r["doc_id"]), float(r["score"])) for r in rows]
         tombs = self._tombstones
         if exhaustive:
-            return self._live_topk(*self._run_plan(plan)[:2], k, tombs)
+            return self._live_topk(*self._run_plan(plan, stats=stats)[:2], k, tombs)
         # a cut run is already in (score DESC, doc_id ASC) order
-        ids, scores, _ = self._run_plan(plan, k + len(tombs))
+        ids, scores, _ = self._run_plan(plan, k + len(tombs), stats)
         ids, scores = _drop_tombstones(ids, scores, tombs)
         return list(zip(ids[:k].astype(np.int64).tolist(), scores[:k].tolist()))
+
+    def _count_plan(self, plan: ScorePlan) -> int:
+        """How many live docs ``plan`` admits, counted where the router
+        runs it: the driver's admitted ids, or per bucket
+        ``_plan_df(plan).count()``."""
+        if not (plan.clauses or plan.sets):
+            return 0
+        if self._on_buckets(plan):
+            return self._plan_df(plan).count()
+        ids, scores, _ = self._run_plan(plan)
+        return _drop_tombstones(ids, scores, self._tombstones)[0].size
 
     @staticmethod
     def _topk_plan(terms, field, mode, exclude, min_match) -> ScorePlan:
@@ -1403,21 +1488,13 @@ class FtIndex:
         token-level canonicalizing analyzer would produce, without
         reindexing when the synonym table changes.
 
-        Serving path: members' postings come from the same driver term
-        cache as :meth:`topk` (decode memoized); the merge is one
-        numpy sort + segment-sum per group, score accumulation one
-        scatter-add — no Spark job."""
-        n_docs, avgdl = self.stats.get(field, (0, 1.0))
-        merged = []
-        for canon, syns in groups.items():
-            lists, _ = self._term_lists(list(dict.fromkeys([canon, *syns])),
-                                        field)
-            if lists:
-                g = merge_group(canon, lists)
-                g.idf = bm25_idf(n_docs, g.df)
-                merged.append(g)
-        ids, scores = score_all(merged, avgdl)
-        return self._live_topk(ids, scores, k)
+        One plan of class clauses (:func:`class_plan`), routed by the df
+        probe like :meth:`topk`: the driver merges each class from the
+        term cache; beyond the doc budget each bucket merges its own
+        rows and scores with the union df of one per-bucket
+        unique-count pass (:meth:`_bucket_dfs`)."""
+        return self._score_plan(class_plan(
+            {c: [c, *syns] for c, syns in groups.items()}, field), k)
 
     def query_string(self, q: str, k: int = 10,
                      field: str = "code.content",
@@ -1441,16 +1518,17 @@ class FtIndex:
     def topk_batch(self, queries: list[list[str]], k: int = 10,
                    field: str = "code.content",
                    kernel: str = "block_max") -> list[list[tuple[int, float]]]:
-        """Top-k for a BATCH of queries with ONE postings fetch: the
-        union of all uncached terms is pulled in a single Spark job
-        (one isin-pushdown scan instead of one job per query), then
-        each query scores driver-side from the warm cache. The batch
+        """Top-k for a BATCH of queries with ONE postings fetch: when the
+        df probe keeps the union of their terms on the driver, its
+        uncached terms are pulled in a single Spark job (one
+        isin-pushdown scan instead of one job per query), then each
+        query scores driver-side from the warm cache. The batch
         analog of run_query_set for the compressed index — a serving
         tier draining a queue of queries amortizes the scan exactly
-        like this."""
-        all_terms = sorted({t for q in queries for t in q})
-        if all_terms:
-            self._fetch_term_rows(all_terms, field)  # one job, warms cache
+        like this. Otherwise each query routes on its own."""
+        union = ScorePlan.bag(sorted({t for q in queries for t in q}), field)
+        if union.clauses and not self._on_buckets(union):
+            self._plan_lists(union)  # one job, warms cache
         return [self.topk(q, k=k, field=field, kernel=kernel) for q in queries]
 
     def phrase_topk(self, phrase: list[str], k: int = 10,
@@ -1524,25 +1602,22 @@ class FtIndex:
         that doesn't reach the head can never gain the boost, which is
         what makes the second stage O(rerank_docs), not O(corpus).
 
-        Serving path: two warm-cache probes (main terms + rerank
-        terms), one searchsorted to align the head with the rerank
-        scores — no Spark job."""
+        Two routed plans: the head is the main query's top
+        ``rerank_docs + k`` (the tail past the head can fill the page),
+        the rerank scores one plan over ``rerank_terms`` filtered to the
+        head's ids."""
         if k <= 0 or not terms:
             return []
-        lists, avgdl = self._term_lists(terms, field)
-        if not lists:
-            return []
-        ids, scores = score_all(lists, avgdl)
-        tombs = self._tombstones
-        ids, scores = _topk_from_scores(
-            *_drop_tombstones(ids, scores, tombs), ids.size)
-        n = min(int(rerank_docs), ids.size)
-        rlists, ravgdl = self._term_lists(rerank_terms or [], field)
-        if n and rlists:
-            rids, rscores = score_all(rlists, ravgdl)
-            hit, pos = _align(rids.astype(np.int64), ids[:n].astype(np.int64))
-            scores[:n][hit] += float(weight) * rscores[pos[hit]]
-        return self._live_topk(ids, scores, k, tombs)
+        page = self._score_plan(ScorePlan.bag(terms, field), int(rerank_docs) + k)
+        n = min(int(rerank_docs), len(page))
+        ids = np.array([d for d, _ in page], np.int64)
+        scores = np.array([s for _, s in page], np.float64)
+        rerank = dict(self._score_plan(ScorePlan.bag(rerank_terms or [], field)
+                                       ._replace(ids=tuple(ids[:n].tolist())), n))
+        for i, d in enumerate(ids[:n].tolist()):
+            if d in rerank:
+                scores[i] += float(weight) * rerank[d]
+        return self._live_topk(ids, scores, k)
 
     def ltr_rerank(self, terms: list[str], model, k: int = 10,
                    rerank_docs: int = 100,
@@ -1558,69 +1633,23 @@ class FtIndex:
         rescored head — LTRRescorer places every rescored doc first,
         model scores and BM25 scores are deliberately not compared.
 
-        Serving-time feature store (every value from the warm term
-        cache — no Spark job):
-
-        - ``orig``        — the main query's BM25 score
-        - ``matched``     — number of distinct query terms in the doc
-        - ``dl``          — the doc's field length
-        - ``bm25@<fld>``  — BM25 of the same terms on another field
-          (the SolrFeature arbitrary-subquery analog)
+        The head is the main query's top ``rerank_docs + k``, routed
+        like :meth:`topk`; its features come from
+        :func:`ltr_features` (``orig`` is the head score), the one
+        feature store :meth:`ftidx.shards.FtShards.ltr_rerank` reads too.
         """
         if k <= 0 or not terms:
             return []
-        lists, avgdl = self._term_lists(terms, field)
-        if not lists:
+        page = self._score_plan(ScorePlan.bag(terms, field), int(rerank_docs) + k)
+        if not page:
             return []
-        ids, scores = score_all(lists, avgdl)
-        ids, scores = _topk_from_scores(
-            *_drop_tombstones(ids, scores, self._tombstones), ids.size)
-        n = min(int(rerank_docs), ids.size)
-        head = ids[:n].astype(np.int64)
-        hs_order = np.argsort(head)
-        hs = head[hs_order]
-
-        feats: dict[str, np.ndarray] = {}
-        need = model.features()
-        if "orig" in need:
-            feats["orig"] = scores[:n].astype(np.float64)
-        if "matched" in need or "dl" in need:
-            matched = np.zeros(n, np.float64)
-            dl_f = np.zeros(n, np.float64)
-            seen_terms: set[str] = set()
-            for tl in lists:
-                # a repeated query term must count once toward
-                # 'matched' (the sharded path dedupes via _gather's
-                # sorted(set(terms)) — keep the twins aligned)
-                if tl.term in seen_terms:
-                    continue
-                seen_terms.add(tl.term)
-                dids, _tfs, dls = tl.decode_all()
-                hit, pos = _align(hs, dids.astype(np.int64))
-                matched[hs_order[pos[hit]]] += 1.0
-                dl_f[hs_order[pos[hit]]] = dls[hit]
-            feats["matched"] = matched
-            feats["dl"] = dl_f
-        for name in sorted(need):
-            if name.startswith("bm25@"):
-                fld = name.split("@", 1)[1]
-                flists, favgdl = self._term_lists(terms, fld)
-                vals = np.zeros(n, np.float64)
-                if flists:
-                    rids, rscores = score_all(flists, favgdl)
-                    hit, pos = _align(rids.astype(np.int64), hs)
-                    vals[hs_order[hit]] = rscores[pos[hit]]
-                feats[name] = vals
-        unknown = need - set(feats)
-        if unknown:
-            raise ValueError(f"unknown LTR features: {sorted(unknown)}")
-
-        mscore = model.score_np(feats)
+        n = min(int(rerank_docs), len(page))
+        head = [d for d, _ in page[:n]]
+        mscore = model.score_np(ltr_features(
+            model.features(), terms, field, [(self, head)],
+            np.array([s for _, s in page[:n]], np.float64)))
         order = np.lexsort((head, -mscore))
-        out = [(int(head[i]), float(mscore[i])) for i in order]
-        out += [(int(i), float(s))
-                for i, s in zip(ids[n:].astype(np.int64), scores[n:])]
-        return out[:k]
+        return ([(head[i], float(mscore[i])) for i in order] + page[n:])[:k]
 
     def topk_phrase_boosted(self, terms: list[str], k: int = 10,
                             pf_weight: float = 2.0, slop: int = 0,
@@ -1868,34 +1897,35 @@ class FtIndex:
         """Score decomposition (Solr ``debugQuery=true`` explain): how
         this doc's BM25 total breaks into per-term contributions —
         tf, global df, idf, dl and contrib per matched query term.
-        Runs off the same driver term cache as :meth:`topk` (postings
-        for the query terms are already resident after the search the
-        user is debugging), so no Spark job: decode + one binary
-        search per term."""
+        When the df probe keeps the terms on the driver, their lists
+        come from the driver executor's reader (:meth:`_plan_lists`:
+        no Spark job after the search being debugged); beyond the
+        budget, one executor-side scan of the doc's bucket
+        (:meth:`_doc_postings`) returns only the doc's entries, with
+        the probe's dfs."""
         from ftidx.wand import bm25_contrib
 
-        lists, avgdl = self._term_lists(terms, field)
+        plan = ScorePlan.bag(terms, field)
+        n_docs, avgdl = self.stats.get(field, (0, 1.0))
+        hits: dict[str, tuple[int, int, int]] = {}
+        if not self._on_buckets(plan):
+            for t, tl in self._plan_lists(plan)[0].get(field, {}).items():
+                ids, tfs, dls = tl.decode_all()
+                if (where := np.flatnonzero(ids == doc_id)).size:
+                    hits[t] = (int(tfs[where[0]]), int(dls[where[0]]), tl.df)
+        else:
+            dfs = self._term_dfs(plan.pairs())
+            for r in self._doc_postings(doc_id, field, sorted(set(terms))).collect():
+                hits.setdefault(r["term"], (int(r["tf"]), int(r["dl"]),
+                                            dfs[(field, r["term"])]))
         out, total = [], 0.0
-        n_docs, _ = self.stats.get(field, (0, 1.0))
-        for tl in lists:
-            ids, tfs, dls = tl.decode_all()
-            pos = np.searchsorted(ids, doc_id) if ids.size else 0
-            # streamed delta segments may interleave id ranges →
-            # decode_all output is per-segment sorted, not globally;
-            # fall back to a linear probe when the bsearch misses.
-            hit = pos < ids.size and ids[pos] == doc_id
-            if not hit:
-                where = np.nonzero(ids == doc_id)[0]
-                if where.size == 0:
-                    continue
-                pos = int(where[0])
-            tf, dl = int(tfs[pos]), int(dls[pos])
-            contrib = float(bm25_contrib(
-                np.array([tf]), np.array([dl]), tl.idf, avgdl)[0])
+        for t in sorted(hits):
+            tf, dl, df = hits[t]
+            idf = bm25_idf(n_docs, df)
+            contrib = float(bm25_contrib(np.array([tf]), np.array([dl]), idf, avgdl)[0])
             total += contrib
-            out.append({"term": tl.term, "tf": tf, "df": tl.df,
-                        "idf": round(tl.idf, 6), "dl": dl,
-                        "contrib": round(contrib, 6)})
+            out.append({"term": t, "tf": tf, "df": df, "idf": round(idf, 6),
+                        "dl": dl, "contrib": round(contrib, 6)})
         return {"doc_id": int(doc_id), "field": field,
                 "n_docs": n_docs, "avgdl": avgdl,
                 "score": round(total, 6), "terms": out}
@@ -1907,11 +1937,13 @@ class FtIndex:
         that calls :func:`ftidx.wand.run_plan` — the evaluator the driver
         runs. Globally valid because one bucket owns all of a doc's
         postings rows, so the per-bucket must / must-not / mm / dismax
-        equal the global ones; idfs and the sum order come from the
-        GLOBAL dfs of the df probe (or ``stats`` = ({field: (n_docs,
-        avgdl)}, {(field, term): df}), FtShards' global statistics —
-        SolrCloud ExactStatsCache semantics), so each doc's score is
-        bit-identical to the driver's. With ``k`` each bucket returns
+        and id filter equal the global ones; idfs and the sum order come
+        from the GLOBAL dfs of :meth:`_bucket_dfs` (or ``stats`` =
+        ({field: (n_docs, avgdl)}, {(field, term or class key): df}),
+        FtShards' global statistics — SolrCloud ExactStatsCache
+        semantics), so each doc's score is bit-identical to the
+        driver's. A bucket merges each synonym class from its own rows
+        and scores it with the class's global union df. With ``k`` each bucket returns
         its own top-k; without it, every admitted doc — the shared
         engine under the filter, boost, group, sort and join surfaces.
         PHRASE and NEAR sets are verified from the bucket's positions
@@ -1919,8 +1951,7 @@ class FtIndex:
         ``base`` adds the score without SCORE clauses as ``base``."""
         terms = plan.terms_by_field()
         if stats is None:
-            stats = (self.stats, self._term_dfs(
-                (f, t) for f, ts in terms.items() for t in ts))
+            stats = (self.stats, self._bucket_dfs(plan))
         field_stats, dfs = stats
         avgdls = {f: field_stats.get(f, (0, 1.0))[1] for f in terms}
         glob = {(f, t): (df, bm25_idf(field_stats.get(f, (0, 1.0))[0], df))
@@ -1960,6 +1991,8 @@ class FtIndex:
                 tl = lists.setdefault(f, {})[t] = TermList(
                     t, grp.to_dict("records"), idf)
                 tl.df = df
+            for f, g in merge_classes(plan, lists):
+                g.df, g.idf = glob[(f, g.term)]
             ids, scores, bases = run_plan(plan, lists, avgdls, cut, verified)
             ids, scores, bases = _drop_tombstones(ids, scores, tombs, bases)
             return pd.DataFrame({"doc_id": ids[:k].astype(np.int64),
@@ -2509,15 +2542,15 @@ class FtIndex:
         collation still runs, it just matches nothing — Solr's
         maxCollationTries=0 behavior).
 
-        One vocabulary-scan job per UNKNOWN term only — known terms are
-        answered from the cached per-term df lookup, so the common
-        all-terms-correct case costs no job at all."""
+        The query terms' dfs come from the df probe (:meth:`_term_dfs`,
+        one job for all of them, none once cached — no postings are
+        read); then one vocabulary-scan job per UNKNOWN term only."""
         out = []
         changed = False
+        dfs = self._term_dfs((field, t) for t in terms)
         for t in terms:
-            rows = self._fetch_term_rows([t], field).get(t)
-            if rows:
-                out.append((t, t, int(sum(r["df"] for r in rows)), 0))
+            if dfs[(field, t)]:
+                out.append((t, t, dfs[(field, t)], 0))
                 continue
             cands = self.fuzzy_terms(t, field=field, max_dist=max_dist,
                                      limit=1)
@@ -2530,17 +2563,6 @@ class FtIndex:
         return {"terms": out,
                 "collation": " ".join(c for _, c, _, _ in out),
                 "changed": changed}
-
-    def _vocab_dfs(self, terms: set[str],
-                   field: str = "code.content") -> dict[str, int]:
-        """Global df for an arbitrary term set: ONE column-pruned,
-        isin-pushed vocabulary scan (posting blobs never read)."""
-        if not terms:
-            return {}
-        rows = (self._postings.filter(F.col("field") == field)
-                .filter(F.col("term").isin(sorted(terms)))
-                .groupBy("term").agg(F.sum("df").alias("df")).collect())
-        return {r["term"]: int(r["df"]) for r in rows}
 
     def spellcheck_wordbreak(self, terms: list[str],
                              field: str = "code.content",
@@ -2560,12 +2582,12 @@ class FtIndex:
         chars (Solr's minBreakLength).
 
         Cost shape: the query's originals, every split half and every
-        adjacent join resolve in ONE isin-pushed vocabulary scan
-        (:meth:`_vocab_dfs`) — candidate count is O(Σ term length),
-        query-sized, never corpus-sized."""
+        adjacent join resolve in ONE df probe (:meth:`_term_dfs`, the
+        vocabulary being the terms with df > 0) — candidate count is
+        O(Σ term length), query-sized, never corpus-sized."""
         qs = [t.lower() for t in terms]
-        dfs = self._vocab_dfs(
-            wordbreak_candidates(qs, min_part_len), field)
+        cands = wordbreak_candidates(qs, min_part_len)
+        dfs = {t: d for (_, t), d in self._term_dfs((field, t) for t in cands).items() if d}
         return assemble_wordbreak(qs, dfs, min_part_len, limit)
 
     def suggest_terms(self, prefix: str, field: str = "code.content",
@@ -2642,10 +2664,10 @@ class FtIndex:
         UI can badge pins, mirroring Solr's ``[elevated]`` transformer.
 
         Serving-path economics match :meth:`topk`: the organic ranking
-        is the same cached-postings kernel (over-fetched by
-        len(elevate) to keep k organic candidates), and each pinned
-        doc's score is one binary-search probe of postings already
-        resident in the term cache — no extra Spark job.
+        is the same routed plan (over-fetched by len(elevate) to keep k
+        organic candidates), and the pinned docs score in one more run
+        of it filtered to their ids, so a pin reads exactly its organic
+        score — no extra Spark job when the terms are cached.
 
         ``exclude`` is elevate.xml's ``exclude="true"`` list: those ids
         drop from the results entirely (exclusion beats elevation when
@@ -2659,9 +2681,10 @@ class FtIndex:
                 if int(d) not in self._tombstones and int(d) not in excl]
         over = len(pins) + (0 if mark_excludes else len(excl))
         organic = self.topk(terms, k=k + over, field=field)
-        out = [{"doc_id": d,
-                "score": self.explain(terms, d, field=field)["score"],
-                "elevated": True} for d in pins]
+        pinned = dict(self._score_plan(
+            ScorePlan.bag(terms, field)._replace(ids=tuple(pins)), len(pins)))
+        out = [{"doc_id": d, "score": pinned.get(d, 0.0), "elevated": True}
+               for d in pins]
         if excl:
             for h in out:
                 h["excluded"] = False
@@ -2977,16 +3000,12 @@ class FtIndex:
                       field: str = "code.content") -> dict[str, int]:
         """Solr ``facet.query``: match count per labeled subquery
         (docs matching ANY of the label's terms), tombstones excluded.
-        Decoded ids from the term cache, one set union per label — no
-        Spark job when warm. Every label's postings are collected on the
-        driver, whatever their size: this is one of the surfaces whose
-        fat fetches serialize through ``_big_fetch_lock``."""
-        out = {}
-        for label, terms in queries.items():
-            lists, _ = self._term_lists(terms, field)
-            ids = {int(i) for tl in lists for i in tl.decode_all()[0]}
-            out[label] = len(ids - self._tombstones)
-        return out
+        Each label is one plan counted where the df probe routes it
+        (:meth:`_count_plan`): the driver's admitted ids over the term
+        cache (no Spark job when warm), or ``_plan_df(plan).count()``
+        per bucket."""
+        return {label: self._count_plan(ScorePlan.bag(terms, field))
+                for label, terms in queries.items()}
 
     def facet_range(self, terms: list[str], facet: str,
                     start: float = 0, end: float = 1 << 30,
@@ -3327,29 +3346,8 @@ class FtIndex:
         double build cost for a rarely-hot path), so this is a scan of
         the doc's ONE bucket partition: partition pruning keeps it at
         O(bucket), executor-side decode keeps the driver at top_m rows."""
-        buckets = self._buckets_of([doc_id])
-        rows = self._postings
-        if buckets:
-            rows = rows.filter(F.col("bucket").isin(buckets))
-        rows = rows.filter(F.col("field") == field).select("term", "doc_ids", "tfs")
-        target = np.uint64(doc_id)
-
-        def find_doc(batches):
-            from ftidx.codec import delta_decode, varint_decode
-
-            for pdf in batches:
-                terms_out, tfs_out = [], []
-                for term, id_blob, tf_blob in zip(
-                        pdf["term"], pdf["doc_ids"], pdf["tfs"]):
-                    ids = delta_decode(varint_decode(id_blob))
-                    pos = np.searchsorted(ids, target)
-                    if pos < ids.size and ids[pos] == target:
-                        terms_out.append(term)
-                        tfs_out.append(int(varint_decode(tf_blob)[pos]))
-                yield pd.DataFrame({"term": terms_out, "tf": tfs_out})
-
         got = (
-            rows.mapInPandas(find_doc, schema="term string, tf long")
+            self._doc_postings(doc_id, field)
             # a doc's (term, tf) can be SPLIT across base + streamed/
             # upserted delta segment rows — sum before the cut, like
             # page_term_vectors, or /tv and more_like_this would see
@@ -3359,23 +3357,50 @@ class FtIndex:
         )
         return [(r["term"], int(r["tf"])) for r in got]
 
+    def _doc_postings(self, doc_id: int, field: str,
+                      terms: list[str] | None = None) -> DataFrame:
+        """(term, tf, dl) of each postings row of ``field`` (of ``terms``
+        only, when given) holding ``doc_id``: a scan of the doc's bucket
+        (:meth:`_buckets_of`; every bucket when none resolves) whose
+        executor-side decode sends only the doc's entries to the driver."""
+        rows = self._postings.filter(F.col("field") == field)
+        if terms is not None:
+            rows = rows.filter(F.col("term").isin(terms))
+        if buckets := self._buckets_of([doc_id]):
+            rows = rows.filter(F.col("bucket").isin(buckets))
+        target = np.uint64(doc_id)
+
+        def find_doc(batches):
+            for pdf in batches:
+                out = []
+                for term, id_blob, tf_blob, dl_blob in zip(
+                        pdf["term"], pdf["doc_ids"], pdf["tfs"], pdf["dls"]):
+                    ids = delta_decode(varint_decode(id_blob))
+                    pos = np.searchsorted(ids, target)
+                    if pos < ids.size and ids[pos] == target:
+                        out.append((term, int(varint_decode(tf_blob)[pos]),
+                                    int(varint_decode(dl_blob)[pos])))
+                yield pd.DataFrame(out, columns=["term", "tf", "dl"])
+
+        return rows.select("term", "doc_ids", "tfs", "dls").mapInPandas(
+            find_doc, schema="term string, tf long, dl long")
+
     def more_like_this(self, doc_id: int, k: int = 10,
                        field: str = "code.content",
                        max_query_terms: int = 12) -> list[tuple[int, float]]:
         """More-like-this (Solr MLT component): rank other docs by BM25
         against the source doc's most significant terms (highest
-        tf·idf, ties by term), excluding the source itself."""
+        tf·idf, ties by term), excluding the source itself. The candidate
+        terms' dfs are read where the router scores them
+        (:meth:`_plan_dfs`); the final query routes like :meth:`topk`."""
         tv = self.doc_term_vector(doc_id, field=field, top_m=200)
         if not tv:
             return []
         n_docs, _ = self.stats.get(field, (0, 1.0))
-        by_term = self._fetch_term_rows([t for t, _ in tv], field)
+        dfs = self._plan_dfs(ScorePlan.bag([t for t, _ in tv], field))
         scored_terms = sorted(
-            (
-                (-tf * bm25_idf(n_docs, sum(int(r["df"]) for r in by_term[t])), t)
-                for t, tf in tv
-                if by_term[t]
-            ),
+            (-tf * bm25_idf(n_docs, dfs[(field, t)]), t)
+            for t, tf in tv if dfs.get((field, t))
         )[:max_query_terms]
         qterms = [t for _, t in scored_terms]
         hits = self.topk(qterms, k=k + 1, field=field)

@@ -25,10 +25,13 @@ happens offline. This module provides all three layers Spark-first:
   d(d+3)/2 + 2 scalar sums of X^T X / X^T y (d = |features|, single
   corpus pass, no shuffle beyond the final scalar agg), solved
   driver-side with numpy. Scales to any corpus size at fixed d.
-- **Serving** — ``FtIndex.ltr_rerank`` (ftidx/index.py): main-query
-  top ``reRankDocs`` candidates get model scores from the warm term
-  cache (no Spark job), reordered LTRRescorer-style — the rescored
-  head always precedes the original-order tail.
+- **Serving** — ``FtIndex.ltr_rerank`` / ``FtShards.ltr_rerank``
+  (ftidx/index.py, ftidx/shards.py): the main query's top
+  ``reRankDocs`` candidates get model scores over features from one
+  feature store (``index.ltr_features``: plans filtered to the head, routed
+  by the df probe like ``topk``, and ``dl`` from doclen), reordered
+  LTRRescorer-style — the rescored head always precedes the
+  original-order tail.
 """
 
 from __future__ import annotations

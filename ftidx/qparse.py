@@ -37,7 +37,7 @@ execution a single pass over cached postings):
   optional; a should-phrase needs per-doc phrase frequency to score,
   which the positional verifier doesn't produce).
 - A phrase scores as the BM25 sum of its terms (same rule as
-  :meth:`ftidx.index.FtIndex.phrase_topk`).
+  :meth:`ftidx.index.FtIndex.phrase_topk`), scaled by its boost.
 - If the query has no required clause, a doc qualifies by matching at
   least one should clause (standard OR behavior).
 
@@ -148,11 +148,11 @@ def execute(idx, q: str, k: int = 10,
         occur = {"+": MUST, "-": MUST_NOT}.get(c.occur, SHOULD)
         if c.is_phrase:
             # a phrase is required unless negated, and scores as the
-            # BM25 sum of its (required) terms
+            # boost-scaled BM25 sum of its (required) terms
             sets.append(DocSet(fld, tuple(c.terms), NEAR if c.slop > 0 else PHRASE,
                                c.slop, 0.0, MUST_NOT if occur == MUST_NOT else MUST))
             if occur != MUST_NOT:
-                plan_clauses += [Clause(fld, t, 1.0, MUST) for t in c.terms]
+                plan_clauses += [Clause(fld, t, c.boost, MUST) for t in c.terms]
             continue
         if c.fuzzy is not None:
             # expansion cap = 50, Lucene FuzzyQuery's maxExpansions

@@ -16,10 +16,14 @@ Two-phase query, the pattern every distributed search engine uses
    with global stats the ranking is layout-invariant (proved by
    ``tests/test_shards.py``: 2-shard merge == monolithic index,
    score-identical).
-2. **Query phase** — each shard scores its own postings with the
-   global idf/avgdl (cache-warm, numpy accumulation; no Spark job on
-   the serving path), returns its local top candidates, and the
-   driver merge-sorts by (score DESC, shard, doc_id).
+2. **Query phase** — each shard runs the same
+   :class:`~ftidx.wand.ScorePlan` through its own executors
+   (``FtIndex._score_plan(plan, k, stats=global)``: on the driver over
+   its term cache, or per bucket beyond its driver-scoring budget)
+   with the global idf/avgdl, returns its local top candidates, and
+   the coordinator merge-sorts by (score DESC, shard, doc_id). The
+   stats phase reads each shard's dfs where that shard scores the
+   plan (``FtIndex._plan_dfs``), so a warm query runs no Spark job.
 
 doc_ids are only unique *within* a shard (batch builds assign
 ``bucket<<40 | rank`` independently per build), so every result row
@@ -36,8 +40,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from ftidx.schema import read_table
-from ftidx.wand import (MUST, SHOULD, ScorePlan, TermList, bm25_idf,
-                        merge_group, run_plan, score_all)
+from ftidx.wand import MUST, SHOULD, ScorePlan, bm25_idf
 
 
 class FtShards:
@@ -66,51 +69,31 @@ class FtShards:
             total_len += n * avgdl
         return n_docs, (total_len / n_docs if n_docs else 1.0)
 
-    def _gather(self, terms: list[str], field: str):
-        """(sorted distinct terms, per-shard {term: rows})."""
-        qterms = sorted(set(terms))
-        return qterms, [sh._fetch_term_rows(qterms, field) for sh in self.shards]
-
-    def _global_lists(self, terms: list[str], field: str) -> list[list]:
-        """Per shard, the TermLists of ``terms`` in ``field`` (one
-        term-cache read each) carrying the GLOBAL df and idf: a doc's
-        score and its sum order are those of a monolithic index."""
-        per_shard = [sh._term_lists(terms, field)[0] for sh in self.shards]
-        gdf: dict[str, int] = {}
-        for lists in per_shard:
-            for tl in lists:
-                gdf[tl.term] = gdf.get(tl.term, 0) + tl.df
-        n_docs, _ = self.global_stats(field)
-        for lists in per_shard:
-            for tl in lists:
-                tl.df = gdf[tl.term]
-                tl.idf = bm25_idf(n_docs, tl.df)
-        return per_shard
-
-    def _plan_stats(self, plan: ScorePlan):
-        """GLOBAL ({field: (n_docs, avgdl)}, {(field, term): df}) for a
-        plan — every shard's df probe, summed: the statistics every
-        shard's executor scoring uses (``stats=`` of
-        :meth:`FtIndex._plan_df`)."""
-        terms = plan.terms_by_field()
-        pairs = [(f, t) for f, ts in terms.items() for t in ts]
-        dfs = dict.fromkeys(pairs, 0)
+    def _plan_stats(self, plan: ScorePlan, routed: bool = False):
+        """GLOBAL ({field: (n_docs, avgdl)}, {(field, term or class key):
+        df}) for a plan — every shard's dfs, summed: the statistics
+        every shard's executors score with (``stats=`` of
+        :meth:`FtIndex._plan_df` and :meth:`FtIndex._score_plan`). A
+        shard's dfs come from its df probe (``_bucket_dfs``) or, when
+        ``routed``, from where it scores the plan (``_plan_dfs``)."""
+        dfs: dict = {}
         for sh in self.shards:
-            for pair, d in sh._term_dfs(pairs).items():
-                dfs[pair] += d
-        return {f: self.global_stats(f) for f in terms}, dfs
+            for key, d in (sh._plan_dfs(plan) if routed else sh._bucket_dfs(plan)).items():
+                dfs[key] = dfs.get(key, 0) + d
+        return {f: self.global_stats(f) for f in plan.terms_by_field()}, dfs
 
-    @staticmethod
-    def _merge_live(per_shard: list[tuple], k: int
-                    ) -> list[tuple[int, int, float]]:
-        """Exact global top-k from per-shard candidates: each shard
-        contributes its own live top-k (its ``_live_topk``), a superset
-        of its share of the global top-k under (score DESC, shard ASC,
-        doc_id ASC); returns (shard, doc_id, score)."""
-        merged = [(s, si, d) for si, (sh, ids, scores) in enumerate(per_shard)
-                  for d, s in sh._live_topk(ids, scores, k)]
-        merged.sort(key=lambda x: (-x[0], x[1], x[2]))
-        return [(si, d, s) for s, si, d in merged[:k]]
+    def _score_pages(self, plan: ScorePlan, k: int) -> list[tuple[int, int, float]]:
+        """Exact global top-k of ``plan`` as (shard, doc_id, score): each
+        shard's live top-k under the global statistics (a superset of
+        its share of the global top-k), merged by (score DESC, shard
+        ASC, doc_id ASC)."""
+        if k <= 0 or not plan.clauses:
+            return []
+        stats = self._plan_stats(plan, routed=True)
+        merged = [(-sc, si, d) for si, sh in enumerate(self.shards)
+                  for d, sc in sh._score_plan(plan, k, stats=stats)]
+        merged.sort()
+        return [(si, d, -sc) for sc, si, d in merged[:k]]
 
     # -- phase 2: score + merge ------------------------------------------
     def topk(self, terms: list[str], k: int = 10,
@@ -121,30 +104,13 @@ class FtShards:
         union corpus (ties broken score DESC, shard ASC, doc_id ASC —
         the one place shard layout shows: a monolithic build breaks the
         same-score tie by its own doc ids)."""
-        if k <= 0 or not terms:
-            return []
-        plan = ScorePlan.bag(terms, field, MUST if require_all else SHOULD)
-        _, avgdl = self.global_stats(field)
-        scored = []
-        for sh, lists in zip(self.shards, self._global_lists(terms, field)):
-            ids, scores, _ = run_plan(plan, {field: {tl.term: tl for tl in lists}},
-                                      {field: avgdl}, k + len(sh._tombstones))
-            scored.append((sh, ids, scores))
-        return self._merge_live(scored, k)
+        return self._score_pages(
+            ScorePlan.bag(terms, field, MUST if require_all else SHOULD), k)
 
     def count(self, terms: list[str], field: str = "code.content") -> int:
-        """Total matching docs across shards (numFound)."""
-        qterms, per_shard = self._gather(terms, field)
-        total = 0
-        for sh, by_term in zip(self.shards, per_shard):
-            ids = [TermList(t, rows, 0.0).decode_all()[0]
-                   for t, rows in by_term.items() if rows]
-            if not ids:
-                continue
-            uniq = np.unique(np.concatenate(ids))
-            tombs = sh._tombstones
-            total += int(sum(1 for d in uniq if int(d) not in tombs))
-        return total
+        """Total matching docs across shards (numFound): each shard's
+        routed match count (``FtIndex._count_plan``), summed."""
+        return sum(sh._count_plan(ScorePlan.bag(terms, field)) for sh in self.shards)
 
     def facet_counts(self, terms: list[str], facet: str = "lang",
                      k_facets: int = 20,
@@ -275,36 +241,15 @@ class FtShards:
         disjoint across shards), tf summed across members inside the
         owning shard, global avgdl — per-doc scores equal the
         monolithic stem_topk on the union corpus (pinned in tests).
+        One plan of class clauses, scored by every shard's executors.
         Returns (shard, doc_id, score)."""
+        from ftidx.index import class_plan
+
         if k <= 0 or not terms:
             return []
-        n_docs, avgdl = self.global_stats(field)
-        groups: dict[str, list[str]] = {}
-        for t in terms:
-            exp = [w for w, _ in self.stem_terms(
-                t, field=field, limit=(1 << 31) - 1, algo=algo)]
-            groups[t] = exp or [t]
-        members_all = sorted({m for ms in groups.values() for m in ms})
-        per_shard: list[list[TermList]] = []
-        gdf = {c: 0 for c in groups}
-        for sh in self.shards:
-            by = sh._fetch_term_rows(members_all, field)
-            glists = []
-            for canon, members in groups.items():
-                lists = [TermList(m, by[m], 0.0)
-                         for m in dict.fromkeys(members) if by.get(m)]
-                if lists:
-                    glists.append(merge_group(canon, lists))
-                    gdf[canon] += glists[-1].df
-            per_shard.append(glists)
-        scored = []
-        for sh, glists in zip(self.shards, per_shard):
-            for g in glists:
-                # global df: the monolithic idf and accumulation order
-                g.df = gdf[g.term]
-                g.idf = bm25_idf(n_docs, g.df)
-            scored.append((sh, *score_all(glists, avgdl)))
-        return self._merge_live(scored, k)
+        groups = {t: [w for w, _ in self.stem_terms(
+            t, field=field, limit=(1 << 31) - 1, algo=algo)] or [t] for t in terms}
+        return self._score_pages(class_plan(groups, field), k)
 
     def ltr_rerank(self, terms: list[str], model, k: int = 10,
                    rerank_docs: int = 100, field: str = "code.content"
@@ -314,71 +259,33 @@ class FtShards:
         :meth:`topk`) are rescored by ``model`` and reordered (model
         score DESC, shard ASC, doc_id ASC) above the original-order
         tail — LTRRescorer semantics, coordinator-side. Per-doc
-        features come from the owning shard's postings (every doc
-        lives in exactly one shard) and cross-field BM25 uses that
-        field's GLOBAL stats, so each feature value — and therefore
+        features come from the one feature store :meth:`FtIndex.ltr_rerank`
+        reads (``index.ltr_features``), each plan filtered to the head
+        docs the owning shard holds (every doc lives in exactly one
+        shard) and scored there with GLOBAL stats, so each feature
+        value — and therefore
         each model score — equals the monolithic
         :meth:`FtIndex.ltr_rerank` on the union corpus (pinned in
         tests). Returns (shard, doc_id, score) triples."""
+        from ftidx.index import ltr_features
+
         if k <= 0 or not terms:
             return []
         base = self.topk(terms, k=int(rerank_docs) + int(k), field=field)
         if not base:
             return []
         n = min(int(rerank_docs), len(base))
-        head = base[:n]
-        pos = {(si, d): i for i, (si, d, _) in enumerate(head)}
-
-        need = model.features()
-        feats: dict[str, np.ndarray] = {}
-        if "orig" in need:
-            feats["orig"] = np.array([s for _, _, s in head], np.float64)
-        if "matched" in need or "dl" in need:
-            matched = np.zeros(n, np.float64)
-            dl_f = np.zeros(n, np.float64)
-            qterms, per_shard = self._gather(terms, field)
-            for si, by_term in enumerate(per_shard):
-                own = np.array(sorted(d for s2, d in pos if s2 == si),
-                               np.int64)
-                if not own.size:
-                    continue
-                for t in qterms:
-                    rows = by_term.get(t, [])
-                    if not rows:
-                        continue
-                    ids, _tfs, dls = TermList(t, rows, 0.0).decode_all()
-                    ids = ids.astype(np.int64)
-                    p = np.searchsorted(own, ids)
-                    p_c = np.minimum(p, own.size - 1)
-                    hit = (p < own.size) & (own[p_c] == ids)
-                    for d, dlv in zip(ids[hit], dls[hit]):
-                        i = pos[(si, int(d))]
-                        matched[i] += 1.0
-                        dl_f[i] = float(dlv)
-            feats["matched"] = matched
-            feats["dl"] = dl_f
-        for name in sorted(need):
-            if name.startswith("bm25@"):
-                fld = name.split("@", 1)[1]
-                vals = np.zeros(n, np.float64)
-                _, avgdl = self.global_stats(fld)
-                for si, lists in enumerate(self._global_lists(terms, fld)):
-                    ids, scores = score_all(lists, avgdl)
-                    for d, c in zip(ids.astype(np.int64), scores):
-                        i = pos.get((si, int(d)))
-                        if i is not None:
-                            vals[i] = float(c)
-                feats[name] = vals
-        unknown = need - set(feats)
-        if unknown:
-            raise ValueError(f"unknown LTR features: {sorted(unknown)}")
-
-        mscore = model.score_np(feats) if n else np.zeros(0)
-        order = sorted(range(n), key=lambda i: (-mscore[i],
-                                                head[i][0], head[i][1]))
+        # the head grouped by shard: ltr_features' order
+        head = sorted(base[:n])
+        parts = [(sh, [d for s2, d, _ in head if s2 == si])
+                 for si, sh in enumerate(self.shards)]
+        mscore = model.score_np(ltr_features(
+            model.features(), terms, field, parts,
+            np.array([s for _, _, s in head], np.float64),
+            lambda plan: self._plan_stats(plan, routed=True)))
+        order = sorted(range(n), key=lambda i: (-mscore[i], head[i][0], head[i][1]))
         out = [(head[i][0], head[i][1], float(mscore[i])) for i in order]
-        out += [(si, d, s) for si, d, s in base[n:]]
-        return out[:k]
+        return (out + base[n:])[:k]
 
     def fuzzy_terms(self, term: str, field: str = "code.content",
                     max_dist: int = 1, limit: int = 10
@@ -404,14 +311,14 @@ class FtShards:
         """Distributed spellcheck: a term present on ANY shard maps to
         itself with its GLOBAL df; absent terms take the best global
         fuzzy correction (:meth:`fuzzy_terms` rank) — the SolrCloud
-        spellcheck.collate merge."""
+        spellcheck.collate merge. Each shard's dfs come from its df
+        probe (one job per shard, none once cached)."""
         out = []
         changed = False
+        pairs = [(field, t) for t in terms]
+        dfs = [sh._term_dfs(pairs) for sh in self.shards]
         for t in terms:
-            gdf = sum(
-                sum(int(r["df"]) for r in sh._fetch_term_rows([t], field)
-                    .get(t, []))
-                for sh in self.shards)
+            gdf = sum(d[(field, t)] for d in dfs)
             if gdf > 0:
                 out.append((t, t, gdf, 0))
                 continue
@@ -433,17 +340,18 @@ class FtShards:
                              limit: int = 3) -> dict:
         """Distributed WordBreakSolrSpellChecker: the candidate set is
         a pure function of the query, so every shard resolves the SAME
-        lookups (one isin-pushed vocab scan each), dfs sum exactly
-        (disjoint doc sets), and the shared assembly ranks identically
-        to the monolithic index — pinned by test."""
+        lookups (one df probe each), dfs sum exactly (disjoint doc
+        sets), and the shared assembly ranks identically to the
+        monolithic index — pinned by test."""
         from ftidx.index import assemble_wordbreak, wordbreak_candidates
 
         qs = [t.lower() for t in terms]
-        cands = wordbreak_candidates(qs, min_part_len)
+        pairs = [(field, t) for t in wordbreak_candidates(qs, min_part_len)]
         dfs: dict[str, int] = {}
         for sh in self.shards:
-            for t, df in sh._vocab_dfs(cands, field).items():
-                dfs[t] = dfs.get(t, 0) + df
+            for (_, t), df in sh._term_dfs(pairs).items():
+                if df:
+                    dfs[t] = dfs.get(t, 0) + df
         return assemble_wordbreak(qs, dfs, min_part_len, limit)
 
     # -- distributed analytics --------------------------------------------

@@ -6,28 +6,30 @@ SURVEY §2: SolrQuery at IndexerIT.java:98-105 + default ranking).
 Every BM25 accumulation in ftidx runs through this module. How a
 query's term contributions combine into a doc score is written once,
 as a :class:`ScorePlan` (clauses of field, term, weight and occur,
-optional dismax groups, a minimum-should-match floor, and phrase,
-proximity and term-union doc sets), and evaluated once, by
+synonym-class clauses, optional dismax groups, a minimum-should-match
+floor, phrase, proximity and term-union doc sets, and an id filter),
+and evaluated once, by
 :func:`run_plan` — on the driver over cached ``TermList``s or per
 bucket inside an executor, with the same arithmetic in the same order,
 so the two executors return bit-identical scores.
 
 - :func:`run_plan` — the one evaluator: boolean admission (should /
   must / must-not / mm), weighted sums, per-group dismax and
-  score-only clauses, set constants, then the exact (score DESC,
-  doc_id ASC) cut. Pure-should single-field plans with a ``k`` take
-  MaxScore.
+  score-only clauses, set constants, the id filter (Solr's
+  ``{!terms f=id}`` filter query: rerank, LTR features and pinned docs
+  score only the docs they name), then the exact (score DESC, doc_id
+  ASC) cut. Pure-should single-field unfiltered plans with a ``k``
+  take MaxScore.
 - :func:`score_block_max` — the pruned top-k: exact MaxScore (Turtle &
   Flood 1995). Lists whose summed bounds cannot reach the top k are
   probed, never sorted; in numpy only such whole-list skips pay.
 - :func:`score_exhaustive` — the unpruned top-k. The verification
   oracle ``kernel="exhaustive"`` names.
-- :func:`score_all` — every doc of a list set with its summed score,
-  for the synonym, rerank and LTR surfaces and the FtShards merges
-  that rescore the whole match set on the driver.
-- :func:`merge_group` — folds a synonym/stem class into one pseudo-term
-  (tf summed, dl shared, df = size of the union) that scores like any
-  other list.
+- :func:`merge_group` — folds a synonym/stem class clause (a
+  :class:`Clause` with ``members``) into one pseudo-term (tf summed, dl
+  shared, df = size of the union) that scores like any other list;
+  each executor merges the members it reads and takes the class's
+  global union df.
 
 Contributions are memoised per cached segment row, so a warm query
 neither decodes nor recomputes BM25. Every evaluator adds them in one
@@ -186,11 +188,6 @@ def _accumulate(per_term, k: int):
     return _topk_from_scores(uniq, scores, k)
 
 
-def score_all(lists: list[TermList], avgdl: float):
-    """Uncut BM25 over ``lists``: (ids ascending, scores)."""
-    return _scatter_add(_term_contribs(lists, avgdl))[:2]
-
-
 def merge_group(term: str, lists: list[TermList]) -> TermList:
     """One pseudo-term from a synonym / stem class (Solr
     SynonymGraphFilter at query time): a doc's tf is the sum of its
@@ -228,7 +225,10 @@ def _nonessential(lists: list[TermList], rows: list, k: int) -> set[int]:
     the k-th best score from below. Empty when the scatter-add is the
     only exact plan or the cheaper one. Needs non-negative idfs (boosts
     are) and one row per doc per term (streaming drops re-delivered docs)."""
-    seed = next((i for i, tl in enumerate(lists) if tl.df >= k), None)
+    # the postings the caller holds, not the df: a bucket holds only its
+    # share of a list whose df is global
+    seed = next((i for i, r in enumerate(rows)
+                 if sum(ids.size for ids, _, _ in r) >= k), None)
     if len(lists) == 1 or seed is None:
         return set()
     c = _list_arrays(rows[seed])[1]
@@ -306,12 +306,23 @@ class Clause(NamedTuple):
     is SHOULD, MUST, MUST_NOT (never scored), or SCORE: added to docs
     the other clauses admit, admitting none itself (edismax ``bq`` under
     its required main query). Clauses sharing a ``group`` are one
-    dismax unit."""
+    dismax unit. A clause with ``members`` is a synonym class (Solr
+    SynonymGraphFilter at query time): the members' lists merged into
+    one pseudo-term (:func:`merge_group`) named ``term``, read under
+    :attr:`key`."""
     field: str
     term: str
     weight: float = 1.0
     occur: str = SHOULD
     group: str | None = None
+    members: tuple[str, ...] = ()
+
+    @property
+    def key(self) -> str:
+        """The list the clause reads: its term or, for a class, the term
+        and members joined by NUL — a name no indexed term has, that
+        sorts among other keys as the class's term does."""
+        return "\0".join((self.term, *self.members)) if self.members else self.term
 
 
 PHRASE, NEAR, ANY = "phrase", "near", "any"
@@ -345,11 +356,13 @@ class ScorePlan(NamedTuple):
     ``best + tie·(sum − best)`` over the group's per-field sums
     (Lucene's DisjunctionMaxQuery), plus the set constants in order.
     Repeated (group, field, term) clauses add their weights; a
-    weight-0 clause only admits."""
+    weight-0 clause only admits. With ``ids``, only those docs are
+    admitted."""
     clauses: tuple[Clause, ...]
     tie: float = 0.0
     mm: int = 0
     sets: tuple[DocSet, ...] = ()
+    ids: tuple[int, ...] | None = None
 
     @classmethod
     def bag(cls, terms, field: str, occur: str = SHOULD, exclude=(),
@@ -362,9 +375,14 @@ class ScorePlan(NamedTuple):
         return cls(tuple(clauses), 0.0, mm)
 
     def pairs(self) -> list[tuple[str, str]]:
-        """Every (field, term) the plan reads: clauses, then sets."""
-        return ([(c.field, c.term) for c in self.clauses]
+        """Every (field, term) the plan reads: clauses (a class's
+        members), then sets."""
+        return ([(c.field, t) for c in self.clauses for t in c.members or (c.term,)]
                 + [(s.field, t) for s in self.sets for t in s.terms])
+
+    def classes(self) -> list[Clause]:
+        """The synonym-class clauses."""
+        return [c for c in self.clauses if c.members]
 
     def terms_by_field(self) -> dict[str, list[str]]:
         """{field: sorted terms} over every clause and set, fields sorted."""
@@ -372,6 +390,21 @@ class ScorePlan(NamedTuple):
         for f, t in self.pairs():
             out.setdefault(f, {})[t] = None
         return {f: sorted(out[f]) for f in sorted(out)}
+
+
+def merge_classes(plan: ScorePlan,
+                  lists_by_field: dict[str, dict[str, TermList]]) -> list[tuple[str, TermList]]:
+    """Add each class clause's pseudo-term, merged from the members in
+    ``lists_by_field``, under its :attr:`Clause.key`: (field, list)
+    pairs whose df and idf the executor sets (the union df it reads, or
+    the global one)."""
+    out = []
+    for c in plan.classes():
+        have = lists_by_field.get(c.field, {})
+        if present := [have[m] for m in c.members if m in have]:
+            have[c.key] = merge_group(c.key, present)
+            out.append((c.field, have[c.key]))
+    return out
 
 
 def _weighted(tl: TermList, weight: float) -> TermList:
@@ -401,20 +434,22 @@ def run_plan(plan: ScorePlan, lists_by_field: dict[str, dict[str, TermList]],
     (df, field, term) order, so both executors sum each doc alike.
     ``verified[i]`` holds a PHRASE or NEAR set's members, verified by
     the executor from the positions rows it reads.
-    A pure-should plan over one field with positive weights, mm ≤ 1,
-    no set and a ``k`` takes MaxScore (:func:`score_block_max`),
-    bit-identical to the scatter-add."""
+    Class clauses read their merged list under :attr:`Clause.key`
+    (:func:`merge_classes`). A pure-should plan over one field with
+    positive weights, mm ≤ 1, no set, no id filter and a ``k`` takes
+    MaxScore (:func:`score_block_max`), bit-identical to the
+    scatter-add."""
     if k is not None and k <= 0:
         return _no_docs()
     field = plan.clauses[0].field if plan.clauses else None
-    pruned = k is not None and plan.mm <= 1 and not plan.sets
+    pruned = k is not None and plan.mm <= 1 and not plan.sets and plan.ids is None
     weights: dict[tuple, float] = {}
     for c in plan.clauses:
         pruned = pruned and (c.occur == SHOULD and c.group is None
                              and c.weight > 0 and c.field == field)
         if (c.occur != MUST_NOT and c.weight != 0.0
-                and c.term in lists_by_field.get(c.field, ())):
-            key = (c.group, c.occur == SCORE, c.field, c.term)
+                and c.key in lists_by_field.get(c.field, ())):
+            key = (c.group, c.occur == SCORE, c.field, c.key)
             weights[key] = weights.get(key, 0.0) + c.weight
     if pruned:
         ids, scores = score_block_max(
@@ -443,11 +478,11 @@ def run_plan(plan: ScorePlan, lists_by_field: dict[str, dict[str, TermList]],
         if c.occur not in (SHOULD, MUST):
             continue
         units.setdefault(i if c.group is None else ("g", c.group),
-                         (c.occur, []))[1].append((c.field, c.term))
-        if ((c.field, c.term) not in slot  # weight 0: admits without scoring
-                and c.term in lists_by_field.get(c.field, ())):
-            slot[(c.field, c.term)] = len(arrays)
-            arrays.append((lists_by_field[c.field][c.term].decode_all()[0], None))
+                         (c.occur, []))[1].append((c.field, c.key))
+        if ((c.field, c.key) not in slot  # weight 0: admits without scoring
+                and c.key in lists_by_field.get(c.field, ())):
+            slot[(c.field, c.key)] = len(arrays)
+            arrays.append((lists_by_field[c.field][c.key].decode_all()[0], None))
     members = []
     for i, s in enumerate(plan.sets):  # an admitting set's members join the universe
         have = lists_by_field.get(s.field, {})
@@ -505,12 +540,15 @@ def run_plan(plan: ScorePlan, lists_by_field: dict[str, dict[str, TermList]],
             if occ == SHOULD:
                 count += matches(fts)
         mask = count >= floor if mask is None else mask & (count >= floor)
-    excluded = [lists_by_field[c.field][c.term].decode_all()[0] for c in plan.clauses
-                if c.occur == MUST_NOT and c.term in lists_by_field.get(c.field, ())]
+    excluded = [lists_by_field[c.field][c.key].decode_all()[0] for c in plan.clauses
+                if c.occur == MUST_NOT and c.key in lists_by_field.get(c.field, ())]
     for xids in excluded + [x for s, x in zip(plan.sets, members) if s.occur == MUST_NOT]:
         if xids.size:
             keep = ~np.isin(uniq, xids)
             mask = keep if mask is None else mask & keep
+    if plan.ids is not None:
+        keep = np.isin(uniq, np.asarray(plan.ids, np.uint64))
+        mask = keep if mask is None else mask & keep
     if mask is not None:
         uniq, scores, base = uniq[mask], scores[mask], base[mask]
     if k is not None:

@@ -147,8 +147,10 @@ def test_plan_parity_driver_bucket_shards(spark, built, positioned, tmp_path):
     (_plan_df(...).collect()): the same ids and bit-identical scores, on
     a base-only index and on base + streamed deltas + tombstones;
     FtShards([idx]) serves the same pages. The doc-set plans run on
-    indexes with positions, streamed ones in delta_positions."""
-    from ftidx.index import _drop_tombstones, edismax_plan
+    indexes with positions, streamed ones in delta_positions; synonym
+    classes and id filters (the rerank, LTR and pinned-doc plans) on
+    every index."""
+    from ftidx.index import _drop_tombstones, class_plan, edismax_plan
     from ftidx.shards import FtShards
     from ftidx.streaming import index_microbatch
     from ftidx.wand import (ANY, MUST, MUST_NOT, NEAR, PHRASE, SHOULD, Clause,
@@ -173,6 +175,10 @@ def test_plan_parity_driver_bucket_shards(spark, built, positioned, tmp_path):
         "bq": ScorePlan(ScorePlan.bag(["def", "value"], f1).clauses
                         + (Clause(f1, "alpha", 0.7),)),
         "edismax": edismax_plan(terms, qf, 0.3, 2, {"return": 0.7}),
+        "classes": class_plan({"def": ["def", "return"], "zzz": ["qqq"],
+                               "value": ["value", "values", "data"]}, f1),
+        "class_mixed": ScorePlan(class_plan({"def": ["def", "return"]}, f1).clauses
+                                 + (Clause(f1, "value"), Clause(f2, "value", 2.0))),
     }
     dv = ("def", "value")
     bdr = ("beta", "data", "result")
@@ -207,7 +213,16 @@ def test_plan_parity_driver_bucket_shards(spark, built, positioned, tmp_path):
              (open_index(spark, positioned), set_plans),
              (streamed, {**plans, **set_plans}))
     for idx, grid in grids:
-        for name, plan in grid.items():
+        some = tuple(idx._run_plan(ScorePlan.bag(["def", "alpha"], f1))[0][::3][:25]
+                     .tolist())
+        filtered = {
+            "ids_or": ScorePlan.bag(terms, f1)._replace(ids=some + (5,)),
+            "ids_classes": plans["classes"]._replace(ids=some),
+            "ids_matched": ScorePlan((), sets=tuple(
+                DocSet(f1, (t,), ANY, 0, 1.0, SHOULD) for t in terms), ids=some),
+            "ids_fields": fields._replace(ids=some),
+        }
+        for name, plan in {**grid, **filtered}.items():
             ids, scores, _ = idx._run_plan(plan)
             ids, scores = _drop_tombstones(ids, scores, idx._tombstones)
             rows = sorted((r["doc_id"], r["score"])
@@ -2397,10 +2412,10 @@ def test_spellcheck_wordbreak(spark, tmp_path):
 
     res = idx.spellcheck_wordbreak(["helloworld", "data", "base"])
     assert res["breaks"] == [("helloworld", "hello", "world",
-                              idx._vocab_dfs({"hello"})["hello"],
-                              idx._vocab_dfs({"world"})["world"])]
+                              idx._df_total(["hello"], "code.content"),
+                              idx._df_total(["world"], "code.content"))]
     assert res["combines"] == [("data", "base", "database",
-                                idx._vocab_dfs({"database"})["database"])]
+                                idx._df_total(["database"], "code.content"))]
     # a known term never breaks, even if splittable
     assert idx.spellcheck_wordbreak(["database"])["breaks"] == []
     # min_part_len guard: 1-char halves are not candidates
@@ -2684,22 +2699,49 @@ def test_build_resumes_after_kill_between_postings_and_doclen(
         open_index(spark, clean).topk(["def", "value"], k=10)
 
 
-def test_fat_fetch_semaphore_path_correct(spark, built):
-    """query surfaces without a distributed fallback (ltr_rerank et
-    al.) fetch fat postings through the big-fetch lock — results
-    must be identical to the unguarded path, including under threads."""
+def test_moved_surfaces_route_beyond_doc_budget(spark, built):
+    """Beyond the doc budget, the surfaces that once collected whole
+    postings on the driver — LTR (every feature), rerank, synonyms and
+    stems, facet.query, explain, pinned docs, spellcheck, more-like-this
+    and the FtShards merges — run through the routed plan executors:
+    an unrouted handle's answers, bit for bit, with no driver postings
+    collect, six concurrent ltr_rerank threads included."""
     import threading
 
     from ftidx.ltr import LinearModel
+    from ftidx.shards import FtShards
 
-    model = LinearModel({"orig": 1.0, "matched": 0.5})
+    # bm25@ names a field the terms are fat in, so that plan routes too
+    # (a plan whose terms a field lacks has df 0 and stays on the driver)
+    model = LinearModel({"orig": 1.0, "matched": 0.5, "dl": -0.01,
+                         "bm25@code.content": 0.3})
+    dv = ["def", "value"]
     idx = open_index(spark, built[0])
-    idx._driver_score_max_docs = 1  # every fetch takes the guarded path
+    idx._driver_score_max_docs = 1  # every plan routes to the buckets
     ref = open_index(spark, built[0])
-    want = ref.ltr_rerank(["def", "value"], model, k=8)
-    got = idx.ltr_rerank(["def", "value"], model, k=8)
-    assert got == want
-    assert idx._cache_misses > 0  # the postings were collected
+    top = ref.topk(dv, k=1)[0][0]
+    calls = {
+        "ltr_rerank": lambda h: h.ltr_rerank(dv, model, k=8),
+        "topk_reranked": lambda h: h.topk_reranked(
+            dv, ["alpha", "return"], k=8, rerank_docs=12, weight=0.7),
+        "topk_synonyms": lambda h: h.topk_synonyms(
+            {"def": ["return"], "value": ["values", "data"]}, k=8),
+        "stem_topk": lambda h: h.stem_topk(["value", "words"], k=8),
+        "facet_queries": lambda h: h.facet_queries(
+            {"a": ["def"], "b": ["alpha", "omega"]}),
+        "explain": lambda h: h.explain(dv, top),
+        "topk_elevated": lambda h: h.topk_elevated(dv, [top, 5], k=6),
+        "spellcheck": lambda h: h.spellcheck(["def", "valeu"]),
+        "more_like_this": lambda h: h.more_like_this(top, k=8),
+        "shards.topk": lambda h: FtShards([h]).topk(dv, k=8),
+        "shards.count": lambda h: FtShards([h]).count(["def", "alpha"]),
+        "shards.stem_topk": lambda h: FtShards([h]).stem_topk(["value", "words"], k=8),
+        "shards.ltr_rerank": lambda h: FtShards([h]).ltr_rerank(dv, model, k=8),
+    }
+    for name, call in calls.items():
+        got = call(idx)
+        assert got and got == call(ref), name
+    assert idx._cache_misses == 0  # no driver postings collect happened
     outs, errs = {}, []
 
     def worker(i):
@@ -2714,5 +2756,83 @@ def test_fat_fetch_semaphore_path_correct(spark, built):
     for t in ts:
         t.join()
     assert not errs, errs
-    want2 = ref.ltr_rerank(["alpha", "omega"], model, k=6)
-    assert all(o == want2 for o in outs.values())
+    want = ref.ltr_rerank(["alpha", "omega"], model, k=6)
+    assert want and all(o == want for o in outs.values())
+    assert idx._cache_misses == 0
+
+
+# Spark jobs of the surfaces that score through the plan executors
+# instead of collecting whole postings on the driver, on the fixture,
+# (cold handle, warm repeat). The caps are the counts measured before
+# the move; the one rise is LTR's dl feature, one doclen read per call.
+MOVED_SURFACE_MAX_JOBS = {
+    "topk_synonyms": (2, 0), "stem_topk": (6, 4), "topk_reranked": (2, 0),
+    "ltr_rerank": (2, 0), "ltr_rerank_dl": (2, 1), "facet_queries": (2, 0),
+    "explain": (1, 0), "topk_elevated": (1, 0), "spellcheck": (4, 2),
+    "more_like_this": (4, 3), "shards.topk": (1, 0), "shards.count": (1, 0),
+    "shards.stem_topk": (9, 8), "shards.ltr_rerank": (2, 0),
+    "shards.ltr_rerank_dl": (2, 1), "shards.spellcheck": (6, 4),
+}
+
+
+def test_moved_surfaces_job_count(spark, spark_jobs, built):
+    from ftidx.ltr import LinearModel
+    from ftidx.shards import FtShards
+
+    dv = ["def", "value"]
+    plain = LinearModel({"orig": 1.0, "matched": 0.5,
+                         "bm25@code.ident.split": 0.3})
+    with_dl = LinearModel({"orig": 1.0, "dl": -0.01})
+    top = open_index(spark, built[0]).topk(dv, k=1)[0][0]
+    calls = {
+        "topk_synonyms": lambda h: h.topk_synonyms(
+            {"def": ["return"], "value": ["values", "data"]}, k=8),
+        "stem_topk": lambda h: h.stem_topk(["value", "words"], k=8),
+        "topk_reranked": lambda h: h.topk_reranked(dv, ["alpha", "return"], k=8),
+        "ltr_rerank": lambda h: h.ltr_rerank(dv, plain, k=8),
+        "ltr_rerank_dl": lambda h: h.ltr_rerank(dv, with_dl, k=8),
+        "facet_queries": lambda h: h.facet_queries(
+            {"a": ["def"], "b": ["alpha", "omega"]}),
+        "explain": lambda h: h.explain(dv, top),
+        "topk_elevated": lambda h: h.topk_elevated(dv, [top, 5], k=6),
+        "spellcheck": lambda h: h.spellcheck(["def", "valeu"]),
+        "more_like_this": lambda h: h.more_like_this(top, k=8),
+        "shards.topk": lambda h: FtShards([h]).topk(dv, k=8),
+        "shards.count": lambda h: FtShards([h]).count(["def", "alpha"]),
+        "shards.stem_topk": lambda h: FtShards([h]).stem_topk(["value", "words"], k=8),
+        "shards.ltr_rerank": lambda h: FtShards([h]).ltr_rerank(dv, plain, k=8),
+        "shards.ltr_rerank_dl": lambda h: FtShards([h]).ltr_rerank(dv, with_dl, k=8),
+        "shards.spellcheck": lambda h: FtShards([h]).spellcheck(["def", "valeu"]),
+    }
+    jobs = {}
+    for name, call in calls.items():
+        idx = open_index(spark, built[0])
+        cold, cold_jobs = spark_jobs(lambda: call(idx))
+        warm, warm_jobs = spark_jobs(lambda: call(idx))
+        assert cold and cold == warm, name
+        jobs[name] = (len(cold_jobs), len(warm_jobs))
+    assert all(c <= MOVED_SURFACE_MAX_JOBS[n][0] and w <= MOVED_SURFACE_MAX_JOBS[n][1]
+               for n, (c, w) in jobs.items()), jobs
+
+
+def test_pinned_doc_reads_its_organic_score(spark, built):
+    """A pinned doc's score is its organic topk score exactly: the pins
+    score in the organic plan filtered to their ids."""
+    idx = open_index(spark, built[0])
+    plain = idx.topk(["def", "value"], k=10)
+    got = idx.topk_elevated(["def", "value"], [plain[3][0], plain[0][0]], k=4)
+    assert [(h["doc_id"], h["score"]) for h in got[:2]] == [plain[3], plain[0]]
+
+
+def test_phrase_boost_scales_the_phrase_terms(spark, positioned):
+    """'"a b"^w' scores w × (BM25(a) + BM25(b)), as a term boost scales
+    its term's BM25."""
+    idx = open_index(spark, positioned)
+    plain = idx.query_string('"def value" return', k=20)
+    boosted = idx.query_string('"def value"^2 return', k=20)
+    assert {d for d, _ in plain} == {d for d, _ in boosted}
+    for d, s in boosted:
+        parts = {t["term"]: t["contrib"] for t in idx.explain(
+            ["def", "value", "return"], d)["terms"]}
+        want = 2 * (parts["def"] + parts["value"]) + parts.get("return", 0.0)
+        assert s == pytest.approx(want, abs=1e-5), d

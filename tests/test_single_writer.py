@@ -187,3 +187,20 @@ def test_only_the_plan_executors_verify_phrases():
             if isinstance(node, ast.Call) and _referenced(node.func) in VERIFIERS:
                 callers.add(f"{py.name}:{'.'.join(scope)}")
     assert callers == {"index.py:_run_plan", "index.py:_plan_df.score_bucket"}
+
+
+# One driver reader: postings reach the driver's term cache only through
+# the driver executor (FtIndex._plan_lists → _term_lists →
+# _fetch_term_rows), which reads only plans the df probe keeps on the
+# driver, so no surface collects a fat term's postings there.
+def test_only_the_driver_executor_reads_the_term_cache():
+    calls = set()
+    for py in sorted(FTIDX.glob("*.py")):
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for node, scope in _walk_with_scope(tree):
+            if isinstance(node, ast.Call) and _referenced(node.func) in (
+                    "_term_lists", "_fetch_term_rows"):
+                calls.add((py.name, scope[-1] if scope else "<module>",
+                           _referenced(node.func)))
+    assert calls == {("index.py", "_plan_lists", "_term_lists"),
+                     ("index.py", "_term_lists", "_fetch_term_rows")}

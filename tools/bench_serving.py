@@ -112,9 +112,9 @@ class Deck:
                 f"&k={5 + i % 11}&mode=and")
 
     def fat_query_surface(self) -> str:
-        # /query (qparse) has NO distributed fallback: fat terms MUST
-        # collect driver-side (semaphore-serialized, cache-capped) —
-        # measured separately so the routed classes stay comparable
+        # /query (qparse) over fat terms: one plan routed by the df
+        # probe like /search, a required (+) clause included — kept as
+        # its own class so its numbers stay comparable across runs
         i = self._next_cold()
         fats = ["def", "return", "value", "data", "result"]
         return f"/query?q=%2B{fats[i % 5]}+{fats[(i + 1) % 5]}&k={10 + i % 7}"
